@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** Per-round benchmark main. Self-evidencing by design (round-6 verdict #1):
   *
-  *   - every query runs TWICE in the timed loop, cache cleared between —
+  *   - every query runs TWICE in the timed loop, each pass in its own
+  *     `Materialize.scope` (blocks released between passes) —
   *     `queries` reports the MIN of the two passes (the repeatable warm-path
   *     number), and `queries_p1`/`queries_p2` carry both raw passes so a
   *     moved number shows WHERE it moved (both passes slow = plan/data;
@@ -272,36 +273,22 @@ object Bench {
     val passes = roster.map { case (name, fn) =>
       val perPass = (1 to 2).map { pass =>
         val s = if (freshSession) spark.newSession() else spark
-        s.sparkContext.setJobGroup(s"$name#p$pass", name, interruptOnCancel = false)
-        probe.begin()
-        val t0 = System.nanoTime()
-        // a query that RAISES records -1 (excluded from the total), not its
-        // elapsed-to-failure — e.g. d7's demo-width gate fails loudly beyond
-        // 1k docs by contract, and a fake-fast number would read as a pass
-        val sec = try { fn(s, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-        jvmSpans(s"$name#p$pass") = probe.end()
-        s.sparkContext.clearJobGroup()
-        // isolation between passes and queries (outside the timed span):
-        // operators that .cache() intermediate tables (d3/d5/d7/d8) would
-        // otherwise keep blocks pinned, and the resulting memory pressure
-        // moves later numbers ±3× run to run (the cache manager lives in
-        // SharedState, so this clears every session)
-        s.catalog.clearCache()
-        // ...and clearCache drops SQL-cached TABLES but not checkpoint
-        // blocks: the iterative dedup family leaves its FINAL label
-        // checkpoint persisted (the returned frame's only substance).
-        // Waiting on the async ContextCleaner instead let blocks pile up
-        // across queries: BENCH_r07 recorded d11 p2 at 7× p1 under that
-        // pressure. EXCEPT the ClusterMemo-owned label frames: those are the
-        // session-shared closure d10/d11/s11/c2/c3 reuse (pair-graph-sized
-        // by construction), and unpersisting them here would force every
-        // consumer to re-pay the closure the memo exists to share.
-        val keep = graft.operators.ClusterMemo.protectedRddIds
-        s.sparkContext.getPersistentRDDs.values
-          .filterNot(r => keep.contains(r.id))
-          .foreach(_.unpersist(blocking = false))
-        sec
+        // isolation between passes and queries: the scope releases, after
+        // the timed span, every block the pass materialized (memo entries
+        // such as d10's closure stay shared across queries)
+        graft.operators.Materialize.scope {
+          s.sparkContext.setJobGroup(s"$name#p$pass", name, interruptOnCancel = false)
+          probe.begin()
+          val t0 = System.nanoTime()
+          // a query that RAISES records -1 (excluded from the total), not its
+          // elapsed-to-failure — e.g. d7's demo-width gate fails loudly beyond
+          // 1k docs by contract, and a fake-fast number would read as a pass
+          val sec = try { fn(s, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case _: Throwable => -1.0 }
+          jvmSpans(s"$name#p$pass") = probe.end()
+          s.sparkContext.clearJobGroup()
+          sec
+        }
       }
       name -> (perPass: Seq[Double])
     }

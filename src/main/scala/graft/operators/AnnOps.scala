@@ -409,13 +409,9 @@ object AnnOps {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), approx.as("sim"))
     // |Q|*cand rows, but the lineage is the whole candidate scan and `top`
     // feeds TWO broadcast branches (rerank probe + final score-join), which
-    // cannot share subtrees - unmaterialized the candidate pass ran twice
-    // (r14). localCheckpoint over cache: the checkpoint stores the
-    // AQE-coalesced layout, so the two broadcast collects don't each pay a
-    // 32-task stage over a |Q|*cand frame
-    val top = topKPerQuery(cands, cand, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim"))
-      .localCheckpoint()
+    // share no subtree: materialized, the candidate pass runs once
+    val top = Materialize(topKPerQuery(cands, cand, Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim")))
     val rer = e.select(col("vec_id").as("neighbor_id"), col("embedding"),
         norm(col("embedding")).as("nv"))
       .join(broadcast(top.select("query_id", "neighbor_id")), Seq("neighbor_id"))
@@ -477,12 +473,11 @@ object AnnOps {
     val ee = transform(col("embedding"), x => x.cast("double"))
     // the IVF×SQ8 INDEX: every vector's geometric cell + int8 codes + code
     // norm. Consumed three times per search (queries, probes, candidates)
-    // and by every search over the same corpus, so it checkpoints eagerly
-    // ONCE and the checkpoint is MEMOIZED per (session, corpus) — the
-    // build-once/serve-many serving shape (a deployment persists exactly
-    // this frame; ClusterMemo recomputes if a sweep dropped the blocks)
-    val qz = ClusterMemo.getOrCompute(TrainMemo.key(e, "n10:qz")) {
-      e.select(col("vec_id"), col("embedding"), ee.as("ee"),
+    // and by every search over the same corpus, so it is materialized once
+    // per (session, corpus) and memoized — the build-once/serve-many shape
+    // (a deployment persists exactly this frame)
+    val qz = SessionMemo.getOrCompute(SessionMemo.key("n10:qz", e)) {
+      Materialize(e.select(col("vec_id"), col("embedding"), ee.as("ee"),
           array_max(scoredCells).getField("cell").as("cell"))
         .withColumn("scale", array_max(transform(col("ee"), x => abs(x))))
         .withColumn("qv", transform(col("ee"), x =>
@@ -491,8 +486,7 @@ object AnnOps {
         .withColumn("qn",
           graft.functions.VectorFunctions.dot_l(col("qv"), col("qv")))
         .select(col("vec_id"), col("embedding"), col("cell"), col("qv"),
-          col("qn"))
-        .localCheckpoint(true)
+          col("qn")))
     }
     val queries = qz.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("qv").as("qq"),
@@ -572,7 +566,7 @@ object AnnOps {
     * probe ranking share one score array), so the classic same-cell kNN
     * graph is the nProbe=1 special case.
     *
-    * Scale notes (100 TB): the quantizer is TrainMemo-held (train once,
+    * Scale notes (100 TB): the quantizer is SessionMemo-held (train once,
     * build many); cell assignment and probe selection are literal per-row
     * argmax/argsort — no join, no corpus shuffle. The single shuffle is the
     * equi-join on `cell`: the member side moves each vector once, the
@@ -585,11 +579,9 @@ object AnnOps {
   def knnJoin(e: DataFrame, k: Int = ServeK, nProbe: Int = ServeNProbe): DataFrame =
     // the GRAPH is an index artifact: built once per (session, corpus,
     // params) and served to every consumer — the n14 gate, dq9's density
-    // outliers; a 100 TB deployment persists it next to the index — with
-    // ClusterMemo's sweep-safe eager-checkpoint lifecycle (recomputed if a
-    // sweep dropped the blocks, never served stale across corpora)
-    ClusterMemo.getOrCompute(TrainMemo.key(e, s"n14:knn:k=$k,p=$nProbe")) {
-      knnJoinStage(e, k, nProbe).localCheckpoint(true)
+    // outliers; a 100 TB deployment persists it next to the index
+    SessionMemo.getOrCompute(SessionMemo.key(s"n14:knn:k=$k,p=$nProbe", e)) {
+      Materialize(knnJoinStage(e, k, nProbe))
     }
   def knnJoin(spark: SparkSession, dir: String): DataFrame =
     knnJoin(table(spark, dir, "embeddings"))
@@ -687,10 +679,9 @@ object AnnOps {
     * contract).
     */
   private def seededCentroids(e: DataFrame): Array[(Int, Seq[Double])] =
-    // trained once per (session, corpus) and served from TrainMemo: the
-    // 100 TB serving shape — the coarse quantizer belongs to the INDEX, not
-    // the query, so n10/n11/c5 sharing one corpus share one derivation
-    TrainMemo.getOrCompute(TrainMemo.key(e, "seededCentroids")) {
+    // trained once per (session, corpus): the coarse quantizer belongs to
+    // the INDEX, not the query, so n10/n11/c5 share one derivation
+    SessionMemo.getOrCompute(SessionMemo.key("seededCentroids", e)) {
       seededCentroidsCompute(e)
     }
 
@@ -772,21 +763,16 @@ object AnnOps {
     val centMap = typedlit(centArr.toMap)
     val ee = transform(col("embedding"), x => x.cast("double"))
     // geometric cell membership (n10's reassignment half-step) + exact
-    // double residual from the assigned centroid — one map-only projection
-    // the (vec_id, cell, res) index frame is consumed three times (two
-    // Lloyd rounds + the encode), so it checkpoints EAGERLY once — and the
-    // CHECKPOINT IS MEMOIZED per (session, corpus): this frame IS the n11
-    // index (a deployment persists exactly it), so repeated executions over
-    // one corpus share one build instead of re-deriving it per query batch.
-    // ClusterMemo's liveness tracking recomputes if a sweep dropped the
-    // blocks; the map-only assignment contract is unchanged
-    val asg = ClusterMemo.getOrCompute(TrainMemo.key(e, "n11:asg")) {
-      e.select(col("vec_id"), col("embedding"), ee.as("ee"),
+    // double residual from the assigned centroid — one map-only projection.
+    // This (vec_id, cell, res) frame IS the n11 index, consumed three times
+    // (two Lloyd rounds + the encode): materialized once per (session,
+    // corpus) and memoized
+    val asg = SessionMemo.getOrCompute(SessionMemo.key("n11:asg", e)) {
+      Materialize(e.select(col("vec_id"), col("embedding"), ee.as("ee"),
           array_max(scoredCells).getField("cell").as("cell"))
         .withColumn("res",
           zip_with(col("ee"), element_at(centMap, col("cell")), (x, c) => x - c))
-        .select(col("vec_id"), col("cell"), col("res"))
-        .localCheckpoint(true)
+        .select(col("vec_id"), col("cell"), col("res")))
     }
     // residual PQ codebook: POINT-seeded (vec_id 0..15's residual
     // subvectors — k-means' "first k points" seeding, genuinely spread
@@ -794,11 +780,9 @@ object AnnOps {
     // residual mean and leave ADC unable to rank) + two unrolled Lloyd
     // rounds, each a deterministic assign (4-dp sq-L2, ties to lower j)
     // and 6-dp integer-mean update — the g7/g13 fixed-round convention,
-    // so the oracle states the identical training prefix. Memo-keyed on
-    // the RAW corpus plan (not the checkpointed asg, whose LogicalRDD
-    // identity is unique per checkpoint): asg is a pure function of `e`,
-    // so the key collides exactly when the training input does.
-    val cb = TrainMemo.getOrCompute(TrainMemo.key(e, "n11:pqLloyd:2")) {
+    // so the oracle states the identical training prefix. Keyed on the RAW
+    // corpus, not the materialized asg: asg is a pure function of `e`.
+    val cb = SessionMemo.getOrCompute(SessionMemo.key("n11:pqLloyd:2", e)) {
       pqLloydCodebook(asg.select(col("vec_id"), col("res")), rounds = 2)
     }
     // encode: nearest code per subspace by 4-dp sq-L2, ties to lower j —
@@ -864,9 +848,8 @@ object AnnOps {
     * search itself (n1's broadcast-queries/no-corpus-shuffle shape, or any
     * ANN face upstream); everything after is pool-bounded by construction
     * — the pair matrix is |Q|·pool² rows (report-sized), each greedy round
-    * joins frames of ≤ |Q|·pool rows, and per-round picks localCheckpoint
-    * (k tiny jobs, the g7/g13 iterative discipline) so the plan never
-    * compounds across rounds.
+    * joins frames of ≤ |Q|·pool rows, and the greedy rounds run in-task
+    * per query ([[mmrOver]]), so the plan never compounds across rounds.
     */
   def mmrTopK(e: DataFrame, k: Int = ServeK, pool: Int = ServePool,
       lambda: Double = MmrLambda, mu: Double = MmrMu): DataFrame = {
@@ -906,7 +889,7 @@ object AnnOps {
     */
   def mmrOver(e: DataFrame, candIn: DataFrame, k: Int,
       lambda: Double, mu: Double): DataFrame = {
-    val cand = candIn.localCheckpoint(true)
+    val cand = Materialize(candIn)
     // pairwise 4-dp cosine within each query's pool: the candidate list
     // broadcasts into the corpus scan to pull vectors, then the pool
     // self-joins per query — |Q|·pool² rows, never corpus-squared
@@ -1140,12 +1123,10 @@ object AnnOps {
   def kmeansTrain(e: DataFrame, k: Int, maxIter: Int,
       tol: Double, trainFrac: Double): Array[(Int, Array[Float])] =
     // converged centroids memoized per (session, corpus, params): the Lloyd
-    // loop is an INDEX-time cost — before the memo, n2b (the consumer face)
-    // re-paid the full training loop on every execution, which made it the
-    // bench's second most expensive entry for no serving-path reason.
-    // TrainMemo.clear() forces a genuine re-train where a spec needs one.
-    TrainMemo.getOrCompute(
-      TrainMemo.key(e, s"kmeans:$k:$maxIter:$tol:$trainFrac")) {
+    // loop is an INDEX-time cost, not a per-search one.
+    // SessionMemo.clear() forces a genuine re-train where a spec needs one.
+    SessionMemo.getOrCompute(
+      SessionMemo.key(s"kmeans:$k:$maxIter:$tol:$trainFrac", e)) {
       kmeansTrainCompute(e, k, maxIter, tol, trainFrac)
     }
 
@@ -1367,9 +1348,8 @@ object AnnOps {
     */
   private def pqCodebookOf(e: DataFrame,
       vecCol: String): Map[(Int, Int), (Array[Double], Double)] =
-    // one corpus-keyed aggregation, trained once per (session, corpus) —
-    // n6 re-derived it per execution before the memo
-    TrainMemo.getOrCompute(TrainMemo.key(e, s"pqCodebook:$vecCol")) {
+    // one corpus-keyed aggregation, trained once per (session, corpus)
+    SessionMemo.getOrCompute(SessionMemo.key(s"pqCodebook:$vecCol", e)) {
       pqCodebookCompute(e, vecCol)
     }
 

@@ -284,23 +284,18 @@ object CurationOps {
     val words = graft.Tables.spread(docs
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 2).select(col("w")))
-    // the unigram/bigram MODEL tables are vocabulary-bounded at any corpus
-    // scale and each feeds multiple BROADCAST branches (w1 counts, w2
-    // counts, the nw/nb totals) — broadcast branches cannot share subtrees
-    // via exchange reuse, so unmaterialized each branch re-ran the corpus
-    // explode and count (the d18 lesson). localCheckpoint, not cache: a
-    // cached plan keeps the full shuffle-partition fan-out (AQE may not
-    // change cached output partitioning), so every consumer stage paid 32
-    // tasks — the checkpoint stores the AQE-coalesced layout (measured:
-    // g9 358 → ~1/10th the consumer tasks, r14)
-    val uni = words.select(explode(col("w")).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("ct")).localCheckpoint()
-    val bi = words.select(explode(zip_with(
+    // the unigram/bigram MODEL tables are vocabulary-bounded and each feeds
+    // several BROADCAST branches (w1 counts, w2 counts, the nw/nb totals),
+    // which share no subtree through exchange reuse: materialized, the
+    // corpus explode and count run once
+    val uni = Materialize(words.select(explode(col("w")).as("t"))
+      .groupBy("t").agg(count(lit(1)).as("ct")))
+    val bi = Materialize(words.select(explode(zip_with(
         slice(col("w"), lit(1), size(col("w")) - 1),
         slice(col("w"), lit(2), size(col("w")) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("p.w1"), col("p.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("pair_ct")).localCheckpoint()
+      .groupBy("w1", "w2").agg(count(lit(1)).as("pair_ct")))
     val nw = uni.agg(sum("ct").as("nw"))
     val nb = bi.agg(sum("pair_ct").as("nb"))
     val pmi = floor(log(
@@ -346,12 +341,9 @@ object CurationOps {
         .select(col("source"), col("words")))
       .select(col("source"), explode(DedupOps.shingleExpr(col("words"))).as("sh"))
       .distinct()
-    // NOT materialized (r14: cache AND localCheckpoint tried, measured,
-    // reverted): either form de-converts the shingle self-join's runtime
-    // broadcast (cache: 1.30→1.82 s, 79→212 tasks; checkpoint: 1.58→2.19 s,
-    // +258k shuffle rows) — the totals branches' re-derived subtrees are
-    // what AQE stage-reuses to size the self-join's broadcast conversion.
-    // The two branch re-derivations cost less than the lost conversion.
+    // NOT materialized: a materialized `sets` de-converts the shingle
+    // self-join's runtime broadcast, which AQE sizes from the totals
+    // branches' re-derived subtrees; the two re-derivations cost less.
     val totals = sets.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val shared = sets.as("x").join(sets.as("y"),
         col("x.sh") === col("y.sh") && col("x.source") < col("y.source"))
@@ -738,14 +730,10 @@ object CurationOps {
     val words = graft.Tables.spread(
         docs.select(col("doc_id"), split(col("text"), " ").as("words")))
       .select(col("doc_id"), explode(col("words")).as("word"))
-    // localCheckpoint is load-bearing (r14 batch 7): dfreq joins back as a
-    // vocab-sized broadcast, and AQE stage reuse does not dedupe the tf
-    // exchange between the probe side and that broadcast branch — the
-    // runtime SQL-metric dump showed the corpus word explode running TWICE
-    // (the t13/t15/s10 lesson). Materialized, both consumers read the
-    // narrow (doc_id, word, tf) blocks.
-    val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    // materialized: dfreq joins back as a vocab-sized broadcast, and AQE
+    // stage reuse does not dedupe the tf exchange between the probe side and
+    // that broadcast branch, so the corpus word explode would run twice
+    val tf = Materialize(words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("word"))
@@ -808,13 +796,10 @@ object CurationOps {
     */
   def temperatureMix(docs: DataFrame): DataFrame = {
     // source-cardinality model table feeding two broadcast branches (tot,
-    // denom) plus the main chain — unmaterialized each branch re-scanned
-    // the corpus (r14; the g9 model-table pattern). localCheckpoint keeps
-    // the AQE-coalesced layout where a cache pinned 32-partition consumer
-    // stages (s9 was 262 tasks for a source-cardinality frame)
-    val perSrc = docs.groupBy("source").agg(
+    // denom) plus the main chain: materialized, the corpus is scanned once
+    val perSrc = Materialize(docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
-      sum(ceil(col("n_chars") / 4.0).cast("long")).as("tokens")).localCheckpoint()
+      sum(ceil(col("n_chars") / 4.0).cast("long")).as("tokens")))
     val tot = perSrc.agg(sum("tokens").as("total_tokens"))
     val q = perSrc.crossJoin(broadcast(tot))
       .withColumn("sq",
@@ -927,18 +912,18 @@ object CurationOps {
     * cardinality, bounded by language, not data volume), then each merge
     * rank costs one aggregation over that small frame. Per-round hygiene
     * matches [[graft.operators.DedupOps.connectedComponents]]: the updated
-    * vocab is eagerly localCheckpoint'ed so lineage (and planning time)
-    * stays constant across ranks; the argmax collect moves ONE row to the
-    * driver per rank. Ties break (count desc, first asc, second asc) —
+    * vocab is materialized (and its predecessor released) so lineage and
+    * planning time stay constant across ranks; the argmax collect brings back
+    * ONE row per rank. Ties break (count desc, first asc, second asc) —
     * fully deterministic, so the learned table is reproducible.
     */
   def bpeTrain(docs: DataFrame, numMerges: Int): Seq[(String, String)] = {
-    var vocab = graft.Tables.spread(docs.select(split(col("text"), " ").as("ws")))
-      .select(explode(col("ws")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wct"))
-      .select(bpeSymbols(col("word")).as("sym"), col("wct"))
-      .localCheckpoint(true)
+    var vocab = Materialize(
+      graft.Tables.spread(docs.select(split(col("text"), " ").as("ws")))
+        .select(explode(col("ws")).as("word"))
+        .filter(length(col("word")) > 0)
+        .groupBy("word").agg(count(lit(1)).as("wct"))
+        .select(bpeSymbols(col("word")).as("sym"), col("wct")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     while (merges.size < numMerges && !exhausted) {
@@ -955,10 +940,13 @@ object CurationOps {
       else {
         val m = (best(0).getString(0), best(0).getString(1))
         merges += m
-        vocab = vocab.select(bpeApply(col("sym"), Seq(m)).as("sym"), col("wct"))
-          .localCheckpoint(true)
+        val next = Materialize(
+          vocab.select(bpeApply(col("sym"), Seq(m)).as("sym"), col("wct")))
+        Materialize.release(vocab)
+        vocab = next
       }
     }
+    Materialize.release(vocab)
     merges.toSeq
   }
 
@@ -1095,14 +1083,11 @@ object CurationOps {
     // are identical) — as an aggregated column each model consumer would
     // prune it differently, de-canonicalizing the shared subtree and
     // re-exploding the corpus once per model (the t13 uniform-filter lesson)
-    // localCheckpoint is load-bearing (r14 batch 7): the optimizer
-    // collapses bm's sum-over-count through this groupBy, so without the
-    // materialization the bm broadcast branch re-ran the corpus bigram
-    // explode (measured: 2 explode stages, the branch's 3.2 s agg + 2.6 s
-    // exchange write at sf0.1) — the t13 db discipline
-    val db = bi.groupBy("doc_id", "bucket", "is_target")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    // materialized: the optimizer collapses bm's sum-over-count through
+    // this groupBy, so the bm broadcast branch would re-run the corpus
+    // bigram explode (the t13 db discipline)
+    val db = Materialize(bi.groupBy("doc_id", "bucket", "is_target")
+      .agg(count(lit(1)).as("tf")))
     // BOTH models from one bucket-keyed aggregation of the per-doc rows
     // (conditional sum for the target counts): a separate filtered `tgt`
     // frame would push its predicate below the shared exchange and

@@ -98,27 +98,15 @@ object DedupOps {
     * bucket-join on (band, key) for candidates, then verify with exact Jaccard
     * over the distinct shingle sets. Candidates, not n², hit the verify step.
     *
-    * The per-doc signature+set table is MAP-computed (no shuffle) and cached
-    * so the band self-join and both jaccard probe sides reuse it.
+    * The per-doc signature+set table is MAP-computed (no shuffle) and
+    * materialized once: the band self-join and both jaccard probe sides
+    * read it through broadcast jobs that launch in parallel.
     */
-  def minhashLshPairs(docs: DataFrame, eager: Boolean = true): DataFrame = {
+  def minhashLshPairs(docs: DataFrame): DataFrame = {
     // spread: band self-join + per-pair set intersections below expand per
     // row, so the split count of this table caps their parallelism
-    val docsig = graft.Tables.spread(docShingles(docs)
-        .select(Seq(col("doc_id"), col("shset"), col("n")) ++ minhashCols: _*))
-      .cache()
-    // eager: the band self-join and both jaccard probe sides consume docsig
-    // through independent broadcast-collect jobs that launch in parallel,
-    // and concurrent first readers of an unmaterialized cache each
-    // re-COMPUTE unstored partitions (measured: four overlapping 32-task
-    // jobs, ~4.9 s of task time where the build itself needs ~2 s at
-    // sf0.1). One count materializes the signature pass exactly once.
-    // eager=false for callers whose pair plan usually never EXECUTES
-    // (nearDupClusters: on a ClusterMemo hit the closure is read from the
-    // memo and this whole subtree is skipped — an unconditional count here
-    // made d10/d11/d20/s11 pay the signature build per INVOCATION, +4.2 MB
-    // shuffle each); a memo miss then pays the build race once per session.
-    if (eager) docsig.count()
+    val docsig = Materialize(graft.Tables.spread(docShingles(docs)
+        .select(Seq(col("doc_id"), col("shset"), col("n")) ++ minhashCols: _*)))
     val bandKeys = (0 until NumBands).map(b =>
       concat(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
     val bands = docsig.select(col("doc_id"),
@@ -138,14 +126,9 @@ object DedupOps {
     * a hash join instead of a nested-loop range join.
     */
   def ngramJaccard(docs: DataFrame): DataFrame = {
-    val sets = docShingles(docs).select("doc_id", "shset", "n").cache()
-    // eager: the verify step broadcasts sets to BOTH pair sides, and those
-    // two broadcast-collect jobs launch in parallel — concurrent first
-    // readers of an unmaterialized cache each COMPUTE the blocks (BlockManager
-    // stores one copy but the shingle pass runs per reader; measured as two
-    // overlapping ~230 ms build jobs at sf0.1 — a duplicated corpus text
-    // pass at scale). Materializing here makes the build run exactly once.
-    sets.count()
+    // materialized: the verify step broadcasts sets to BOTH pair sides, in
+    // two jobs that launch in parallel
+    val sets = Materialize(docShingles(docs).select("doc_id", "shset", "n"))
     val ids = docs.select(col("doc_id"))
     val cand = ids
       .select(col("doc_id").as("a"),
@@ -179,12 +162,11 @@ object DedupOps {
     val uni = col("na") + col("nb") - col("inter_ct")
     // broadcast EXPLICITLY: this map-side join-back is the operator's scale
     // contract (pairs carry only ids; the arrays never ride a shuffle).
-    // With the set table eagerly materialized (the build-race fix), AQE sees
-    // its EXACT in-memory size, and past the 10 MB threshold it flips both
-    // join-backs to SMJ — shuffling a shingle array per pair side (measured
-    // at 10x: 0.5 -> 398 MB shuffle, 26 s). The hint pins the documented
-    // strategy; at set sizes beyond executor memory the posting-list
-    // formulation (containmentPairs' d18 shape) is the swap-in.
+    // The materialized set table exposes its exact size, and past the
+    // broadcast threshold AQE would flip both join-backs to SMJs that
+    // shuffle a shingle array per pair side. At set sizes beyond executor
+    // memory the posting-list formulation (containmentPairs' d18 shape) is
+    // the swap-in.
     cand
       .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
       .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
@@ -226,30 +208,22 @@ object DedupOps {
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
       maxDf: Long = 50, minShared: Long = 2): DataFrame = {
-    val sets = graft.Tables.spread(
-        docShingles(docs).select(col("doc_id"), col("shset"), col("n")))
-      .cache()
-    // eager: sets feeds the posting explode AND both join-back sides, whose
-    // jobs launch in parallel — concurrent first readers of an
-    // unmaterialized cache re-compute unstored partitions (the d3/d5 race;
-    // measured here as overlapping partial shingle builds). Build it once.
-    sets.count()
-    // the df-filtered POSTING LIST is materialized once: it feeds BOTH sides
-    // of the candidate self-join, and at bench scale AQE broadcast-converts
-    // that join — no exchanges, so runtime exchange reuse cannot share the
-    // subtree and each side re-ran the corpus explode AND the df aggregation
-    // (measured: 4 Generate + 2 df-agg nodes in the final plan). Caching is
-    // exactly MOSS's "write the index" step; memory is the df-capped posting
-    // list, a bounded fraction of corpus shingles (r14 optimization; same
-    // pattern in winnowPairs).
+    // materialized: sets feeds the posting explode AND both join-back
+    // sides, whose jobs launch in parallel
+    val sets = Materialize(graft.Tables.spread(
+        docShingles(docs).select(col("doc_id"), col("shset"), col("n"))))
+    // the df-filtered POSTING LIST (MOSS's "write the index" step) is
+    // materialized too: it feeds BOTH sides of the candidate self-join, and
+    // a broadcast-converted join shares no subtree through exchange reuse.
+    // Its size is the df-capped posting list, a bounded fraction of corpus
+    // shingles.
     val post = sets.select(col("doc_id"), explode(col("shset")).as("sh"))
     val rare = post.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf)).select("sh")
-    val kept = post.join(rare, Seq("sh")).cache()
-    // eager for the same reason as sets above: both candidate self-join
-    // sides launch in parallel and would race to build the posting list
-    kept.count()
-    val cand = kept.select(col("sh"), col("doc_id").as("a"))
+    val kept = Materialize(post.join(rare, Seq("sh")))
+    // spread the probe side: the materialized posting list keeps AQE's
+    // coalesced layout, and the self-join expands per posting row
+    val cand = graft.Tables.spread(kept).select(col("sh"), col("doc_id").as("a"))
       .join(kept.select(col("sh"), col("doc_id").as("b")), Seq("sh"))
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("shared_rare"))
@@ -258,10 +232,7 @@ object DedupOps {
     val contain =
       floor(col("inter_ct") * 10000.0 / least(col("na"), col("nb")) + 0.5) / 10000.0
     cand
-      // broadcast explicitly for the same reason as jaccardOf: the eager
-      // sets materialization exposes exact stats, and past the threshold
-      // AQE would flip these join-backs to SMJs that shuffle the shingle
-      // arrays per pair (measured at 10x: d18 138 -> 301 MB shuffle)
+      // broadcast explicitly for the same reason as jaccardOf
       .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
       .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
       .withColumn("inter_ct", graft.functions.IntersectCount(col("sa"), col("sb")))
@@ -292,12 +263,17 @@ object DedupOps {
     * Returns (doc_id, cluster_id); cluster_id = min doc_id in the component.
     */
   def nearDupClusters(docs: DataFrame, threshold: Double, maxIter: Int = 10): DataFrame = {
-    // eager=false: on a ClusterMemo hit the pair plan never executes, so an
-    // eager signature build here would be pure waste (see minhashLshPairs)
-    val pairs = minhashLshPairs(docs, eager = false)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-    connectedComponents(docs.select(col("doc_id")), pairs, maxIter)
+    // keyed on the raw docs, and the LSH pairs are built inside the compute:
+    // a hit (d11/s11/c2/c3/d20 after d10) runs no signature pass at all
+    val vertices = docs.select(col("doc_id"))
+    val labels = SessionMemo.getOrCompute(
+        SessionMemo.key(s"neardup:$threshold:$maxIter", docs)) {
+      val pairs = minhashLshPairs(docs)
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"))
+      ccConverge(vertices, pairs, maxIter)
+    }
+    withSingletons(vertices, labels)
   }
   /** D10 face: clusters at the 0.7 Jaccard threshold the c2 export uses. */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
@@ -310,27 +286,19 @@ object DedupOps {
     * component of diameter D converges in O(log D) rounds, not O(D) — a
     * 60-deep chain closes in ~7 rounds, safely inside the default cap.
     *
-    * Iteration hygiene at scale: every round ends in an EAGER
-    * `localCheckpoint`, so the plan each round starts from is a flat scan of
-    * materialized blocks — lineage (and job planning time) stays CONSTANT
+    * Iteration hygiene at scale: every round ends in a [[Materialize]], so
+    * the plan each round starts from is a flat scan of materialized blocks — lineage (and job planning time) stays CONSTANT
     * per round instead of growing linearly. The convergence signal rides a
     * `LongAccumulator` out of the SAME job that materializes the checkpoint
     * — ONE action per round, not a checkpoint plus a count pass. (Task
     * retries can only over-count an accumulator; the loop reads it solely as
     * `changed == 0`, which retries cannot fake.)
     *
-    * Block lifecycle is DETERMINISTIC, not cleaner-driven: each round's new
-    * eager checkpoint supersedes the previous label snapshot, whose
-    * MEMORY_AND_DISK blocks are unpersisted as soon as the new one
-    * materializes; `edges` is dropped after convergence. Waiting for the
-    * async ContextCleaner instead (the round-6 behavior) pinned
-    * pair-graph-sized blocks × up to 10 rounds for the rest of the session —
-    * BENCH_r07 measured the fallout as a 7× pass-2 blowup on d11 and
-    * elevated p2 on every query sharing the session with the d-cluster. The
-    * FINAL label checkpoint stays persisted and is OWNED BY [[ClusterMemo]]:
-    * eager localCheckpoint truncates lineage, so the memoized frame's blocks
-    * are its only substance — sweeps must skip [[ClusterMemo.protectedRddIds]]
-    * (Bench does), and [[ClusterMemo.clear]] releases everything.
+    * Block lifecycle: each round's snapshot is released as soon as the
+    * next one materializes, and `edges` after convergence. The converged
+    * labels are memoized per (vertices, pairs, maxIter) in [[SessionMemo]],
+    * which owns their blocks: d10/d11/s11/c2/c3 and e2's name graph pay the
+    * closure once per session.
     *
     * Only TOUCHED vertices iterate: a vertex with no incident pair can never
     * change label, and in a deduplication graph singletons are the
@@ -346,22 +314,18 @@ object DedupOps {
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
       maxIter: Int = 10): DataFrame = {
-    // Converged labels are memoized per (vertices, pairs, maxIter) input —
-    // keyed on exprId-normalized canonical plans, so d10/d11/s11/c2/c3 (and
-    // e2's name graph across its own passes) pay the LSH + closure ONCE per
-    // session instead of once per consumer. The singleton rejoin below stays
-    // per-call: it is one anti-join, and keeping it out of the memo keeps
-    // the cached blocks pair-graph-sized, not corpus-sized.
-    val key = {
-      val sc = vertices.sparkSession.sparkContext
-      val vh = vertices.queryExecution.analyzed.canonicalized.semanticHash()
-      val ph = pairs.queryExecution.analyzed.canonicalized.semanticHash()
-      s"${sc.applicationId}:cc:$vh:$ph:$maxIter"
-    }
-    val labels = ClusterMemo.getOrCompute(key) {
+    val labels = SessionMemo.getOrCompute(
+        SessionMemo.key(s"cc:$maxIter", vertices, pairs)) {
       ccConverge(vertices, pairs, maxIter)
     }
-    // untouched vertices were never candidates: each is its own cluster
+    withSingletons(vertices, labels)
+  }
+
+  /** Pair-touched labels plus every untouched vertex as its own cluster.
+    * The rejoin stays outside the memo so memoized blocks are
+    * pair-graph-sized, not corpus-sized.
+    */
+  private def withSingletons(vertices: DataFrame, labels: DataFrame): DataFrame = {
     val singletons = vertices.select(col("doc_id"))
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
@@ -376,25 +340,24 @@ object DedupOps {
   @volatile private[graft] var lastClosureRounds: Int = -1
 
   /** The min-label + pointer-jumping loop itself (memoized by the public
-    * face above): returns the converged (doc_id, cluster_id) frame over
-    * pair-touched vertices only, as an eager localCheckpoint.
+    * faces above): returns the converged (doc_id, cluster_id) frame over
+    * pair-touched vertices only, materialized.
     */
   private def ccConverge(vertices: DataFrame, pairs: DataFrame,
       maxIter: Int): DataFrame = {
     val spark = vertices.sparkSession
     // undirected: propagate labels both ways
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(true) // LSH pair generation runs ONCE, not per round
+    val edges = Materialize(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     // seed semi-joined against `vertices`: labels are the only rows that can
     // reach the output, so this pins output ⊆ vertices even if a caller's
     // pair frame references ids outside the vertex set (a phantom endpoint
     // contributes nothing — unlabeled srcs propagate no minimum, unlabeled
     // dsts drop in the left join below). Pair-graph-sized, paid once.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    var labels = Materialize(edges.select(col("src").as("doc_id")).distinct()
       .join(vertices.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("doc_id").as("cluster_id")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -416,43 +379,18 @@ object DedupOps {
       // is a narrow 3-column frame, so the typed boundary costs nothing next
       // to the job it eliminates
       val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
-      val next = marked.mapPartitions { it =>
+      val next = Materialize(marked.mapPartitions { it =>
         it.map { r => if (r.getBoolean(2)) acc.add(1L); r }
-      }(org.apache.spark.sql.Encoders.row(marked.schema))
-        .localCheckpoint(true)
+      }(org.apache.spark.sql.Encoders.row(marked.schema)))
       changed = acc.value
-      // `next` is materialized: the previous snapshot's blocks are dead now,
-      // not whenever the async ContextCleaner gets to them
-      unpersistCheckpoint(labels)
+      Materialize.release(labels)
       labels = next.drop("_changed")
       iter += 1
     }
-    // the converged labels are checkpointed; the edge blocks are dead
-    unpersistCheckpoint(edges)
+    Materialize.release(edges)
     lastClosureRounds = iter
     labels
   }
-
-  /** Release the MEMORY_AND_DISK blocks behind an EAGER `localCheckpoint`'d
-    * frame, synchronously from the caller's perspective (the non-blocking
-    * unpersist enqueues removal immediately; blocks stop counting against
-    * storage before the next job needs the memory). An eager local
-    * checkpoint's logical plan is exactly a `LogicalRDD` over the persisted
-    * internal-row RDD, so this targets PRECISELY the superseded snapshot —
-    * no `getPersistentRDDs` diffing that could race a concurrent session and
-    * destroy someone else's checkpoint. No-op for any other plan shape.
-    * NOTE: only call on frames whose blocks are truly dead — a checkpoint's
-    * blocks are its only substance (lineage is truncated), so a later action
-    * on the same frame would throw.
-    */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    // the checkpoint'd frame may carry a projection on top (labels after
-    // .drop), so walk to the leaves; LogicalRDD is itself a LeafNode
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** D20 — duplicate-cluster SIZE SPECTRUM, the dedup report every corpus
     * card carries (how much of the corpus is duplicated how many times):
@@ -463,7 +401,7 @@ object DedupOps {
     *
     * Scale notes (100 TB): runs on the (doc_id, cluster_id) label frame —
     * the expensive closure is [[nearDupClusters]]'s, paid once per session
-    * (ClusterMemo) and shared with d10/d11/s11/c2/c3; the spectrum itself
+    * (SessionMemo) and shared with d10/d11/s11/c2/c3; the spectrum itself
     * is two integer aggregations, the second over cluster-count-sized
     * rows. `n_docs = size × clusters` stays a projection, not a rescan.
     */
@@ -589,12 +527,8 @@ object DedupOps {
         posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")): _*)
     // the self-join EXPANDS quadratically inside each bucket, so the probe
     // side's split count caps the whole operator (see Tables.spread)
-    val bands = graft.Tables.spread(bandsRaw).cache()
-    // eager: both bucket-join sides launch in parallel; concurrent first
-    // readers of an unmaterialized cache re-compute unstored partitions
-    // (the d3/d5 race — measured ~0.6 s of duplicated pack/band work at
-    // sf0.1). One count builds the banded fingerprint table exactly once.
-    bands.count()
+    // materialized: both bucket-join sides read it in parallel jobs
+    val bands = Materialize(graft.Tables.spread(bandsRaw))
     val hamming = (0 until nWords).map(i =>
       bit_count(col(s"aw$i").bitwiseXOR(col(s"bw$i"))))
       .reduce(_ + _)
@@ -692,26 +626,16 @@ object DedupOps {
     * count keys on (doc_a, doc_b) with map-side partials.
     */
   def winnowPairs(docs: DataFrame, minShared: Long = 2, maxDf: Long = 50): DataFrame = {
-    // the WinnowMins hash pass runs AFTER the spread exchange, so exchange
-    // reuse between fps's two consumers (the df aggregation and the kept
-    // join) shares only the narrow pre-hash rows and the hashing itself ran
-    // once PER consumer (measured: two 32-task stages of ~9.6 s task time
-    // each at sf0.1 — a duplicated corpus hash pass at scale). Cache + eager
-    // count materializes the fingerprint table exactly once — MOSS's "write
-    // the index" step (r14; the t13 re-explode class).
-    val fps = winnowFingerprints(docs).cache()
-    fps.count()
+    // materialized: the df aggregation and the kept join both read fps,
+    // and exchange reuse would share only the pre-hash rows (the hash pass
+    // runs after spread's exchange)
+    val fps = Materialize(winnowFingerprints(docs))
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("fp")
-    // materialized once for the same reason as containmentPairs' posting
-    // list: under AQE broadcast conversion the self-join's two sides cannot
-    // share the subtree via exchange reuse, so without the cache each side
-    // re-ran the winnow scan and the df aggregation (r14 optimization).
-    // Eager: the self-join's two sides launch in parallel and concurrent
-    // first readers of an unmaterialized cache re-compute unstored
-    // partitions (the d3/d5 race) — count() builds it once.
-    val kept = fps.join(rare, Seq("fp")).cache()
-    kept.count()
+    // the posting list feeds both self-join sides (containmentPairs' reason);
+    // once it is materialized, fps is dead
+    val kept = Materialize(fps.join(rare, Seq("fp")))
+    Materialize.release(fps)
     kept.select(col("fp"), col("doc_id").as("doc_a"))
       .join(kept.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
       .filter(col("doc_a") < col("doc_b"))

@@ -480,20 +480,17 @@ object StatsOps {
     */
   def eventTransitions(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val trans = events
+    // materialized: the totals aggregation below would otherwise collapse
+    // through the rollup and re-run the corpus-scale user window in its
+    // broadcast branch
+    val trans = Materialize(events
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("prev_type",
         coalesce(lag(col("event_type"), 1).over(w), lit("_start")))
       .select(col("prev_type"), col("event_type").as("next_type"))
       .groupBy("prev_type", "next_type")
-      .agg(count(lit(1)).as("ct"))
-      // materialize the event-type²-sized matrix: the totals aggregation
-      // below otherwise collapses through this groupBy and re-runs the
-      // corpus-scale user window a second time in its broadcast branch
-      // (measured: 200k shuffle rows = 2× the events table at sf0.1; the
-      // t13 collapse lesson, r14)
-      .localCheckpoint()
+      .agg(count(lit(1)).as("ct")))
     val totals = trans.groupBy("prev_type").agg(sum("ct").as("row_total"))
     trans.join(broadcast(totals), Seq("prev_type"))
       .withColumn("prob",
@@ -550,29 +547,22 @@ object StatsOps {
   def pageRank(events: DataFrame, iters: Int = 5): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val seq0 = nodeSeq(events)
-    val edges = seq0
+    // the ONE corpus-scale pass materializes here: every unrolled round
+    // (and outw/nodes) reads the flat, node²-bounded edge-catalog blocks
+    // instead of replaying the user-keyed window
+    val edges = Materialize(seq0
       .withColumn("src", lag(col("node"), 1).over(w))
       .filter(col("src").isNotNull)
       .select(col("src"), col("node").as("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      // the ONE corpus-scale pass materializes here: every unrolled round
-      // (and outw/nodes) then reads the flat edge-catalog blocks instead of
-      // replaying the user-keyed window 5x — the DedupOps.connectedComponents
-      // discipline; the catalog is node²-bounded, tiny at any corpus scale
-      .localCheckpoint(true)
+      .groupBy("src", "dst").agg(count(lit(1)).as("w")))
     // outw and the node catalog are node-sized and read EVERY round (and
-    // outw once more by the returned frame): checkpointed once so each
-    // round's plan is flat block scans, not a re-run distinct/agg (r14)
-    val outw = edges.groupBy("src").agg(sum("w").as("outw")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst"))).distinct().localCheckpoint(true)
-    // n and the per-round dangling mass are ONE-ROW aggregates over node-
-    // catalog-sized checkpointed frames: held as driver scalars (the n2b
-    // convergence-scalar convention — bounded, never a data collect) instead
-    // of crossJoin(broadcast(...)) — each broadcast was its own exchange +
-    // BNLJ node and, under AQE, its own job, re-paid EVERY round (r14
-    // optimization: ~3 jobs/round and the nN re-aggregation removed; the
-    // arithmetic is unchanged — same longs, same floor expressions)
+    // outw once more by the returned frame)
+    val outw = Materialize(edges.groupBy("src").agg(sum("w").as("outw")))
+    val nodes = Materialize(edges.select(col("src").as("node"))
+      .union(edges.select(col("dst"))).distinct())
+    // n and the per-round dangling mass are ONE-ROW aggregates over
+    // node-sized materialized frames, held as local scalars (the n2b
+    // convergence-scalar convention) instead of per-round broadcast joins
     val n = nodes.count()
     var ranks = nodes
       .select(col("node"), lit(math.floor(1e8 / n + 0.5).toLong).as("r"))
@@ -599,18 +589,16 @@ object StatsOps {
       // checkpoint blocks instead of a tree that doubles per round
       val base = math.floor(1.5e7 / n + 0.5).toLong +
         math.floor(0.85 * dang.toDouble / n + 0.5).toLong
-      val next = nodes
+      val next = Materialize(nodes
         .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"),
-          (lit(base) + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint(true)
-      prevOwned.foreach(DedupOps.unpersistCheckpoint)
+          (lit(base) + coalesce(col("s"), lit(0L))).as("r")))
+      prevOwned.foreach(Materialize.release)
       prevOwned = Some(next)
       ranks = next
     }
-    // edges' checkpoint blocks stay: the returned (lazy) frame still reads
-    // outw from them — the final-checkpoint-ownership convention of
-    // DedupOps.connectedComponents; callers/Bench sweep between queries
+    // the returned frame reads only outw and the last ranks
+    if (iters > 0) Seq(edges, nodes).foreach(Materialize.release)
     ranks.join(outw.withColumnRenamed("src", "node"), Seq("node"), "left")
       .select(col("node"), coalesce(col("outw"), lit(0L)).as("out_weight"),
         (col("r").cast("double") / 1e8).as("pr"))
@@ -645,18 +633,15 @@ object StatsOps {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val seq0 = nodeSeq(events)
     // the edge catalog is referenced by deg (×2), the orientation joins and
-    // the closure join — UNCHECKPOINTED, the before-plan re-derived the
-    // corpus-scale window SEVENTEEN times (17 events scans: every broadcast
-    // branch replays the whole lineage; exchange reuse cannot cross
-    // broadcast boundaries). One eager checkpoint makes every downstream
-    // frame edge-catalog-sized — the g7/g13 edges discipline (r14)
-    val und = seq0
+    // the closure join, and every broadcast branch would replay the
+    // corpus-scale window: materialized, every downstream frame is
+    // edge-catalog-sized (the g7/g13 edges discipline)
+    val und = Materialize(seq0
       .withColumn("src", lag(col("node"), 1).over(w))
       .filter(col("src").isNotNull && col("src") =!= col("node"))
       .select(least(col("src"), col("node")).as("a"),
         greatest(col("src"), col("node")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val withDeg = und
@@ -666,11 +651,10 @@ object StatsOps {
       (col("da") === col("db") && col("a") < col("b"))
     // oriented edges feed the wedge join twice and the closure once: flat
     // blocks, not three re-runs of the degree joins
-    val ori = withDeg.select(
+    val ori = Materialize(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(true)
+      when(aFirst, col("db")).otherwise(col("da")).as("dv")))
     val e1 = ori.select(col("u"), col("v").as("y"), col("dv").as("dy"))
     val e2 = ori.select(col("u"), col("v").as("z"), col("dv").as("dz"))
     val tris = e1.join(e2, Seq("u"))
@@ -705,7 +689,7 @@ object StatsOps {
     * joined against the checkpointed adjacency — labels move, the graph
     * does not (the distributed-LPA layout); the argmax is a two-level
     * partial agg (max of (weight, −label) structs), never a single
-    * reducer; per-round label frames localCheckpoint eagerly and release
+    * reducer; per-round label frames are materialized and release
     * their predecessor (the pageRank discipline), so the plan never grows
     * with rounds. The community-size window rides the final label
     * partitioning.
@@ -718,26 +702,22 @@ object StatsOps {
       .select(least(col("src"), col("node")).as("a"),
         greatest(col("src"), col("node")).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("w"))
-    val adj = und.select(col("a").as("node"), col("b").as("nbr"), col("w"))
-      .union(und.select(col("b").as("node"), col("a").as("nbr"), col("w")))
-      .localCheckpoint(true)
+    val adj = Materialize(und.select(col("a").as("node"), col("b").as("nbr"), col("w"))
+      .union(und.select(col("b").as("node"), col("a").as("nbr"), col("w"))))
     var labels = adj.select(col("node")).distinct()
       .withColumn("label", col("node"))
     var prevOwned: Option[DataFrame] = None
     for (_ <- 1 to iters) {
-      // NOT fused to one hash(node) exchange (r14: considered, rejected):
-      // pre-repartitioning by node would let both aggregation levels run
-      // co-located, but the single exchange would then carry RAW edge rows
-      // where the two-level form ships map-side (node,label) partials —
-      // the partial-aggregation discipline wins at scale
-      val next = adj
+      // NOT fused to one hash(node) exchange: that exchange would carry RAW
+      // edge rows where the two-level form ships map-side (node, label)
+      // partials
+      val next = Materialize(adj
         .join(labels.select(col("node").as("nbr"), col("label")), Seq("nbr"))
         .groupBy("node", "label").agg(sum("w").as("lw"))
         .groupBy("node")
         .agg(max(struct(col("lw"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label"))
-        .localCheckpoint(true)
-      prevOwned.foreach(DedupOps.unpersistCheckpoint)
+        .select(col("node"), (-col("m.nl")).as("label")))
+      prevOwned.foreach(Materialize.release)
       prevOwned = Some(next)
       labels = next
     }
@@ -803,12 +783,9 @@ object StatsOps {
     */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     val fps = docs.select(col("source"), md5(col("text")).as("fp")).distinct()
-    // source-cardinality; its two broadcast branches each re-derived the
-    // corpus-scale distinct otherwise (r14; the g10 totals pattern).
-    // localCheckpoint over cache: keeps AQE-coalesced partitioning, so the
-    // broadcast consumers don't pay 32-task stages on a sources-sized frame
-    val counts = fps.groupBy("source").agg(count(lit(1)).as("n_fps"))
-      .localCheckpoint()
+    // source-cardinality; its two broadcast branches would each re-derive
+    // the corpus-scale distinct
+    val counts = Materialize(fps.groupBy("source").agg(count(lit(1)).as("n_fps")))
     val shared = fps
       .join(fps.select(col("source").as("source_b"), col("fp")), Seq("fp"))
       .filter(col("source") < col("source_b"))

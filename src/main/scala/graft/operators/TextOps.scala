@@ -335,17 +335,11 @@ object TextOps {
       // filter uniform, cb/ctx reuse db's corpus-scale shuffle instead of
       // re-exploding the corpus twice more
       .filter(col("w1").isNotNull && col("w2").isNotNull)
-    // materialize db (the g7/g8 localCheckpoint discipline): cb and ctx
-    // otherwise each re-run the corpus-scale bigram explode + partial agg
-    // directly over the (reused) spread exchange — three full token passes
-    // per execution (measured: 3 explode stages of ~12 s summed task time
-    // each at sf0.1; a .cache() also collapses them but hides stats from
-    // AQE — the probe's partial agg lost its coalesced input and shuffled
-    // 118k instead of 20k partials). Checkpointed, the explode and its one
-    // corpus shuffle run once, all three consumers read the narrow
-    // (doc_id,w1,w2,tf) blocks, and the AQE-coalesced partitioning is kept.
-    val db = bi.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    // materialized: cb and ctx would otherwise each re-run the corpus-scale
+    // bigram explode + partial agg over the (reused) spread exchange; this
+    // way the explode and its one corpus shuffle run once and all three
+    // consumers read the narrow (doc_id, w1, w2, tf) blocks
+    val db = Materialize(bi.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
     // model counts from the per-doc aggregate (vocabulary-sized input)
     val cb = db.groupBy("w1", "w2").agg(sum("tf").as("cb"))
     // ctx from cb, not db: ctx(w1) = Σ_w2 cb(w1,w2) exactly (integer sums),
@@ -389,18 +383,16 @@ object TextOps {
     * histogram (the single-partition window is histogram-sized, not
     * corpus-sized) and broadcast back; assignment is map-side. The t13
     * scored frame — ONE (doc_id, nll) row per document, ~1/10⁵ of corpus
-    * bytes — is cached so the corpus-scale LM work runs ONCE for the two
-    * consumers (histogram + assignment); pruning-divergent branches
+    * bytes — is materialized so the corpus-scale LM work runs ONCE for the
+    * two consumers (histogram + assignment); pruning-divergent branches
     * de-canonicalize the t13 subtree, so AQE exchange reuse does NOT cover
-    * this split (measured: 8 scans / 15 exchanges uncached vs 2 scans
-    * cached — the d8 bands.cache() precedent; the bench clears caches
-    * between queries, pipelines own the release). All threshold
+    * this split. All threshold
     * comparisons are integer (3·cum vs n); the only doubles are the
     * already-quantized nll leaves.
     */
   def pplBuckets(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = lmScore(d).select(col("doc_id"), col("nll")).localCheckpoint()
+    val scored = Materialize(lmScore(d).select(col("doc_id"), col("nll")))
     val hist = scored.groupBy(col("nll")).agg(count(lit(1)).as("ct"))
     val all = Window.orderBy(col("nll"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -469,18 +461,13 @@ object TextOps {
           .select(col("doc_id"), isPos.as("is_pos"), col("text")))
       .select(col("doc_id"), col("is_pos"), explode(words(col("text"))).as("word"))
       .filter(col("word").isNotNull)
-    // localCheckpoint is load-bearing (r14 batch 7): the optimizer
-    // collapses the model's sum-over-count through this groupBy, so the
-    // model broadcast branch re-ran the corpus word explode (runtime SQL-
-    // metric dump: 2 explode stages of 270k rows each — the final-plan
-    // text hid the duplicate; the t13/s10 db discipline). Materialized,
-    // the explode and its one corpus shuffle run once and both consumers
-    // (model + scoring probe) read the narrow (doc_id,word,is_pos,tf)
-    // blocks. This also retires the c3 de-canonicalization hazard the
-    // isNotNull note below guards — blocks cannot be filter-split.
-    val dw = toks.groupBy("doc_id", "word", "is_pos")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    // materialized: the optimizer collapses the model's sum-over-count
+    // through this groupBy, so the model broadcast branch would re-run the
+    // corpus word explode (the t13/s10 db discipline). Both consumers (model
+    // + scoring probe) read the narrow (doc_id, word, is_pos, tf) blocks,
+    // which also cannot be filter-split by c3's pushed predicates.
+    val dw = Materialize(toks.groupBy("doc_id", "word", "is_pos")
+      .agg(count(lit(1)).as("tf")))
     // per-class word counts from the per-doc aggregate (vocab-sized):
     // conditional sums keep ONE shared exchange (the s10 bm recipe).
     // |V| rides ON the model rows as an unpartitioned window count — the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables.dsum
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -581,15 +582,12 @@ object StatsStreams {
         "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     // ctx from the (w1,w2) counts, not a second pass over bi: the two model
-    // tables group by DIFFERENT keys, so the corpus-scale explode ran twice
-    // (no shared exchange). ctx(w1) = Σ_w2 cb(w1,w2) exactly (integer
-    // sums); the checkpoint is load-bearing — the optimizer collapses
-    // aggregate-over-aggregate chains back to two direct corpus passes
-    // without it (r14; mirrors the batch lmScore db materialization). The
-    // checkpointed frame is vocabulary²-sized, re-paid only per model
-    // build, and the model swap owns its release.
-    val cbCounts = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      .localCheckpoint()
+    // tables group by DIFFERENT keys and share no exchange. ctx(w1) =
+    // Σ_w2 cb(w1,w2) exactly (integer sums). Materialized, because the
+    // optimizer collapses aggregate-over-aggregate chains back to two direct
+    // corpus passes (the batch lmScore db discipline); the frame is
+    // vocabulary²-sized and paid once per model build.
+    val cbCounts = Materialize(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
     val cbm = cbCounts
       .agg(map_from_arrays(
         collect_list(concat_ws(" ", col("w1"), col("w2"))),
@@ -855,17 +853,17 @@ object StatsStreams {
         val live = recent.map(_.unionByName(b)).getOrElse(b)
         val refRow = live.agg(max(col("us")).as("ref_us"))
         val withRef = live.crossJoin(broadcast(refRow))
-        val keep = withRef.filter(col("us") > col("ref_us") - dayUs)
-          .select("event_type", "us").localCheckpoint(true)
+        val keep = Materialize(withRef.filter(col("us") > col("ref_us") - dayUs)
+          .select("event_type", "us"))
         val aged = withRef.filter(col("us") <= col("ref_us") - dayUs)
           .groupBy("event_type")
           .agg(count(lit(1)).as("old_total"), max(col("us")).as("old_last"))
-        val mergedOld = older.map(_.unionByName(aged).groupBy("event_type")
+        val mergedOld = Materialize(older.map(_.unionByName(aged).groupBy("event_type")
             .agg(sum(col("old_total")).as("old_total"),
               max(col("old_last")).as("old_last")))
-          .getOrElse(aged).localCheckpoint(true)
-        recent.foreach(graft.operators.DedupOps.unpersistCheckpoint)
-        older.foreach(graft.operators.DedupOps.unpersistCheckpoint)
+          .getOrElse(aged))
+        recent.foreach(Materialize.release)
+        older.foreach(Materialize.release)
         recent = Some(keep)
         older = Some(mergedOld)
         val fresh = keep.groupBy("event_type")
@@ -990,7 +988,7 @@ object StatsStreams {
           graft.operators.StatsOps.attributionMarkedPre(
             finalizing.unionByName(
               all.filter(col("event_type") === "view"))))
-        val mergedDone = doneAgg.map(_.unionByName(frozen))
+        val mergedDone = Materialize(doneAgg.map(_.unionByName(frozen))
           .getOrElse(frozen)
           .groupBy("channel").agg(
             sum(col("ft_purchases")).as("ft_purchases"),
@@ -998,16 +996,15 @@ object StatsStreams {
             sum(col("lt_purchases")).as("lt_purchases"),
             sum(col("lt_rev_d")).as("lt_rev_d"),
             sum(col("lin_rev_d")).as("lin_rev_d"),
-            sum(col("pos_rev_d")).as("pos_rev_d"))
-          .localCheckpoint(true)
-        val keep = withRef.filter(
+            sum(col("pos_rev_d")).as("pos_rev_d")))
+        val keep = Materialize(withRef.filter(
             (col("event_type") === "purchase" &&
               col("us") >= col("ref_us") - winUs) ||
             (col("event_type") === "view" &&
               col("us") > col("ref_us") - 2 * winUs))
-          .drop("ref_us").localCheckpoint(true)
-        live.foreach(graft.operators.DedupOps.unpersistCheckpoint)
-        doneAgg.foreach(graft.operators.DedupOps.unpersistCheckpoint)
+          .drop("ref_us"))
+        live.foreach(Materialize.release)
+        doneAgg.foreach(Materialize.release)
         live = Some(keep)
         doneAgg = Some(mergedDone)
         val report = graft.operators.StatsOps.attributionFinish(
@@ -1041,10 +1038,10 @@ object StatsStreams {
     events.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val b = graft.operators.RelationalOps.dailyCounts(batch)
-        val merged = daily.map(_.unionByName(b)
+        val merged = Materialize(daily.map(_.unionByName(b)
             .groupBy("event_type", "day_idx").agg(sum(col("ct")).as("ct")))
-          .getOrElse(b).localCheckpoint(true)
-        daily.foreach(graft.operators.DedupOps.unpersistCheckpoint)
+          .getOrElse(b))
+        daily.foreach(Materialize.release)
         daily = Some(merged)
         sink(graft.operators.RelationalOps.volumeAnomalyOfDaily(merged, zGate),
           id)
@@ -1078,7 +1075,7 @@ object StatsStreams {
     * vocabulary gram stream (vocab-sized, ≪ records, never shuffled by
     * corpus size); the component loop is d10's machinery over pair-touched
     * vertices only. State = vocabulary + verified name-pair set, both
-    * vocabulary-bounded, held as eager localCheckpoints with the d10
+    * vocabulary-bounded, held as [[Materialize]]d snapshots with the d10
     * retire-on-supersede block lifecycle — nothing grows with record
     * count.
     */
@@ -1095,9 +1092,9 @@ object StatsStreams {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val bNames = batch.groupBy(col("p_name").as("name"))
           .agg(min(col("p_partkey")).as("id"))
-        val merged = vocab.map(_.unionByName(bNames)
+        val merged = Materialize(vocab.map(_.unionByName(bNames)
             .groupBy("name").agg(min(col("id")).as("id")))
-          .getOrElse(bNames).localCheckpoint(true)
+          .getOrElse(bNames))
         // block only names never seen before: an existing name's edges are
         // already in the pair state (keyed by name, so id changes are inert)
         val fresh = vocab.map(v => bNames.join(v.select("name"), Seq("name"), "left_anti"))
@@ -1120,8 +1117,8 @@ object StatsStreams {
           .distinct()
         val newPairs = cand
           .filter(levenshtein(col("name_a"), col("name_b")) <= maxDist)
-        val allPairs = pairsByName.map(_.unionByName(newPairs).distinct())
-          .getOrElse(newPairs).localCheckpoint(true)
+        val allPairs = Materialize(pairsByName.map(_.unionByName(newPairs).distinct())
+          .getOrElse(newPairs))
         val idOf = (side: String) => merged
           .select(col("name").as(s"name_$side"), col("id").as(s"doc_$side"))
         val clusters = graft.operators.DedupOps.connectedComponents(
@@ -1136,8 +1133,8 @@ object StatsStreams {
         sink(canonMap, id)
         // retire the superseded snapshots only AFTER the sink consumed the
         // new map (the d10 deterministic block lifecycle)
-        vocab.foreach(graft.operators.DedupOps.unpersistCheckpoint)
-        pairsByName.foreach(graft.operators.DedupOps.unpersistCheckpoint)
+        vocab.foreach(Materialize.release)
+        pairsByName.foreach(Materialize.release)
         vocab = Some(merged)
         pairsByName = Some(allPairs)
     }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery,
+  TimeMode, TimerValues, TTLConfig, ValueState}
 import java.time.Duration
 
 /** A5 via the transformWithState API — the EXACT state shape of the
@@ -55,5 +55,19 @@ object UniqueVisitTws {
       .groupByKey(_.mid)
       .transformWithState(new UniqueVisitProcessor,
         TimeMode.ProcessingTime(), OutputMode.Append())
+  }
+
+  /** Stop `q` once it has committed `rows` input rows. The processing-time
+    * TTL makes every trigger plan another no-data batch, so the query never
+    * terminates by itself, not even under `Trigger.AvailableNow`. Throws if
+    * the input is not committed within 300 s.
+    */
+  def stopWhenCommitted(q: StreamingQuery, rows: Long): Unit = {
+    val deadline = System.nanoTime() + 300L * 1000000000L
+    def committed = q.recentProgress.map(_.numInputRows).sum
+    try while (q.isActive && committed < rows && System.nanoTime() < deadline) Thread.sleep(20)
+    finally q.stop()
+    if (committed < rows)
+      throw new IllegalStateException(s"${q.name} committed $committed of $rows input rows")
   }
 }

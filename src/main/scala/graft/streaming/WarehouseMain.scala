@@ -130,7 +130,8 @@ object WarehouseMain {
 
     // ---- DWM: exact-TTL unique-visit dedup (UniqueVisitApp via
     // transformWithState) — RocksDB-backed keyed state with 24h TTL; driven
-    // with AvailableNow (processing-time TTL keeps continuous queries busy)
+    // with AvailableNow and stopped once the log topic is committed
+    // (processing-time TTL keeps the query running no-data batches)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
@@ -143,7 +144,7 @@ object WarehouseMain {
         .option("checkpointLocation", s"$work/ckpt/uv_tws")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .outputMode("append").start()
-      qTws.awaitTermination(300000); qTws.stop()
+      UniqueVisitTws.stopWhenCommitted(qTws, bus.read(spark, "ods_base_log").count())
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     // ---- DWM: order-wide interval join + dim enrichment (OrderWideApp) ----

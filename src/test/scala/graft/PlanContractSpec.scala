@@ -293,7 +293,7 @@ class PlanContractSpec extends SparkSpec {
 
   test("the composed curation capstone keeps t15's single tf explode (c3)") {
     val p = finalPlanOf("c3_curated_train_export")
-    // t15's tf table is localCheckpoint-materialized (r14), so its word
+    // t15's tf table is materialized, so its word
     // explode lives in the checkpointed subtree and must NOT appear in
     // c3's composed plan at all — a pushed filter can no longer
     // de-canonicalize and double it (the pre-r14 hazard this contract
@@ -307,11 +307,13 @@ class PlanContractSpec extends SparkSpec {
 
   test("the multimodal capstone decodes each modality exactly once (c4)") {
     val p = finalPlanOf("c4_multimodal_curation")
-    // one codec pass per modality: the image phash seam and the audio
-    // fingerprint seam are the only MapPartitions nodes — a third would
-    // mean a gate re-decodes inside the composition (c4 ~= m7 + m8 + t12
-    // by construction; the bench sum confirms, r11: 3.1 vs 1.1+1.7+0.1)
-    assert(count(p, "MapPartitions") === 2, s"c4 decode seam count drifted:\n$p")
+    // one codec pass per modality: the image phash seam runs once, inside
+    // the materialized band table of the shared banded-hamming pair search
+    // (read back as block scans), so the audio fingerprint seam is the only
+    // MapPartitions node left — a second would mean a gate re-decodes
+    // inside the composition (c4 ~= m7 + m8 + t12 by construction)
+    assert(count(p, "MapPartitions") === 1, s"c4 decode seam count drifted:\n$p")
+    assert(count(p, "Scan ExistingRDD") >= 1, s"c4 lost the image band blocks:\n$p")
     // gate assembly stays hash joins (the dropped-image anti probe is the
     // contract-pinned broadcast; nothing may degrade to sort-merge here)
     assert(count(p, "SortMergeJoin") === 0, p)

@@ -217,9 +217,9 @@ class AnnOpsSpec extends SparkSpec {
     assert(cents.map(_._1).toSeq === (0 until k), "cells must survive training")
     // deterministic control flow: a re-run on the same layout agrees to
     // float rounding (double-sum merge order is the only free variable).
-    // TrainMemo would serve the identical array back — clear it so this
+    // SessionMemo would serve the identical array back — clear it so this
     // asserts a GENUINE re-train, not the memo
-    graft.operators.TrainMemo.clear()
+    graft.operators.SessionMemo.clear()
     val again = AnnOps.kmeansTrain(e, k, maxIter = 15, tol = 1e-6)
     val worstRerun = cents.zip(again).map { case ((_, a), (_, b)) =>
       a.zip(b).map { case (x, y) => math.abs(x - y) }.max
@@ -639,10 +639,10 @@ class AnnOpsSpec extends SparkSpec {
     assert(bad.count() === 0, "an outlier out-densified an inlier in its cell")
     // the kNN graph is memo-shared: a second derivation over the same
     // corpus re-runs NO graph construction (the n14 build-once contract)
-    val before = ClusterMemo.computeCount
+    val before = SessionMemo.computeCount
     val again = AnnOps.knnDensityOutliers(e)
     assert(again.exceptAll(got).count() === 0)
-    assert(ClusterMemo.computeCount === before,
+    assert(SessionMemo.computeCount === before,
       "dq9 re-built the kNN graph instead of serving the session memo")
   }
 }

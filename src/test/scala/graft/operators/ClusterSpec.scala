@@ -64,7 +64,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("pointer jumping closes a 60-deep chain in <= 7 rounds (spec-pinned)") {
-    ClusterMemo.clear() // force a fresh converge so lastClosureRounds is ours
+    SessionMemo.clear() // force a fresh converge so lastClosureRounds is ours
     val vertices = (0L to 60L).toDF("doc_id")
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     DedupOps.connectedComponents(vertices, chain).count()
@@ -74,24 +74,24 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("session memo: a second structurally identical closure is NOT recomputed") {
-    ClusterMemo.clear()
+    SessionMemo.clear()
     val df = graft.Tables.table(spark, sf, "documents")
     DedupOps.nearDupClusters(df, 0.9).count()
-    val after1 = ClusterMemo.computeCount
+    val after1 = SessionMemo.computeCount
     // a second call building the SAME plan (fresh frame, fresh exprIds) must
     // hit the memo — this is the d10→d11→s11→c3 session-sharing contract
     val again = DedupOps.nearDupClusters(
       graft.Tables.table(spark, sf, "documents"), 0.9)
     assert(again.count() === df.count())
-    assert(ClusterMemo.computeCount === after1,
+    assert(SessionMemo.computeCount === after1,
       "structurally identical closure re-ran the converge loop")
     // ...and a DIFFERENT threshold is a different key: it must recompute
     DedupOps.nearDupClusters(df, 0.95).count()
-    assert(ClusterMemo.computeCount === after1 + 1)
+    assert(SessionMemo.computeCount === after1 + 1)
   }
 
   test("session memo: LRU eviction bounds entries and releases evicted blocks") {
-    ClusterMemo.clear()
+    SessionMemo.clear()
     val vertices = (0L to 10L).toDF("doc_id")
     // 40 distinct keys (different pair frames) — a streaming session's shape
     (1 to 40).foreach { i =>
@@ -100,30 +100,30 @@ class ClusterSpec extends SparkSpec {
         (1000L + i, 2000L + i)).toDF("doc_a", "doc_b")
       DedupOps.connectedComponents(vertices, pairs).count()
     }
-    assert(ClusterMemo.size <= 32, s"memo grew to ${ClusterMemo.size}")
-    // protected ids track only LIVE entries — evicted blocks are released,
-    // so the protected set stays bounded too
-    assert(ClusterMemo.protectedRddIds.size <= 32 * 2)
-    ClusterMemo.clear()
-    assert(ClusterMemo.size === 0)
+    assert(SessionMemo.size <= 32, s"memo grew to ${SessionMemo.size}")
+    // memo-owned ids track only LIVE entries — evicted blocks are
+    // released, so the owned set stays bounded too
+    assert(SessionMemo.blockIds.size <= 32 * 2)
+    SessionMemo.clear()
+    assert(SessionMemo.size === 0)
   }
 
   test("session memo: swept blocks are detected and the closure recomputed") {
-    ClusterMemo.clear()
+    SessionMemo.clear()
     val df = graft.Tables.table(spark, sf, "documents")
     val first = DedupOps.nearDupClusters(df, 0.9).collect().toSet
-    val after1 = ClusterMemo.computeCount
+    val after1 = SessionMemo.computeCount
     // simulate a hostile sweep of the MEMO'S blocks specifically — scoped
-    // to protectedRddIds so this cannot race other suites' caches in the
+    // to the memo-owned ids so this cannot race other suites' blocks in the
     // shared session (an unscoped sweep flaked the d3 plan contract)
-    val memoIds = ClusterMemo.protectedRddIds
+    val memoIds = SessionMemo.blockIds
     assert(memoIds.nonEmpty, "memo holds no live blocks to sweep")
     spark.sparkContext.getPersistentRDDs.values
       .filter(r => memoIds.contains(r.id))
       .foreach(_.unpersist(blocking = true))
     val second = DedupOps.nearDupClusters(df, 0.9)
     assert(second.collect().toSet === first, "recompute changed the labels")
-    assert(ClusterMemo.computeCount === after1 + 1,
+    assert(SessionMemo.computeCount === after1 + 1,
       "memo served a frame whose checkpoint blocks were unpersisted")
   }
 }

@@ -528,9 +528,9 @@ class CurationOpsSpec extends SparkSpec {
     assert(again.exceptAll(out).count() === 0 &&
       out.exceptAll(again).count() === 0)
     // the sampler rides the memoized quantizer: a second draw trains nothing
-    val trained = graft.operators.TrainMemo.computeCount
+    val trained = graft.operators.SessionMemo.computeCount
     CurationOps.clusterBalancedSample(e).count()
-    assert(graft.operators.TrainMemo.computeCount === trained,
+    assert(graft.operators.SessionMemo.computeCount === trained,
       "s14 re-trained the quantizer the memo already holds")
     out.unpersist()
   }

@@ -3,22 +3,22 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-/** Pins the build-once/serve-many contract of [[TrainMemo]] (driver-held
-  * trained artifacts) and the memoized ANN index frames in [[ClusterMemo]]:
-  * a second structurally identical consumer must NOT re-pay training, and a
-  * memo hit must be result-identical to a cold run — the round-13 verdict's
-  * #1 item (c5/n2b re-trained their quantizers per execution).
+/** Pins the build-once/serve-many contract of [[SessionMemo]] for trained
+  * index artifacts (in-memory centroids and codebooks, and the
+  * materialized ANN index frames): a second structurally identical consumer
+  * must NOT re-pay training, a memo hit must be result-identical to a cold
+  * run, and new input files must miss.
   */
 class TrainMemoSpec extends SparkSpec {
 
   test("kmeansTrain: a second structurally identical call is served from the memo") {
-    TrainMemo.clear()
+    SessionMemo.clear()
     val e = Tables.table(spark, sf, "embeddings")
     val cents = AnnOps.kmeansTrain(e, 4)
-    val after1 = TrainMemo.computeCount
+    val after1 = SessionMemo.computeCount
     // fresh frame, fresh exprIds, same files + params → same canonical key
     val again = AnnOps.kmeansTrain(Tables.table(spark, sf, "embeddings"), 4)
-    assert(TrainMemo.computeCount === after1,
+    assert(SessionMemo.computeCount === after1,
       "structurally identical training re-ran the Lloyd loop")
     // a hit serves the artifact itself — not a re-derivation that could
     // drift by float merge order
@@ -26,51 +26,44 @@ class TrainMemoSpec extends SparkSpec {
       c1 == c2 && v1.sameElements(v2) })
     // different params are different keys: each must train
     AnnOps.kmeansTrain(e, 4, maxIter = 3, tol = 1e-4, trainFrac = 1.0)
-    assert(TrainMemo.computeCount === after1 + 1)
+    assert(SessionMemo.computeCount === after1 + 1)
     AnnOps.kmeansTrain(e, 5)
-    assert(TrainMemo.computeCount === after1 + 2)
+    assert(SessionMemo.computeCount === after1 + 2)
   }
 
   test("n10/c5 share one trained index: second search advances no memo counter") {
-    TrainMemo.clear()
-    ClusterMemo.clear()
+    SessionMemo.clear()
     val e = Tables.table(spark, sf, "embeddings")
     val cold = AnnOps.ivfQuantizedTopK(e).collect().toSet
-    val trained = TrainMemo.computeCount
-    val built = ClusterMemo.computeCount
+    val trained = SessionMemo.computeCount
     // the serving shape: same corpus, new query execution — centroids AND
-    // the checkpointed IVF×SQ8 index frame are both served from the memos
+    // the materialized IVF×SQ8 index frame are both served from the memo
     val warm = AnnOps.ivfQuantizedTopK(Tables.table(spark, sf, "embeddings"))
     assert(warm.collect().toSet === cold, "memo hit changed search results")
-    assert(TrainMemo.computeCount === trained,
-      "second n10 search re-derived the coarse centroids")
-    assert(ClusterMemo.computeCount === built,
-      "second n10 search re-quantized the corpus")
+    assert(SessionMemo.computeCount === trained,
+      "second n10 search re-derived the centroids or re-quantized the corpus")
     // c5 rides the same index: the capstone must not train anything either
     CurationOps.retrievalServe(e.sparkSession, sf).count()
-    assert(TrainMemo.computeCount === trained,
-      "c5 re-trained the quantizer n10 already built")
-    assert(ClusterMemo.computeCount === built,
-      "c5 re-built the index n10 already checkpointed")
+    assert(SessionMemo.computeCount === trained,
+      "c5 re-trained the quantizer or re-built the index n10 already built")
   }
 
   test("n11 trains its residual codebook once; results identical on the hit") {
-    TrainMemo.clear()
-    ClusterMemo.clear()
+    SessionMemo.clear()
     val e = Tables.table(spark, sf, "embeddings")
     val cold = AnnOps.ivfPqTopK(e).collect().toSet
-    val trained = TrainMemo.computeCount
+    val trained = SessionMemo.computeCount
     val warm = AnnOps.ivfPqTopK(Tables.table(spark, sf, "embeddings"))
     assert(warm.collect().toSet === cold, "memo hit changed IVFADC results")
-    assert(TrainMemo.computeCount === trained,
+    assert(SessionMemo.computeCount === trained,
       "second n11 search re-ran residual-PQ training")
   }
 
   test("a different corpus is a different key: no cross-corpus artifact leaks") {
-    TrainMemo.clear()
+    SessionMemo.clear()
     val e = Tables.table(spark, sf, "embeddings")
     AnnOps.kmeansTrain(e, 4)
-    val after1 = TrainMemo.computeCount
+    val after1 = SessionMemo.computeCount
     // same schema, different (in-memory) data — LocalRelation hashes its
     // rows, so this MUST miss; a false hit would serve foreign centroids
     import spark.implicits._
@@ -78,8 +71,26 @@ class TrainMemoSpec extends SparkSpec {
       .map(i => (i, Array.fill(64)(i.toFloat / 64f + 1f), i % 4))
       .toDF("vec_id", "embedding", "label")
     val cents = AnnOps.kmeansTrain(other, 4)
-    assert(TrainMemo.computeCount === after1 + 1,
+    assert(SessionMemo.computeCount === after1 + 1,
       "different corpus was served another corpus's centroids")
     assert(cents.length === 4)
+  }
+
+  test("appending a file to the training input misses the memo") {
+    SessionMemo.clear()
+    val dir = java.nio.file.Files.createTempDirectory("memo_growth").toString
+    val src = Tables.table(spark, sf, "embeddings")
+    src.limit(64).write.mode("overwrite").parquet(dir)
+    AnnOps.kmeansTrain(spark.read.parquet(dir), 4)
+    val after1 = SessionMemo.computeCount
+    // unchanged directory, fresh read: same files, same key
+    AnnOps.kmeansTrain(spark.read.parquet(dir), 4)
+    assert(SessionMemo.computeCount === after1,
+      "re-reading an unchanged table re-trained")
+    // grown directory: the plan is identical but the file listing is not
+    src.filter(col("vec_id") >= 64).limit(64).write.mode("append").parquet(dir)
+    AnnOps.kmeansTrain(spark.read.parquet(dir), 4)
+    assert(SessionMemo.computeCount === after1 + 1,
+      "centroids trained on the old snapshot were served for the grown table")
   }
 }

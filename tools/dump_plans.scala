@@ -1,12 +1,14 @@
 // Dump .explain("formatted") for every declared query (or $PLAN_QUERIES
-// subset) into $PLAN_OUT_DIR/<query>_$PLAN_SUFFIX.txt -- the r14 optimization
-// deliverable (plans/r14/<query>_before.txt / _after.txt). Run via:
+// subset) into $PLAN_OUT_DIR/<query>_$PLAN_SUFFIX.txt, on demand (plan
+// claims are pinned by PlanContractSpec; dumps are not committed).
+// PLAN_OUT_DIR defaults to a fresh temp dir, printed at the end. Run via:
 //   /opt/spark/bin/spark-shell --master local[32] --conf spark.ui.enabled=false \
 //     --conf spark.sql.session.timeZone=UTC \
 //     --driver-class-path target/scala-2.13/classes -i tools/dump_plans.scala
 import java.nio.file.{Files, Paths}
 val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-val outDir = sys.env.getOrElse("PLAN_OUT_DIR", "plans/r14")
+val outDir = sys.env.getOrElse("PLAN_OUT_DIR",
+  Files.createTempDirectory("graft_plans").toString)
 val suffix = sys.env.getOrElse("PLAN_SUFFIX", "before")
 val only = sys.env.get("PLAN_QUERIES").map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
 Files.createDirectories(Paths.get(outDir))
@@ -23,5 +25,5 @@ for (n <- names) {
     txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   println(s"PLAN_DUMPED $n")
 }
-println("PLAN_DUMP_DONE " + names.size)
+println(s"PLAN_DUMP_DONE ${names.size} $outDir")
 sys.exit(0)

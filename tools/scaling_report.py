@@ -137,7 +137,7 @@ out.append("- ORACLE gate at 10x CLOSED 124/124 (round 12): round 11 had "
            "operator's 48.8x shuffle shows; c4 85 rows), no spill. The "
            "oracle remains an INDEPENDENT statement of the banding "
            "contract, not a copy of the Spark plan.")
-out.append("- Round-12 session-shared closure (ClusterMemo): the converged "
+out.append("- Round-12 session-shared closure (now SessionMemo): the converged "
            "connected-components labels are memoized per canonical input "
            "plan, so the first consumer pays the 10x LSH+closure once "
            "(c3 pass-1 22.4s measured) and d10/d11/s11/e2/c3 ride it - "
@@ -145,8 +145,8 @@ out.append("- Round-12 session-shared closure (ClusterMemo): the converged "
            "10.5s unshared in the r11 archive; d11 0.41 vs 16.6; s11 0.27 "
            "vs 9.9; c3 3.3 vs 15.4). Sharing is the 100 TB deployment "
            "shape: labels materialized once, reused by every downstream "
-           "consumer; the memo is sweep-safe and LRU-bounded "
-           "(ClusterSpec).")
+           "consumer; the memo recomputes entries whose blocks were "
+           "released and is LRU-bounded (ClusterSpec).")
 out.append("- Round-12 additions at 10x: d20 cluster spectrum, g12 source "
            "overlap, dq7 referential integrity, n10 IVF x SQ8, and the "
            "extended a14 multi-touch all PASS the DuckDB oracle on the 10x "
