@@ -255,12 +255,6 @@ object Bench {
     try graft.Tables.table(spark, sfDir, "lineitem").limit(1).count()
     catch { case _: Throwable => }
 
-    // SPARK_GRAFT_FRESH_SESSION=1: run each query in its own newSession()
-    // (isolated SQL conf, temp views, UDF registry; the SparkContext and
-    // JVM-wide codegen cache are shared by design) — cross-query session
-    // state can't leak into timings
-    val freshSession = sys.env.get("SPARK_GRAFT_FRESH_SESSION").contains("1")
-
     // SPARK_GRAFT_QUERIES=d8_simhash64_pairs,g7_pagerank: restrict the run to
     // a comma-separated subset for in-round isolation profiling (unset for
     // the driver's full-roster contract runs)
@@ -272,21 +266,20 @@ object Bench {
     val jvmSpans = scala.collection.mutable.Map.empty[String, JvmSpan]
     val passes = roster.map { case (name, fn) =>
       val perPass = (1 to 2).map { pass =>
-        val s = if (freshSession) spark.newSession() else spark
         // isolation between passes and queries: the scope releases, after
         // the timed span, every block the pass materialized (memo entries
         // such as d10's closure stay shared across queries)
         graft.operators.Materialize.scope {
-          s.sparkContext.setJobGroup(s"$name#p$pass", name, interruptOnCancel = false)
+          spark.sparkContext.setJobGroup(s"$name#p$pass", name, interruptOnCancel = false)
           probe.begin()
           val t0 = System.nanoTime()
           // a query that RAISES records -1 (excluded from the total), not its
           // elapsed-to-failure — e.g. d7's demo-width gate fails loudly beyond
           // 1k docs by contract, and a fake-fast number would read as a pass
-          val sec = try { fn(s, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          val sec = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => -1.0 }
           jvmSpans(s"$name#p$pass") = probe.end()
-          s.sparkContext.clearJobGroup()
+          spark.sparkContext.clearJobGroup()
           sec
         }
       }

@@ -15,58 +15,11 @@ import graft.functions.{CosineSimF, DotProductF, DotProductFD, DotProductL, DupS
   *   SELECT minhash_sig(shingles)[0] FROM doc_shingles
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the native sort-merge as-of join
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "dot_product_f"),
-      GraftExtensions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_l"),
-      new ExpressionInfo(classOf[DotProductL].getName, "dot_product_l"),
-      GraftExtensions.dotLBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_fd"),
-      new ExpressionInfo(classOf[DotProductFD].getName, "dot_product_fd"),
-      GraftExtensions.dotFDBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      GraftExtensions.minhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_bits"),
-      new ExpressionInfo(classOf[SimHashBitsExpr].getName, "simhash_bits"),
-      GraftExtensions.simhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("srp_sig"),
-      new ExpressionInfo(classOf[SrpSigExpr].getName, "srp_sig"),
-      GraftExtensions.srpBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimF].getName, "cosine_sim"),
-      GraftExtensions.cosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_mins"),
-      new ExpressionInfo(classOf[WinnowMinsExpr].getName, "winnow_mins"),
-      GraftExtensions.winnowBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCountExpr].getName, "intersect_count"),
-      GraftExtensions.intersectBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dup_spans"),
-      new ExpressionInfo(classOf[DupSpansExpr].getName, "dup_spans"),
-      GraftExtensions.dupSpansBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_filter_agg"),
-      GraftExtensions.bloomAggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain"),
-      GraftExtensions.bloomProbeBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }
 
 object GraftExtensions {
@@ -76,31 +29,6 @@ object GraftExtensions {
       messageParameters = Map(
         "functionName" -> s"`$name`", "expectedNum" -> expected.toString,
         "actualNum" -> actual.toString, "docroot" -> ""))
-
-  private[graft] val dotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductF(a, b)
-    case children => wrongArgs("dot_product_f", 2, children.length)
-  }
-
-  private[graft] val cosineBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimF(a, b)
-    case children => wrongArgs("cosine_sim", 2, children.length)
-  }
-
-  private[graft] val dotLBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductL(a, b)
-    case children => wrongArgs("dot_product_l", 2, children.length)
-  }
-
-  private[graft] val dotFDBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductFD(a, b)
-    case children => wrongArgs("dot_product_fd", 2, children.length)
-  }
-
-  private[graft] val minhashBuilder: Seq[Expression] => Expression = {
-    case Seq(a) => MinHashSigExpr(a)
-    case children => wrongArgs("minhash_sig", 1, children.length)
-  }
 
   /** Evaluate a builder parameter that must be an integer literal. A 2-arg
     * call with a non-foldable or non-integral argument gets a TARGETED
@@ -127,51 +55,47 @@ object GraftExtensions {
     }
   }
 
-  /** `simhash_bits(words, bits)` — bits must be a foldable integer literal. */
-  private[graft] val simhashBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => SimHashBitsExpr(a, intLiteralArg("simhash_bits", "bits", b))
-    case children => wrongArgs("simhash_bits", 2, children.length)
-  }
-
-  /** `srp_sig(embedding, nPlanes)` — nPlanes must be a foldable literal. */
-  private[graft] val srpBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => SrpSigExpr(a, intLiteralArg("srp_sig", "nPlanes", b))
-    case children => wrongArgs("srp_sig", 2, children.length)
-  }
-
-  /** `winnow_mins(words, w)` — w must be a foldable integer literal. */
-  private[graft] val winnowBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => WinnowMinsExpr(a, intLiteralArg("winnow_mins", "w", b))
-    case children => wrongArgs("winnow_mins", 2, children.length)
-  }
-
-  private[graft] val intersectBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => IntersectCountExpr(a, b)
-    case children => wrongArgs("intersect_count", 2, children.length)
-  }
-
-  /** `dup_spans(grams, ref, k)` — k must be a foldable integer literal. */
-  private[graft] val dupSpansBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b, k) => DupSpansExpr(a, b, intLiteralArg("dup_spans", "k", k))
-    case children => wrongArgs("dup_spans", 3, children.length)
-  }
-
-  /** `bloom_filter_agg(xxhash64(x)[, est_items, num_bits])` — Spark's own
-    * runtime-filter aggregate (a compact binary sketch), surfaced for explicit
-    * semi-join reduction; probe with `bloom_might_contain(scalar-subquery,
-    * xxhash64(x))`.
+  /** One native SQL function as (name, expression class, builder). `build`
+    * receives the function's name (for targeted argument errors); argument
+    * lists it does not accept fail analysis with WRONG_NUM_ARGS naming
+    * `arity`.
     */
-  private[graft] val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(c) => new BloomFilterAggregate(c).toAggregateExpression()
-    case Seq(c, n) => new BloomFilterAggregate(c, n).toAggregateExpression()
-    case Seq(c, n, b) => new BloomFilterAggregate(c, n, b).toAggregateExpression()
-    case children => wrongArgs("bloom_filter_agg", 3, children.length)
-  }
+  private def fn(name: String, cls: Class[_], arity: Int)(
+      build: String => PartialFunction[Seq[Expression], Expression])
+      : (String, Class[_], Seq[Expression] => Expression) =
+    (name, cls, args => build(name).applyOrElse(args,
+      (a: Seq[Expression]) => wrongArgs(name, arity, a.length)))
 
-  private[graft] val bloomProbeBuilder: Seq[Expression] => Expression = {
-    case Seq(bf, v) => BloomFilterMightContain(bf, v)
-    case children => wrongArgs("bloom_might_contain", 2, children.length)
-  }
+  /** The one list of native SQL functions, installed by both
+    * [[GraftExtensions.apply]] and [[register]]. Integer parameters (bits,
+    * nPlanes, w, k) must be foldable integer literals.
+    */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    fn("dot_product_f", classOf[DotProductF], 2)(_ => { case Seq(a, b) => DotProductF(a, b) }),
+    fn("dot_product_l", classOf[DotProductL], 2)(_ => { case Seq(a, b) => DotProductL(a, b) }),
+    fn("dot_product_fd", classOf[DotProductFD], 2)(_ => { case Seq(a, b) => DotProductFD(a, b) }),
+    fn("minhash_sig", classOf[MinHashSigExpr], 1)(_ => { case Seq(a) => MinHashSigExpr(a) }),
+    fn("simhash_bits", classOf[SimHashBitsExpr], 2)(n => {
+      case Seq(a, b) => SimHashBitsExpr(a, intLiteralArg(n, "bits", b)) }),
+    fn("srp_sig", classOf[SrpSigExpr], 2)(n => {
+      case Seq(a, b) => SrpSigExpr(a, intLiteralArg(n, "nPlanes", b)) }),
+    fn("cosine_sim", classOf[CosineSimF], 2)(_ => { case Seq(a, b) => CosineSimF(a, b) }),
+    fn("winnow_mins", classOf[WinnowMinsExpr], 2)(n => {
+      case Seq(a, b) => WinnowMinsExpr(a, intLiteralArg(n, "w", b)) }),
+    fn("intersect_count", classOf[IntersectCountExpr], 2)(_ => {
+      case Seq(a, b) => IntersectCountExpr(a, b) }),
+    fn("dup_spans", classOf[DupSpansExpr], 3)(n => {
+      case Seq(a, b, k) => DupSpansExpr(a, b, intLiteralArg(n, "k", k)) }),
+    // `bloom_filter_agg(xxhash64(x)[, est_items, num_bits])` — Spark's own
+    // runtime-filter aggregate (a compact binary sketch), surfaced for
+    // explicit semi-join reduction; probe with
+    // `bloom_might_contain(scalar-subquery, xxhash64(x))`
+    fn("bloom_filter_agg", classOf[BloomFilterAggregate], 3)(_ => {
+      case Seq(c) => new BloomFilterAggregate(c).toAggregateExpression()
+      case Seq(c, n) => new BloomFilterAggregate(c, n).toAggregateExpression()
+      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b).toAggregateExpression() }),
+    fn("bloom_might_contain", classOf[BloomFilterMightContain], 2)(_ => {
+      case Seq(bf, v) => BloomFilterMightContain(bf, v) }))
 
   /** Register the engine's SQL functions on an already-running session
     * (withExtensions only takes effect at session construction). The typed
@@ -179,18 +103,7 @@ object GraftExtensions {
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    bridge.registerFunction(spark, "dot_product_f", dotBuilder)
-    bridge.registerFunction(spark, "dot_product_l", dotLBuilder)
-    bridge.registerFunction(spark, "dot_product_fd", dotFDBuilder)
-    bridge.registerFunction(spark, "minhash_sig", minhashBuilder)
-    bridge.registerFunction(spark, "simhash_bits", simhashBuilder)
-    bridge.registerFunction(spark, "srp_sig", srpBuilder)
-    bridge.registerFunction(spark, "winnow_mins", winnowBuilder)
-    bridge.registerFunction(spark, "cosine_sim", cosineBuilder)
-    bridge.registerFunction(spark, "intersect_count", intersectBuilder)
-    bridge.registerFunction(spark, "dup_spans", dupSpansBuilder)
-    bridge.registerFunction(spark, "bloom_filter_agg", bloomAggBuilder)
-    bridge.registerFunction(spark, "bloom_might_contain", bloomProbeBuilder)
+    functions.foreach { case (name, _, builder) => bridge.registerFunction(spark, name, builder) }
     spark.udf.register("exact_count_distinct", graft.functions.ExactDistinct.asUdaf)
     spark.udf.register("hll_count_distinct", graft.functions.HllDistinct.asUdaf)
     spark.udf.register("hll_sketch", graft.functions.HllSketch.asUdaf)

@@ -54,10 +54,6 @@ object Tables {
     */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
 
-  /** Deterministic decimal average surfaced as double (same rationale as dsum). */
-  def davg(c: Column): Column =
-    (sum(c.cast(DecimalType(18, 4))) / count(c)).cast(DecimalType(18, 4)).cast("double")
-
   /** Round-robin a frame to AT LEAST the cluster's default parallelism,
     * never collapsing an already-wide one.
     *

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions.udaf
   *
   * Cost model, stated plainly: the state per (group, window) is the distinct
   * id set itself — identical to what the reference's Flink state held. Where
-  * per-window distinct cardinality is unbounded at 100 TB, use
-  * approx_count_distinct or an HLL sketch buffer instead; both paths are
-  * offered (StatsStreams.provinceStats vs provinceStatsExact).
+  * per-window distinct cardinality is unbounded at 100 TB, use an HLL
+  * sketch buffer instead; both paths are offered
+  * (StatsStreams.provinceStatsExact vs provinceStatsHll).
   */
 object ExactDistinct extends Aggregator[Long, Set[Long], Long] {
   override def zero: Set[Long] = Set.empty

@@ -80,8 +80,8 @@ object AnnOps {
   /** The n1 scoring core over an ARBITRARY corpus/query split: each query
     * (`query_id`, `qe`) scored against every corpus vector except itself,
     * exact 4-dp-quantized cosine, two-phase top-k, ties by neighbor id.
-    * n1 rides this verbatim; [[graft.streaming.StatsStreams.vectorSearchStream]]
-    * applies it per micro-batch so the streaming contract cannot drift.
+    * n1 rides this verbatim; the streaming face scores through the same
+    * [[scoredPairs]] so the streaming contract cannot drift.
     *
     * Scale notes (100 TB): the query side BROADCASTS (standing queries are
     * report-sized); the corpus is scored map-side in one pass with no
@@ -96,7 +96,7 @@ object AnnOps {
     * sim)`. Stateless and aggregation-free (broadcast queries, map-side
     * projection), so the SAME definition scores a `readStream` frame — the
     * keyed streaming face ([[graft.streaming.StatsStreams
-    * .vectorSearchStream]]) consumes it directly, which is what keeps the
+    * .vectorSearchKeyedStream]]) consumes it directly, which is what keeps the
     * stream's similarity contract bit-identical to [[searchTopK]]'s.
     */
   private[graft] def scoredPairs(corpus: DataFrame, queries: DataFrame): DataFrame = {
@@ -384,44 +384,67 @@ object AnnOps {
     * variant composes with IVF cells (n2) the same way.
     */
   def quantizedTopK(e: DataFrame, k: Int = 5, cand: Int = 20): DataFrame = {
-    val ee = transform(col("embedding"), x => x.cast("double"))
-    val qz = e.select(col("vec_id"), col("embedding"), ee.as("ee"))
+    val qz = sq8Encode(e.select(col("vec_id"), col("embedding")))
+    val queries = qz.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("qv").as("qq"),
+        col("qn").as("qqn"), col("embedding").as("qe"),
+        norm(col("embedding")).as("nq"))
+    val corpus = qz.select(col("vec_id"), col("qv"), col("qn"))
+    val cands = corpus
+      .crossJoin(broadcast(queries.select(col("query_id"), col("qq"), col("qqn"))))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), sq8Cosine.as("sim"))
+    // |Q|*cand rows, but the lineage is the whole candidate scan and `top`
+    // feeds TWO broadcast branches (rerank probe + final score-join), which
+    // share no subtree: materialized, the candidate pass runs once
+    val top = Materialize(topKPerQuery(cands, cand, Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim")))
+    exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, k)
+  }
+
+  /** SQ8 codes for n9/n10: over a frame with `embedding`, adds the
+    * symmetric max-abs int8 code vector `qv` (`floor(x·127/‖x‖∞ + 0.5)`,
+    * n4's scheme) and its integer squared norm `qn`, keeping every input
+    * column.
+    */
+  private def sq8Encode(df: DataFrame): DataFrame =
+    df.withColumn("ee", transform(col("embedding"), x => x.cast("double")))
       .withColumn("scale", array_max(transform(col("ee"), x => abs(x))))
       .withColumn("qv", transform(col("ee"), x =>
         when(col("scale") > 0, floor(x * 127.0 / col("scale") + 0.5))
           .otherwise(lit(0L))).cast("array<bigint>"))
       .withColumn("qn",
         graft.functions.VectorFunctions.dot_l(col("qv"), col("qv")))
-    val queries = qz.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qv").as("qq"),
-        col("qn").as("qqn"), col("embedding").as("qe"),
-        norm(col("embedding")).as("nq"))
-    val corpus = qz.select(col("vec_id"), col("qv"), col("qn"))
-    // native codegen'd long dot — bit-identical to the zip_with fold it
-    // replaces (integer adds are order-free and exact below 2^53)
-    val idot = graft.functions.VectorFunctions.dot_l(col("qq"), col("qv"))
-    val approx = when(col("qqn") === 0 || col("qn") === 0, lit(0.0)).otherwise(
-      floor(idot.cast("double") / sqrt((col("qqn") * col("qn")).cast("double"))
-        * 10000.0 + 0.5) / 10000.0)
-    val cands = corpus
-      .crossJoin(broadcast(queries.select(col("query_id"), col("qq"), col("qqn"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), approx.as("sim"))
-    // |Q|*cand rows, but the lineage is the whole candidate scan and `top`
-    // feeds TWO broadcast branches (rerank probe + final score-join), which
-    // share no subtree: materialized, the candidate pass runs once
-    val top = Materialize(topKPerQuery(cands, cand, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim")))
+
+  /** The SQ8 candidate score: cosine of a query's codes (`qq`, `qqn`)
+    * against a corpus vector's (`qv`, `qn`), 4-dp-quantized. The per-vector
+    * scales cancel, so it is integer dot products (the native codegen'd
+    * long dot, exact below 2^53) plus one sqrt and one divide.
+    */
+  private def sq8Cosine: Column =
+    when(col("qqn") === 0 || col("qn") === 0, lit(0.0)).otherwise(
+      floor(graft.functions.VectorFunctions.dot_l(col("qq"), col("qv")).cast("double") /
+        sqrt((col("qqn") * col("qn")).cast("double")) * 10000.0 + 0.5) / 10000.0)
+
+  /** The exact n1-contract rerank tail of n9/n10/n11: each query's `top`
+    * candidates (`query_id`, `neighbor_id`, one approximate-score column)
+    * are re-scored with the exact 4-dp float cosine against `queries`
+    * (`query_id`, `qe`, `nq`), the best `k` per query kept (ties by
+    * neighbor id) and the approximate score carried alongside. Float
+    * embeddings are read for the ≤ cand·|Q| candidate rows only (both
+    * probes broadcast).
+    */
+  private def exactRerank(e: DataFrame, queries: DataFrame, top: DataFrame,
+      k: Int): DataFrame = {
     val rer = e.select(col("vec_id").as("neighbor_id"), col("embedding"),
         norm(col("embedding")).as("nv"))
       .join(broadcast(top.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("query_id"), col("qe"), col("nq"))),
-        Seq("query_id"))
+      .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
     topKPerQuery(rer, k, Seq("query_id"))
       .join(broadcast(top), Seq("query_id", "neighbor_id"))
-      .select("query_id", "neighbor_id", "rnk", "sim", "approx_sim")
+      .select("query_id", "neighbor_id", "rnk", "sim", top.columns(2))
   }
   def quantizedTopK(spark: SparkSession, dir: String): DataFrame =
     quantizedTopK(table(spark, dir, "embeddings"))
@@ -470,21 +493,14 @@ object AnnOps {
     // 0.38 ≈ the probed fraction; reassignment aligns membership with the
     // metric and lifts it to 0.56 at the same probe budget (sf0.1,
     // spec-pinned ≥ 0.5 in AnnOpsSpec and recall_ok in the bench record).
-    val ee = transform(col("embedding"), x => x.cast("double"))
     // the IVF×SQ8 INDEX: every vector's geometric cell + int8 codes + code
     // norm. Consumed three times per search (queries, probes, candidates)
     // and by every search over the same corpus, so it is materialized once
     // per (session, corpus) and memoized — the build-once/serve-many shape
     // (a deployment persists exactly this frame)
     val qz = SessionMemo.getOrCompute(SessionMemo.key("n10:qz", e)) {
-      Materialize(e.select(col("vec_id"), col("embedding"), ee.as("ee"),
-          array_max(scoredCells).getField("cell").as("cell"))
-        .withColumn("scale", array_max(transform(col("ee"), x => abs(x))))
-        .withColumn("qv", transform(col("ee"), x =>
-          when(col("scale") > 0, floor(x * 127.0 / col("scale") + 0.5))
-            .otherwise(lit(0L))).cast("array<bigint>"))
-        .withColumn("qn",
-          graft.functions.VectorFunctions.dot_l(col("qv"), col("qv")))
+      Materialize(sq8Encode(e.select(col("vec_id"), col("embedding"),
+          array_max(scoredCells).getField("cell").as("cell")))
         .select(col("vec_id"), col("embedding"), col("cell"), col("qv"),
           col("qn")))
     }
@@ -502,29 +518,14 @@ object AnnOps {
     val qside = probes.join(
       broadcast(queries.select(col("query_id"), col("qq"), col("qqn"))),
       Seq("query_id"))
-    // native codegen'd long dot — bit-identical to the zip_with fold
-    val idot = graft.functions.VectorFunctions.dot_l(col("qq"), col("qv"))
-    val approx = when(col("qqn") === 0 || col("qn") === 0, lit(0.0)).otherwise(
-      floor(idot.cast("double") / sqrt((col("qqn") * col("qn")).cast("double"))
-        * 10000.0 + 0.5) / 10000.0)
     val cands = qz.select(col("cell"), col("vec_id"), col("qv"), col("qn"))
       .join(broadcast(qside), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        approx.as("sim"))
+        sq8Cosine.as("sim"))
     val top = topKPerQuery(cands, cand, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim"))
-    // exact rerank — identical tail to quantizedTopK (the n1 contract)
-    val rer = e.select(col("vec_id").as("neighbor_id"), col("embedding"),
-        norm(col("embedding")).as("nv"))
-      .join(broadcast(top.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("query_id"), col("qe"), col("nq"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
-    topKPerQuery(rer, k, Seq("query_id"))
-      .join(broadcast(top), Seq("query_id", "neighbor_id"))
-      .select("query_id", "neighbor_id", "rnk", "sim", "approx_sim")
+    exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, k)
   }
   def ivfQuantizedTopK(spark: SparkSession, dir: String): DataFrame =
     ivfQuantizedTopK(table(spark, dir, "embeddings"))
@@ -814,19 +815,9 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"), (-col("adist")).as("sim"))
     val top = topKPerQuery(adc, cand, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), (-col("sim")).as("adist"))
-    // exact rerank — identical tail to n9/n10 (the n1 float contract)
-    val queries = e.filter(col("vec_id") < 10)
+    exactRerank(e, e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        norm(col("embedding")).as("nq"))
-    val rer = e.select(col("vec_id").as("neighbor_id"), col("embedding"),
-        norm(col("embedding")).as("nv"))
-      .join(broadcast(top.select("query_id", "neighbor_id")), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
-    topKPerQuery(rer, k, Seq("query_id"))
-      .join(broadcast(top), Seq("query_id", "neighbor_id"))
-      .select("query_id", "neighbor_id", "rnk", "sim", "adist")
+        norm(col("embedding")).as("nq")), top, k)
   }
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
     ivfPqTopK(table(spark, dir, "embeddings"))

@@ -110,31 +110,8 @@ object Bucketing {
     * both pure projections.
     */
   def skippingStats(events: DataFrame, uHi: Long = 31L,
-      kHi: Long = 31L): DataFrame = {
-    // spread first: the JSON parse + curve keys + layout explode + partial
-    // agg otherwise all run inside the scan stage, which a single-row-group
-    // input serializes onto one task (r14); on well-split inputs spread is
-    // a pass-through
-    val base = zorderEvents(graft.Tables.spread(events))
-    val matched = col("user_id") <= uHi && col("k") <= kHi
-    val perFile = base
-      .select(col("user_id"), col("k"),
-        explode(map(
-          lit("arrival"), expr("event_id div 1024"),
-          lit("zorder"), shiftright(col("zkey"), 12))).as(Seq("layout", "file_id")))
-      .groupBy("layout", "file_id")
-      .agg(count(lit(1)).as("rows"),
-        min(col("user_id")).as("u_min"), min(col("k")).as("k_min"),
-        sum(when(matched, 1L).otherwise(0L)).as("m"))
-    // box overlap: predicate floor is 0 and file minima are >= 0, so a file
-    // is touched iff BOTH minima sit at or below the predicate ceiling
-    val touched = col("u_min") <= uHi && col("k_min") <= kHi
-    perFile.groupBy("layout").agg(
-      count(lit(1)).as("files_total"),
-      sum(when(touched, 1L).otherwise(0L)).as("files_touched"),
-      sum(when(touched, col("rows")).otherwise(0L)).as("rows_read"),
-      sum(col("m")).as("rows_matched"))
-  }
+      kHi: Long = 31L): DataFrame =
+    layoutAudit(events, uHi, kHi, arrivalAndZorder)
   def skippingStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     skippingStats(graft.Tables.table(spark, dir, "events"))
 
@@ -155,22 +132,38 @@ object Bucketing {
     * across engines.
     */
   def layoutCompare(events: DataFrame, uHi: Long = 31L,
-      kHi: Long = 31L): DataFrame = {
-    // spread first — same single-task scan-stage rationale as skippingStats
+      kHi: Long = 31L): DataFrame =
+    layoutAudit(events, uHi, kHi, arrivalAndZorder :+ ("hilbert" -> shiftright(
+      graft.functions.HilbertIndex.hilbert_key(col("user_id"), col("k")), 12)))
+
+  /** l4's two layouts: 1024-row arrival files and 4096-key z-order segments. */
+  private def arrivalAndZorder: Seq[(String, Column)] = Seq(
+    "arrival" -> expr("event_id div 1024"),
+    "zorder" -> shiftright(col("zkey"), 12))
+
+  /** The l4/l5 rollup over any set of layouts: `layouts` maps a layout name
+    * to its file-id column over [[zorderEvents]]' output; one row per
+    * layout with files_total, files_touched, rows_read and rows_matched for
+    * the box predicate `user_id ≤ uHi AND k ≤ kHi`.
+    */
+  private def layoutAudit(events: DataFrame, uHi: Long, kHi: Long,
+      layouts: Seq[(String, Column)]): DataFrame = {
+    // spread first: the JSON parse + curve keys + layout explode + partial
+    // agg otherwise all run inside the scan stage, which a single-row-group
+    // input serializes onto one task; on well-split inputs spread is a
+    // pass-through
     val base = zorderEvents(graft.Tables.spread(events))
-      .withColumn("hkey",
-        graft.functions.HilbertIndex.hilbert_key(col("user_id"), col("k")))
     val matched = col("user_id") <= uHi && col("k") <= kHi
     val perFile = base
       .select(col("user_id"), col("k"),
-        explode(map(
-          lit("arrival"), expr("event_id div 1024"),
-          lit("zorder"), shiftright(col("zkey"), 12),
-          lit("hilbert"), shiftright(col("hkey"), 12))).as(Seq("layout", "file_id")))
+        explode(map(layouts.flatMap { case (name, file) => Seq(lit(name), file) }: _*))
+          .as(Seq("layout", "file_id")))
       .groupBy("layout", "file_id")
       .agg(count(lit(1)).as("rows"),
         min(col("user_id")).as("u_min"), min(col("k")).as("k_min"),
         sum(when(matched, 1L).otherwise(0L)).as("m"))
+    // box overlap: predicate floor is 0 and file minima are >= 0, so a file
+    // is touched iff BOTH minima sit at or below the predicate ceiling
     val touched = col("u_min") <= uHi && col("k_min") <= kHi
     perFile.groupBy("layout").agg(
       count(lit(1)).as("files_total"),

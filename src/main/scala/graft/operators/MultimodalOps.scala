@@ -456,24 +456,6 @@ object MultimodalOps {
       .toDF("doc_id", "frame_idx", "width", "height")
   }
 
-  /** The fused single-pass sibling of [[sampleMjpegFrames]]: walk + decode
-    * inside one task per blob, zero exchanges. Right when blobs are many and
-    * short (decode parallelism ≈ blob parallelism already); kept as the
-    * parity witness for the range-parallel plan.
-    */
-  def sampleMjpegFramesFused(spark: SparkSession, dir: String, everyN: Int): DataFrame = {
-    import spark.implicits._
-    mjpegRecords(spark, dir)
-      .mapPartitions(_.flatMap { m =>
-        MjpegCodec.frameRanges(m.content).collect {
-          case (idx, s, e) if idx % everyN == 0 =>
-            val img = MjpegCodec.decodeRange(m.content, s, e)
-            (m.doc_id, idx.toLong, img.getWidth, img.getHeight)
-        }
-      })
-      .toDF("doc_id", "frame_idx", "width", "height")
-  }
-
   /** V1 — frame sampling: one output row per sampled frame (every `everyN`th
     * of `n_frames`), the flatMap shape a video pipeline needs. Frame bytes
     * are the stubbed decoder's output (`???`-equivalent: deterministic fake

@@ -391,9 +391,20 @@ object TextOps {
     * already-quantized nll leaves.
     */
   def pplBuckets(d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val scored = Materialize(lmScore(d).select(col("doc_id"), col("nll")))
-    val hist = scored.groupBy(col("nll")).agg(count(lit(1)).as("ct"))
+    pplBucketsBy(scored, scored)
+  }
+
+  /** T14's tertile cut and assignment: thresholds from `reference`'s nll
+    * histogram, then each `(doc_id, nll)` row of `scored` classified
+    * against them (a broadcast one-row cross join). Shared by the batch
+    * face (reference = the scored docs themselves) and
+    * [[graft.streaming.StatsStreams.pplBucketsStream]] (reference = the
+    * indexed corpus).
+    */
+  private[graft] def pplBucketsBy(scored: DataFrame, reference: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val hist = reference.groupBy(col("nll")).agg(count(lit(1)).as("ct"))
     val all = Window.orderBy(col("nll"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val cum = hist

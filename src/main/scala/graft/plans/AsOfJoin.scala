@@ -20,9 +20,10 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * Phoenix (app/function/DimAsyncFunction.java:17-71, cache-aside reads at
   * arrival time) — here resolved exactly against a versioned history.
   *
-  * Why a custom operator when [[graft.operators.TemporalJoin.asOf]] already
-  * composes the same semantics from built-ins: the union+window form must
-  * funnel BOTH inputs through one window operator — the fact stream pays a
+  * Why a custom operator rather than a composition of built-ins: a
+  * union+window form (tag both sides, union on (key, ts), carry the latest
+  * right payload forward — AsOfJoinNativeSpec's oracle) must funnel BOTH
+  * inputs through one window operator — the fact stream pays a
   * full sort alongside the history and every fact row carries a null-padded
   * copy of the dim payload struct through the shuffle. The built-in logical
   * `AsOfJoin` (Catalyst's pandas `merge_asof` node) is worse at scale: the
@@ -71,10 +72,10 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Injected via
-  * `GraftExtensions` (`injectPlannerStrategy`) and self-installed by
-  * [[AsOfJoinNative.asOf]] through `spark.experimental.extraStrategies` so
-  * the operator works in sessions built without the extension config.
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Self-installed by
+  * [[AsOfJoinNative.install]] (through `spark.experimental.extraStrategies`)
+  * whenever [[AsOfJoinNative.asOfKeys]] builds a plan, so no session config
+  * is needed.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -3,17 +3,15 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, GraftSqlInternals}
 import org.apache.spark.sql.functions.col
 
-/** DataFrame-level builder for the native [[AsOfJoinPlan]] operator, with
-  * the same output contract as the built-in-composed
-  * [[graft.operators.TemporalJoin.asOf]] (left columns + prefixed right
-  * columns, prefixed join key dropped) so the two faces are drop-in
-  * interchangeable and testable row-for-row against each other.
+/** DataFrame-level builder for the native [[AsOfJoinPlan]] operator — the
+  * engine's one as-of join. Output contract: left columns + prefixed right
+  * columns, prefixed join key dropped. Time (and key) columns must have the
+  * same type on both sides; cast one side explicitly otherwise.
   */
 object AsOfJoinNative {
 
-  /** Idempotently install the planner strategy in this session. Also
-    * registered by `GraftExtensions`; this path covers sessions built
-    * without the extensions config.
+  /** Idempotently install the planner strategy in this session; every plan
+    * builder below calls it, so the operator needs no session config.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {

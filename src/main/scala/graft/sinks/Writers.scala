@@ -2,14 +2,11 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Sink surface (SURVEY §2.2), Spark-first.
-  *
-  * Scale notes: the dynamic-topic fan-out is a single `partitionBy` write —
-  * one job routes every record to its per-topic directory, instead of one
-  * filtered pass per topic (the reference's per-record topic selection,
-  * utils/MyKafkaUtil.java:29-43, becomes a partitioned write). Exactly-once
-  * lands on sink atomicity + streaming checkpoints, replacing Kafka
-  * transactions.
+/** Sink surface (SURVEY §2.2), Spark-first: the K4 stats sink. Topic
+  * producers (K1 fixed, K2 dynamic) are [[graft.sources.TopicBus]]'s
+  * `append`/`appendDynamic`; the K5 debug print is `Dataset.show`.
+  * Exactly-once lands on sink atomicity + streaming checkpoints, replacing
+  * Kafka transactions.
   */
 object Writers {
 
@@ -19,18 +16,6 @@ object Writers {
     */
   def dropTransient(df: DataFrame, transientCols: Seq[String]): DataFrame =
     df.drop(transientCols: _*)
-
-  /** K2 — dynamic per-record topic sink (EXACTLY_ONCE dynamic producer,
-    * utils/MyKafkaUtil.java:29-43 + app/dwd/BaseDBApp.java:99-107): the topic
-    * column becomes a partition directory; every record lands under
-    * `root/<topicCol>=<topic>/` in ONE write job.
-    */
-  def writeDynamicTopics(df: DataFrame, topicCol: String, root: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(topicCol).parquet(root)
-
-  /** K1 — fixed-topic producer (utils/MyKafkaUtil.java:19-25). */
-  def writeTopic(df: DataFrame, root: String, topic: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$root/$topic")
 
   /** K4 — JDBC stats sink (ClickHouseUtil.getSink, utils/ClickHouseUtil.java:17-76):
     * generic writer = transient-column drop + batched JDBC insert. The
@@ -47,10 +32,4 @@ object Writers {
       .option("dbtable", table)
       .option("batchsize", batchSize.toString)
       .save()
-
-  /** K5 — labeled debug sink (`.print("label")` on every reference stage). */
-  def printSink(df: DataFrame, label: String, n: Int = 20): Unit = {
-    println(s">>> $label")
-    df.show(n, truncate = false)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.streaming.DbRouter
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1 — CDC ingestion in Spark terms. OSS Spark has no MySQL binlog reader;
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * `StartupOptions.initial` (snapshot-then-tail, app/dwd/BaseDBApp.java:61-73:
   * the config stream starts with a full snapshot, then follows the binlog)
   * maps to: materialize the current table state as insert-envelopes INTO the
-  * topic directory before tailing it — the file source reads snapshot files
+  * topic before tailing it — the file source reads snapshot files
   * first, live envelopes after, giving the same totally-ordered
   * snapshot-then-changes view the Debezium source provides.
   */
@@ -34,32 +34,17 @@ object CdcSource {
       lit("insert").as("type"),
       seq.cast("long").as("ts"))).as("value"))
 
-  /** Seed the topic directory with the snapshot (call once, before starting
-    * the tail query — mirrors StartupOptions.initial).
+  /** Seed the topic with the snapshot via any [[TopicBus]] (file or kafka
+    * transport). Call once, before starting the tail query — mirrors
+    * StartupOptions.initial.
     */
-  def seedSnapshot(snapshot: DataFrame, database: String, tableName: String,
-      topicDir: String): Unit =
-    toEnvelopes(snapshot, database, tableName)
-      .write.mode(SaveMode.Append).text(topicDir)
-
-  /** Seed via any [[TopicBus]] (file or kafka transport). */
   def seedSnapshot(snapshot: DataFrame, database: String, tableName: String,
       bus: TopicBus, topic: String): Unit =
     bus.append(toEnvelopes(snapshot, database, tableName), topic)
 
   /** Tail the topic as a decoded CDC stream (normalized ops, deletes dropped
-    * — S2/P3 semantics via DbRouter.decodeEnvelope).
-    */
-  def tail(spark: SparkSession, topicDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(TopicIO.valueSchema)
-    val withRate = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
-    DbRouter.decodeEnvelope(withRate.text(topicDir))
-  }
-
-  /** Transport-agnostic tail: same decoded stream over a [[FileBus]] topic
-    * dir or a [[KafkaBus]] topic (S3 — the `format("kafka")` path).
+    * — S2/P3 semantics via DbRouter.decodeEnvelope), over a [[FileBus]]
+    * topic dir or a [[KafkaBus]] topic (S3 — the `format("kafka")` path).
     */
   def tail(spark: SparkSession, bus: TopicBus, topic: String,
       maxPerTrigger: Option[Int]): DataFrame =

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
-/** S3/S4/K1/K2 transport — the engine's topic bus.
+/** S3/S4/K1/K2 transport — the engine's topic bus: its one topic consumer
+  * (`tail`/`read`) and producer (K1 `append`, K2 `appendDynamic`).
   *
   * Every inter-layer hand-off in the reference is a Kafka topic of JSON
   * strings: one consumer/producer factory (utils/MyKafkaUtil.java:19-57)

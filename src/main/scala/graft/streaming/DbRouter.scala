@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** One table_process routing rule (bean/TableProcess.java:14-26; FIXTURES §3).
   * `history = true` keeps every dim version (SCD2-style) instead of
-  * last-write-wins — pair with [[graft.operators.TemporalJoin.asOf]] to
+  * last-write-wins — pair with [[graft.plans.AsOfJoinNative.asOf]] to
   * restore the reference's lookup-at-event-time dim semantics exactly.
   */
 case class RouteRule(sourceTable: String, operateType: String, sinkType: String,
@@ -23,9 +23,10 @@ case class RouteRule(sourceTable: String, operateType: String, sinkType: String,
   * (:70-127).
   *
   * Spark shape: the whole per-record apparatus becomes a `foreachBatch`
-  * set-oriented pass — one filter+projection per matched rule (a handful of
-  * rules ⇒ a handful of narrow jobs per micro-batch), fact rules appended to
-  * their sink path (the "topic"), dim rules MERGEd into a keyed snapshot.
+  * set-oriented pass — one filter+projection per matched rule, unioned per
+  * sink (a handful of sinks ⇒ a handful of narrow jobs per micro-batch),
+  * fact sinks appended to their path (the "topic"), dim sinks MERGEd into a
+  * keyed snapshot.
   *
   * Scale notes: rules are metadata (tens of rows) — held on the driver like
   * Flink's broadcast state. Facts never shuffle: filter+project+append.
@@ -54,15 +55,24 @@ class DbRouter(ruleSource: () => Seq[RouteRule], sinkRoot: String)
     val rules = ruleSource()
     batch.persist()
     try {
-      rules.foreach { r =>
-        val matched = batch.filter(col("tableName") === r.sourceTable &&
-          col("type") === r.operateType)
+      // rules sharing a sink write it ONCE per batch: each write below
+      // replaces its target (the batch directory, the dim snapshot), so
+      // per-rule writes would drop the sink's earlier rules' rows, and
+      // per-rule dim upserts would resolve a pk by rule order, not `_seq`
+      val sinkOf = (r: RouteRule) => (r.sinkType, r.sinkTable, r.history)
+      rules.map(sinkOf).distinct.map(k => rules.filter(sinkOf(_) == k)).foreach { group =>
+        val r = group.head
+        require(group.forall(_.sinkPk == r.sinkPk),
+          s"rules routing to ${r.sinkTable} disagree on sinkPk: " +
+            group.map(_.sinkPk).distinct.mkString(", "))
         // project sinkColumns out of the dynamic JSON payload (P5); the seq
         // rides along for the dim upsert's source-order resolution
-        val ddl = r.sinkColumns.map(c => s"`$c` STRING").mkString(", ")
-        val projected = matched
-          .withColumn("row", from_json(col("after"), org.apache.spark.sql.types.StructType.fromDDL(ddl)))
-          .select(col("row.*"), col(DbRouter.SeqCol))
+        val projected = group.map { g =>
+          val ddl = g.sinkColumns.map(c => s"`$c` STRING").mkString(", ")
+          batch.filter(col("tableName") === g.sourceTable && col("type") === g.operateType)
+            .withColumn("row", from_json(col("after"), org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+            .select(col("row.*"), col(DbRouter.SeqCol))
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
         r.sinkType match {
           case "kafka" =>
             // fact family: one subdirectory per micro-batch, OVERWRITTEN on
@@ -77,7 +87,7 @@ class DbRouter(ruleSource: () => Seq[RouteRule], sinkRoot: String)
           case "hbase" if r.history =>
             // SCD2 dim history: append every version stamped with its batch
             // (idempotent per-batch overwrite, like the fact sinks); resolve
-            // at read time with TemporalJoin.asOf on valid_from
+            // at read time with AsOfJoinNative.asOf on valid_from
             projected.drop(DbRouter.SeqCol).withColumn("valid_from", lit(batchId))
               .write.mode(SaveMode.Overwrite)
               .parquet(s"$sinkRoot/dimh/${r.sinkTable}/batch_$batchId")

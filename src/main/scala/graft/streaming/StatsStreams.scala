@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables.dsum
 import graft.operators.Materialize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** DWS windowed streaming aggregations (SURVEY §2.5/§2.6) — the streaming
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * Scale notes: windowed streaming aggs keep incremental per-(key, window)
   * state with partial aggregation on the map side; watermark closes windows
   * and evicts state (the reference's window-close finisher + state purge,
-  * app/dws/VisitorStatsApp.java:158-198). Exact streaming count-distinct is
-  * not supported in append mode — the engine offers approx_count_distinct in
-  * stream mode and exact distinct in batch mode (SURVEY §7.4.1).
+  * app/dws/VisitorStatsApp.java:158-198). Spark's built-in count(distinct)
+  * is not supported in append-mode streaming; the A3 faces use the typed
+  * ExactDistinct aggregator or an HLL sketch instead (SURVEY §7.4.1).
   */
 object StatsStreams {
 
@@ -62,61 +62,44 @@ object StatsStreams {
         col("uv_ct"), col("pv_ct"), col("sv_ct"), col("uj_ct"), col("dur_sum"))
 
   /** A3/W2/W5 — ProvinceStats streaming: 10s tumbling window × province with
-    * order count + amount (app/dws/ProvinceStatsSQLApp.java:112-132). Streaming
-    * append mode cannot do exact count(distinct) — approx_count_distinct is
-    * used here; the batch path (StatsOps.provinceStats) is exact.
-    * Input columns: province_id, province_name, order_id, split_total_amount,
-    * create_ts (millis).
+    * a distinct-order aggregate `orders` + amount
+    * (app/dws/ProvinceStatsSQLApp.java:112-132), the one windowed core of
+    * both faces below. Input columns: province_id, province_name, order_id,
+    * split_total_amount, create_ts (millis).
     */
-  def provinceStats(orders: DataFrame): DataFrame =
+  private def provinceWindows(orders: DataFrame, distinctOrders: Column): DataFrame =
     orders
       .withColumn("rt", timestamp_millis(col("create_ts")))
       .withWatermark("rt", "1 second")
       .groupBy(window(col("rt"), "10 seconds"), col("province_id"), col("province_name"))
-      .agg(approx_count_distinct(col("order_id")).as("order_count"),
+      .agg(distinctOrders.as("orders"),
         dsum(col("split_total_amount")).as("order_amount"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
         date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("province_id"), col("province_name"), col("order_count"), col("order_amount"))
+        col("province_id"), col("province_name"), col("orders"), col("order_amount"))
 
-  /** A3 exact path — same query with EXACT windowed distinct via the typed
+  /** A3 exact path — EXACT windowed distinct via the typed
     * [[graft.functions.ExactDistinct]] Aggregator (the reference's exact
     * count(distinct) semantics); choose this when per-window distinct
-    * cardinality is bounded, the approx variant otherwise.
+    * cardinality is bounded, [[provinceStatsHll]] otherwise.
     */
   def provinceStatsExact(orders: DataFrame): DataFrame =
-    orders
-      .withColumn("rt", timestamp_millis(col("create_ts")))
-      .withWatermark("rt", "1 second")
-      .groupBy(window(col("rt"), "10 seconds"), col("province_id"), col("province_name"))
-      .agg(graft.functions.ExactDistinct(col("order_id")).as("order_count"),
-        dsum(col("split_total_amount")).as("order_amount"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("province_id"), col("province_name"), col("order_count"), col("order_amount"))
+    provinceWindows(orders, graft.functions.ExactDistinct(col("order_id")))
+      .withColumnRenamed("orders", "order_count")
 
-  /** A3 bounded-state path — same query with the [[graft.functions.HllSketch]]
-    * sketch kept as a column: per-(window, province) state is a constant
-    * 4 KiB regardless of distinct-order cardinality (the shape that survives
+  /** A3 bounded-state path — the [[graft.functions.HllSketch]] sketch kept
+    * as a column: per-(window, province) state is a constant 4 KiB
+    * regardless of distinct-order cardinality (the shape that survives
     * unbounded keys at 100 TB), the emitted count is the sketch estimate,
     * and the persisted sketch re-aggregates (day→week, province→country)
     * via [[graft.functions.HllMergeCount]] without rescanning events.
     */
   def provinceStatsHll(orders: DataFrame): DataFrame =
-    orders
-      .withColumn("rt", timestamp_millis(col("create_ts")))
-      .withWatermark("rt", "1 second")
-      .groupBy(window(col("rt"), "10 seconds"), col("province_id"), col("province_name"))
-      .agg(graft.functions.HllSketch(col("order_id")).as("order_count_sketch"),
-        dsum(col("split_total_amount")).as("order_amount"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("province_id"), col("province_name"),
-        graft.functions.HllSketchEstimate(col("order_count_sketch")).as("order_count"),
-        col("order_count_sketch"), col("order_amount"))
+    provinceWindows(orders, graft.functions.HllSketch(col("order_id")))
+      .select(col("stt"), col("edt"), col("province_id"), col("province_name"),
+        graft.functions.HllSketchEstimate(col("orders")).as("order_count"),
+        col("orders").as("order_count_sketch"), col("order_amount"))
 
   /** Beyond the reference (SURVEY §2.6 NOT-PRESENT row): sliding-window
     * variant of visitor counts — same aggregation over `window(size, slide)`.
@@ -712,27 +695,10 @@ object StatsStreams {
     * the nll values ride [[lmScoreStream]]'s bit-exact integer fold and
     * the thresholds are the same histogram cut.
     */
-  def pplBucketsStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = graft.operators.TextOps.lmScore(corpus)
-      .groupBy(col("nll")).agg(count(lit(1)).as("ct"))
-    val all = Window.orderBy(col("nll"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val cum = hist
-      .withColumn("cum", sum(col("ct")).over(Window.orderBy(col("nll"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum(col("ct")).over(all))
-    val th = cum.agg(
-      min(when(col("cum") * 3 >= col("n"), col("nll"))).as("t1"),
-      min(when(col("cum") * 3 >= col("n") * 2, col("nll"))).as("t2"))
-    lmScoreStream(docs, corpus)
-      .select(col("doc_id"), col("nll"))
-      .crossJoin(broadcast(th))
-      .select(col("doc_id"), col("nll"),
-        when(col("nll") <= col("t1"), "head")
-          .when(col("nll") <= col("t2"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
+  def pplBucketsStream(docs: DataFrame, corpus: DataFrame): DataFrame =
+    graft.operators.TextOps.pplBucketsBy(
+      lmScoreStream(docs, corpus).select(col("doc_id"), col("nll")),
+      graft.operators.TextOps.lmScore(corpus))
 
   /** Streaming NB quality classification — the streaming face of
     * [[graft.operators.TextOps.nbQualityScore]] (t15): incoming docs are
@@ -1199,20 +1165,6 @@ object StatsStreams {
       }
       .toDF("query_id", "neighbor_id", "rnk", "sim")
   }
-
-  /** The sink-callback face over [[vectorSearchKeyedStream]] — kept for
-    * callers that want the per-trigger report as a plain DataFrame. The
-    * callback receives exactly the keyed stream's update-mode emission
-    * (state lives in the store, not here).
-    */
-  def vectorSearchStream(vectors: DataFrame, queries: DataFrame, k: Int = 5)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectorSearchKeyedStream(vectors, queries, k)
-      .writeStream.outputMode("update").foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          sink(batch, id)
-      }
 
   /** A4/X1 — KeywordStats streaming: tokenize (whitespace UDTF replacement,
     * app/function/SplitFunction.java:12-28) + 10s window count.

@@ -24,6 +24,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object UserJump {
   val JumpWindowMs: Long = 10000L
+  /** Bounded out-of-orderness of the page stream, the reference's 2 s
+    * watermark (app/dwm/UserJumpDetailApp.java:52-59).
+    */
+  val WatermarkDelay: String = "2 seconds"
 
   private def isEntry(e: PageEvent): Boolean =
     e.last_page_id == null || e.last_page_id.isEmpty
@@ -47,16 +51,14 @@ object UserJump {
 
   /** Streaming operator: input columns mid, page_id, last_page_id, ts (epoch
     * millis); output = the bounce records. Applies its own event-time
-    * watermark (the reference uses a 2s bounded-out-of-orderness watermark,
-    * app/dwm/UserJumpDetailApp.java:52-59) — the watermarked column must
-    * survive into the stateful operator for event-time timeouts to resolve.
+    * watermark ([[WatermarkDelay]]) — the watermarked column must survive
+    * into the stateful operator for event-time timeouts to resolve.
     */
-  def detect(spark: SparkSession, pages: DataFrame,
-      watermarkDelay: String = "2 seconds"): Dataset[PageEvent] = {
+  def detect(spark: SparkSession, pages: DataFrame): Dataset[PageEvent] = {
     import spark.implicits._
     val ds = pages
       .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", watermarkDelay)
+      .withWatermark("event_time", WatermarkDelay)
       .select(col("mid"), col("page_id"), col("last_page_id"), col("ts"), col("event_time"))
       .as[PageEvent]
     ds.groupByKey(_.mid)

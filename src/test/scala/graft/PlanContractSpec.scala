@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
   * 100 TB story depends on, pinned as regression tests so a refactor that
   * silently de-optimizes a plan (drops a pushdown, un-broadcasts a dim,
   * loses a WindowGroupLimit) fails CI instead of only showing up in a bench.
-  * Each assertion mirrors a claim recorded in PLANS.md.
+  * This spec is the plan record: a plan claim made anywhere else is pinned
+  * here.
   */
 class PlanContractSpec extends SparkSpec {
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.AsOfJoinNative
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -32,7 +33,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       val facts = sample(factGen, s + 100).zipWithIndex
         .map { case ((k, ts), i) => (i.toLong, k, ts) }
         .toDF("fact_id", "user_id", "ts")
-      val out = TemporalJoin.asOf(facts, hist, "user_id", "ts", "valid_from")
+      val out = AsOfJoinNative.asOf(facts, hist, "user_id", "ts", "valid_from")
       assert(out.count() === facts.count(), s"seed $s lost/duplicated facts")
       assert(out.select("fact_id").distinct().count() === facts.count())
       // resolved version never postdates the fact

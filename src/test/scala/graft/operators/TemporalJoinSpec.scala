@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.AsOfJoinNative
 import org.apache.spark.sql.functions._
 
 class TemporalJoinSpec extends SparkSpec {
@@ -15,7 +16,7 @@ class TemporalJoinSpec extends SparkSpec {
       (4L, 20L, 10L), (5L, 99L, 10L))
       .toDF("fact_id", "user_id", "ts")
 
-    val out = TemporalJoin.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
+    val out = AsOfJoinNative.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
     assert(out.count() === 5) // every fact survives exactly once
     val tiers = out.collect().map(r =>
       r.getAs[Long]("fact_id") -> Option(r.getAs[String]("r_tier"))).toMap
@@ -28,11 +29,11 @@ class TemporalJoinSpec extends SparkSpec {
 
   test("asOf keeps duplicate left rows and non-groupable (map) columns") {
     val dimHistory = Seq((10L, "bronze", 0L)).toDF("user_id", "tier", "valid_from")
-    // two byte-identical facts plus a MapType column — the old all-columns
-    // groupBy collapsed the twins and failed analysis on the map
+    // two byte-identical facts plus a MapType column — a groupBy over all
+    // left columns would collapse the twins and fail analysis on the map
     val facts = Seq((10L, 50L, Map("k" -> "v")), (10L, 50L, Map("k" -> "v")))
       .toDF("user_id", "ts", "attrs")
-    val out = TemporalJoin.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
+    val out = AsOfJoinNative.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
     assert(out.count() === 2)
     val rows = out.collect()
     assert(rows.forall(_.getAs[String]("r_tier") == "bronze"))
@@ -40,13 +41,13 @@ class TemporalJoinSpec extends SparkSpec {
   }
 
   test("asOf is recompute-safe: no nondeterministic expressions, stable under repartition") {
-    // the old formulation tagged left rows with monotonically_increasing_id
-    // (SPARK-23207 recompute hazard); the union+window form must carry no
-    // nondeterministic expression anywhere in the plan
+    // a surrogate row id (monotonically_increasing_id) would be the
+    // SPARK-23207 recompute hazard: the as-of plan must carry no
+    // nondeterministic expression anywhere
     val dimHistory = (0L until 50L).map(v => (v % 5, s"t$v", v * 10))
       .toDF("user_id", "tier", "valid_from")
     val facts = (0L until 200L).map(i => (i, i % 7, i * 3)).toDF("fact_id", "user_id", "ts")
-    val out = TemporalJoin.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
+    val out = AsOfJoinNative.asOf(facts, dimHistory, "user_id", "ts", "valid_from")
     val nonDet = out.queryExecution.optimizedPlan
       .collect { case p => p.expressions.filterNot(_.deterministic) }.flatten
     assert(nonDet.isEmpty, s"nondeterministic expressions in asOf plan: $nonDet")
@@ -56,7 +57,7 @@ class TemporalJoinSpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("fact_id"), Option(r.getAs[String]("r_tier")))
     val base = out.collect().map(key).sorted
-    val reparted = TemporalJoin.asOf(
+    val reparted = AsOfJoinNative.asOf(
       facts.repartition(7), dimHistory.repartition(3),
       "user_id", "ts", "valid_from").collect().map(key).sorted
     assert(base.toSeq === reparted.toSeq)
@@ -80,7 +81,7 @@ class TemporalJoinSpec extends SparkSpec {
     assert(history.count() === 2)
 
     val facts = Seq((1L, 10L, 2L), (2L, 10L, 7L)).toDF("fact_id", "user_id", "batch_ts")
-    val resolved = TemporalJoin.asOf(facts, history, "user_id", "batch_ts", "valid_from")
+    val resolved = AsOfJoinNative.asOf(facts, history, "user_id", "batch_ts", "valid_from")
       .collect().map(r => r.getAs[Long]("fact_id") -> r.getAs[String]("r_tier")).toMap
     assert(resolved === Map(1L -> "bronze", 2L -> "gold"))
   }

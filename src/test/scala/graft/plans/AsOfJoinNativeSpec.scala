@@ -1,17 +1,50 @@
 package graft.plans
 
 import graft.{SparkSpec, Tables}
-import graft.operators.TemporalJoin
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The native whole-operator as-of join (logical node + strategy + exec)
-  * against the built-in-composed `TemporalJoin.asOf`: identical rows on the
-  * shared contract, strict join-style null semantics, inclusive bound, and
-  * the intended physical shape (one exchange per side, keyed sort, the
-  * custom operator in the plan).
+  * against an independent composition from built-ins ([[composedAsOf]]):
+  * identical rows on the shared contract, strict join-style null semantics,
+  * inclusive bound, and the intended physical shape (one exchange per side,
+  * keyed sort, the custom operator in the plan).
   */
 class AsOfJoinNativeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Differential oracle: the same contract as [[AsOfJoinNative.asOf]]
+    * composed as union + running window. Tag each side, union on (key, ts),
+    * and carry the latest right payload forward with `last(_, ignoreNulls)
+    * over (partition by key order by ts, side)`; at equal timestamps the
+    * version (side 0) sorts first, making the bound inclusive. Null left
+    * keys/timestamps never match; null-key/ts versions are dropped.
+    */
+  private def composedAsOf(left: DataFrame, right: DataFrame, key: String,
+      leftTs: String, rightTs: String, prefix: String = "r_"): DataFrame = {
+    val renamed = right.columns.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"$prefix$c"))
+    val (rKey, rTs) = (s"$prefix$key", s"$prefix$rightTs")
+    val lPayload = struct(left.columns.map(left(_)): _*)
+    val rPayload = struct(renamed.columns.map(renamed(_)): _*)
+    val lType = left.select(lPayload).schema.head.dataType
+    val rType = renamed.select(rPayload).schema.head.dataType
+    val lSide = left.select(col(key).as("_k"), col(leftTs).as("_t"),
+      lit(1).as("_side"), lPayload.as("_l"), lit(null).cast(rType).as("_r"))
+    val rSide = renamed.filter(col(rKey).isNotNull && col(rTs).isNotNull)
+      .select(col(rKey).as("_k"), col(rTs).as("_t"), lit(0).as("_side"),
+        lit(null).cast(lType).as("_l"), rPayload.as("_r"))
+    val w = Window.partitionBy(col("_k"))
+      .orderBy(col("_t").asc_nulls_first, col("_side").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lSide.unionByName(rSide)
+      .withColumn("_rlast", when(col("_k").isNull || col("_t").isNull,
+        lit(null).cast(rType)).otherwise(last(col("_r"), ignoreNulls = true).over(w)))
+      .filter(col("_side") === 1)
+      .select(left.columns.map(c => col(s"_l.`$c`").as(c)) ++
+        renamed.columns.map(c => col(s"_rlast.`$c`").as(c)): _*)
+      .drop(rKey)
+  }
 
   private def events = Tables.table(spark, sf, "events")
   private def clicks = events.filter(col("event_type") === "click")
@@ -23,7 +56,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
   test("native as-of equals the union+window composition row for row") {
     val native = AsOfJoinNative.asOf(clicks, views, "user_id", "ts", "ts")
       .select("click_id", "user_id", "ts", "r_ts", "r_view_id")
-    val composed = TemporalJoin.asOf(clicks, views, "user_id", "ts", "ts")
+    val composed = composedAsOf(clicks, views, "user_id", "ts", "ts")
       .select("click_id", "user_id", "ts", "r_ts", "r_view_id")
     assert(native.count() === clicks.count())
     assert(native.exceptAll(composed).count() === 0)
@@ -152,7 +185,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
       }.toMap
       assert(native === expected, s"seed $seed: native != reference")
 
-      val composed = TemporalJoin.asOf(left, right, "k", "t", "t")
+      val composed = composedAsOf(left, right, "k", "t", "t")
         .select("lid", "r_rid").collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
       assert(native === composed, s"seed $seed: native != composed")

@@ -14,14 +14,17 @@ class WritersSpec extends SparkSpec {
   }
 
   test("writeDynamicTopics routes each record to its topic dir in one job (K2)") {
-    val root = Files.createTempDirectory("topics").toString
+    // the dynamic producer is the topic bus's appendDynamic
+    val bus = graft.sources.FileBus(Files.createTempDirectory("topics").toString)
     val df = Seq(
       ("dwd_order_info", 1L, "x"), ("dwd_order_info", 2L, "y"),
       ("dwd_page_log", 3L, "z")).toDF("sinkTable", "id", "payload")
-    Writers.writeDynamicTopics(df, "sinkTable", root)
-    val orders = spark.read.parquet(s"$root/sinkTable=dwd_order_info")
-    val pages = spark.read.parquet(s"$root/sinkTable=dwd_page_log")
+    bus.appendDynamic(df.select(col("sinkTable"),
+      to_json(struct(col("id"), col("payload"))).as("value")), "sinkTable")
+    val orders = bus.read(spark, "dwd_order_info")
+    val pages = bus.read(spark, "dwd_page_log")
     assert(orders.count() === 2 && pages.count() === 1)
+    assert(pages.head.getString(0) === """{"id":3,"payload":"z"}""")
   }
 
   test("writeJdbc round-trips a stats frame through a live embedded database (K4)") {

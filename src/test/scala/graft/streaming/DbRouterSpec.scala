@@ -89,6 +89,49 @@ class DbRouterSpec extends SparkSpec {
     assert(dim.head.getAs[String]("name") === "NEW")
   }
 
+  test("rules sharing a fact sink or a dim history all land in one batch") {
+    val root = Files.createTempDirectory("router-shared").toString
+    val cols = Seq("id", "user_id")
+    val router = new DbRouter(Seq(
+      RouteRule("order_info", "insert", "kafka", "dwd_order_info", cols, "id"),
+      RouteRule("order_info", "update", "kafka", "dwd_order_info", cols, "id"),
+      RouteRule("user_info", "insert", "hbase", "dim_user_info", Seq("id", "name"), "id",
+        history = true),
+      RouteRule("user_info", "update", "hbase", "dim_user_info", Seq("id", "name"), "id",
+        history = true)), root)
+    router.processBatch(DbRouter.decodeEnvelope(mkEnvelopes(
+      ("order_info", "insert", """{"id":"1","user_id":"10"}"""),
+      ("order_info", "update", """{"id":"2","user_id":"11"}"""),
+      ("user_info", "insert", """{"id":"10","name":"a"}"""),
+      ("user_info", "update", """{"id":"10","name":"b"}"""))), 0L)
+    assert(DbRouter.readTopic(spark, root, "dwd_order_info")
+      .select("id").as[String].collect().sorted.toSeq === Seq("1", "2"))
+    assert(DbRouter.readDimHistory(spark, root, "dim_user_info")
+      .select("name").as[String].collect().sorted.toSeq === Seq("a", "b"))
+  }
+
+  test("rules sharing a dim resolve each pk by envelope seq, not rule order") {
+    val root = Files.createTempDirectory("router-shared-dim").toString
+    val cols = Seq("id", "name", "gender", "birthday")
+    // the update rule is listed FIRST, the update envelope is the newer one
+    val router = new DbRouter(Seq(
+      RouteRule("user_info", "update", "hbase", "dim_user_info", cols, "id"),
+      RouteRule("user_info", "insert", "hbase", "dim_user_info", cols, "id")), root)
+    val batch = Seq(
+      tsEnvelope("user_info", "insert",
+        """{"id":"10","name":"a","gender":"F","birthday":"1990-01-01"}""", 1L),
+      tsEnvelope("user_info", "update",
+        """{"id":"10","name":"b","gender":"F","birthday":"1990-01-01"}""", 2L),
+      tsEnvelope("order_info", "insert", """{"id":"1"}""", 3L),
+      tsEnvelope("user_info", "insert",
+        """{"id":"11","name":"c","gender":"M","birthday":"1991-02-02"}""", 4L))
+      .toDF("value")
+    router.processBatch(DbRouter.decodeEnvelope(batch), 0L)
+    val dim = DbRouter.readDim(spark, root, "dim_user_info")
+      .select("id", "name").as[(String, String)].collect().toMap
+    assert(dim === Map("10" -> "b", "11" -> "c"))
+  }
+
   test("dim snapshot survives a crash between retire and promote") {
     val root = Files.createTempDirectory("router-crash").toString
     val router = new DbRouter(DbRouter.referenceRules, root)

@@ -208,10 +208,12 @@ class StatefulParitySpec extends SparkSpec {
       .contains("FlatMapGroupsWithState"),
       "vector search state is not a keyed state-store fold")
     val reports = scala.collection.mutable.ArrayBuffer[Set[(Long, Long, Long, Double)]]()
-    val q = StatsStreams.vectorSearchStream(
-        input.toDF().toDF("vec_id", "embedding"), queries) { (df, _) =>
-      reports += df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    // each trigger's update-mode emission is one report
+    val q = keyed.writeStream.outputMode("update").foreachBatch {
+      (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        reports += df.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+        ()
     }.start()
     try {
       splits.foreach { s => input.addData(s.toIndexedSeq: _*); q.processAllAvailable() }

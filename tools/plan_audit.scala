@@ -1,8 +1,21 @@
-import org.apache.spark.sql.functions._
-val dir = "/root/testdata/sf0.1"
+// Per-query physical-plan feature table (broadcast hash joins, sort-merge
+// joins, net shuffles, reused exchanges, nested-loop joins, first pushed
+// filter), read from each query's FINAL adaptive plan, written on demand to
+// $PLAN_OUT_DIR/PLANS.md (a fresh temp dir by default, printed at the end).
+// Plan claims are pinned by PlanContractSpec; the table is not committed.
+// Run via:
+//   SPARK_GRAFT_SF_DIR=<testdata dir> spark-shell --conf spark.ui.enabled=false \
+//     --conf spark.sql.session.timeZone=UTC \
+//     --driver-class-path target/scala-2.13/classes -i tools/plan_audit.scala
+import java.nio.file.{Files, Paths}
+val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+  sys.error("set SPARK_GRAFT_SF_DIR to the testdata directory to audit"))
+val outDir = sys.env.getOrElse("PLAN_OUT_DIR",
+  Files.createTempDirectory("graft_plan_audit").toString)
+Files.createDirectories(Paths.get(outDir))
+spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 val sb = new StringBuilder
-sb ++= "# PLANS - physical plan audit at sf0.1 (generated by tools/plan_audit via spark-shell)\n\n"
-sb ++= "Counts of plan features per headline query: broadcast hash joins, sort-merge joins,\nshuffle exchanges, nested-loop joins, plus parquet pushdown evidence.\n\n"
+sb ++= s"# Physical plan audit at $dir\n\n"
 sb ++= "| query | BHJ | SMJ | shuffles | reused | BNLJ | pushed filters (first scan) |\n|---|---|---|---|---|---|---|\n"
 val names = graft.SparkEntry.queries.keys.toSeq.sorted // audit EVERY declared query
 for (n <- names) {
@@ -34,71 +47,7 @@ for (n <- names) {
       sb ++= s"| $n | - | - | - | - | - | `raises at this SF: $msg` |\n"
   }
 }
-sb ++= "\nNotes:\n"
-sb ++= "- Since round 10 the audit reads the FINAL adaptive plan (collect(), final section only): AQE-converted joins count as what actually ran, `reused` counts ReusedExchange nodes, and `shuffles` is net of reuse -- counts can differ from pre-r10 tables, which audited the initial plan.\n"
-sb ++= "- t13 (LM scoring): the bigram model's cb/ctx aggregations REUSE the corpus-scale (doc,w1,w2) exchange (the `reused` column) and join back as vocab-sized broadcasts; the one-row vocab count is the BNLJ. One corpus-scale shuffle + the per-doc score agg, regardless of corpus size.\n"
-sb ++= "- s9 (temperature mix): one corpus-scale source groupBy; the sqrt-share denominator and token total are one-row broadcast aggregates over source-cardinality rows. g6 (zipf): one corpus-scale (lang,word) count; rank window, means window, and final rollup all share the lang partitioning over vocabulary-sized rows.\n"
-sb ++= "- Every dim join is a BroadcastHashJoin with zero fact-side shuffles (j3: 3 BHJ / 0 shuffles).\n"
-sb ++= "- Interval joins carry the equi-key, planned as hash joins with the range bound as residual.\n"
-sb ++= "- The BNLJs are intended 1-to-few-row broadcasts: n1's 10-row query set; s4's one-row corpus totals cross join.\n"
-sb ++= "- Text/fingerprint/signature operators show 0 shuffles: pure scan-project (map-side).\n"
-sb ++= "- Filters and pruned ReadSchema reach every parquet scan (PushedFilters column).\n"
-sb ++= "- d6's within-cell pair join broadcasts the smaller side at this SF; its 2 shuffles are the two-phase partial top-1 (bounded at k*partitions rows), never a per-vector window.\n"
-sb ++= "- m1/m2 (media decode): spread the id/payload rows first (the codec runs inside mapPartitions, so input split count caps decode parallelism -- one narrow shuffle vs serializing the whole corpus on one core), then scan-project: metadata math stays columnar.\n"
-sb ++= "- n3 (SRP-LSH): signatures map-side, query bands broadcast, so the corpus is never shuffled; the one hash shuffle dedups (query,neighbor,sim) triples that matched in >1 band.\n"
-sb ++= "- d4/d7/d8 fingerprints are ONE native-expression call per doc (simhash_bits) -- no explode, no groupBy: scan-project. The d7/d8 pairing verifies hamming INLINE on the bucket-join output (packed 32-bit words, xor+bit_count), so only surviving pairs reach the distinct shuffle.\n"
-sb ++= "- d8 (64-bit simhash, 16-bit bands) is the production width: 2^16 buckets per band. d7's 4-bit demo bands are GATED at 1,000 docs (bucket math: 16 buckets/band => candidates ~ N^2/8; the bounded limit(n+1).count() probe rejects larger corpora with an error pointing at d8); the d7 QUERY runs on its fixed 500-doc slice, so its audit row is the sliced plan and the gate never fires there. maxHamming < nBands is enforced (pigeonhole completeness).\n"
-sb ++= "- d10/d11 (transitive clusters): LSH pair generation runs ONCE (eager localCheckpoint), then O(log D) pointer-jumping rounds over ONLY the pair-touched vertices (singletons rejoin via one anti-join after convergence -- at corpus scale they are the overwhelming majority, so every per-round join is pair-graph-sized, not corpus-sized). Each round is ONE action: the convergence count rides an accumulator out of the checkpoint job. The audit row shows the FIRST iteration's plan (the loop is driver-side). The BENCHED d11 query is self-contained -- independent driver queries cannot share work, so its lineage recomputes LSH + closure and bench-wise d11 ~= d10 + one keeper join. The dedupByCluster(docs, clusters) overload is the PIPELINE form: only compositions that pass precomputed labels pay LSH + closure once.\n"
-sb ++= "- t10 (BPE tokenize): pure scan-project -- split to a double-space symbol string, fold K codegen'd replace calls (the merge table rides as literals), explode; the only shuffle is spread's split widening. Training (not in the audit: returns a driver-held table) builds the word-frequency dict with ONE corpus shuffle, then iterates vocabulary-sized aggregations.\n"
-sb ++= "- m3 (resize planning): the m1 feature scan + three columnar arithmetic projections -- no extra shuffle over m1.\n"
-sb ++= "- m5 (real WAV decode): spread the (id, n_chars) rows, then encode+decode+frame-aggregate INSIDE one mapPartitions pass -- one row per FRAME leaves the codec seam (never one per sample), and the in-JDK javax.sound parser does the real container work.\n"
-sb ++= "- c1 (curation) composes d1+t1+t2+t3 as one map-side projection + the keeper groupBy + a doc_id semi-join: two narrow shuffles end to end. c2 (training export) now also runs d3's LSH near-dup stage (band self-join + candidate-bounded jaccard verify -- ONE (band,key) shuffle, never n^2) and anti-joins the losers before packing.\n"
-sb ++= "- t5 (decontamination): the benchmark shingle set BROADCASTS; corpus shingles filter map-side through the broadcast join, only matches reach the per-doc count shuffle, final left join keyed on doc_id.\n"
-sb ++= "- s1 (hash sample): pure per-row predicate + a broadcast of the 5-row rate table -- 0 corpus shuffles; s4 (mixture): same shape but rates DERIVED from a small count agg broadcast back (decimal predicate, overflow-safe at 1e12 rows); s2 (shard shuffle) shuffles once on shard, per-shard row_number (parallelism = shard count, no global sort).\n"
-sb ++= "- g1 (ngram top-k): spread FIRST (a one-split corpus would serialize the explode+partial-count on one core -- 12.2s -> 1.3s at sf0.1); the rank<=k filter compiles to Catalyst two-phase WindowGroupLimit -- map-side partial keeps k rows per (partition, lang) BEFORE the exchange; per-lang reducers see <= k*partitions rows.\n"
-sb ++= "- a9 (sessionize): both analytic windows and the session agg key on user_id -- per-user reducers, integer-us timestamps end to end.\n"
-sb ++= "- n5 (cosine_sim SQL fn): single-pass native expression (dot + both norms in one loop) inside WholeStageCodegen; the adjacent-id pair join is a broadcast hash join at this SF.\n"
-sb ++= "- b1 (bloom decontamination): the bench bloom builds as a scalar subquery; corpus shingles die MAP-SIDE at bloom_might_contain before any join -- at 100 TB the bloom is a few MB where the bench hash relation might not broadcast. The exact join then sees only survivors.\n"
-sb ++= "- t6/t7 (PII redact, repetition): zero shuffles -- t6 is chained regexp_replace in one projection; t7's max token multiplicity is a fold over the sorted word array (longest equal run), not an explode+groupBy that would shuffle one row per token.\n"
-sb ++= "- s3 (sequence packing): one shuffle on shard; the running token sum is a ROWS-frame streaming window per shard (no buffering, no global sort), placement arithmetic all-integer.\n"
-sb ++= "- w2 (sliding windows): size/slide=2-way Expand then ONE hash agg keyed on (pane, type) -- constant fan-out, partial agg applies. w3 (session_window): one shuffle on user_id, sort-based gap merge, no per-event session numbering materialized.\n"
-sb ++= "- j4/j5 (native as-of join, plain and 48h-tolerance): the custom whole-operator plan (AsOfJoin logical node -> strategy -> sort-merge exec). Each side exchanges ONCE on its own key and sorts (key, ts) inside partitions; the merge holds ONE candidate row of state, so cost is O(L+R) rows moved with no pair expansion (vs Catalyst's built-in AsOfJoin rewrite: join + min_by, quadratic in versions/key). The views side shows 2 exchanges only because the (user,ts) pre-collapse agg keys differently; a pre-keyed history joins with zero extra shuffles.\n"
-sb ++= "- d12 (segment dedup): spread materializes the word arrays, segmenting is one map-side transform over that attribute; first-occurrence election is a WindowGroupLimit'd window on md5(seg) -- map tasks forward ONE candidate per (partition, segment) before the exchange; reassembly groupBy(doc_id) state is bounded by the doc's own segment list.\n"
-sb ++= "- s6 (domain cap): one source-keyed shuffle with two-phase WindowGroupLimit -- the reducer sees <= cap*partitions rows per domain, so domain COUNT (not size) bounds the reduce side. g3 (tfidf): tf and df aggs key on (doc_id,word)/(word) with map-side partials; corpus N is a broadcast one-row agg (the BNLJ), df joins back as a BHJ at this SF; the per-doc top-3 is a WindowGroupLimit'd doc_id window. Quantize-then-rank keeps cross-engine ties deterministic.\n"
-sb ++= "- s7 (length buckets): one (shard,bucket)-keyed shuffle; the batch agg's clustering keys are a superset of the window's partition keys, so it reuses the exchange (no second shuffle). b2 (semantic decontam): benchmark embeddings broadcast (the BNLJ); corpus norms computed once below the join; the only shuffle is the vec_id-keyed max with map-side partial agg.\n"
-sb ++= "- v2/v3 (real MJPEG decode + sampling): spread the ids, then encode + segment-walk split + per-frame ImageIO decode INSIDE one mapPartitions pass -- one row per (sampled) frame leaves the codec seam. The splitter walks the JPEG segment structure (lengths + FF-stuffing in entropy data) rather than pattern-matching FFD9, which can false-positive inside table payloads. v3 is the decode-skipping form: the boundary walk touches every frame (header structure only), JPEG entropy decode runs ONLY on every Nth -- decode cost scales with sampled frames, walk cost with stream bytes, which is the scale property that justifies a container walker. v1 keeps the stub face for the md5-derived geometry (2047^2 x 240 frames) that is deliberately too large to really encode at the gate.\n"
-sb ++= "- n2b (trained IVF end-to-end): kmeansTrain's Lloyd rounds run before the audited plan (one corpus aggregation per round against k LITERAL centroids -- no join, no corpus shuffle; k centroids of driver state). The audited query is the search itself: map-side assignCellsLit cell projection, broadcast probe selection, candidate-bounded cosine, two-phase top-k. No oracle (iterative float averaging is not one-SQL-stateable); recall >= 50% of n1's brute-force truth is spec-pinned at sf0.1.\n"
-sb ++= "- t11 (real-BPE token stats): ONE corpus scan -- spread ships one narrow row per doc, words explode in-partition, the replace-fold count sums map-side into a (doc_id, lang)-keyed partial agg (lang rides the grouping key, functionally dependent on doc_id -- no join-back), then g2's lang-keyed final agg. The real-count production default for token accounting; t3/g2/s3 keep the chars/4 bootstrap face.\n"
-sb ++= "- Skew policy by operator family: hot-key window operators (s6 domain cap, g1/g3 top-k, d12 segment election, r1 rank) bound the reduce side STRUCTURALLY -- two-phase WindowGroupLimit forwards <= k rows per (map partition, key) regardless of key skew; equi-joins rely on AQE skew-join splitting at runtime (enabled in the bench session); heavy-state aggregations over a skewed key (collect_list-class state where partial agg cannot shrink the hot key) opt into Skew.saltedAgg's two-phase (key,salt) layout. SkewSpec pins the evidence: a 30% hot key's whole volume lands in ONE task under key partitioning, ~fair share under the salted layout.\n"
-sb ++= "- d9 (winnowing): the whole shingle->hash->window-min selection is ONE native codegen expression (WinnowMins) -- higher-order-function composition ran interpreted and re-evaluated captured arrays per element (104s -> 0.65s warm at sf0.1); spread first so a one-split corpus hashes on every core; only the ~2/(w+1) selected fingerprints leave the scan. t9 (regex tokens) is a scan-project. g2 (quantiles) is one partial+final hash agg keyed on lang; exact percentile buffers per-stratum values -- the exact=false t-digest flag is the 100 TB path with the same plan shape.\n"
-sb ++= "- d17 (boilerplate strip): the >=3-distinct-doc segment set is small BY CONSTRUCTION, so it anti-joins back as a BROADCAST probe; the corpus pays one segment-keyed count-distinct shuffle + the doc_id reassembly groupBy -- the corpus is never join-shuffled. Fully-boilerplate docs surface as '' via the map-side base left join (the d14 accounting contract).\n"
-sb ++= "- t14 (ppl buckets): exact global tertiles WITHOUT a global sort -- t13's nll is already 4dp-quantized, so the value histogram is bounded regardless of corpus size; the cumulative window runs over that tiny histogram and the two thresholds broadcast back. The doc-level scored frame is CACHED: the histogram and assignment branches prune differently, de-canonicalizing the t13 subtree (measured 8 scans / 15 exchanges uncached -- AQE reuse cannot bridge pruning-divergent branches), so the cache is what makes the corpus-scale LM work run once.\n"
-sb ++= "- s11 (leakage-safe split): the split unit is the d10 CLUSTER -- the 80/10/10 draw hashes cluster_id, so near-dup pairs (transitive ones included) can never straddle train/val/test; the draw itself is a map-side projection over (doc_id, cluster_id) with exact 16-bit integer thresholds. Cost = d10's closure; pipelines with precomputed clusters pay only the projection (the d11 reuse pattern).\n"
-sb ++= "- t15 (NB quality classifier): ONE corpus-scale (doc, word, class) shuffle -- is_pos rides the grouping key; the per-class model groups that aggregate through a ReusedExchange and comes back as a vocab-sized broadcast; doc/token totals ride a light no-explode scan (deriving them from the shared subtree de-canonicalizes it -- the s10 lesson). Spread before the explode: a one-split corpus serialized the token stream on 2 cores (3.7s/11 tasks -> 1.5s/106 tasks at sf0.1). Streaming face folds the sorted word array into the same integer deci-milli sums (bit parity pinned).\n"
-sb ++= "- d18 (containment pairs): the asymmetric |A-and-B|/min case MinHash bands miss BY DESIGN (they estimate Jaccard); candidates from rare-shingle postings (df in [2,50]) sharing >=2 shingles -- Sum(df^2) <= maxDf*Sum(df), and the minShared cut pruned 1.13M one-incidental-shingle candidates to 112k at sf0.1 with ZERO lost >=0.8 pairs; verify is the native count-only IntersectCount on the broadcast-joined set table.\n"
-sb ++= "- c3 (curated train export): three doc_id-keyed equi-joins over per-doc frames; each stage's corpus-scale work is its own documented plan (d17 broadcast anti-join, t15 reused-exchange shuffle, s11 = d10's bounded closure). The self-contained query re-pays each stage's lineage like d11 does -- production pipelines materialize stages once and reuse (the cluster-reuse pattern).\n"
-sb ++= "- m6 (image perceptual hash): decode + 4x4 sample + 16-bit average-hash inside ONE mapPartitions pass at the codec seam (ids spread first, like m2); only the 4-long hash row leaves the seam, never pixels. The dup count is one hash-keyed window over 16-bit keys; a production 64-bit pHash would ride d8's banded-hamming machinery for near-dup pairs.\n"
-sb ++= "- Cross-round noise closure (r10 archive): d8 4.56s / n6 3.49s / g7 3.90s in bench_history/bench_out_r10.json were HOST NOISE, not plan drift -- same-code reruns measured d8 0.93s / n6 1.5s / g7 2.3s with byte-identical shuffle volumes and task counts (d8: 0.6 MB / 21388 rows / 132 tasks in BOTH runs; only peak_task_mem moved, 64.7 -> 8.7 MB, an allocation-timing artifact). tools/bench_diff.py classified all three [environment] from the recorded metrics alone.\n"
-sb ++= "- m7 (image near-dup pairs): 64-bit 8x8 average-hash computed inside the m6 decode pass (only the 8-byte hash leaves the codec seam), then d8's bandedHammingPairs VERBATIM -- 4x16-bit bands, pigeonhole-complete for hamming <= 3, packed-word xor/bit_count verify inline on the bucket join output. Candidates ~154k at sf0.1 vs ~12.5M all-pairs; the oracle brute-forces every pair per-bit, so banding completeness is hash-checked, not asserted.\n"
-sb ++= "- m8 (audio fingerprint dedup): d1's one-hash-groupBy plan at the audio seam -- encode + REAL WavCodec decode + 2-frame energy key in one mapPartitions pass, then groupBy(prefix_key) -> (keeper, dup_ct). Production reads header+prefix as an object-store RANGE read, O(prefix) per blob; contract pins <= 1 keyed exchange and zero joins. audioFingerprintStream shares the SAME audioPrefixKey helper (parity-pinned).\n"
-sb ++= "- c4 (multimodal curation): the three gates keep their own documented plans (t12 zero-shuffle scan, m7 banded, m8 one groupBy); assembly is semi joins on the corpus-sized text/audio gates (id-keyed shuffles -- the scale-correct choice) plus a BROADCAST anti join on the pair-bounded dropped-image list (contract-pinned; it silently sort-merged before the pin).\n"
-sb ++= "- d19 (incremental dedup): the batch side is broadcast at EVERY join (band probe, signature join-back, exact-fingerprint probe, both assembly joins) so the history index is never shuffled; history band keys + shingle sets ride inline on the banded rows (no history-keyed join-back), and pair-dedup is skipped in favor of <= 4 redundant IntersectCount verifies collapsed by the batch-keyed min() agg -- the only keyed exchange, over batch-sized data. incrementalDedupStream reuses the batch operator per micro-batch (foreachBatch, zero stream state).\n"
-sb ++= "- n8 (filtered vector search): filter-then-score -- the label equality turns n1's BroadcastNestedLoopJoin into a label-KEYED BroadcastHashJoin (contract-pinned), so each corpus vector is scored only against its own label partition's queries; candidates shrink by the filter selectivity (10x here) BEFORE any dot product runs. Top-k is n1's two-phase partial merge.\n"
-sb ++= "- l2 (compaction planning): one running-sum window per (lang, doc_id%16) slice -- parallelism = slices, each partition sorts only its own slice, never a global sort; the output is a pure projection the rewrite job consumes as its partition spec. Skew-bounded by construction (a shard holds ~1/N of its language).\n"
-sb ++= "- j6 (nearest as-of): TWO passes of the native as-of operator (forward = backward on NEGATED micros, exploiting the operator's type-generic merge ordering), arbitrated per click by absolute distance with backward winning ties; each pass is the O(L+R) per-key merge, the arbitration one click-keyed equi-join of two click-sized frames. Contract pins both AsOfJoin nodes.\n"
-sb ++= "- g8 (triangle counting): degree-ordered edge orientation (Suri & Vassilvitskii WWW'11) -- every edge points from the (deg,id)-smaller endpoint, so out-degree is O(sqrt(m)) REGARDLESS of hubs and wedge volume is O(m^1.5); wedges enumerate at the small end and close against the oriented set via keyed joins only (contract: no cartesian, no BNLJ). The corpus-scale work is g7's one user-keyed window; everything after the edge rollup is edge-catalog-sized.\n"
-sb ++= "- s12 (weighted sampling): Efraimidis-Spirakis A-Res in one pass -- the ln(u)/w key is a scan-projection (u from salted md5, one ln 4dp-floor-quantized like t13), and the global top-n compiles to TakeOrderedAndProject: per-partition top-100 map-side, rank only the survivors. The cast-after-filter ordering matters: filtering a CASTED rank regressed to a single-partition Window over the corpus (contract-pinned).\n"
-sb ++= "- e1/e2 (fuzzy match + entity resolution): record linkage runs on the DISTINCT-name vocabulary (collapsed first through one hash-groupBy that carries record counts); candidates from a character-bigram posting self-join (k edits destroy <= 2k of n-1 bigrams, so every lev<=2 pair of >=6-char names still shares one -- and the ORACLE brute-forces all pairs, so blocking completeness is hash-checked); verify is the built-in integer levenshtein. e2 closes the pair graph with the d10 connectedComponents machinery (vocabulary-sized, pointer jumping, deterministic block lifecycle) and rewrites records via one name-keyed join against the vocabulary-sized canonical map.\n"
-sb ++= "- g9 (collocations): unigram and bigram tables are two exploded map-side partial-agg shuffles; corpus totals ride one-row broadcasts; the single ln runs over a pinned-association ratio of exact integers (4dp-floor-quantized, the t13 recipe) and the top-k is the s12 bounded top-n. Nothing is corpus x corpus.\n"
-sb ++= "- dq1 (quality battery): every check is one scan-aggregate or one FK anti join on the join key; counts only -- violating rows never materialize, so the report is a fixed handful of one-row frames unioned at the end. The same keyed/broadcast machinery real queries use, which is the point: the battery costs one pass per table family. qualityMonitorStream applies the shared document battery per micro-batch (foreachBatch, zero stream state).\n"
-sb ++= "- dq2 (PSI drift): two bucket-count scan-aggregates + a bucket-keyed join of bucket-sized frames; totals ride one-row broadcasts; the ln is DECOMPOSED over the four exact counts (ln(inc)-ln(n_inc)-ln(hist)+ln(n_hist), same association both engines) so no int64 product can overflow at any corpus size, and each term is 4dp-floor-quantized -- engine-identical rows. Zero-mass buckets are excluded (PSI undefined there), visible via the report's count columns.\n"
-sb ++= "- Round-11 plan changes: t15 now explodes the corpus exactly ONCE -- |V| rides the model rows as an unpartitioned window count over the vocab-sized frame (a separate model.agg(count) frame gets REWRITTEN by Catalyst into a fresh corpus distinct: agg-over-agg collapse erases the per-doc grouping), and the source-side isnotnull(doc_id) keeps the tf exchange canonicalization-equal when a composition joins t15's output on doc_id (c3's pushed null-filter silently DOUBLED the corpus shuffle before: +1.3s / +3.9 MB at sf0.1). Both pinned in PlanContractSpec (final adaptive plan).\n"
-sb ++= "- c3 (curated train export) after the t15 fix: 7.6s -> ~5.7s at sf0.1; the remaining cost is the honest stage sum (d10's serial closure ~2.3s + t15 ~1.0 + d17 ~0.3 + assembly joins), not recomputation -- the composed plan shows each corpus subtree once. Caching the raw-text projection was MEASURED SLOWER (deserialized string row cache reads lose to the columnar parquet scan): materialize per-doc stage OUTPUTS in pipelines, never the corpus text.\n"
-sb ++= "- e1/e2 short-name completeness: the bigram bound is parametric (complete when EITHER name has >= 2*maxDist+2 chars); pairs where BOTH are shorter ride a length-window fallback block over the short class (vocabulary-trivial), so 1-5-char variants can no longer silently drop; maxDist is contract-guarded [1,4]. entityResolveStream is the incremental face: per-batch blocking of NEW names (broadcast grams) against the vocabulary, NAME-keyed pair state (id revisions stay inert), d10 recluster, full canonical-map upsert per micro-batch.\n"
-sb ++= "- dq3 (column profile): one scan-aggregate PER profiled column, each reading ONLY its column -- columnar pruning beats the fused multi-countDistinct form, which Catalyst plans as an Expand multiplying every corpus row by the number of distinct aggregates before the shuffle. Exact distincts are the oracle face; the 100 TB path swaps in HLL (same plan shape).\n"
-sb ++= "- g10 (cross-source contamination): the per-source DISTINCT shingle table is one (source,shingle)-keyed shuffle; the pair join keys on the shingle, whose df is capped by the SOURCE COUNT after the distinct -- the d18 posting bound with an intrinsic cap, never corpus x corpus; both join sides are the same frame (exchange reused); totals and ratios ride source^2-sized frames.\n"
-sb ++= "- s13 (stratified sample): rank window and per-stratum count window share ONE lang-keyed exchange (the s7 superset-clustering shape); the quota compare is all-integer (rnk*10 <= n_s+9 == rnk <= ceil(n_s/10)). The per-stratum sort is the honest price of an EXACT quota; the documented fallbacks for oversized strata are the threshold draw (binomial error) or s12's A-Res with fixed n.\n"
-sb ++= "- m8/m5 audio seam (round 11): WAV encode/decode now resolve the JDK's WaveFileWriter/WaveFileReader ONCE via the public javax.sound.sampled.spi ServiceLoader instead of per-call AudioSystem dispatch, which re-scans every provider (six readers attempt-parse each blob) on every call -- measured 70-80us -> 2.3us per 128-sample blob, same real codec classes, byte-identical output (round-trip specs + oracle hashes unchanged). This is the 'decoder init amortized' claim made real at the provider level; the m8 fingerprint additionally materializes only header+prefix (the production RANGE-read shape, O(prefix) per blob).\n"
-sb ++= "- Round-12 bench context: the fresh sf0.1 run measured a uniform ~1.27x wall-clock inflation vs the r10 archive with BYTE-IDENTICAL shuffle volumes on every mover (tools/bench_diff.py: all [environment]) -- host slowdown, not regression; absolute per-query shapes unchanged. The compact stdout line now keys queries by roster code so the whole roster fits the driver's tail window (full names in bench_out.json).\n"
-java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
-println("WROTE PLANS.md")
+val out = Paths.get(outDir, "PLANS.md")
+Files.writeString(out, sb.toString)
+println(s"PLAN_AUDIT_DONE $out")
+sys.exit(0)
