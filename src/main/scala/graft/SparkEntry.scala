@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + BASELINE.json.
@@ -19,6 +20,13 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     StatsOps.provinceStats(spark, "/root/testdata/sf0.001")
+
+  /** The one place a roster query meets its input: `op` over table `name`
+    * of the roster directory. Every parameter a query binds that differs
+    * from its operator's default is written at its entry in [[queries]].
+    */
+  private def on(name: String)(op: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
+    (s, d) => op(Tables.table(s, d, name))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.3 projection / filter / flatten / split
@@ -56,78 +64,78 @@ object SparkEntry {
     "dq2_drift_psi" -> (RelationalOps.driftPsi _),
     // dq3: per-column catalog profile — rows/nulls/exact distincts/min/max,
     // one pruned scan per column
-    "dq3_column_profile" -> ((s: SparkSession, d: String) => RelationalOps.columnProfile(s, d)),
+    "dq3_column_profile" -> on("documents")(RelationalOps.columnProfile),
     // dq8: profile drift between l3's snapshots — dq3's battery per side,
     // report-sized join, integer cross-product thresholds, drifted verdict
-    "dq8_profile_drift" -> ((s: SparkSession, d: String) => RelationalOps.profileDrift(s, d)),
+    "dq8_profile_drift" -> on("documents")(RelationalOps.profileDrift),
     // dq9: embedding-space outliers — bottom 1/20 of each cell by kNN-graph
     // density (DECIMAL edge-sim sum); rides the memoized n14 graph
-    "dq9_embedding_outliers" -> ((s: SparkSession, d: String) => AnnOps.knnDensityOutliers(s, d)),
+    "dq9_embedding_outliers" -> on("embeddings")(AnnOps.knnDensityOutliers(_)),
     // dq4: k-anonymity audit over the (lang, source, len-bucket)
     // quasi-identifier — sub-k groups flagged, one bounded keyed agg
-    "dq4_k_anonymity" -> ((s: SparkSession, d: String) => RelationalOps.kAnonymity(s, d)),
+    "dq4_k_anonymity" -> on("documents")(RelationalOps.kAnonymity(_)),
     // l3: snapshot diff (added/removed/changed/unchanged counts) — one
     // id-keyed full outer join of the two manifest projections
-    "l3_snapshot_diff" -> ((s: SparkSession, d: String) => RelationalOps.snapshotDiff(s, d)),
+    "l3_snapshot_diff" -> on("documents")(RelationalOps.snapshotDiff),
     // dq5: per-stream freshness/lag/volume vs the table's own max — the
     // ingest-SLA dashboard, one keyed scan-agg + one-row broadcast
-    "dq5_freshness" -> ((s: SparkSession, d: String) => RelationalOps.freshness(s, d)),
+    "dq5_freshness" -> on("events")(RelationalOps.freshness),
     // a14: first/last-touch attribution — j1-shaped candidate join, both
     // argmin/argmax windows on one purchase-keyed exchange, decimal revenue
-    "a14_attribution" -> (StatsOps.attribution _),
+    "a14_attribution" -> on("events")(StatsOps.attribution),
     // l4: data-skipping effectiveness — files touched under arrival vs
     // z-order layout for one box predicate; per-file stats in one keyed agg
-    "l4_skipping_stats" -> ((s: SparkSession, d: String) => Bucketing.skippingStats(s, d)),
+    "l4_skipping_stats" -> on("events")(Bucketing.skippingStats(_)),
     // l5: the three-way layout bake-off — arrival vs Morton vs Hilbert
     // skipping under the same box predicate (native hilbert_key rounds)
-    "l5_layout_compare" -> ((s: SparkSession, d: String) => Bucketing.layoutCompare(s, d)),
+    "l5_layout_compare" -> on("events")(Bucketing.layoutCompare(_)),
     // g10: cross-source shingle-overlap matrix — the subcorpus governance
     // view of decontamination; shingle df bounded by source count
-    "g10_cross_source" -> ((s: SparkSession, d: String) => CurationOps.crossSourceContamination(s, d)),
+    "g10_cross_source" -> on("documents")(CurationOps.crossSourceContamination),
     // s13: exact per-stratum 10% sample by salted-hash order — integer
     // quota compare, one lang-keyed exchange for both windows
-    "s13_stratified_sample" -> ((s: SparkSession, d: String) => CurationOps.stratifiedSample(s, d)),
-    "s14_cluster_balanced_sample" -> ((s: SparkSession, d: String) => CurationOps.clusterBalancedSample(s, d)),
+    "s13_stratified_sample" -> on("documents")(CurationOps.stratifiedSample),
+    "s14_cluster_balanced_sample" -> on("embeddings")(CurationOps.clusterBalancedSample),
     // dq6: per-stream daily volume z-score anomalies — one corpus
     // scan-agg; shift-invariant integer variance (no s² overflow)
-    "dq6_volume_anomaly" -> ((s: SparkSession, d: String) => RelationalOps.volumeAnomaly(s, d)),
+    "dq6_volume_anomaly" -> on("events")(RelationalOps.volumeAnomaly(_)),
     // dq7: FK-graph referential integrity — orphan counts per relation
-    "dq7_referential_integrity" -> ((s: SparkSession, d: String) => RelationalOps.referentialIntegrity(s, d)),
+    "dq7_referential_integrity" -> (RelationalOps.referentialIntegrity _),
     // t16: char-entropy quality signal (the compression-proxy filter) —
     // native single-pass codegen expression, zero shuffle
-    "t16_char_entropy" -> ((s: SparkSession, d: String) => TextOps.charEntropy(s, d)),
+    "t16_char_entropy" -> on("documents")(TextOps.charEntropy),
     // t17: the FULL Gopher Table-A1 repetition battery — top-{2,3,4}-gram
     // and dup-{5..10}-gram character fractions, integer-compared thresholds
-    "t17_gopher_repetition" -> ((s: SparkSession, d: String) => TextOps.gopherRepetition(s, d)),
+    "t17_gopher_repetition" -> on("documents")(TextOps.gopherRepetition),
     // g11: item-item cosine over binary user sets (collaborative
     // filtering) — user-keyed posting self-join, active-user bound
-    "g11_item_similarity" -> ((s: SparkSession, d: String) => StatsOps.itemSimilarity(s, d)),
+    "g11_item_similarity" -> on("events")(StatsOps.itemSimilarity(_)),
     // g12: doc-level source-overlap matrix (g10's shingle-level complement)
-    "g12_source_overlap" -> ((s: SparkSession, d: String) => StatsOps.sourceOverlap(s, d)),
+    "g12_source_overlap" -> on("documents")(StatsOps.sourceOverlap),
     "a9_sessionize" -> (StatsOps.sessionize _),
-    "a10_funnel" -> (StatsOps.funnel _),
-    "a11_rfm" -> (StatsOps.rfm _),
-    "a13_rolling_active" -> (StatsOps.rollingActive _),
-    "a12_event_transitions" -> (StatsOps.eventTransitions _),
-    "g7_pagerank" -> (StatsOps.pageRank _),
+    "a10_funnel" -> on("events")(StatsOps.funnel),
+    "a11_rfm" -> on("events")(StatsOps.rfm),
+    "a13_rolling_active" -> on("events")(StatsOps.rollingActive),
+    "a12_event_transitions" -> on("events")(StatsOps.eventTransitions),
+    "g7_pagerank" -> on("events")(StatsOps.pageRank(_)),
     // g8: triangle counting via degree-ordered orientation — wedge volume
     // O(m^1.5), hub-skew-immune ("curse of the last reducer")
-    "g8_triangles" -> (StatsOps.triangles _),
+    "g8_triangles" -> on("events")(StatsOps.triangles),
     // g13: label-propagation communities over the same graph — synchronous
     // deterministic rounds (max incident weight, ties to smallest label)
-    "g13_label_prop" -> (StatsOps.labelPropagation _),
+    "g13_label_prop" -> on("events")(StatsOps.labelPropagation(_)),
     // g9: PMI collocation mining — one quantized ln over exact counts,
     // min-support filter, bounded top-k
-    "g9_collocations" -> ((s: SparkSession, d: String) => CurationOps.collocations(s, d)),
-    "l1_zorder_key" -> ((s: SparkSession, d: String) => Bucketing.zorderEvents(s, d)),
+    "g9_collocations" -> on("documents")(CurationOps.collocations(_)),
+    "l1_zorder_key" -> on("events")(Bucketing.zorderEvents),
     // l2: compaction planning (the small-files chore): first-fit-in-order
     // file assignment at ~16KB targets within (lang, doc_id%16) slices —
     // one bounded running-sum window per slice, never a global sort
-    "l2_compaction_plan" -> ((s: SparkSession, d: String) => Bucketing.compactionPlan(s, d)),
-    "r3_retention" -> (StatsOps.retention _),
+    "l2_compaction_plan" -> on("documents")(Bucketing.compactionPlan(_)),
+    "r3_retention" -> on("events")(StatsOps.retention),
     // a15: month-grained cohort LTV over orders — money-weighted r3 with
     // exact-decimal cumulative revenue per founding buyer
-    "a15_cohort_ltv" -> (StatsOps.cohortLtv _),
+    "a15_cohort_ltv" -> on("orders")(StatsOps.cohortLtv),
     "w2_sliding_counts" -> (StatsOps.slidingCounts _),
     "w3_session_window" -> (StatsOps.sessionWindowStats _),
     "w6_user_jump" -> (LogOps.userJump _),
@@ -137,134 +145,146 @@ object SparkEntry {
     "r2_window_funcs" -> (RelationalOps.windowFuncs _),
     "a8_rollup" -> (RelationalOps.rollupStats _),
     // LLM-data-pipeline: dedup
-    "d1_dedup_exact" -> ((s: SparkSession, d: String) => DedupOps.dedupExact(s, d)),
-    "d2_minhash_signature" -> ((s: SparkSession, d: String) => DedupOps.minhashSignature(s, d)),
-    "d3_minhash_lsh_pairs" -> ((s: SparkSession, d: String) => DedupOps.minhashLshPairs(s, d)),
-    "d4_simhash" -> ((s: SparkSession, d: String) => DedupOps.simhash(s, d)),
-    "d5_ngram_jaccard" -> ((s: SparkSession, d: String) => DedupOps.ngramJaccard(s, d)),
-    "d6_embedding_neardup" -> ((s: SparkSession, d: String) => AnnOps.embeddingNearDups(s, d)),
-    "d16_semdedup" -> ((s: SparkSession, d: String) => AnnOps.semDedup(s, d)),
+    "d1_dedup_exact" -> on("documents")(DedupOps.dedupExact),
+    "d2_minhash_signature" -> on("documents")(DedupOps.minhashSignature),
+    "d3_minhash_lsh_pairs" -> on("documents")(DedupOps.minhashLshPairs),
+    "d4_simhash" -> on("documents")(DedupOps.simhash),
+    "d5_ngram_jaccard" -> on("documents")(DedupOps.ngramJaccard),
+    "d6_embedding_neardup" -> on("embeddings")(AnnOps.embeddingNearDups(_)),
+    // d16 runs τ = 0.35: the fixture's within-cell cosines stay below ~0.47,
+    // so the production 0.95 would never exercise the drop rule
+    "d16_semdedup" -> on("embeddings")(AnnOps.semDedup(_, threshold = 0.35)),
     // d7 runs on a FIXED 500-doc demo slice (deterministic doc_id bound,
     // not the whole table): the 16-bit demo fingerprint is contract-gated
     // to <= 1k docs — the slice keeps the query oracle-green at every SF
     // while the operator-level gate still fails loudly on oversized input
-    "d7_simhash_pairs" -> ((s: SparkSession, d: String) =>
-      DedupOps.simhashPairs(Tables.table(s, d, "documents")
-        .filter(org.apache.spark.sql.functions.col("doc_id") < 500))),
-    "d8_simhash64_pairs" -> ((s: SparkSession, d: String) => DedupOps.simhash64Pairs(s, d)),
-    "d9_winnow_fingerprints" -> ((s: SparkSession, d: String) => DedupOps.winnowFingerprints(s, d)),
-    "d15_winnow_pairs" -> ((s: SparkSession, d: String) => DedupOps.winnowPairs(s, d)),
-    "d10_neardup_clusters" -> ((s: SparkSession, d: String) => DedupOps.nearDupClusters(s, d)),
-    "d11_dedup_by_cluster" -> ((s: SparkSession, d: String) => DedupOps.dedupByCluster(s, d)),
-    "d12_segment_dedup" -> ((s: SparkSession, d: String) => DedupOps.segmentDedup(s, d)),
-    "d13_substring_spans" -> ((s: SparkSession, d: String) => DedupOps.exactSubstringSpans(s, d)),
-    "d14_strip_spans" -> ((s: SparkSession, d: String) => DedupOps.stripDuplicatedSpans(s, d)),
-    "d17_boilerplate_strip" -> ((s: SparkSession, d: String) => DedupOps.boilerplateStrip(s, d)),
-    "d18_containment_pairs" -> ((s: SparkSession, d: String) => DedupOps.containmentPairs(s, d)),
+    "d7_simhash_pairs" -> on("documents")(docs =>
+      DedupOps.simhashPairs(docs.filter(col("doc_id") < 500))),
+    "d8_simhash64_pairs" -> on("documents")(DedupOps.simhash64Pairs(_)),
+    "d9_winnow_fingerprints" -> on("documents")(DedupOps.winnowFingerprints),
+    "d15_winnow_pairs" -> on("documents")(DedupOps.winnowPairs(_)),
+    // d10/d11/d20/s11 (and c3 inside its operator) cluster at Jaccard 0.7 —
+    // one threshold, so all of them ride the same memoized closure
+    "d10_neardup_clusters" -> on("documents")(DedupOps.nearDupClusters(_, 0.7)),
+    "d11_dedup_by_cluster" -> on("documents")(docs =>
+      DedupOps.dedupByCluster(docs, DedupOps.nearDupClusters(docs, 0.7))),
+    "d12_segment_dedup" -> on("documents")(DedupOps.segmentDedup),
+    "d13_substring_spans" -> on("documents")(DedupOps.exactSubstringSpans(_)),
+    "d14_strip_spans" -> on("documents")(DedupOps.stripDuplicatedSpans(_)),
+    "d17_boilerplate_strip" -> on("documents")(DedupOps.boilerplateStrip(_)),
+    "d18_containment_pairs" -> on("documents")(DedupOps.containmentPairs(_)),
     // d19: incremental batch-vs-history dedup triage (exact | near | novel);
     // history is never shuffled — batch side broadcast at every join
-    "d19_incremental_dedup" -> ((s: SparkSession, d: String) => DedupOps.incrementalDedup(s, d)),
+    "d19_incremental_dedup" -> on("documents")(DedupOps.incrementalDedup),
     // d20: duplicate-cluster size spectrum over the session-shared closure
-    "d20_cluster_spectrum" -> ((s: SparkSession, d: String) => DedupOps.clusterSizeSpectrum(s, d)),
-    "g5_dup_rate_by_source" -> ((s: SparkSession, d: String) => DedupOps.dupRateBySource(s, d)),
+    "d20_cluster_spectrum" -> on("documents")(docs =>
+      DedupOps.clusterSizeSpectrum(DedupOps.nearDupClusters(docs, 0.7))),
+    "g5_dup_rate_by_source" -> on("documents")(DedupOps.dupRateBySource(_)),
     // LLM-data-pipeline: similarity search
-    "n1_ann_cosine_topk" -> ((s: SparkSession, d: String) => AnnOps.cosineTopK(s, d)),
+    "n1_ann_cosine_topk" -> on("embeddings")(AnnOps.cosineTopK),
     // n8: metadata-FILTERED vector search — top-k among same-label vectors
     // only; the label equality turns n1's nested-loop into a keyed
     // broadcast hash join (filter-then-score)
-    "n8_ann_filtered_topk" -> ((s: SparkSession, d: String) => AnnOps.filteredTopK(s, d)),
-    "n2_ann_ivf_topk" -> ((s: SparkSession, d: String) => AnnOps.ivfTopK(s, d)),
+    "n8_ann_filtered_topk" -> on("embeddings")(AnnOps.filteredTopK(_)),
+    "n2_ann_ivf_topk" -> on("embeddings")(AnnOps.ivfTopK),
     // n2b: the TRAINED quantizer end-to-end (kmeansTrain → assignCellsLit →
     // ivfSearchAssigned). Lloyd's loop is not oracle-stateable in one SQL
     // query, so no oracleSql entry (driver records rows-only); the recall
-    // bound vs n1's brute-force truth is spec-pinned at sf0.1 (AnnOpsSpec)
-    "n2b_ann_ivf_trained" -> ((s: SparkSession, d: String) => AnnOps.ivfTrainedTopK(s, d)),
-    "n3_ann_lsh_topk" -> ((s: SparkSession, d: String) => AnnOps.lshTopK(s, d)),
-    "n6_pq_adc" -> ((s: SparkSession, d: String) => AnnOps.pqAdcTopK(s, d)),
+    // bound vs n1's brute-force truth is spec-pinned at sf0.1 (AnnOpsSpec).
+    // spill = 2: at the same 3/8 probe fraction the spilled index buys
+    // recall with 2× index rows and zero extra probe I/O
+    "n2b_ann_ivf_trained" -> on("embeddings")(AnnOps.ivfTrainedTopK(_, spill = 2)),
+    "n3_ann_lsh_topk" -> on("embeddings")(AnnOps.lshTopK(_)),
+    "n6_pq_adc" -> on("embeddings")(AnnOps.pqAdcTopK(_)),
     // n7: k-NN weak labeling — majority label of the top-5 cosine
     // neighbors, deterministic (sim DESC, id) / (votes DESC, label) ties
-    "n7_knn_label" -> ((s: SparkSession, d: String) => AnnOps.knnLabel(s, d)),
-    "n4_embed_quantize" -> ((s: SparkSession, d: String) => AnnOps.quantizeStats(s, d)),
+    "n7_knn_label" -> on("embeddings")(AnnOps.knnLabel(_)),
+    "n4_embed_quantize" -> on("embeddings")(AnnOps.quantizeStats),
     // n9: SQ8 search — int8-code candidate scan (cosine of the quantized
     // vectors: scales cancel, all-integer-derived) + exact float rerank of
     // the top-20 survivors per query
-    "n9_quantized_topk" -> ((s: SparkSession, d: String) => AnnOps.quantizedTopK(s, d)),
+    "n9_quantized_topk" -> on("embeddings")(AnnOps.quantizedTopK(_)),
     // n10: IVF probe-bounded SQ8 — the int8 scan touches only the 3 probed
     // cells per query (n2 x n9 composition); deterministic 6-dp centroid
     // means + 4-dp-quantized probe scores keep every stage oracle-stateable
-    "n10_ivf_sq8_topk" -> ((s: SparkSession, d: String) => AnnOps.ivfQuantizedTopK(s, d)),
+    "n10_ivf_sq8_topk" -> on("embeddings")(AnnOps.ivfQuantizedTopK(_)),
     // n11: IVFADC — coarse cells + RESIDUAL product quantization; per query
     // only the 4 probed cells' 8-int codes are ADC-scored against a
     // per-(query, cell) residual distance table, then the n1 float rerank
-    "n11_ivfpq_topk" -> ((s: SparkSession, d: String) => AnnOps.ivfPqTopK(s, d)),
+    "n11_ivfpq_topk" -> on("embeddings")(AnnOps.ivfPqTopK(_)),
     // n13: MMR diversified top-k — the RAG reranker between search and the
     // context window; greedy rounds unrolled, pool-bounded by construction
-    "n13_mmr_topk" -> ((s: SparkSession, d: String) => AnnOps.mmrTopK(s, d)),
+    "n13_mmr_topk" -> on("embeddings")(AnnOps.mmrTopK(_)),
     // n14: the kNN JOIN — every corpus vector's top-5 neighbors, probe-
     // bounded by the memoized coarse quantizer (the SemDeDup / kNN-graph
     // index-side primitive; candidate pairs = probed fraction, never n²)
-    "n14_knn_join" -> ((s: SparkSession, d: String) => AnnOps.knnJoin(s, d)),
+    "n14_knn_join" -> on("embeddings")(AnnOps.knnJoin(_)),
     "n5_cosine_sim_fn" -> (cosineSimFn _),
     // LLM-data-pipeline: corpus curation (decontamination, sampling,
     // shard shuffle, n-gram frequency)
-    "t5_decontaminate" -> ((s: SparkSession, d: String) => CurationOps.decontaminate(s, d)),
-    "b1_bloom_decontaminate" -> ((s: SparkSession, d: String) => CurationOps.bloomDecontaminate(s, d)),
-    "b2_semantic_decontam" -> ((s: SparkSession, d: String) => AnnOps.semanticDecontaminate(s, d)),
-    "s1_hash_sample" -> ((s: SparkSession, d: String) => CurationOps.hashSample(s, d)),
-    "s2_train_shuffle" -> ((s: SparkSession, d: String) => CurationOps.trainShuffle(s, d)),
-    "s3_seq_pack" -> ((s: SparkSession, d: String) => CurationOps.packSequences(s, d)),
-    "s4_mixture_sample" -> ((s: SparkSession, d: String) => CurationOps.mixtureSample(s, d)),
-    "s5_doc_chunk" -> ((s: SparkSession, d: String) => CurationOps.chunkDocuments(s, d)),
-    "s6_domain_cap" -> ((s: SparkSession, d: String) => CurationOps.domainCap(s, d)),
-    "s7_length_buckets" -> ((s: SparkSession, d: String) => CurationOps.lengthBuckets(s, d)),
+    "t5_decontaminate" -> on("documents")(CurationOps.decontaminate),
+    "b1_bloom_decontaminate" -> on("documents")(CurationOps.bloomDecontaminate),
+    "b2_semantic_decontam" -> on("embeddings")(AnnOps.semanticDecontaminate(_)),
+    "s1_hash_sample" -> on("documents")(CurationOps.hashSample),
+    "s2_train_shuffle" -> on("documents")(CurationOps.trainShuffle(_)),
+    "s3_seq_pack" -> on("documents")(CurationOps.packSequences(_)),
+    "s4_mixture_sample" -> on("documents")(CurationOps.mixtureSample),
+    "s5_doc_chunk" -> on("documents")(CurationOps.chunkDocuments(_)),
+    "s6_domain_cap" -> on("documents")(CurationOps.domainCap(_)),
+    "s7_length_buckets" -> on("documents")(CurationOps.lengthBuckets(_)),
     // s8: sequence packing driven by REAL BPE subword counts (t10's merge
     // table) instead of the chars/4 estimate — counting and packing compose
-    "s8_bpe_pack" -> ((s: SparkSession, d: String) => CurationOps.bpePackSequences(s, d)),
-    "g1_ngram_topk" -> ((s: SparkSession, d: String) => CurationOps.ngramTopK(s, d)),
-    "g3_tfidf_topterms" -> ((s: SparkSession, d: String) => CurationOps.tfidfTopTerms(s, d)),
-    "g4_vocab_stats" -> ((s: SparkSession, d: String) => CurationOps.vocabStats(s, d)),
-    "g6_zipf_slope" -> ((s: SparkSession, d: String) => CurationOps.zipfSlope(s, d)),
-    "s9_temperature_mix" -> ((s: SparkSession, d: String) => CurationOps.temperatureMix(s, d)),
-    "s10_dsir_weights" -> ((s: SparkSession, d: String) => CurationOps.dsirWeights(s, d)),
-    "s11_leakage_split" -> ((s: SparkSession, d: String) => CurationOps.leakageSafeSplit(s, d)),
+    "s8_bpe_pack" -> on("documents")(docs =>
+      CurationOps.packSequencesFrom(CurationOps.bpeTokenCounts(
+        docs.filter(col("doc_id") < 100), CurationOps.DemoBpeMerges))),
+    "g1_ngram_topk" -> on("documents")(CurationOps.ngramTopK(_)),
+    "g3_tfidf_topterms" -> on("documents")(CurationOps.tfidfTopTerms(_)),
+    "g4_vocab_stats" -> on("documents")(CurationOps.vocabStats),
+    "g6_zipf_slope" -> on("documents")(CurationOps.zipfSlope),
+    "s9_temperature_mix" -> on("documents")(CurationOps.temperatureMix),
+    "s10_dsir_weights" -> on("documents")(CurationOps.dsirWeights),
+    "s11_leakage_split" -> on("documents")(docs =>
+      CurationOps.leakageSafeSplit(docs, DedupOps.nearDupClusters(docs, 0.7))),
     // s12: Efraimidis-Spirakis weighted sampling without replacement —
     // global top-n on the 4dp-quantized ln(u)/w key, WindowGroupLimit plan
-    "s12_weighted_sample" -> ((s: SparkSession, d: String) => CurationOps.weightedSample(s, d)),
+    "s12_weighted_sample" -> on("documents")(CurationOps.weightedSample(_)),
     // exact=true opts into the reducer-buffered exact percentile the DuckDB
     // oracle states; the operator's 100 TB default is the t-digest path
-    "g2_token_quantiles" -> ((s: SparkSession, d: String) => CurationOps.tokenQuantiles(s, d, exact = true)),
+    "g2_token_quantiles" -> on("documents")(CurationOps.tokenQuantiles(_, exact = true)),
     // LLM-data-pipeline: text analysis
-    "c1_corpus_curation" -> ((s: SparkSession, d: String) => TextOps.curateCorpus(s, d)),
-    "c2_training_pipeline" -> ((s: SparkSession, d: String) => CurationOps.trainingPipeline(s, d)),
-    "c3_curated_train_export" -> ((s: SparkSession, d: String) => CurationOps.curatedTrainExport(s, d)),
-    "t1_lang_id" -> ((s: SparkSession, d: String) => TextOps.langId(s, d)),
-    "t2_text_quality" -> ((s: SparkSession, d: String) => TextOps.textQuality(s, d)),
-    "t3_token_count" -> ((s: SparkSession, d: String) => TextOps.tokenCount(s, d)),
-    "t4_fingerprint" -> ((s: SparkSession, d: String) => TextOps.fingerprint(s, d)),
-    "t6_pii_redact" -> ((s: SparkSession, d: String) => TextOps.piiRedact(s, d)),
-    "t8_normalize" -> ((s: SparkSession, d: String) => TextOps.normalizeText(s, d)),
-    "t7_repetition" -> ((s: SparkSession, d: String) => TextOps.repetitionStats(s, d)),
-    "t9_regex_tokens" -> ((s: SparkSession, d: String) => TextOps.regexTokens(s, d)),
+    "c1_corpus_curation" -> on("documents")(TextOps.curateCorpus),
+    "c2_training_pipeline" -> on("documents")(CurationOps.trainingPipeline(_)),
+    "c3_curated_train_export" -> on("documents")(CurationOps.curatedTrainExport),
+    "t1_lang_id" -> on("documents")(TextOps.langId),
+    "t2_text_quality" -> on("documents")(TextOps.textQuality),
+    "t3_token_count" -> on("documents")(TextOps.tokenCount),
+    "t4_fingerprint" -> on("documents")(TextOps.fingerprint),
+    "t6_pii_redact" -> on("documents")(TextOps.piiRedact),
+    "t8_normalize" -> on("documents")(TextOps.normalizeText),
+    "t7_repetition" -> on("documents")(TextOps.repetitionStats),
+    "t9_regex_tokens" -> on("documents")(TextOps.regexTokens),
     // e1: fuzzy entity matching — bigram-posting-blocked candidate pairs,
     // exact integer levenshtein verify; oracle brute-forces all pairs so
     // blocking completeness is hash-checked
-    "e1_fuzzy_match" -> ((s: SparkSession, d: String) => TextOps.fuzzyNameMatch(s, d)),
+    "e1_fuzzy_match" -> on("part")(TextOps.fuzzyNameMatch(_)),
     // e2: canonical entity assignment — e1's pairs transitively closed with
     // the d10 connectedComponents machinery over the name vocabulary, every
     // record rewritten to its component's canonical name
-    "e2_entity_resolve" -> ((s: SparkSession, d: String) => TextOps.entityResolve(s, d)),
-    "t12_gopher_rules" -> ((s: SparkSession, d: String) => TextOps.gopherRules(s, d)),
-    "t13_lm_score" -> ((s: SparkSession, d: String) => TextOps.lmScore(s, d)),
-    "t14_ppl_buckets" -> ((s: SparkSession, d: String) => TextOps.pplBuckets(s, d)),
-    "t15_nb_quality" -> ((s: SparkSession, d: String) => TextOps.nbQualityScore(s, d)),
+    "e2_entity_resolve" -> on("part")(TextOps.entityResolve(_)),
+    "t12_gopher_rules" -> on("documents")(TextOps.gopherRules),
+    "t13_lm_score" -> on("documents")(TextOps.lmScore),
+    "t14_ppl_buckets" -> on("documents")(TextOps.pplBuckets),
+    "t15_nb_quality" -> on("documents")(TextOps.nbQualityScore),
     // t10: BPE subword tokenization through the fixed demo merge table
     // (training determinism is spec-pinned; the oracle replays the same
     // merge ranks as string replacements)
-    "t10_bpe_tokenize" -> ((s: SparkSession, d: String) => CurationOps.bpeTokenize(s, d)),
+    "t10_bpe_tokenize" -> on("documents")(docs => CurationOps.bpeTokenize(
+      docs.filter(col("doc_id") < 100), CurationOps.DemoBpeMerges)),
     // t11: per-language token distribution from REAL BPE subword counts —
     // the production accounting default once a merge table exists (t3/g2/s3
     // keep the chars/4 bootstrap face); exact percentile opted in like g2
-    "t11_bpe_token_stats" -> ((s: SparkSession, d: String) => CurationOps.bpeTokenStats(s, d, exact = true)),
+    "t11_bpe_token_stats" -> on("documents")(
+      CurationOps.bpeTokenStats(_, CurationOps.DemoBpeMerges, exact = true)),
     // LLM-data-pipeline: multimodal (m1 = deterministic fake decoder with a
     // full arithmetic oracle; m2 = REAL javax.imageio PNG encode→decode)
     "m1_multimodal_decode" -> (MultimodalOps.decodeFeatures _),
@@ -277,44 +297,43 @@ object SparkEntry {
     // m6: perceptual average-hash over the REAL PNG decode — 4x4
     // nearest-neighbor grid, integer brighter-than-mean bits, per-hash
     // dup-candidate counts; the oracle replays the gradient arithmetic
-    "m6_image_phash" -> ((s: SparkSession, d: String) => MultimodalOps.imagePhash(s, d)),
+    "m6_image_phash" -> (MultimodalOps.imagePhash _),
     // m7: image near-dup PAIRS — 64-bit average-hash over the real ImageIO
     // decode, banded-hamming candidate join (d8's machinery verbatim), exact
     // hamming <= 3 verify; the oracle replays the pixel arithmetic and
     // brute-forces all pairs, so banding must be COMPLETE to hash-match
     "m7_phash_pairs" -> ((s: SparkSession, d: String) => MultimodalOps.imagePhashPairs(s, d)),
-    "m4_audio_features" -> ((s: SparkSession, d: String) => MultimodalOps.audioFeatures(s, d)),
+    "m4_audio_features" -> on("documents")(MultimodalOps.audioFeatures),
     // m8: audio fingerprint dedup — d1's exact-dedup shape at the audio
     // seam: 2-frame energy prefix key over REAL WAV decode, hash-groupBy to
     // (keeper, dup_ct); the oracle replays the sample recurrence
-    "m8_audio_fingerprint" -> ((s: SparkSession, d: String) => MultimodalOps.audioFingerprintDups(s, d)),
+    "m8_audio_fingerprint" -> (MultimodalOps.audioFingerprintDups _),
     // c4: multimodal curation capstone — text gopher-keep AND image
     // phash-canonical AND audio fingerprint-keeper, every gate reused
     // verbatim from its standalone operator (and its oracle likewise)
-    "c4_multimodal_curation" -> ((s: SparkSession, d: String) => MultimodalOps.multimodalCuration(s, d)),
+    "c4_multimodal_curation" -> (MultimodalOps.multimodalCuration _),
     // c5: RAG retrieval serving capstone — n10's probe-bounded IVF×SQ8
     // scan, exact rerank to the pool=20 list, n13's MMR greedy tail; the
     // oracle composes the two gated stages' CTE chains verbatim
-    "c5_retrieval_serve" -> ((s: SparkSession, d: String) => CurationOps.retrievalServe(s, d)),
+    "c5_retrieval_serve" -> on("embeddings")(AnnOps.retrievalServe(_)),
     // m5: REAL WAV round trip — encode RIFF/WAVE bytes per doc, decode with
     // the in-JDK javax.sound parser, aggregate frames at the codec seam;
     // same arithmetic oracle as m4, so a codec fault breaks the hash
-    "m5_audio_decode" -> ((s: SparkSession, d: String) => MultimodalOps.decodeAudioFrames(s, d)),
+    "m5_audio_decode" -> (MultimodalOps.decodeAudioFrames _),
     // v1: frame sampling over video-mime records — every 30th of the stub
     // decoder's md5-derived frame count; fan-out + dims are oracle-checked,
     // the opaque frame bytes stay out of the compared columns
-    "v1_frame_sample" -> ((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
+    "v1_frame_sample" -> ((s: SparkSession, d: String) =>
       MultimodalOps.sampleFrames(MultimodalOps.videoRecords(s, d), 30)
         .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          col("width"), col("height"))
-    }),
+          col("width"), col("height"))),
     // v2: REAL video decode — a genuine MJPEG (concatenated-JPEG) stream is
     // encoded per doc and split+decoded frame by frame with the in-JDK JPEG
     // plugin; the oracle states the frame fan-out and dims arithmetically,
     // so the hash only matches if the segment-walking splitter found every
     // real frame boundary (v1's stub face keeps the too-big-to-encode dims)
-    "v2_mjpeg_decode" -> ((s: SparkSession, d: String) => MultimodalOps.decodeMjpegFrames(s, d)),
+    "v2_mjpeg_decode" -> ((s: SparkSession, d: String) =>
+      MultimodalOps.decodeMjpegFrames(MultimodalOps.mjpegRecords(s, d))),
     // v3: frame sampling on the REAL codec with decode-skipping — the
     // boundary walk touches every frame, JPEG decode only every 2nd; the
     // oracle is v2's fan-out filtered to even frame indices

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -115,8 +114,6 @@ object AnnOps {
   def cosineTopK(e: DataFrame): DataFrame =
     searchTopK(e, e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe")), 5)
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame =
-    cosineTopK(table(spark, dir, "embeddings"))
 
   /** N8 — FILTERED vector search: each query's top-k cosine neighbors
     * restricted to corpus vectors sharing the query's label — the
@@ -145,8 +142,6 @@ object AnnOps {
     topKPerQuery(sims, k, Seq("query_id"))
       .select("query_id", "neighbor_id", "rnk", "sim")
   }
-  def filteredTopK(spark: SparkSession, dir: String): DataFrame =
-    filteredTopK(table(spark, dir, "embeddings"))
 
   /** N7 — k-NN weak labeling (auto-labeling / label propagation, the
     * nearest-neighbor classifier the data-curation literature uses to
@@ -190,8 +185,6 @@ object AnnOps {
         col("label").as("predicted_label"), col("votes"),
         (col("label") === col("true_label")).as("agrees"))
   }
-  def knnLabel(spark: SparkSession, dir: String): DataFrame =
-    knnLabel(table(spark, dir, "embeddings"))
 
   /** N2 — IVF-style ANN: probe only the query's cell (`label` = coarse
     * centroid assignment), top-3 per query. The scale path: corpus partitioned
@@ -210,8 +203,6 @@ object AnnOps {
     topKPerQuery(sims, 3, Seq("query_id", "cell"))
       .select("query_id", "cell", "neighbor_id", "rnk", "sim")
   }
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTopK(table(spark, dir, "embeddings"))
 
   /** D6 — embedding-cosine near-dup detection, the vector-space member of the
     * dedup family (exact/MinHash/SimHash/n-gram live in [[DedupOps]]): every
@@ -244,8 +235,6 @@ object AnnOps {
       .select(col("vec_id"), col("neighbor_id").as("nn_id"), col("sim"),
         (col("sim") >= threshold).as("is_dup"))
   }
-  def embeddingNearDups(spark: SparkSession, dir: String): DataFrame =
-    embeddingNearDups(table(spark, dir, "embeddings"))
 
   /** Corpus-level embedding near-dup REMOVAL — the vector-space analog of
     * [[DedupOps.dropNearDuplicates]]: drop every vector whose within-cell
@@ -311,8 +300,6 @@ object AnnOps {
     */
   def lshTopK(e: DataFrame, k: Int = 5): DataFrame =
     lshSearch(e, e.filter(col("vec_id") < 20), k)
-  def lshTopK(spark: SparkSession, dir: String): DataFrame =
-    lshTopK(table(spark, dir, "embeddings"))
 
   /** Full SRP-LSH search over arbitrary corpus/query frames — the general
     * API behind [[lshTopK]], parallel to [[ivfSearch]]. Self-pairs (shared
@@ -361,8 +348,6 @@ object AnnOps {
         size(filter(col("qv"), x => abs(x) === 127)).cast("long").as("n_sat"),
         size(filter(col("qv"), x => x === 0)).cast("long").as("n_zero"))
   }
-  def quantizeStats(spark: SparkSession, dir: String): DataFrame =
-    quantizeStats(table(spark, dir, "embeddings"))
 
   /** N9 — int8-QUANTIZED search with exact rerank, the SQ8 retrieval shape
     * (FAISS `SQ8`, the standard memory/recall trade): the corpus is scanned
@@ -446,8 +431,6 @@ object AnnOps {
       .join(broadcast(top), Seq("query_id", "neighbor_id"))
       .select("query_id", "neighbor_id", "rnk", "sim", top.columns(2))
   }
-  def quantizedTopK(spark: SparkSession, dir: String): DataFrame =
-    quantizedTopK(table(spark, dir, "embeddings"))
 
   /** N10 — PROBE-BOUNDED quantized search: IVF cell probing (n2's shape)
     * composed with the SQ8 int8 candidate scan + exact rerank (n9's shape).
@@ -527,8 +510,6 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim"))
     exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, k)
   }
-  def ivfQuantizedTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfQuantizedTopK(table(spark, dir, "embeddings"))
 
   /** The n10/n11 coarse ASSIGNMENT as a standalone face: every vector's
     * geometric cell under the memoized label-seeded centroids (the same
@@ -584,8 +565,6 @@ object AnnOps {
     SessionMemo.getOrCompute(SessionMemo.key(s"n14:knn:k=$k,p=$nProbe", e)) {
       Materialize(knnJoinStage(e, k, nProbe))
     }
-  def knnJoin(spark: SparkSession, dir: String): DataFrame =
-    knnJoin(table(spark, dir, "embeddings"))
 
   /** The n14 construction PLAN itself (uncheckpointed) — what
     * PlanContractSpec pins; [[knnJoin]] wraps it in the session memo.
@@ -667,8 +646,6 @@ object AnnOps {
       .withColumn("outlier", col("rnk") * frac <= col("n_c") + (frac - 1))
       .select(col("vec_id"), col("cell"), col("density"), col("outlier"))
   }
-  def knnDensityOutliers(spark: SparkSession, dir: String): DataFrame =
-    knnDensityOutliers(table(spark, dir, "embeddings"))
 
   /** n10/n11's shared coarse quantizer: centroids SEEDED by the fixture's
     * label cells — n6's exact-mean pattern (per-dim integer 1e6 sums,
@@ -819,8 +796,6 @@ object AnnOps {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         norm(col("embedding")).as("nq")), top, k)
   }
-  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTopK(table(spark, dir, "embeddings"))
 
   /** N13 — MMR: maximal-marginal-relevance DIVERSIFIED top-k (Carbonell &
     * Goldstein, SIGIR 1998) — the reranker between vector search and a RAG
@@ -849,8 +824,6 @@ object AnnOps {
     mmrOver(e, searchTopK(e, queries, pool)
       .select(col("query_id"), col("neighbor_id"), col("sim")), k, lambda, mu)
   }
-  def mmrTopK(spark: SparkSession, dir: String): DataFrame =
-    mmrTopK(table(spark, dir, "embeddings"))
 
   /** The MMR greedy core over an ARBITRARY candidate pool `(query_id,
     * neighbor_id, sim)` — n13 feeds it the brute n1 pool; the c5 serving
@@ -962,20 +935,25 @@ object AnnOps {
     out.iterator
   }
 
-  /** C5's search-side composition — see
-    * [[graft.operators.CurationOps.retrievalServe]] for the capstone face:
-    * n10's probe-bounded IVF×SQ8 scan reranked exactly to a `pool`-sized
-    * candidate list, then MMR-diversified. The serving path end-to-end:
-    * candidate I/O follows the probed fraction, the pair matrix and greedy
-    * rounds are pool-bounded, and every stage keeps its gate contract.
+  /** C5 — RAG retrieval serving, the capstone a search user hits first:
+    * n10's probe-bounded IVF×SQ8 candidate scan, exact float rerank to a
+    * `pool`-sized list, then n13's MMR greedy diversification — the
+    * query-time half of the retrieval stack the offline capstones (c1-c4)
+    * curate corpora for. Output is exactly `k` rows per query, (query_id,
+    * neighbor_id, pick, sim, mmr), each stage keeping its own gate's
+    * semantics (n10's 4-dp quantized probe selection and integer-dot scan,
+    * n1's exact rerank, n13's fixed-round greedy with independent λ/μ).
+    *
+    * Scale notes (100 TB): candidate I/O follows the probed fraction
+    * (nProbe/cells of the corpus — n10's contract), the rerank touches only
+    * |Q|·pool rows, and everything after is pool-bounded (|Q|·pool² pair
+    * matrix, k tiny greedy rounds) — no stage re-scans the corpus.
     */
   def retrievalServe(e: DataFrame, k: Int = ServeK, pool: Int = ServePool,
       nProbe: Int = ServeNProbe, lambda: Double = MmrLambda,
       mu: Double = MmrMu): DataFrame =
     mmrOver(e, ivfQuantizedTopK(e, k = pool, cand = pool, nProbe = nProbe)
       .select(col("query_id"), col("neighbor_id"), col("sim")), k, lambda, mu)
-  def retrievalServe(spark: SparkSession, dir: String): DataFrame =
-    retrievalServe(table(spark, dir, "embeddings"))
 
   /** Coarse-quantizer training: centroid = element-wise mean vector per
     * cluster. One shuffle on (cell, dim) — dimension count is a constant, so
@@ -1093,13 +1071,9 @@ object AnnOps {
     * Convergence is measured on the driver from the just-collected
     * centroids: no extra job, no growing lineage (each round's frame is
     * built fresh from the raw corpus and k literals).
-    */
-  def kmeansTrain(e: DataFrame, k: Int, maxIter: Int = 10,
-      tol: Double = 1e-4): Array[(Int, Array[Float])] =
-    kmeansTrain(e, k, maxIter, tol, trainFrac = 1.0)
-
-  /** [[kmeansTrain]] over a deterministic hash SAMPLE of the corpus — the
-    * production shape at 100 TB: a coarse quantizer needs only enough
+    *
+    * `trainFrac` < 1 trains on a deterministic hash SAMPLE of the corpus —
+    * the production shape at 100 TB: a coarse quantizer needs only enough
     * vectors to place k centroids (k ≪ corpus), so every Lloyd round
     * scanning the full corpus is waste — train on `trainFrac`, then assign
     * EVERYTHING once with [[assignCellsLit]]/[[assignCellsLitSpill]]
@@ -1111,8 +1085,8 @@ object AnnOps {
     * degrades only as the sample stops being representative (centroids are
     * means — their variance shrinks with sample size, not corpus size).
     */
-  def kmeansTrain(e: DataFrame, k: Int, maxIter: Int,
-      tol: Double, trainFrac: Double): Array[(Int, Array[Float])] =
+  def kmeansTrain(e: DataFrame, k: Int, maxIter: Int = 10, tol: Double = 1e-4,
+      trainFrac: Double = 1.0): Array[(Int, Array[Float])] =
     // converged centroids memoized per (session, corpus, params): the Lloyd
     // loop is an INDEX-time cost, not a per-search one.
     // SessionMemo.clear() forces a genuine re-train where a spec needs one.
@@ -1168,24 +1142,19 @@ object AnnOps {
     * form a real deployment runs (assignment is paid once at indexing time,
     * or map-side via [[assignCellsLit]]; search never re-quantizes the
     * corpus).
-    */
-  def ivfSearchAssigned(assigned: DataFrame, cents: DataFrame,
-      queries: DataFrame, k: Int, nProbe: Int): DataFrame =
-    ivfSearchAssigned(assigned, cents, queries, k, nProbe,
-      dedupCandidates = false)
-
-  /** [[ivfSearchAssigned]] over a SPILLED index
-    * ([[assignCellsLitSpill]] with spill > 1): a vector indexed under two
-    * probed cells surfaces as two identical candidate rows, which would
-    * otherwise occupy two top-k slots — `dedupCandidates` collapses them
-    * before ranking. The distinct keys on (query, neighbor, sim): candidate
-    * volume, not corpus volume (queries × probed fraction), so the extra
-    * exchange stays query-sized at any corpus scale. Keep it OFF for
-    * single-assignment indexes where candidates are unique by construction.
+    *
+    * Over a SPILLED index ([[assignCellsLitSpill]] with spill > 1) a vector
+    * indexed under two probed cells surfaces as two identical candidate
+    * rows, which would otherwise occupy two top-k slots — `dedupCandidates`
+    * collapses them before ranking. The distinct keys on (query, neighbor,
+    * sim): candidate volume, not corpus volume (queries × probed fraction),
+    * so the extra exchange stays query-sized at any corpus scale. Keep it
+    * OFF for single-assignment indexes where candidates are unique by
+    * construction.
     */
   def ivfSearchAssigned(assigned: DataFrame, cents: DataFrame,
       queries: DataFrame, k: Int, nProbe: Int,
-      dedupCandidates: Boolean): DataFrame = {
+      dedupCandidates: Boolean = false): DataFrame = {
     val probes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         norm(col("embedding")).as("nq"))
@@ -1230,14 +1199,6 @@ object AnnOps {
       nProbe, dedupCandidates = spill > 1)
       .select("query_id", "neighbor_id", "rnk", "sim")
   }
-
-  /** The benched n2b face runs spill=2: at the same 3/8 probe fraction the
-    * spilled index lifts measured recall 0.72 → ~0.9 at sf0.1 (vs 0.82 for
-    * nProbe=4 on a single-assignment index) for 2× index rows and zero
-    * extra probe I/O — the right side of the trade when queries dominate.
-    */
-  def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTrainedTopK(table(spark, dir, "embeddings"), spill = 2)
 
   // ---- Product quantization (PQ/ADC) ---------------------------------------
 
@@ -1448,8 +1409,6 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"), col("rnk"),
         (-col("sim")).as("adist"))
   }
-  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame =
-    pqAdcTopK(table(spark, dir, "embeddings"))
 
   /** D16 — SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by clustering then within-cluster cosine pruning — the
@@ -1518,14 +1477,6 @@ object AnnOps {
       .select(col("vec_id"), col("label"), col("cent_sim"),
         col("_drop").isNull.as("keep"))
   }
-  /** The gated query face runs τ=0.35: the synthetic corpus's random-ish
-    * embeddings compress within-cell cosines under ~0.47 (max observed),
-    * so the production 0.95 would never exercise the drop rule — 0.35
-    * sits at the ~99.9th within-cell percentile and prunes a real handful
-    * each SF, keeping the keep/drop logic on the oracle's hash path.
-    */
-  def semDedup(spark: SparkSession, dir: String): DataFrame =
-    semDedup(table(spark, dir, "embeddings"), threshold = 0.35)
 
   /** [[semDedup]] end-to-end with a TRAINED coarse clustering — the form a
     * corpus with no precomputed cluster column runs: [[kmeansTrain]] learns
@@ -1568,6 +1519,4 @@ object AnnOps {
       .agg(max(col("sim")).as("max_sim"))
       .withColumn("is_contaminated", col("max_sim") >= threshold)
   }
-  def semanticDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    semanticDecontaminate(table(spark, dir, "embeddings"))
 }

@@ -75,8 +75,6 @@ object Bucketing {
       .filter(col("k").isNotNull)
       .withColumn("zkey", zorderKey(col("user_id"), col("k")))
       .withColumn("zbucket", shiftright(col("zkey"), 22))
-  def zorderEvents(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    zorderEvents(graft.Tables.table(spark, dir, "events"))
 
   /** Write `df` z-order-clustered on (x, y): range-partition then sort by
     * the Morton key so file k holds one compact curve segment — both
@@ -112,8 +110,6 @@ object Bucketing {
   def skippingStats(events: DataFrame, uHi: Long = 31L,
       kHi: Long = 31L): DataFrame =
     layoutAudit(events, uHi, kHi, arrivalAndZorder)
-  def skippingStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    skippingStats(graft.Tables.table(spark, dir, "events"))
 
   /** L5 — THREE-way layout bake-off: l4's skipping audit extended with the
     * HILBERT layout ([[graft.functions.HilbertIndex]]), the locality-better
@@ -171,8 +167,6 @@ object Bucketing {
       sum(when(touched, col("rows")).otherwise(0L)).as("rows_read"),
       sum(col("m")).as("rows_matched"))
   }
-  def layoutCompare(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    layoutCompare(graft.Tables.table(spark, dir, "events"))
 
   /** L2 — compaction planning, l1's sibling for the OTHER lakehouse layout
     * chore (the small-files problem): assign each document to an output
@@ -202,6 +196,4 @@ object Bucketing {
         floor((col("cum_bytes") - col("n_chars")) / targetBytes.toDouble).cast("long"))
       .select("doc_id", "lang", "shard", "file_idx", "cum_bytes")
   }
-  def compactionPlan(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    compactionPlan(graft.Tables.table(spark, dir, "documents"))
 }

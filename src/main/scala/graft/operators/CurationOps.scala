@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,8 +51,6 @@ object CurationOps {
       .withColumn("overlap_ct", coalesce(col("overlap_ct"), lit(0L)))
       .withColumn("is_clean", col("overlap_ct") === 0)
   }
-  def decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminate(table(spark, dir, "documents"))
 
   /** S1 — stratified deterministic hash-sampling: per-language keep rates
     * applied by comparing a salted-md5 bucket (0-99) against the stratum's
@@ -71,8 +68,6 @@ object CurationOps {
       .join(broadcast(rates), Seq("lang"))
       .filter(col("bucket") < col("rate"))
   }
-  def hashSample(spark: SparkSession, dir: String): DataFrame =
-    hashSample(table(spark, dir, "documents"))
 
   /** S11 — leakage-safe train/val/test split: the evaluation-hygiene
     * counterpart of s1's plain hash split. A naive per-document 80/10/10
@@ -93,9 +88,9 @@ object CurationOps {
     * Scale notes (100 TB): cluster formation is d10's candidate-bounded
     * LSH + pointer-jumping closure (never pairwise); the split draw itself
     * is a map-side projection over the (doc_id, cluster_id) frame. Nothing
-    * new shuffles beyond what d10 already pays, and pipelines that already
-    * ran `nearDupClusters` reuse it via the (docs, clusters) overload —
-    * the d11 cluster-reuse pattern.
+    * new shuffles beyond what d10 already pays; `clusters` is
+    * [[graft.operators.DedupOps.nearDupClusters]]' output, so pipelines that
+    * already ran it reuse it — the d11 cluster-reuse pattern.
     */
   def leakageSafeSplit(docs: DataFrame, clusters: DataFrame): DataFrame = {
     def u(key: Column, salt: String): Column =
@@ -110,11 +105,6 @@ object CurationOps {
         splitOf(u(col("cluster_id"), "split:")).as("split"))
       .withColumn("moved", col("naive_split") =!= col("split"))
   }
-  def leakageSafeSplit(docs: DataFrame, threshold: Double): DataFrame =
-    leakageSafeSplit(docs,
-      graft.operators.DedupOps.nearDupClusters(docs, threshold))
-  def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame =
-    leakageSafeSplit(table(spark, dir, "documents"), 0.7)
 
   /** C3 — curated training export, the capstone composing this library's
     * classifier-era curation stages (the c1/c2 recipe pattern over the
@@ -131,21 +121,20 @@ object CurationOps {
     * frames — each stage's corpus-scale work is its own documented plan
     * (d17: broadcast anti-join; t15: one reused-exchange shuffle; s11:
     * d10's candidate-bounded closure); the composition adds only the
-    * doc_id joins. A production pipeline materializes each stage once and
-    * reuses it across consumers (the d11 cluster-reuse pattern); inside
-    * the one-query form the t15 tf exchange is the piece that must not
-    * run twice — see the isnotnull note at
-    * [[graft.operators.TextOps.nbQualityScore]] (measured here: the
-    * composed join's pushed null-filter de-canonicalized t15's corpus
-    * shuffle and doubled it — 17.3 MB vs the 8.2 MB stage sum — while
-    * caching the raw-text projection only ADDED time: deserialized
-    * string row cache reads lose to the columnar parquet scan).
+    * doc_id joins ([[curatedTrainExportOf]], which pipelines that already
+    * materialized the three stages call directly). Invariant: inside this
+    * one-query form the t15 tf exchange must not run twice — see the
+    * isnotnull note at [[graft.operators.TextOps.nbQualityScore]].
     */
-  /** The PIPELINE form (the `dedupByCluster` reuse pattern): pass the three
-    * stage outputs a production pipeline has already materialized — d17's
-    * cleaned frame, t15's scored frame, s11's split frame — and pay only
-    * the three doc_id-keyed joins; the standalone overload below re-derives
-    * them in one lineage for the self-contained oracle query.
+  def curatedTrainExport(docs: DataFrame): DataFrame =
+    curatedTrainExportOf(
+      cleaned = graft.operators.DedupOps.boilerplateStrip(docs),
+      scored = graft.operators.TextOps.nbQualityScore(docs),
+      split = leakageSafeSplit(docs,
+        graft.operators.DedupOps.nearDupClusters(docs, 0.7)))
+
+  /** [[curatedTrainExport]]'s join tail over already-materialized stage
+    * outputs: d17's cleaned frame, t15's scored frame, s11's split frame.
     */
   def curatedTrainExportOf(cleaned: DataFrame, scored: DataFrame,
       split: DataFrame): DataFrame =
@@ -155,38 +144,6 @@ object CurationOps {
         col("split") === "train")
       .select(col("doc_id"), col("clean_text"), col("kept_segs"),
         col("n_segs"), col("log_odds"), col("cluster_id"))
-
-  def curatedTrainExport(docs: DataFrame): DataFrame =
-    curatedTrainExportOf(
-      cleaned = graft.operators.DedupOps.boilerplateStrip(docs),
-      scored = graft.operators.TextOps.nbQualityScore(docs),
-      split = leakageSafeSplit(docs,
-        graft.operators.DedupOps.nearDupClusters(docs, 0.7)))
-  def curatedTrainExport(spark: SparkSession, dir: String): DataFrame =
-    curatedTrainExport(table(spark, dir, "documents"))
-
-  /** C5 — RAG retrieval serving, the capstone a search user hits first:
-    * n10's probe-bounded IVF×SQ8 candidate scan, exact float rerank to a
-    * `pool`-sized list, then n13's MMR greedy diversification — the
-    * query-time half of the retrieval stack the offline capstones (c1-c4)
-    * curate corpora for. The composition delegates to
-    * [[graft.operators.AnnOps.retrievalServe]]; this face carries the
-    * capstone contract: output is exactly `k` rows per query, (query_id,
-    * neighbor_id, pick, sim, mmr), each stage keeping its own gate's
-    * semantics (n10's 4-dp quantized probe selection and integer-dot scan,
-    * n1's exact rerank, n13's fixed-round greedy with independent λ/μ).
-    *
-    * Scale notes (100 TB): candidate I/O follows the probed fraction
-    * (nProbe/cells of the corpus — n10's contract), the rerank touches only
-    * |Q|·pool rows, and everything after is pool-bounded (|Q|·pool² pair
-    * matrix, k tiny greedy rounds) — no stage re-scans the corpus.
-    */
-  def retrievalServe(docs: DataFrame, k: Int = AnnOps.ServeK,
-      pool: Int = AnnOps.ServePool, nProbe: Int = AnnOps.ServeNProbe,
-      lambda: Double = AnnOps.MmrLambda, mu: Double = AnnOps.MmrMu): DataFrame =
-    graft.operators.AnnOps.retrievalServe(docs, k, pool, nProbe, lambda, mu)
-  def retrievalServe(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.AnnOps.retrievalServe(spark, dir)
 
   /** S2 — deterministic training-shard shuffle: shard by a salted hash, order
     * within each shard by a second hash — the standard "global shuffle" for
@@ -202,8 +159,6 @@ object CurationOps {
       .withColumn("pos", (row_number().over(w) - 1).cast("long"))
       .select("doc_id", "shard", "pos")
   }
-  def trainShuffle(spark: SparkSession, dir: String): DataFrame =
-    trainShuffle(table(spark, dir, "documents"))
 
   /** S12 — WEIGHTED sampling without replacement (Efraimidis & Spirakis
     * 2006, A-Res): each doc draws a deterministic uniform u from its salted
@@ -234,8 +189,6 @@ object CurationOps {
       .select(col("rnk").cast("long").as("rnk"),
         col("doc_id"), col("skey"), col("n_chars"))
   }
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    weightedSample(table(spark, dir, "documents"))
 
   /** G1 — corpus top-K n-grams per language (frequency/contamination
     * analysis). The rank-then-filter compiles to Catalyst's two-phase
@@ -262,8 +215,6 @@ object CurationOps {
       .withColumn("rnk", row_number().over(fin).cast("long")).filter(col("rnk") <= k)
       .select("lang", "gram", "ct", "rnk")
   }
-  def ngramTopK(spark: SparkSession, dir: String): DataFrame =
-    ngramTopK(table(spark, dir, "documents"))
 
   /** G9 — collocation mining: the corpus's top-k adjacent word pairs by
     * pointwise mutual information (Church & Hanks 1990), the classic
@@ -313,8 +264,6 @@ object CurationOps {
       .select(col("rnk").cast("long").as("rnk"),
         col("w1"), col("w2"), col("pair_ct"), col("pmi"))
   }
-  def collocations(spark: SparkSession, dir: String): DataFrame =
-    collocations(table(spark, dir, "documents"))
 
   /** G10 — cross-source CONTAMINATION matrix: for every pair of corpus
     * sources, how many distinct 3-shingles they share, with each source's
@@ -360,8 +309,6 @@ object CurationOps {
         q4(col("shared_ct").cast("double") / least(col("n_a"), col("n_b")))
           .as("containment"))
   }
-  def crossSourceContamination(spark: SparkSession, dir: String): DataFrame =
-    crossSourceContamination(table(spark, dir, "documents"))
 
   /** S13 — exact STRATIFIED sampling: precisely ceil(n_s/10) documents per
     * language stratum (10%), chosen by salted-hash order so the draw is
@@ -390,8 +337,6 @@ object CurationOps {
       .filter(col("rnk") * 10 <= col("n_s") + 9)
       .select(col("doc_id"), col("lang"), col("rnk"), col("n_s"))
   }
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSample(table(spark, dir, "documents"))
 
   /** S14 — CLUSTER-balanced sampling: s13's exact integer quota applied to
     * EMBEDDING-SPACE clusters instead of a metadata stratum — the
@@ -424,8 +369,6 @@ object CurationOps {
       .filter(col("rnk") * 10 <= col("n_c") + 9)
       .select(col("vec_id"), col("cell"), col("rnk"), col("n_c"))
   }
-  def clusterBalancedSample(spark: SparkSession, dir: String): DataFrame =
-    clusterBalancedSample(table(spark, dir, "embeddings"))
 
   /** S3 — context-window sequence packing: concatenate each shard's token
     * stream in deterministic doc order and slice it into fixed-length training
@@ -440,7 +383,7 @@ object CurationOps {
     * no global sort anywhere. Integer division end to end, so placement is
     * bit-reproducible across engines.
     *
-    * Token accounting: THIS overload is the chars/4 bootstrap estimate for
+    * Token accounting: this face is the chars/4 bootstrap estimate for
     * corpora with no tokenizer yet. The production default once a merge
     * table exists is [[packSequencesFrom]] fed by [[bpeTokenCounts]] — real
     * subword counts at the same plan shape (the s8 gate query runs exactly
@@ -467,8 +410,6 @@ object CurationOps {
       .withColumn("seq_offset", col("tok_offset") % ctxLen)
       .select("doc_id", "shard", "tokens", "tok_offset", "seq_idx", "seq_offset")
   }
-  def packSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequences(table(spark, dir, "documents"))
 
   /** S5 — document chunking: split each doc's token span into fixed-length
     * overlapping windows (the RAG-embedding / long-document training layout,
@@ -492,8 +433,6 @@ object CurationOps {
       .withColumn("tok_start", col("chunk_idx") * stride)
       .withColumn("tok_end", least(col("tok_start") + chunkTokens, col("tokens")))
   }
-  def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
-    chunkDocuments(table(spark, dir, "documents"))
 
   /** B1 — bloom-prefiltered decontamination: semantically identical to
     * [[decontaminate]] (the exact join still decides), but the corpus shingle
@@ -537,8 +476,6 @@ object CurationOps {
       spark.catalog.dropTempView(docsView)
     }
   }
-  def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    bloomDecontaminate(table(spark, dir, "documents"))
 
   /** S4 — data-mixture sampling (the Pile/Dolma mixing stage): unlike s1's
     * FIXED per-stratum rates, the keep-rate here is computed FROM the corpus
@@ -567,8 +504,6 @@ object CurationOps {
         dec(col("weight")) * dec(col("n_total")) * dec(lit(65536)))
       .select("doc_id", "source", "bucket", "n_src", "weight")
   }
-  def mixtureSample(spark: SparkSession, dir: String): DataFrame =
-    mixtureSample(table(spark, dir, "documents"))
 
   /** C2 — the end-to-end TRAINING-DATA EXPORT pipeline, the capstone
     * composition a 100 TB curation run actually executes: exact-dedup keeper
@@ -614,8 +549,6 @@ object CurationOps {
       .join(quality, Seq("doc_id"), "left_semi")
     packSequences(survivors)
   }
-  def trainingPipeline(spark: SparkSession, dir: String): DataFrame =
-    trainingPipeline(table(spark, dir, "documents"))
 
   /** G2 — per-language token-length distribution profiling (the corpus-stats
     * pass every curation run starts with): doc count, total tokens, min/max,
@@ -653,10 +586,6 @@ object CurationOps {
         min("tokens").as("min_tokens"), max("tokens").as("max_tokens"),
         q(0.5, "p50_tokens"), q(0.9, "p90_tokens"))
   }
-  def tokenQuantiles(spark: SparkSession, dir: String): DataFrame =
-    tokenQuantiles(table(spark, dir, "documents"))
-  def tokenQuantiles(spark: SparkSession, dir: String, exact: Boolean): DataFrame =
-    tokenQuantiles(table(spark, dir, "documents"), exact)
 
   /** S6 — per-domain quota cap (the Common-Crawl-style domain balancer): keep
     * at most `cap` documents per source, chosen by the same salted-md5
@@ -679,8 +608,6 @@ object CurationOps {
       .filter(col("rn") <= cap)
       .drop("pick")
   }
-  def domainCap(spark: SparkSession, dir: String): DataFrame =
-    domainCap(table(spark, dir, "documents"))
 
   /** S7 — length-bucketed micro-batching (the padding-minimization layout for
     * variable-length training): shard deterministically, bucket each doc by
@@ -710,8 +637,6 @@ object CurationOps {
       .withColumn("batch_idx", col("batch_idx").cast("long"))
       .withColumn("pad_waste", col("n_docs") * col("max_tokens") - col("sum_tokens"))
   }
-  def lengthBuckets(spark: SparkSession, dir: String): DataFrame =
-    lengthBuckets(table(spark, dir, "documents"))
 
   /** G3 — per-document TF-IDF top terms (the classic corpus-relative term
     * salience score, still the workhorse for keyword extraction and quality
@@ -745,8 +670,6 @@ object CurationOps {
       .filter(col("rnk") <= k)
       .select("doc_id", "word", "tf", "df", "tfidf", "rnk")
   }
-  def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopTerms(table(spark, dir, "documents"))
 
   /** G4 — per-language vocabulary statistics (the Heaps/Zipf diagnostics a
     * corpus health check starts with): total tokens, vocabulary size,
@@ -771,8 +694,6 @@ object CurationOps {
       .withColumn("ttr",
         floor(col("vocab") / col("total_words").cast("double") * 10000.0 + 0.5) / 10000.0)
   }
-  def vocabStats(spark: SparkSession, dir: String): DataFrame =
-    vocabStats(table(spark, dir, "documents"))
 
   /** S9 — temperature-scaled mixture weights per source (the multilingual /
     * multi-source sampling scheme of mBERT/XLM-R and T5: raise each source's
@@ -816,8 +737,6 @@ object CurationOps {
           / col("tokens").cast("double") * 10000.0 + 0.5) / 10000.0)
       .select("source", "n_docs", "tokens", "p", "temp_w", "epochs")
   }
-  def temperatureMix(spark: SparkSession, dir: String): DataFrame =
-    temperatureMix(table(spark, dir, "documents"))
 
   /** G6 — Zipf rank-frequency slope per language (with fit quality), the
     * standard corpus-health diagnostic g4's vocab counts bootstrap: regress
@@ -864,8 +783,6 @@ object CurationOps {
       .withColumn("r2", q4(col("sxy") * col("sxy") / (col("sxx") * col("syy"))))
       .select("lang", "vocab", "slope", "r2")
   }
-  def zipfSlope(spark: SparkSession, dir: String): DataFrame =
-    zipfSlope(table(spark, dir, "documents"))
 
   // ---------------------------------------------------------------------
   // T10 — deterministic BPE-style subword tokenization (Sennrich/Haddow/
@@ -977,10 +894,6 @@ object CurationOps {
           .as(Seq("tok_idx", "token")))
       .withColumn("tok_idx", col("tok_idx").cast("long"))
   }
-  /** T10 face: demo merge table over the first 100 docs (x1 convention). */
-  def bpeTokenize(spark: SparkSession, dir: String): DataFrame =
-    bpeTokenize(table(spark, dir, "documents").filter(col("doc_id") < 100),
-      DemoBpeMerges)
 
   /** Real per-document subword token counts from a merge table — the
     * drop-in replacement for the chars/4 estimate once a table is trained.
@@ -1010,16 +923,11 @@ object CurationOps {
       .groupBy(keep: _*).agg(sum(col("word_tokens")).as("tokens"))
   }
 
-  /** S8 face: pack the t10 demo slice with REAL BPE token counts. */
-  def bpePackSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequencesFrom(bpeTokenCounts(
-      table(spark, dir, "documents").filter(col("doc_id") < 100), DemoBpeMerges))
-
   /** T11 — per-language token distribution over REAL BPE subword counts:
     * [[tokenQuantiles]]' aggregation fed by [[bpeTokenCounts]] through a
     * merge table instead of the chars/4 estimate. With a trained table this
     * is the PRODUCTION token-accounting default — the chars/4 faces (t3, g2,
-    * s3's zero-arg overload) are the bootstrap path for corpora with no
+    * s3's [[packSequences]]) are the bootstrap path for corpora with no
     * tokenizer yet.
     *
     * Docs whose every word is empty have no tokens to count and drop out
@@ -1034,8 +942,6 @@ object CurationOps {
     langTokenStats(
       bpeTokenCountsWith(docs, merges, Seq("lang")).select("lang", "tokens"),
       exact)
-  def bpeTokenStats(spark: SparkSession, dir: String, exact: Boolean): DataFrame =
-    bpeTokenStats(table(spark, dir, "documents"), DemoBpeMerges, exact)
 
   /** S10 — DSIR data selection (Xie et al. 2023, arXiv:2302.03169):
     * importance weights from hashed-n-gram bag-of-words models. Each doc's
@@ -1122,6 +1028,4 @@ object CurationOps {
       .withColumn("gumbel", floor(-log(-log(u)) * 10000.0 + 0.5) / 10000.0)
       .withColumn("gscore", col("weight") + col("gumbel"))
   }
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirWeights(table(spark, dir, "documents"))
 }

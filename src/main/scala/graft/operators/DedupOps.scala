@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,16 +82,12 @@ object DedupOps {
   def dedupExact(docs: DataFrame): DataFrame =
     docs.groupBy(md5(col("text")).as("fingerprint"))
       .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("dup_ct"))
-  def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    dedupExact(table(spark, dir, "documents"))
 
   /** D2 — per-document MinHash signature (8 hashes over 3-shingles), a pure
     * per-row projection (zero shuffles — see [[docShingles]]).
     */
   def minhashSignature(docs: DataFrame): DataFrame =
     docShingles(docs).select(col("doc_id") +: minhashCols: _*)
-  def minhashSignature(spark: SparkSession, dir: String): DataFrame =
-    minhashSignature(table(spark, dir, "documents"))
 
   /** D3 — MinHash LSH near-dup pairs: band the signature (4 bands × 2 hashes),
     * bucket-join on (band, key) for candidates, then verify with exact Jaccard
@@ -118,8 +113,6 @@ object DedupOps {
       .distinct()
     jaccardOf(cand, docsig.select(col("doc_id"), col("shset"), col("n")))
   }
-  def minhashLshPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashLshPairs(table(spark, dir, "documents"))
 
   /** D5 — n-gram Jaccard over a bounded candidate window (each doc vs the next
     * 10 ids): the window fan-out is an `explode` + equi-join, so Catalyst plans
@@ -139,43 +132,46 @@ object DedupOps {
     // operator's real work; cand inherits the scan's split count otherwise
     jaccardOf(graft.Tables.spread(cand), sets)
   }
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccard(table(spark, dir, "documents"))
 
-  /** Exact Jaccard for candidate pairs: join the per-doc distinct-shingle-set
-    * table (`sets`: doc_id, shset, n) to both pair sides, |A∩B| counted by
-    * the native [[graft.functions.IntersectCount]] expression (same
-    * arithmetic as `size(array_intersect)` — distinct common elements — but
-    * count-only: hash the smaller set once per pair, probe, never allocate
-    * the intersection array Spark's interpreted string-array ArrayIntersect
-    * would build just for `size()` to discard). Versus the
-    * explode-equi-join-regroup formulation this removes two wide shuffles —
-    * the set table is one row per doc, so AQE broadcasts it and the pair
-    * side stays map-side. Pairs with an empty intersection are dropped,
-    * matching an inner shingle join (LSH candidates always intersect by
-    * construction).
+  /** Exact Jaccard for candidate pairs over the per-doc distinct-shingle-set
+    * table (`sets`: doc_id, shset, n), through [[withIntersections]]. Versus
+    * the explode-equi-join-regroup formulation this removes two wide
+    * shuffles — the set table is one row per doc, so the pair side stays
+    * map-side. Pairs with an empty intersection are dropped, matching an
+    * inner shingle join (LSH candidates always intersect by construction).
     */
   private def jaccardOf(cand: DataFrame, sets: DataFrame): DataFrame = {
     // floor(x*10^4 + 0.5)/10^4 instead of round(): bit-identical across engines
     // (round() on doubles is shortest-decimal-string HALF_UP in Spark vs
     // value-based in DuckDB — they disagree near .xxxx5 boundaries).
     val uni = col("na") + col("nb") - col("inter_ct")
-    // broadcast EXPLICITLY: this map-side join-back is the operator's scale
-    // contract (pairs carry only ids; the arrays never ride a shuffle).
-    // The materialized set table exposes its exact size, and past the
-    // broadcast threshold AQE would flip both join-backs to SMJs that
-    // shuffle a shingle array per pair side. At set sizes beyond executor
-    // memory the posting-list formulation (containmentPairs' d18 shape) is
-    // the swap-in.
-    cand
-      .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
-      .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
-      .withColumn("inter_ct", graft.functions.IntersectCount(col("sa"), col("sb")))
+    withIntersections(cand, sets)
       .filter(col("inter_ct") > 0)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("inter_ct"),
         uni.as("union_ct"),
         (floor(col("inter_ct") * 10000.0 / uni + 0.5) / 10000.0).as("jaccard"))
   }
+
+  /** The set join-back of the d3/d5/d18 verifies: each candidate pair
+    * `(a, b)` joined to both sides' sets (`sa`, `na`, `sb`, `nb`), plus
+    * `inter_ct` = |A∩B| from the native count-only
+    * [[graft.functions.IntersectCount]] (the arithmetic of
+    * `size(array_intersect)` — distinct common elements — without building
+    * the intersection array: hash the smaller set once per pair, probe).
+    *
+    * Both join-backs broadcast EXPLICITLY: this map-side join-back is the
+    * verifies' scale contract (pairs carry only ids; the arrays never ride
+    * a shuffle). The materialized set table exposes its exact size, and
+    * past the broadcast threshold AQE would flip both join-backs to SMJs
+    * that shuffle a shingle array per pair side. At set sizes beyond
+    * executor memory the posting-list formulation ([[containmentPairs]]'
+    * candidate shape) is the swap-in.
+    */
+  private def withIntersections(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand
+      .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
+      .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
+      .withColumn("inter_ct", graft.functions.IntersectCount(col("sa"), col("sb")))
 
   /** D18 — asymmetric CONTAINMENT pairs: `|A∩B| / min(|A|, |B|)` over the
     * distinct shingle sets, the quote/inclusion case symmetric Jaccard
@@ -197,8 +193,7 @@ object DedupOps {
     * generated — MOSS's published posting discipline, not exhaustive
     * search.)
     *
-    * Verify is [[jaccardOf]]'s shape: sets broadcast to the candidate rows,
-    * the native count-only [[graft.functions.IntersectCount]] per pair,
+    * Verify is [[jaccardOf]]'s set join-back ([[withIntersections]]), with
     * 4-dp floor-quantized containment compared AFTER quantization so both
     * engines threshold the same number.
     *
@@ -231,18 +226,12 @@ object DedupOps {
       .select("a", "b")
     val contain =
       floor(col("inter_ct") * 10000.0 / least(col("na"), col("nb")) + 0.5) / 10000.0
-    cand
-      // broadcast explicitly for the same reason as jaccardOf
-      .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
-      .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
-      .withColumn("inter_ct", graft.functions.IntersectCount(col("sa"), col("sb")))
+    withIntersections(cand, sets)
       .withColumn("containment", contain)
       .filter(col("containment") >= threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("inter_ct"), col("na"), col("nb"), col("containment"))
   }
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    containmentPairs(table(spark, dir, "documents"))
 
   /** Corpus-level near-dup REMOVAL: drop every doc that is ≥ `threshold`
     * Jaccard-similar to a lower-id doc (greedy keep-first, the standard
@@ -275,9 +264,6 @@ object DedupOps {
     }
     withSingletons(vertices, labels)
   }
-  /** D10 face: clusters at the 0.7 Jaccard threshold the c2 export uses. */
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    nearDupClusters(table(spark, dir, "documents"), 0.7)
 
   /** Min-label propagation + pointer jumping over an undirected pair graph.
     *
@@ -412,8 +398,6 @@ object DedupOps {
       .agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),
         (col("cluster_size") * col("n_clusters")).as("n_docs"))
-  def clusterSizeSpectrum(spark: SparkSession, dir: String): DataFrame =
-    clusterSizeSpectrum(nearDupClusters(table(spark, dir, "documents"), 0.7))
 
   /** Cluster-aware corpus dedup against PRECOMPUTED clusters (the output of
     * [[nearDupClusters]]): keep exactly one document (the minimum id) per
@@ -426,16 +410,6 @@ object DedupOps {
     docs.join(clusters, Seq("doc_id"))
       .filter(col("doc_id") === col("cluster_id"))
       .drop("cluster_id")
-
-  /** Self-contained convenience: compute clusters at `threshold`, then keep
-    * the per-cluster minimum. Prefer the two-frame overload when the labels
-    * already exist.
-    */
-  def dedupByCluster(docs: DataFrame, threshold: Double): DataFrame =
-    dedupByCluster(docs, nearDupClusters(docs, threshold))
-  /** D11 face: cluster-keeper dedup at the same 0.7 threshold as d10. */
-  def dedupByCluster(spark: SparkSession, dir: String): DataFrame =
-    dedupByCluster(table(spark, dir, "documents"), 0.7)
 
   private val SimhashBits = 16
   private val SimhashBands = 4
@@ -477,8 +451,6 @@ object DedupOps {
         s"scale — use simhash64Pairs (64-bit, 2^16 buckets per band) instead")
     bandedHammingPairs(simhash(docs), SimhashBits, SimhashBands, maxHamming)
   }
-  def simhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairs(table(spark, dir, "documents"))
 
   /** D8 — 64-bit SimHash near-dup pairs, the SCALE form of d7 and the layout
     * of the published web-dedup systems (Manku/Jain/Sarma, WWW'07: 64-bit
@@ -491,8 +463,6 @@ object DedupOps {
     */
   def simhash64Pairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
     bandedHammingPairs(simhash64(docs), Simhash64Bits, Simhash64Bands, maxHamming)
-  def simhash64Pairs(spark: SparkSession, dir: String): DataFrame =
-    simhash64Pairs(table(spark, dir, "documents"))
 
   /** Shared d7/d8 machinery: bucket-join the banded fingerprint for
     * candidates (doc_a < doc_b), verify by exact hamming distance.
@@ -558,8 +528,6 @@ object DedupOps {
     docs.select(col("doc_id"),
         graft.functions.SimHashBits(split(col("text"), " "), SimhashBits).as("simhash"))
       .filter(col("simhash").isNotNull) // docs with no words had no groupBy row
-  def simhash(spark: SparkSession, dir: String): DataFrame =
-    simhash(table(spark, dir, "documents"))
 
   private val Simhash64Bits = 64
   private val Simhash64Bands = 4 // 16-bit band keys → 2^16 buckets per band
@@ -574,8 +542,6 @@ object DedupOps {
     docs.select(col("doc_id"),
         graft.functions.SimHashBits(split(col("text"), " "), Simhash64Bits).as("simhash"))
       .filter(col("simhash").isNotNull)
-  def simhash64(spark: SparkSession, dir: String): DataFrame =
-    simhash64(table(spark, dir, "documents"))
 
   /** D9 — winnowing fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     * rolling-fingerprint selection): hash every shingle, slide a window of
@@ -606,8 +572,6 @@ object DedupOps {
         explode(array_distinct(
           graft.functions.WinnowMins(col("words"), WinnowW))).as("fp"))
   }
-  def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
-    winnowFingerprints(table(spark, dir, "documents"))
 
   /** D15 — MOSS-style near-dup PAIR MINING over [[winnowFingerprints]] (d9
     * produced the fingerprints; this is the report MOSS actually shows):
@@ -642,8 +606,6 @@ object DedupOps {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
   }
-  def winnowPairs(spark: SparkSession, dir: String): DataFrame =
-    winnowPairs(table(spark, dir, "documents"))
 
   /** D12 — corpus-level segment (paragraph) dedup, the C4/RefinedWeb recipe:
     * split each document into non-overlapping [[SegmentWords]]-word segments
@@ -801,8 +763,6 @@ object DedupOps {
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_tokens"))
   }
-  def exactSubstringSpans(spark: SparkSession, dir: String): DataFrame =
-    exactSubstringSpans(table(spark, dir, "documents"))
 
   /** D14 — the REMOVAL face of [[exactSubstringSpans]]: excise every
     * duplicated span from every document (the conservative
@@ -838,8 +798,6 @@ object DedupOps {
         (size(col("words")) - size(col("kept"))).cast("long").as("removed_tokens"),
         concat_ws(" ", col("kept")).as("clean_text"))
   }
-  def stripDuplicatedSpans(spark: SparkSession, dir: String): DataFrame =
-    stripDuplicatedSpans(table(spark, dir, "documents"))
 
   /** G5 — duplication accounting BY SOURCE: the corpus-health dashboard a
     * curation run reads before deciding which feeds to throttle. Per
@@ -866,11 +824,6 @@ object DedupOps {
       .withColumn("dup_rate",
         floor(col("dup_tokens") * 10000.0 / col("total_tokens") + 0.5) / 10000.0)
   }
-  def dupRateBySource(spark: SparkSession, dir: String): DataFrame =
-    dupRateBySource(table(spark, dir, "documents"))
-
-  def segmentDedup(spark: SparkSession, dir: String): DataFrame =
-    segmentDedup(table(spark, dir, "documents"))
 
   /** Default d17 document-frequency threshold: a segment present in three or
     * more DISTINCT documents is boilerplate. Published line-dedup rules put
@@ -919,8 +872,6 @@ object DedupOps {
           array_join(transform(col("lst"), s => s.getField("seg")), " "),
           lit("")).as("clean_text"))
   }
-  def boilerplateStrip(spark: SparkSession, dir: String): DataFrame =
-    boilerplateStrip(table(spark, dir, "documents"))
 
   /** The corpus's boilerplate segment set (d17's stage-1 output as a
     * standalone frame — the reference set the streaming face broadcasts,
@@ -1003,6 +954,4 @@ object DedupOps {
     incrementalDedupOf(
       docs.filter(col("doc_id") % 2 === 1),
       docs.filter(col("doc_id") % 2 === 0))
-  def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
-    incrementalDedup(table(spark, dir, "documents"))
 }

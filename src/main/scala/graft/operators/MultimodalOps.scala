@@ -402,15 +402,10 @@ object MultimodalOps {
     * The oracle predicts frame fan-out and dimensions from the id arithmetic,
     * so a container fault (wrong frame boundary, dropped frame, dimension
     * corruption) breaks the hash. Frame decode happens INSIDE the codec
-    * pass; one row per frame leaves the seam.
-    */
-  def decodeMjpegFrames(spark: SparkSession, dir: String): DataFrame =
-    decodeMjpegFrames(mjpegRecords(spark, dir))
-
-  /** The record-parameterized core of v2 — a STATELESS map over opaque
-    * blobs, so the identical call decodes a `readStream` of media records
-    * (continuous video ingestion) and a batch frame alike; parity is
-    * proven in `StatefulParitySpec`.
+    * pass; one row per frame leaves the seam. A STATELESS map over opaque
+    * blobs ([[mjpegRecords]] in the batch query), so the identical call
+    * decodes a `readStream` of media records (continuous video ingestion);
+    * parity is proven in `StatefulParitySpec`.
     */
   def decodeMjpegFrames(records: Dataset[MediaRecord]): DataFrame = {
     val spark = records.sparkSession
@@ -463,9 +458,6 @@ object MultimodalOps {
     * to really encode; [[sampleMjpegFrames]] is the real-codec sibling);
     * the row fan-out, schema, and partition behavior are the real thing.
     */
-  def sampleFrames(spark: SparkSession, dir: String, everyN: Int): DataFrame =
-    sampleFrames(mediaRecords(spark, dir), everyN)
-
   def sampleFrames(records: Dataset[MediaRecord], everyN: Int): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
@@ -662,8 +654,6 @@ object MultimodalOps {
         sum(abs(col("smp"))).as("sum_abs"),
         max(abs(col("smp"))).as("max_abs"),
         sum(col("smp") * col("smp")).as("energy"))
-  def audioFeatures(spark: SparkSession, dir: String): DataFrame =
-    audioFeatures(table(spark, dir, "documents"))
 
   private val PrefixFrames = 2
   private val PrefixSamples = PrefixFrames * AudioFrame // 128

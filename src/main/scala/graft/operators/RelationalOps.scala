@@ -204,8 +204,9 @@ object RelationalOps {
   private def ofCount(df: DataFrame) = df.agg(count(lit(1)).as("violations"))
 
   /** The document-frame slice of the battery, reusable on ANY frame of
-    * (doc_id, text, n_chars) rows — [[graft.streaming.StatsStreams.qualityMonitorStream]]
-    * applies it per micro-batch for continuous load gating.
+    * (doc_id, text, n_chars) rows — applied per micro-batch inside a
+    * `foreachBatch` it is the continuous load gate (quarantine or alert when
+    * a batch reports `violations > 0`).
     */
   def documentQualityChecks(docs: DataFrame): DataFrame =
     // ONE scan-aggregate for the whole battery (conditional sums + the
@@ -302,8 +303,6 @@ object RelationalOps {
       profile("n_chars", col("n_chars")))
       .reduce(_ unionByName _)
   }
-  def columnProfile(spark: SparkSession, dir: String): DataFrame =
-    columnProfile(table(spark, dir, "documents"))
 
   /** DQ4 — k-ANONYMITY risk audit (Sweeney 2002): group the corpus by its
     * quasi-identifier tuple — here (lang, source, 256-char length bucket),
@@ -323,8 +322,6 @@ object RelationalOps {
         expr("n_chars div 256").as("len_bucket"))
       .agg(count(lit(1)).as("group_ct"))
       .withColumn("at_risk", col("group_ct") < k)
-  def kAnonymity(spark: SparkSession, dir: String): DataFrame =
-    kAnonymity(table(spark, dir, "documents"))
 
   /** DQ5 — data FRESHNESS monitor, the pipeline-lag face of the dq family:
     * per event stream (event_type), the last-seen timestamp, its lag
@@ -354,8 +351,6 @@ object RelationalOps {
         (col("_ref") - col("last_us")).as("lag_us"),
         col("total_events"), col("events_last_day"))
   }
-  def freshness(spark: SparkSession, dir: String): DataFrame =
-    freshness(table(spark, dir, "events"))
 
   /** DQ6 — per-stream VOLUME-ANOMALY detection, the alerting face dq5's
     * lag monitor pairs with: daily event counts per stream (event_type),
@@ -410,8 +405,6 @@ object RelationalOps {
       .select(col("event_type"), col("day_idx"), col("ct"), col("z"),
         (abs(col("z")) > zGate).as("anomaly"))
   }
-  def volumeAnomaly(spark: SparkSession, dir: String): DataFrame =
-    volumeAnomaly(table(spark, dir, "events"))
 
   /** DQ7 — REFERENTIAL-INTEGRITY audit over the warehouse's FK graph, the
     * classic load-time check the dq battery was missing: for each foreign-
@@ -516,8 +509,6 @@ object RelationalOps {
         .otherwise("unchanged").as("status"))
       .groupBy("status").agg(count(lit(1)).as("ct"))
   }
-  def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    snapshotDiff(table(spark, dir, "documents"))
 
   /** DQ8 — PROFILE DRIFT between table snapshots, closing the dq family's
     * loop: l3 tells a consumer *that* rows changed, dq2 tracks one chosen
@@ -570,8 +561,6 @@ object RelationalOps {
           col("min_v1") =!= col("min_v2") || col("max_v1") =!= col("max_v2"))
           .as("drifted"))
   }
-  def profileDrift(spark: SparkSession, dir: String): DataFrame =
-    profileDrift(table(spark, dir, "documents"))
 
   def dataQualityReport(spark: SparkSession, dir: String): DataFrame = {
     val orders = table(spark, dir, "orders")

@@ -216,8 +216,6 @@ object StatsOps {
       .withColumn("click_to_purchase", pct(col("purchased"), col("clicked")))
       .withColumn("full_funnel", pct(col("purchased"), col("viewed")))
   }
-  def funnel(spark: SparkSession, dir: String): DataFrame =
-    funnel(table(spark, dir, "events"))
 
   /** A14 — first/last-touch ATTRIBUTION, the marketing-analytics staple the
     * funnel (a10) feeds: every purchase is attributed to the FIRST and the
@@ -322,8 +320,6 @@ object StatsOps {
       sum(col("lt_rev_d")).cast("double").as("lt_revenue"),
       sum(col("lin_rev_d")).cast("double").as("lin_revenue"),
       sum(col("pos_rev_d")).cast("double").as("pos_revenue"))
-  def attribution(spark: SparkSession, dir: String): DataFrame =
-    attribution(table(spark, dir, "events"))
 
   /** R3 — day-cohort retention: users grouped by first-active day, retention
     * at each day offset as the share of the cohort active that day — the
@@ -351,8 +347,6 @@ object StatsOps {
       .withColumn("retention",
         floor(col("active_users") * 10000.0 / col("cohort_users") + 0.5) / 10000.0)
   }
-  def retention(spark: SparkSession, dir: String): DataFrame =
-    retention(table(spark, dir, "events"))
 
   /** A15 — cohort LIFETIME-VALUE matrix over the ORDERS fact: customers
     * grouped by first-purchase month, each (cohort, month-age) cell
@@ -394,8 +388,6 @@ object StatsOps {
         (floor(col("cum_dec").cast("double") / col("cohort_users") * 10000.0
           + 0.5) / 10000.0).as("cum_ltv"))
   }
-  def cohortLtv(spark: SparkSession, dir: String): DataFrame =
-    cohortLtv(table(spark, dir, "orders"))
 
   /** A13 — rolling active users: DAU, trailing-7-day WAU, and the DAU/WAU
     * stickiness ratio per epoch day — the engagement dashboard staple next
@@ -424,8 +416,6 @@ object StatsOps {
       .withColumn("stickiness",
         floor(col("dau") * 10000.0 / col("wau") + 0.5) / 10000.0)
   }
-  def rollingActive(spark: SparkSession, dir: String): DataFrame =
-    rollingActive(table(spark, dir, "events"))
 
   /** A11 — RFM segmentation (recency / frequency / monetary), the classic
     * customer-value analytic an ADS layer serves to marketing: per user,
@@ -464,8 +454,6 @@ object StatsOps {
       .withColumn("rfm_code", (col("r") * 100 + col("f") * 10 + col("m")).cast("int"))
       .select("user_id", "recency_days", "frequency", "monetary", "r", "f", "m", "rfm_code")
   }
-  def rfm(spark: SparkSession, dir: String): DataFrame =
-    rfm(table(spark, dir, "events"))
 
   /** A12 — clickstream transition matrix: per-user event sequences (ordered
     * by (ts, event_id)) folded into (prev_type → type) transition counts
@@ -496,8 +484,6 @@ object StatsOps {
       .withColumn("prob",
         floor(col("ct") * 10000.0 / col("row_total") + 0.5) / 10000.0)
   }
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame =
-    eventTransitions(table(spark, dir, "events"))
 
   /** The (event_id, user_id, us, node) sequence feeding the g7/g8/g13
     * property-transition window: the PRUNED-but-unparsed rows are hash-
@@ -603,8 +589,6 @@ object StatsOps {
       .select(col("node"), coalesce(col("outw"), lit(0L)).as("out_weight"),
         (col("r").cast("double") / 1e8).as("pr"))
   }
-  def pageRank(spark: SparkSession, dir: String): DataFrame =
-    pageRank(table(spark, dir, "events"))
 
   /** G8 — triangle counting over the property-transition graph (g7's node
     * set, simple undirected form: self-loops dropped, directions merged,
@@ -668,8 +652,6 @@ object StatsOps {
       .join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg"), coalesce(col("tri_ct"), lit(0L)).as("tri_ct"))
   }
-  def triangles(spark: SparkSession, dir: String): DataFrame =
-    triangles(table(spark, dir, "events"))
 
   /** G13 — community detection by synchronous LABEL PROPAGATION (Raghavan,
     * Albert, Kumara 2007, Phys. Rev. E 76 036106) over g7/g8's
@@ -725,8 +707,6 @@ object StatsOps {
     labels.select(col("node"), col("label").as("community"))
       .withColumn("community_size", count(lit(1)).over(cw).cast("long"))
   }
-  def labelPropagation(spark: SparkSession, dir: String): DataFrame =
-    labelPropagation(table(spark, dir, "events"))
 
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
     val gapUs = 30L * 60 * 1000000
@@ -804,8 +784,6 @@ object StatsOps {
           (col("fps_a") + col("fps_b") - col("shared_fps")) + 0.5) / 10000.0)
           .as("jaccard"))
   }
-  def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlap(table(spark, dir, "documents"))
 
   def itemSimilarity(events: DataFrame, maxUserItems: Int = 1000,
       minCo: Long = 2L): DataFrame = {
@@ -837,6 +815,4 @@ object StatsOps {
       .select(col("item_a"), col("item_b"), col("co"),
         (col("co") / sqrt((col("n_a") * col("n_b")).cast("double"))).as("cosine"))
   }
-  def itemSimilarity(spark: SparkSession, dir: String): DataFrame =
-    itemSimilarity(table(spark, dir, "events"))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -36,8 +35,6 @@ object TextOps {
           .when(col("char_ct") * 10 >= col("n_words") * 46, "de")
           .otherwise("xx"))
   }
-  def langId(spark: SparkSession, dir: String): DataFrame =
-    langId(table(spark, dir, "documents"))
 
   /** T2 — quality scoring: length / stopword signals with a small additive
     * score (the punctuation ratio of real corpora degenerates to 0 on this
@@ -55,8 +52,6 @@ object TextOps {
          when(col("stop_ct") > 0, 1).otherwise(0) +
          when(col("n_chars") >= 100, 1).otherwise(0)).cast("int"))
   }
-  def textQuality(spark: SparkSession, dir: String): DataFrame =
-    textQuality(table(spark, dir, "documents"))
 
   /** T3 — token counting: whitespace tokens + a BPE-ish estimate (chars/4,
     * the published GPT-style rule of thumb), both exact integers.
@@ -70,8 +65,6 @@ object TextOps {
     d.select(col("doc_id"), col("n_chars"), nWords(words(col("text"))).as("ws_tokens"))
       .withColumn("bpe_tokens", ceil(col("n_chars") / 4.0).cast("long"))
   }
-  def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    tokenCount(table(spark, dir, "documents"))
 
   /** T4 — document fingerprinting: full-content hash, head-64 hash (rolling
     * prefix), and an order-insensitive hash of the sorted token bag — the three
@@ -83,8 +76,6 @@ object TextOps {
       md5(substring(col("text"), 1, 64)).as("fp_head"),
       md5(concat_ws(" ", array_sort(words(col("text"))))).as("fp_sorted"))
   }
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    fingerprint(table(spark, dir, "documents"))
 
   /** C1 — the end-to-end training-data CURATION pipeline, composed from the
     * family's own stages exactly as a 100 TB corpus run would chain them:
@@ -121,8 +112,6 @@ object TextOps {
       .filter(col("predicted_lang") === "en" && col("quality_score") >= 2)
       .select("doc_id", "n_words", "quality_score", "bpe_tokens")
   }
-  def curateCorpus(spark: SparkSession, dir: String): DataFrame =
-    curateCorpus(table(spark, dir, "documents"))
 
   /** T12 — the published Gopher/MassiveText document-quality rule battery
     * (Rae et al. 2021, §A1.1), the de-facto standard pre-filter for LLM
@@ -178,8 +167,6 @@ object TextOps {
         col("r_bullet_lines") && col("r_ellipsis_lines") && col("r_alpha_words") &&
         col("r_stopwords"))
   }
-  def gopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRules(table(spark, dir, "documents"))
 
   /** Shared regexes for [[piiRedact]] — restricted to syntax with identical
     * semantics in Java regex (Spark) and RE2 (common oracle engines): explicit
@@ -217,8 +204,6 @@ object TextOps {
       regexp_count(noEmail, lit(PhoneRe)).cast("long").as("n_phones"),
       regexp_count(noPhone, lit(Ipv4Re)).cast("long").as("n_ips"))
   }
-  def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    piiRedact(table(spark, dir, "documents"))
 
   /** T7 — repetition scoring (the Gopher/Dolma repetition filters): distinct
     * token ratio and the top token's frequency share, with a flag combining
@@ -250,8 +235,6 @@ object TextOps {
       .withColumn("is_repetitive",
         col("top_ct") * 5 > col("n_words") || col("n_distinct") * 10 < col("n_words") * 3)
   }
-  def repetitionStats(spark: SparkSession, dir: String): DataFrame =
-    repetitionStats(table(spark, dir, "documents"))
 
   /** T8 — text normalization (the pre-dedup canonicalization stage: Dolma/
     * CCNet-style): lowercase, strip non-alphanumerics to spaces, collapse
@@ -271,8 +254,6 @@ object TextOps {
     d.select(col("doc_id"), norm.as("normalized"),
       length(norm).cast("long").as("n_chars_norm"))
   }
-  def normalizeText(spark: SparkSession, dir: String): DataFrame =
-    normalizeText(table(spark, dir, "documents"))
 
   /** Token classes for [[regexTokens]] — alternation of letter runs, digit
     * runs, and non-alphanumeric runs, the shape of published BPE pre-tokenize
@@ -293,8 +274,6 @@ object TextOps {
       size(array_distinct(toks)).cast("long").as("rx_distinct"),
       element_at(toks, 1).as("first_tok"))
   }
-  def regexTokens(spark: SparkSession, dir: String): DataFrame =
-    regexTokens(table(spark, dir, "documents"))
 
   /** T13 — n-gram language-model scoring, the CCNet/Wikipedia-LM quality
     * filter (Wenzek et al. 2020): train an add-one-smoothed bigram model on
@@ -364,8 +343,6 @@ object TextOps {
       .withColumn("nll",
         floor(col("sum_logprob") * -10000.0 / col("n_bigrams") + 0.5) / 10000.0)
   }
-  def lmScore(spark: SparkSession, dir: String): DataFrame =
-    lmScore(table(spark, dir, "documents"))
 
   /** T14 — CCNet perplexity bucketing (Wenzek et al. 2020 §4.3): split the
     * t13-scored corpus into head/middle/tail THIRDS by nll — head = the
@@ -420,8 +397,6 @@ object TextOps {
           .when(col("nll") <= col("t2"), "middle")
           .otherwise("tail").as("bucket"))
   }
-  def pplBuckets(spark: SparkSession, dir: String): DataFrame =
-    pplBuckets(table(spark, dir, "documents"))
 
   /** T15 — Naive-Bayes quality classifier, the classifier-filter stage of
     * the published curation recipes (GPT-3 §A trained a classifier on
@@ -518,8 +493,6 @@ object TextOps {
     scored
   }
   private def cast2d(c: Column): Column = c.cast("double")
-  def nbQualityScore(spark: SparkSession, dir: String): DataFrame =
-    nbQualityScore(table(spark, dir, "documents"))
 
   /** E1 — fuzzy entity matching (record linkage): every pair of DISTINCT
     * part names within Levenshtein distance ≤ `maxDist`, with each name's
@@ -588,8 +561,6 @@ object TextOps {
       .select(col("a").as("name_a"), col("b").as("name_b"), col("dist"),
         col("ct_a"), col("ct_b"))
   }
-  def fuzzyNameMatch(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNameMatch(table(spark, dir, "part"))
 
   /** E2 — canonical entity ASSIGNMENT, e1's merge step: the fuzzy-match
     * pairs become an undirected graph over the distinct-name vocabulary,
@@ -627,8 +598,6 @@ object TextOps {
       .join(canon, Seq("p_name"))
       .select(col("p_partkey"), col("p_name"), col("canonical_name"))
   }
-  def entityResolve(spark: SparkSession, dir: String): DataFrame =
-    entityResolve(table(spark, dir, "part"))
 
   /** T16 — character-ENTROPY quality signal, the compression-proxy filter
     * (low-entropy text — boilerplate walls, key-mashing, repeated padding —
@@ -658,8 +627,6 @@ object TextOps {
         round(col("cs.entropy"), 4).as("char_entropy"))
       .withColumn("low_entropy", col("char_entropy") < 2.0)
   }
-  def charEntropy(spark: SparkSession, dir: String): DataFrame =
-    charEntropy(table(spark, dir, "documents"))
 
   /** One run-length fold over a doc's SORTED word n-gram array, yielding
     * `top_chars` (occurrences × string length of the most frequent n-gram,
@@ -745,6 +712,4 @@ object TextOps {
       .map { case (c, t) => col(c) * 100 > col("n_chars") * t }
     withFrac.withColumn("flagged", rules.reduce(_ || _))
   }
-  def gopherRepetition(spark: SparkSession, dir: String): DataFrame =
-    gopherRepetition(table(spark, dir, "documents"))
 }

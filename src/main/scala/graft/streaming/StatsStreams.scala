@@ -234,49 +234,6 @@ object StatsStreams {
           col("prefix_key"), col("r.event_time").as("event_time"))
   }
 
-  /** Continuous data-quality monitoring — DQ1's streaming face: every
-    * arriving micro-batch of documents gets the SAME declarative
-    * check battery ([[graft.operators.RelationalOps.documentQualityChecks]],
-    * shared code so the contracts cannot drift), emitted as a per-batch
-    * report — the load-gating pattern (quarantine or alert when a batch's
-    * `violations > 0`) that a warehouse runs at ingest, not after the bad
-    * load lands. foreachBatch, zero stream state; per-batch cost is the
-    * battery's own scan-aggregates over batch-sized data.
-    */
-  def qualityMonitorStream(docs: DataFrame)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink(graft.operators.RelationalOps.documentQualityChecks(batch), id)
-    }
-
-  /** Streaming incremental dedup — the streaming face of batch D19
-    * ([[graft.operators.DedupOps.incrementalDedupOf]]): each arriving
-    * micro-batch is triaged (`exact` | `near` | `novel`) against the STATIC
-    * history index, the per-micro-batch `foreachBatch` shape J3b
-    * established ([[WideJoins.enrichAsOf]]) — which is exactly what the
-    * operator semantically is: incremental dedup IS batch-vs-index, so the
-    * stream face reuses the batch operator verbatim per trigger instead of
-    * re-deriving it with stream-side state. `history` is by-name, re-read
-    * per batch, so an index rebuilt between triggers is picked up —
-    * batch-local novelty (two near-dups arriving in the SAME batch both
-    * report novel) is the documented contract, identical to
-    * [[stripSpansStream]]'s vs-reference semantics.
-    *
-    * Scale notes: state is zero (no state store at all); per-batch cost is
-    * the batch operator's own — history never shuffled, batch side
-    * broadcast everywhere — so an hourly crawl drop pays exactly one
-    * indexed-scan triage per trigger.
-    */
-  def incrementalDedupStream(incoming: DataFrame, history: => DataFrame)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    incoming.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink(graft.operators.DedupOps.incrementalDedupOf(batch, history), id)
-    }
-
   /** Streaming boilerplate removal — the streaming face of
     * [[graft.operators.DedupOps.boilerplateStrip]] (d17): incoming docs are
     * cleaned against a STATIC boilerplate segment set (the indexed corpus's
@@ -769,23 +726,6 @@ object StatsStreams {
         when(col("log_odds") > 0, "keep").otherwise("drop"))
   }
 
-  /** Continuous column profiling — DQ3's streaming face, qualityMonitorStream's
-    * sibling: every arriving micro-batch gets the SAME per-column profile
-    * battery ([[graft.operators.RelationalOps.columnProfile]], shared code so
-    * the report schema cannot drift) — the per-load catalog stats a warehouse
-    * records next to each ingest (null spikes and distinct-count collapses
-    * surface at load time, feeding the dq2 drift alarm). foreachBatch, zero
-    * stream state; per-batch cost is the battery's own pruned scans over
-    * batch-sized data.
-    */
-  def profileMonitorStream(docs: DataFrame)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink(graft.operators.RelationalOps.columnProfile(batch), id)
-    }
-
   /** Continuous freshness monitoring — DQ5's streaming face, and the one
     * member of the dq family that is INHERENTLY continuous (a staleness
     * dashboard refreshed per ingest, not per audit). Per micro-batch the
@@ -882,28 +822,6 @@ object StatsStreams {
           id)
     }
   }
-
-  /** Continuous referential-integrity monitoring — DQ7's streaming face,
-    * and the member of the dq family that is MOST naturally per-load: each
-    * arriving micro-batch of fact rows is audited against the dimension
-    * (orphan/NULL-key counts via the SAME
-    * [[graft.operators.RelationalOps.fkCheck]] the batch battery runs, so
-    * the report schema and semantics cannot drift) — the ingest gate that
-    * catches an out-of-order load BEFORE downstream joins silently drop
-    * rows. `dim` is by-name, re-read per batch (the d19 / J3b static-index
-    * shape), so a dimension refreshed between triggers is picked up.
-    * Zero stream state; per-batch cost is one keyed (or broadcast) left
-    * join of batch-sized rows.
-    */
-  def fkMonitorStream(facts: DataFrame, fk: String, dim: => DataFrame,
-      pk: String, rel: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    facts.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink(graft.operators.RelationalOps.fkCheck(rel, batch, fk, dim, pk),
-          id)
-    }
 
   /** Continuous marketing attribution — A14's streaming face, completing
     * the analytics family's continuous story (funnel/transitions/retention

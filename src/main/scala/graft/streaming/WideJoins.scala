@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** DWM wide-table joins (SURVEY §2.4), Structured Streaming form.
   *
@@ -75,33 +74,4 @@ object WideJoins {
       val renamed = dim.columns.foldLeft(dim)((d, c) => d.withColumnRenamed(c, s"$prefix$c"))
       acc.join(broadcast(renamed), acc(factKey) === renamed(s"${prefix}id"), "left")
     }
-
-  /** J3b — EXACT lookup-time dim resolution in STREAMING: each micro-batch
-    * of facts resolves against a versioned SCD2 `history` table through the
-    * NATIVE as-of join ([[graft.plans.AsOfJoinNative]]), so every fact gets
-    * the dim version in force at its own EVENT time — the semantics the
-    * reference approximates with per-record Phoenix lookups at processing
-    * time (app/function/DimAsyncFunction.java:17-71) and the snapshot
-    * broadcast join (above) approximates with "latest at batch time".
-    *
-    * Why `foreachBatch` and not a streaming join: the as-of operator is a
-    * whole-operator batch SparkPlan; inside foreachBatch each micro-batch
-    * is a plain batch frame, so the exact operator applies unchanged — and
-    * the history side is re-read per batch, picking up dim updates between
-    * batches like the reference's cache-aside reads. Scale: the per-batch
-    * cost is the operator's own O(|batch| + |history touched|) merge; both
-    * sides shuffle once on the key per batch, and a bucketed history table
-    * (Bucketing.scala) removes even that on the history side.
-    *
-    * Returns the configured writer so the caller picks trigger/checkpoint;
-    * `sink` receives each resolved micro-batch with the batch id.
-    */
-  def enrichAsOf(facts: DataFrame, history: => DataFrame, key: String,
-      factTs: String, histTs: String, prefix: String = "r_")(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    facts.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        sink(graft.plans.AsOfJoinNative.asOf(
-          batch, history, key, factTs, histTs, prefix), id)
-      }
 }

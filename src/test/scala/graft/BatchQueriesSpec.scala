@@ -158,7 +158,8 @@ class BatchQueriesSpec extends SparkSpec {
   }
 
   test("multimodal frame sampling fans out rows; resize plan bounds dims") {
-    val frames = operators.MultimodalOps.sampleFrames(spark, sf, 10)
+    val frames = operators.MultimodalOps.sampleFrames(
+      operators.MultimodalOps.mediaRecords(spark, sf), 10)
     assert(frames.count() >= 500)  // at least one frame per doc
     assert(frames.filter(col("frame_idx") % 10 =!= 0).count() === 0)
     val resized = operators.MultimodalOps.resizePlan(
@@ -238,7 +239,7 @@ class BatchQueriesSpec extends SparkSpec {
     // planted drift: write a corpus whose odd half is 90% one lang and
     // even half uniform — the statistic must cross the alarm line
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dq2").toString
+    val dir = tempDir("dq2")
     val langs = Seq("en", "de", "es", "fr", "zh")
     (0L until 1000L).map { i =>
       val lang = if (i % 2 == 1) { if (i % 10 < 9) "en" else "de" }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,7 +34,7 @@ class TablesSpec extends SparkSpec {
 
   test("events.ts loads as TIMESTAMP from both nanos-long and µs-NTZ parquet") {
     for (ntz <- Seq(true, false)) {
-      val dir = Files.createTempDirectory(s"graft_tables_${ntz}_").toFile.getAbsolutePath
+      val dir = tempDir(s"graft_tables_${ntz}_")
       writeEvents(dir, ntz)
       val ev = Tables.table(spark, dir, "events")
       assert(ev.schema("ts").dataType === TimestampType,

@@ -115,7 +115,7 @@ class AnnOpsSpec extends SparkSpec {
 
   test("filteredTopK scopes candidates to the query's label, exact vs brute force (N8)") {
     val e = Tables.table(spark, sf, "embeddings")
-    val out = AnnOps.filteredTopK(spark, sf).cache()
+    val out = graft.SparkEntry.queries("n8_ann_filtered_topk")(spark, sf).cache()
     // every neighbor shares its query's label (the filter semantics)
     val lbl = e.select(col("vec_id"), col("label"))
     val badLabel = out
@@ -262,7 +262,7 @@ class AnnOpsSpec extends SparkSpec {
       .withColumnRenamed("assigned_cell", "cell")
     val centsDf = cents.toSeq.toDF("cell", "centroid")
     val queries = e.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val dir = tempDir("ivf_index")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
     centsDf.write.mode("overwrite").parquet(s"$dir/cents")
     val inMem = AnnOps.ivfSearchAssigned(assigned, centsDf, queries, 5, 2)

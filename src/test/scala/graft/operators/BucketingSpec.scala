@@ -99,7 +99,7 @@ class BucketingSpec extends SparkSpec {
   test("compactionPlan bin-packs first-fit-in-order within each slice (L2)") {
     import org.apache.spark.sql.functions._
     val target = 16384L
-    val plan = Bucketing.compactionPlan(spark, sf).cache()
+    val plan = graft.SparkEntry.queries("l2_compaction_plan")(spark, sf).cache()
     // every eligible doc planned exactly once
     val docs = graft.Tables.table(spark, sf, "documents")
     assert(plan.count() === docs.count())

@@ -27,7 +27,7 @@ class ClusterSpec extends SparkSpec {
     assert(clusters === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L),
       s"unexpected clustering: $clusters")
     // cluster-aware dedup keeps exactly one doc per component
-    val kept = DedupOps.dedupByCluster(df, 0.85).select("doc_id")
+    val kept = DedupOps.dedupByCluster(df, DedupOps.nearDupClusters(df, 0.85)).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(0L, 3L))
 

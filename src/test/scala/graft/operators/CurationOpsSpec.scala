@@ -33,7 +33,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("leakage-safe split: no near-dup pair straddles a split; repairs are accounted (S11)") {
-    val split = CurationOps.leakageSafeSplit(spark, sf).cache()
+    val split = graft.SparkEntry.queries("s11_leakage_split")(spark, sf).cache()
     // covers every clustered doc exactly once
     val clusters = graft.operators.DedupOps.nearDupClusters(docs, 0.7)
     assert(split.count() === clusters.count())
@@ -60,13 +60,13 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("curated train export composes its stages: every exported doc passes every gate (C3)") {
-    val out = CurationOps.curatedTrainExport(spark, sf).cache()
+    val out = graft.SparkEntry.queries("c3_curated_train_export")(spark, sf).cache()
     assert(out.count() > 0, "the sf corpus must yield a non-empty train export")
     // each stage's own standalone output agrees with the export's verdicts
     val nb = graft.operators.TextOps.nbQualityScore(docs)
       .select(col("doc_id"), col("predicted"))
     assert(out.join(nb, Seq("doc_id")).filter(col("predicted") =!= "keep").count() === 0)
-    val split = CurationOps.leakageSafeSplit(spark, sf)
+    val split = graft.SparkEntry.queries("s11_leakage_split")(spark, sf)
       .select(col("doc_id"), col("split"), col("cluster_id").as("cid"))
     val j = out.join(split, Seq("doc_id"))
     assert(j.filter(col("split") =!= "train").count() === 0)
@@ -91,10 +91,10 @@ class CurationOpsSpec extends SparkSpec {
     // self-contained oracle query
     val cleaned = graft.operators.DedupOps.boilerplateStrip(docs).localCheckpoint(true)
     val scored = graft.operators.TextOps.nbQualityScore(docs).localCheckpoint(true)
-    val split = CurationOps.leakageSafeSplit(spark, sf).localCheckpoint(true)
+    val split = graft.SparkEntry.queries("s11_leakage_split")(spark, sf).localCheckpoint(true)
     val piped = CurationOps.curatedTrainExportOf(cleaned, scored, split)
       .collect().map(_.toSeq).toSet
-    val standalone = CurationOps.curatedTrainExport(spark, sf)
+    val standalone = graft.SparkEntry.queries("c3_curated_train_export")(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(piped === standalone)
   }
@@ -538,7 +538,7 @@ class CurationOpsSpec extends SparkSpec {
   test("retrievalServe: k diversified picks from the probe-bounded pool, pick order sound (C5)") {
     import spark.implicits._
     val e = Tables.table(spark, sf, "embeddings")
-    val out = CurationOps.retrievalServe(spark, sf).cache()
+    val out = graft.SparkEntry.queries("c5_retrieval_serve")(spark, sf).cache()
     val nQueries = e.filter(col("vec_id") < 10).count()
     // shape: exactly k = 5 rows per query, picks 1..5, neighbors distinct
     assert(out.count() === nQueries * 5)

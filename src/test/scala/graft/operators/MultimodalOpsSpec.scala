@@ -157,7 +157,7 @@ class MultimodalOpsSpec extends SparkSpec {
 
   test("decodeAudioFrames equals the stub-decode m4 aggregates, distributed (M5)") {
     val real = MultimodalOps.decodeAudioFrames(spark, "/root/testdata/sf0.001")
-    val stub = MultimodalOps.audioFeatures(spark, "/root/testdata/sf0.001")
+    val stub = graft.SparkEntry.queries("m4_audio_features")(spark, sf)
     assert(real.count() > 0)
     assert(real.exceptAll(stub).count() === 0)
     assert(stub.exceptAll(real).count() === 0)
@@ -224,7 +224,7 @@ class MultimodalOpsSpec extends SparkSpec {
     // output set must equal v2's independent full decode (every frame,
     // decodeFrames' path) filtered to the sampled frame indices
     val par = MultimodalOps.sampleMjpegFrames(spark, sf, everyN = 2)
-    val full = MultimodalOps.decodeMjpegFrames(spark, sf)
+    val full = graft.SparkEntry.queries("v2_mjpeg_decode")(spark, sf)
       .filter(org.apache.spark.sql.functions.col("frame_idx") % 2 === 0)
       .select("doc_id", "frame_idx", "width", "height")
     assert(par.count() > 0)
@@ -264,7 +264,7 @@ class MultimodalOpsSpec extends SparkSpec {
 
   test("audioFeatures: frames partition the samples; stats match the recurrence (M4)") {
     import org.apache.spark.sql.functions._
-    val out = MultimodalOps.audioFeatures(spark, "/root/testdata/sf0.001").cache()
+    val out = graft.SparkEntry.queries("m4_audio_features")(spark, sf).cache()
     val docs = graft.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     // frame sample counts sum back to n_chars per doc
     val perDoc = out.groupBy("doc_id").agg(sum("n_samples").as("n"))

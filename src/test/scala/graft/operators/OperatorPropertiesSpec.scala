@@ -43,8 +43,8 @@ class OperatorPropertiesSpec extends SparkSpec {
 
   test("dedupByCluster is idempotent: a second pass removes nothing") {
     val docs = graft.Tables.table(spark, sf, "documents")
-    val once = DedupOps.dedupByCluster(docs, 0.9).persist()
-    val twice = DedupOps.dedupByCluster(once, 0.9)
+    val once = DedupOps.dedupByCluster(docs, DedupOps.nearDupClusters(docs, 0.9)).persist()
+    val twice = DedupOps.dedupByCluster(once, DedupOps.nearDupClusters(once, 0.9))
     assert(twice.count() === once.count())
   }
 

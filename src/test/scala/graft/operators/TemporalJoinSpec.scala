@@ -65,9 +65,8 @@ class TemporalJoinSpec extends SparkSpec {
   }
 
   test("router dim history + asOf restores lookup-at-event-time semantics") {
-    import java.nio.file.Files
     import graft.streaming.{DbRouter, RouteRule}
-    val root = Files.createTempDirectory("dimh").toString
+    val root = tempDir("dimh")
     val rules = Seq(RouteRule("user_info", "insert", "hbase", "dim_user_info",
       Seq("id", "tier"), "id", history = true))
     val router = new DbRouter(rules, root)

@@ -43,7 +43,7 @@ class TrainMemoSpec extends SparkSpec {
     assert(SessionMemo.computeCount === trained,
       "second n10 search re-derived the centroids or re-quantized the corpus")
     // c5 rides the same index: the capstone must not train anything either
-    CurationOps.retrievalServe(e.sparkSession, sf).count()
+    graft.SparkEntry.queries("c5_retrieval_serve")(e.sparkSession, sf).count()
     assert(SessionMemo.computeCount === trained,
       "c5 re-trained the quantizer or re-built the index n10 already built")
   }
@@ -78,7 +78,7 @@ class TrainMemoSpec extends SparkSpec {
 
   test("appending a file to the training input misses the memo") {
     SessionMemo.clear()
-    val dir = java.nio.file.Files.createTempDirectory("memo_growth").toString
+    val dir = tempDir("memo_growth")
     val src = Tables.table(spark, sf, "embeddings")
     src.limit(64).write.mode("overwrite").parquet(dir)
     AnnOps.kmeansTrain(spark.read.parquet(dir), 4)

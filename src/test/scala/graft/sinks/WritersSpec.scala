@@ -3,7 +3,6 @@ package graft.sinks
 import graft.SparkSpec
 import graft.ads.Publisher
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class WritersSpec extends SparkSpec {
   import spark.implicits._
@@ -15,7 +14,7 @@ class WritersSpec extends SparkSpec {
 
   test("writeDynamicTopics routes each record to its topic dir in one job (K2)") {
     // the dynamic producer is the topic bus's appendDynamic
-    val bus = graft.sources.FileBus(Files.createTempDirectory("topics").toString)
+    val bus = graft.sources.FileBus(tempDir("topics"))
     val df = Seq(
       ("dwd_order_info", 1L, "x"), ("dwd_order_info", 2L, "y"),
       ("dwd_page_log", 3L, "z")).toDF("sinkTable", "id", "payload")

@@ -9,14 +9,14 @@ class CdcSourceSpec extends SparkSpec {
 
   test("snapshot-then-tail: seeded state arrives before live changes (S1 initial)") {
     // a FileBus topic is the directory <root>/<topic>
-    val bus = FileBus(Files.createTempDirectory("cdc_bus").toString)
+    val bus = FileBus(tempDir("cdc_bus"))
     val topic = s"${bus.root}/ods_base_db"
     // phase 1: snapshot of the current table state
     val snapshot = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
     CdcSource.seedSnapshot(snapshot, "g", "user_info", bus, "ods_base_db")
 
-    val out = Files.createTempDirectory("cdc_out").toString
-    val ckpt = Files.createTempDirectory("cdc_ckpt").toString
+    val out = tempDir("cdc_out")
+    val ckpt = tempDir("cdc_ckpt")
     val q = CdcSource.tail(spark, bus, "ods_base_db", None)
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)

@@ -15,7 +15,7 @@ class TopicIOSpec extends SparkSpec {
   import spark.implicits._
 
   test("FileBus round-trips values and presents the contract schema") {
-    val root = Files.createTempDirectory("bus").toString
+    val root = tempDir("bus")
     val bus = FileBus(root)
     bus.append(Seq("a", "b").toDF("value"), "t1")
     bus.append(Seq("c").toDF("value"), "t1") // append, not overwrite
@@ -36,7 +36,7 @@ class TopicIOSpec extends SparkSpec {
   }
 
   test("FileBus dynamic append routes rows to per-topic dirs in one write job") {
-    val root = Files.createTempDirectory("bus-dyn").toString
+    val root = tempDir("bus-dyn")
     val bus = FileBus(root)
     bus.append(Seq("pre").toDF("value"), "hot") // existing topic data survives
     bus.appendDynamic(Seq(("hot", "x"), ("hot", "y"), ("cold", "z"))
@@ -91,7 +91,7 @@ class TopicIOSpec extends SparkSpec {
   }
 
   test("CdcSource.tail decodes envelopes identically over the bus (S1/S3)") {
-    val root = Files.createTempDirectory("bus-cdc").toString
+    val root = tempDir("bus-cdc")
     val bus = FileBus(root)
     val snapshot = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
     CdcSource.seedSnapshot(snapshot, "g", "user_info", bus, "ods_base_db")
@@ -109,7 +109,7 @@ class TopicIOSpec extends SparkSpec {
   test("FileBus streaming producer appends a running query's output to a topic (K1)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("bus-stream").toString
+    val root = tempDir("bus-stream")
     val bus = FileBus(root)
     val input = MemoryStream[String]
     val q = bus.startAppendStream(input.toDF().toDF("value"), "dwd_page_log",

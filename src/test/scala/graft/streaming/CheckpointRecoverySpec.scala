@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
 class CheckpointRecoverySpec extends SparkSpec {
 
   test("file-stream → parquet sink resumes from checkpoint without dupes") {
-    val work = Files.createTempDirectory("graft_ckpt").toString
+    val work = tempDir("graft_ckpt")
     val in = s"$work/in"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(in))
 

@@ -30,7 +30,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("router splits facts vs dims, projects sinkColumns, upserts dims (P5/P6/K2/K3)") {
-    val root = Files.createTempDirectory("router").toString
+    val root = tempDir("router")
     val router = new DbRouter(DbRouter.referenceRules, root)
 
     val batch1 = DbRouter.decodeEnvelope(mkEnvelopes(
@@ -71,7 +71,7 @@ class DbRouterSpec extends SparkSpec {
     s"""{"database":"g","tableName":"$t","before":null,"after":${jsonStr(after)},"type":"$tp","ts":$ts}"""
 
   test("dim upsert resolves same-pk updates by binlog seq, not partition order") {
-    val root = Files.createTempDirectory("router-seq").toString
+    val root = tempDir("router-seq")
     val router = new DbRouter(DbRouter.referenceRules, root)
     // The NEWER update (ts=500) goes in partition 0, the OLDER (ts=300) in
     // partition 1: a union of single-row DFs keeps each row in its own
@@ -90,7 +90,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("rules sharing a fact sink or a dim history all land in one batch") {
-    val root = Files.createTempDirectory("router-shared").toString
+    val root = tempDir("router-shared")
     val cols = Seq("id", "user_id")
     val router = new DbRouter(Seq(
       RouteRule("order_info", "insert", "kafka", "dwd_order_info", cols, "id"),
@@ -111,7 +111,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("rules sharing a dim resolve each pk by envelope seq, not rule order") {
-    val root = Files.createTempDirectory("router-shared-dim").toString
+    val root = tempDir("router-shared-dim")
     val cols = Seq("id", "name", "gender", "birthday")
     // the update rule is listed FIRST, the update envelope is the newer one
     val router = new DbRouter(Seq(
@@ -133,7 +133,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("dim snapshot survives a crash between retire and promote") {
-    val root = Files.createTempDirectory("router-crash").toString
+    val root = tempDir("router-crash")
     val router = new DbRouter(DbRouter.referenceRules, root)
     router.processBatch(DbRouter.decodeEnvelope(mkEnvelopes(
       ("user_info", "insert", """{"id":"10","name":"alice","gender":"F","birthday":"1990-01-01"}"""))), 0L)
@@ -155,7 +155,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("a failed staging promote throws and preserves the retired snapshot") {
-    val root = Files.createTempDirectory("router-promote").toString
+    val root = tempDir("router-promote")
     val router = new DbRouter(DbRouter.referenceRules, root)
     router.processBatch(DbRouter.decodeEnvelope(mkEnvelopes(
       ("user_info", "insert", """{"id":"10","name":"alice","gender":"F","birthday":"1990-01-01"}"""))), 0L)
@@ -188,7 +188,7 @@ class DbRouterSpec extends SparkSpec {
   }
 
   test("a corrupt dim snapshot read fails loudly instead of dropping history") {
-    val root = Files.createTempDirectory("router-corrupt").toString
+    val root = tempDir("router-corrupt")
     val router = new DbRouter(DbRouter.referenceRules, root)
     // a live path that exists but isn't parquet must throw, not be treated
     // as "no snapshot" (which would silently lose all prior dim rows)

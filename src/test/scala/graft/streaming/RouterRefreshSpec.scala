@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
 case class VsRow(vc: String, ch: String, ar: String, is_new: String,
     uv_ct: Long, pv_ct: Long, sv_ct: Long, uj_ct: Long, dur_sum: Long, ts: Long)
@@ -15,7 +14,7 @@ class RouterRefreshSpec extends SparkSpec {
     s"""{"database":"g","tableName":"$t","before":null,"after":"{\\"id\\":\\"$id\\"}","type":"insert"}"""
 
   test("router picks up rules added between micro-batches (broadcast-state update)") {
-    val root = Files.createTempDirectory("router_dyn").toString
+    val root = tempDir("router_dyn")
     @volatile var rules = Seq(
       RouteRule("order_info", "insert", "kafka", "dwd_order_info", Seq("id"), "id"))
     val router = new DbRouter(() => rules, root)
@@ -33,7 +32,7 @@ class RouterRefreshSpec extends SparkSpec {
   }
 
   test("rulesFromTable round-trips the table_process schema") {
-    val path = Files.createTempDirectory("tp").toString + "/table_process"
+    val path = tempDir("tp") + "/table_process"
     Seq(("order_info", "insert", "kafka", "dwd_order_info", "id,user_id", "id", ""))
       .toDF("sourceTable", "operateType", "sinkType", "sinkTable",
         "sinkColumns", "sinkPk", "sinkExtend")

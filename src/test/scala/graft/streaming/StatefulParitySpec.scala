@@ -734,10 +734,12 @@ class StatefulParitySpec extends SparkSpec {
     val input = MemoryStream[(Long, String, String, Long)]
     input.addData(rows: _*)
     val got = scala.collection.mutable.ArrayBuffer[Set[Seq[Any]]]()
-    val q = StatsStreams.profileMonitorStream(
-        input.toDF().toDF("doc_id", "lang", "source", "n_chars")) { (m, _) =>
-      got += m.collect().map(_.toSeq).toSet
-    }.trigger(Trigger.AvailableNow()).start()
+    val q = input.toDF().toDF("doc_id", "lang", "source", "n_chars")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        got += graft.operators.RelationalOps.columnProfile(b)
+          .collect().map(_.toSeq).toSet
+        ()
+      }.trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
     val batch = graft.operators.RelationalOps.columnProfile(
       rows.toDF("doc_id", "lang", "source", "n_chars"))
@@ -783,11 +785,15 @@ class StatefulParitySpec extends SparkSpec {
     var dim = Seq(1L, 2L).toDF("pk")
     val input = MemoryStream[Long]
     val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Boolean)]()
-    val q = StatsStreams.fkMonitorStream(
-        input.toDF().toDF("fk"), "fk", dim, "pk", "fact.fk->dim") { (df, _) =>
-      val r = df.head
-      got += ((r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    }.start()
+    // `dim` is read inside the batch function, so a refresh between
+    // triggers is picked up
+    val q = input.toDF().toDF("fk")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val r = graft.operators.RelationalOps
+          .fkCheck("fact.fk->dim", b, "fk", dim, "pk").head
+        got += ((r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        ()
+      }.start()
     try {
       input.addData(1L, 2L, 7L); q.processAllAvailable() // 7 is an orphan
       dim = Seq(1L, 2L, 7L).toDF("pk")                   // dim refreshed
@@ -917,10 +923,11 @@ class StatefulParitySpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long)]
     input.addData(dirty: _*)
     val reports = scala.collection.mutable.Map[Long, Map[String, Long]]()
-    val q = StatsStreams.qualityMonitorStream(
-        input.toDF().toDF("doc_id", "text", "n_chars")) { (df, id) =>
-      reports(id) = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }.trigger(Trigger.AvailableNow()).start()
+    val q = input.toDF().toDF("doc_id", "text", "n_chars")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        reports(id) = graft.operators.RelationalOps.documentQualityChecks(b)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }.trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
     val rep = reports.values.head
     assert(rep("doc_id_unique") === 1L)
@@ -956,11 +963,12 @@ class StatefulParitySpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long)]
     input.addData(batch1.map(toRow): _*); input.addData(batch2.map(toRow): _*)
     val got = scala.collection.mutable.Map[Long, (String, Option[Long])]()
-    val q = StatsStreams.incrementalDedupStream(
-        input.toDF().toDF("doc_id", "text", "n_chars"), history) { (df, _) =>
-      df.collect().foreach(r => got(r.getLong(0)) =
-        (r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
-    }.trigger(Trigger.AvailableNow()).start()
+    val q = input.toDF().toDF("doc_id", "text", "n_chars")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.operators.DedupOps.incrementalDedupOf(b, history).collect()
+          .foreach(r => got(r.getLong(0)) =
+            (r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+      }.trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
 
     val batched = graft.operators.DedupOps.incrementalDedupOf(

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 class UniqueVisitTwsSpec extends SparkSpec {
   import spark.implicits._
@@ -14,7 +13,7 @@ class UniqueVisitTwsSpec extends SparkSpec {
     // one checkpoint is stopped once its input is committed.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val work = Files.createTempDirectory("uv_tws").toString
+    val work = tempDir("uv_tws")
     val ckpt = s"$work/ckpt"; val out = s"$work/out"
     try {
       implicit val sqlCtx = spark.sqlContext

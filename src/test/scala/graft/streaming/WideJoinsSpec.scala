@@ -83,11 +83,14 @@ class WideJoinsSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long, Long)]
     input.addData(b1: _*); input.addData(b2: _*)
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[String])]
-    val q = WideJoins.enrichAsOf(
-        input.toDF().toDF("click_id", "user_id", "ts"),
-        history, "user_id", "ts", "ts") { (df, _) =>
-        got ++= df.select("click_id", "r_ver").collect()
+    // each micro-batch is a plain batch frame, so the native as-of operator
+    // applies unchanged inside foreachBatch
+    val q = input.toDF().toDF("click_id", "user_id", "ts")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        got ++= graft.plans.AsOfJoinNative.asOf(b, history, "user_id", "ts", "ts")
+          .select("click_id", "r_ver").collect()
           .map(r => r.getLong(0) -> Option(r.getAs[String]("r_ver")))
+        ()
       }
       .trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
