@@ -170,8 +170,11 @@ object SparkEntry {
       DedupOps.dedupByCluster(docs, DedupOps.nearDupClusters(docs, 0.7))),
     "d12_segment_dedup" -> on("documents")(DedupOps.segmentDedup),
     "d13_substring_spans" -> on("documents")(DedupOps.exactSubstringSpans(_)),
-    "d14_strip_spans" -> on("documents")(DedupOps.stripDuplicatedSpans(_)),
-    "d17_boilerplate_strip" -> on("documents")(DedupOps.boilerplateStrip(_)),
+    // d14/d17 strip against the corpus's own reference sets
+    "d14_strip_spans" -> on("documents")(docs =>
+      DedupOps.stripDuplicatedSpans(docs, DedupOps.duplicatedGrams(docs))),
+    "d17_boilerplate_strip" -> on("documents")(docs =>
+      DedupOps.boilerplateStrip(docs, DedupOps.boilerplateSegments(docs))),
     "d18_containment_pairs" -> on("documents")(DedupOps.containmentPairs(_)),
     // d19: incremental batch-vs-history dedup triage (exact | near | novel);
     // history is never shuffled — batch side broadcast at every join
@@ -222,7 +225,9 @@ object SparkEntry {
     "n5_cosine_sim_fn" -> (cosineSimFn _),
     // LLM-data-pipeline: corpus curation (decontamination, sampling,
     // shard shuffle, n-gram frequency)
-    "t5_decontaminate" -> on("documents")(CurationOps.decontaminate),
+    // t5: every 97th doc stands in for the held-out benchmark corpus
+    "t5_decontaminate" -> on("documents")(docs =>
+      CurationOps.decontaminate(docs, docs.filter(col("doc_id") % 97 === 0))),
     "b1_bloom_decontaminate" -> on("documents")(CurationOps.bloomDecontaminate),
     "b2_semantic_decontam" -> on("embeddings")(AnnOps.semanticDecontaminate(_)),
     "s1_hash_sample" -> on("documents")(CurationOps.hashSample),

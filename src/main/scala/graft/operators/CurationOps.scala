@@ -33,7 +33,9 @@ object CurationOps {
 
   /** T5 — benchmark decontamination (the published GPT-3/Dolma recipe shape):
     * a doc is contaminated if it shares any 3-word shingle with the held-out
-    * benchmark set (here: every 97th doc stands in for the benchmark corpus).
+    * `bench` documents (the roster and c2 pass every 97th doc as the
+    * benchmark corpus). A live stream runs it per micro-batch
+    * (`foreachBatch`) against a bench frame built once.
     *
     * Plan shape: the benchmark shingle set is tiny relative to the corpus, so
     * it BROADCASTS; the corpus-side shingle stream is filtered map-side by the
@@ -41,10 +43,9 @@ object CurationOps {
     * shuffle, and the final left join is keyed on doc_id. At 100 TB the scan
     * dominates; nothing quadratic, no corpus-wide shuffle of shingles.
     */
-  def decontaminate(docs: DataFrame): DataFrame = {
-    val sh = DedupOps.shingles(docs)
-    val bench = sh.filter(col("doc_id") % 97 === 0).select("shingle").distinct()
-    val overlaps = sh.join(broadcast(bench), Seq("shingle"))
+  def decontaminate(docs: DataFrame, bench: DataFrame): DataFrame = {
+    val benchSet = DedupOps.shingles(bench).select("shingle").distinct()
+    val overlaps = DedupOps.shingles(docs).join(broadcast(benchSet), Seq("shingle"))
       .groupBy("doc_id").agg(count(lit(1)).as("overlap_ct"))
     docs.select("doc_id")
       .join(overlaps, Seq("doc_id"), "left")
@@ -124,11 +125,12 @@ object CurationOps {
     * doc_id joins ([[curatedTrainExportOf]], which pipelines that already
     * materialized the three stages call directly). Invariant: inside this
     * one-query form the t15 tf exchange must not run twice — see the
-    * isnotnull note at [[graft.operators.TextOps.nbQualityScore]].
+    * isnotnull note at [[graft.operators.TextOps.nbCounts]].
     */
   def curatedTrainExport(docs: DataFrame): DataFrame =
     curatedTrainExportOf(
-      cleaned = graft.operators.DedupOps.boilerplateStrip(docs),
+      cleaned = graft.operators.DedupOps.boilerplateStrip(docs,
+        graft.operators.DedupOps.boilerplateSegments(docs)),
       scored = graft.operators.TextOps.nbQualityScore(docs),
       split = leakageSafeSplit(docs,
         graft.operators.DedupOps.nearDupClusters(docs, 0.7)))
@@ -532,15 +534,14 @@ object CurationOps {
     val ndLosers = DedupOps.minhashLshPairs(docs)
       .filter(col("jaccard") >= ndThreshold)
       .select(col("doc_b").as("doc_id")).distinct()
-    val clean = decontaminate(docs).filter(col("is_clean")).select("doc_id")
+    val clean = decontaminate(docs, docs.filter(col("doc_id") % 97 === 0))
+      .filter(col("is_clean")).select("doc_id")
     val w = split(col("text"), " ")
     val quality = docs.select(col("doc_id"),
         size(w).cast("long").as("n_words"),
         size(filter(w, x => x === "the" || x === "a")).cast("long").as("stop_ct"),
         col("n_chars"))
-      .filter((when(col("n_words") >= 20, 1).otherwise(0) +
-        when(col("stop_ct") > 0, 1).otherwise(0) +
-        when(col("n_chars") >= 100, 1).otherwise(0)) >= 2)
+      .filter(TextOps.qualityScore(col("n_words"), col("stop_ct"), col("n_chars")) >= 2)
       .select("doc_id")
     val survivors = docs.select("doc_id", "n_chars")
       .join(keepers, Seq("doc_id"), "left_semi")
@@ -959,23 +960,36 @@ object CurationOps {
     * per-doc sums ride DECIMAL(18,4) (exact, associative) — the t13
     * convention, so shuffle merge order can never move the hash.
     *
+    * Three pieces, the t13 split: [[dsirCounts]], [[dsirModel]] and
+    * [[dsirWeightsBy]]; this operator composes them over one count table, a
+    * live stream weighs each micro-batch's counts against a model built
+    * once.
+    *
     * Scale notes (100 TB): ONE corpus-scale shuffle — the (doc_id, bucket)
     * tf aggregation; `is_target` is computed in the same scan and rides
     * the explode, so no join back to the corpus. Both models group the
-    * ALREADY doc-aggregated rows (bucket-sized output, exchange reused, cf.
-    * t13's cb/ctx) and come back as 1024-row broadcasts; the Gumbel term
-    * is a map-side projection. Nothing quadratic, nothing driver-side.
+    * ALREADY doc-aggregated rows (bucket-sized output; the token totals
+    * sum those rows) and come back as 1024-row broadcasts; the Gumbel term
+    * is a map-side projection.
+    * Nothing quadratic, nothing driver-side.
     */
   def dsirWeights(docs: DataFrame): DataFrame = {
+    val db = dsirCounts(docs)
+    dsirWeightsBy(db, dsirModel(db))
+  }
+
+  /** S10's per-doc hashed-bigram counts `(doc_id, bucket, is_target, tf)`,
+    * materialized: the model and the weights probe both read these blocks,
+    * so the corpus bigram explode runs once.
+    */
+  private[graft] def dsirCounts(docs: DataFrame): DataFrame = {
     val w = split(col("text"), " ")
-    val nW = size(w).cast("long")
-    val stop = size(filter(w, x => x === "the" || x === "a")).cast("long")
-    val isTarget = (when(nW >= 20, 1).otherwise(0) +
-      when(stop > 0, 1).otherwise(0) +
-      when(col("n_chars") >= 100, 1).otherwise(0)) >= 2
-    // spread first: the bigram explode + per-bigram md5 bucketing below is
-    // the operator's real work and otherwise runs inside the single-split
-    // scan stage (r14); pass-through on well-split inputs
+    // the target corpus: t2's quality gate
+    val isTarget = TextOps.qualityScore(size(w).cast("long"),
+      size(filter(w, x => x === "the" || x === "a")).cast("long"), col("n_chars")) >= 2
+    // spread first: the bigram explode + per-bigram md5 bucketing is the
+    // operator's real work and would otherwise run inside a single-split
+    // scan stage; pass-through on well-split inputs
     val toks = graft.Tables.spread(
         docs.select(col("doc_id"), col("text"), col("n_chars")))
       .select(col("doc_id"), isTarget.as("is_target"), w.as("w"))
@@ -985,40 +999,45 @@ object CurationOps {
       .select(col("doc_id"), col("is_target"),
         (conv(substring(md5(concat(lit("dsir:"), col("b.w1"), lit(" "), col("b.w2"))), 1, 4), 16, 10)
           .cast("long") % 1024).as("bucket"))
+      // never null (a 4-hex-digit conv), but stated: the blocks then carry a
+      // non-nullable bucket, so no join infers a filter that would make the
+      // model's two consumers differ and lose their shared exchange
+      .filter(col("bucket").isNotNull)
     // is_target rides the GROUPING KEY (it is constant per doc, so the rows
-    // are identical) — as an aggregated column each model consumer would
-    // prune it differently, de-canonicalizing the shared subtree and
-    // re-exploding the corpus once per model (the t13 uniform-filter lesson)
-    // materialized: the optimizer collapses bm's sum-over-count through
-    // this groupBy, so the bm broadcast branch would re-run the corpus
-    // bigram explode (the t13 db discipline)
-    val db = Materialize(bi.groupBy("doc_id", "bucket", "is_target")
+    // are identical): as an aggregated column each model consumer would
+    // prune it differently and de-canonicalize the shared subtree
+    Materialize(bi.groupBy("doc_id", "bucket", "is_target")
       .agg(count(lit(1)).as("tf")))
-    // BOTH models from one bucket-keyed aggregation of the per-doc rows
-    // (conditional sum for the target counts): a separate filtered `tgt`
-    // frame would push its predicate below the shared exchange and
-    // de-canonicalize it, re-exploding the corpus per model — this way the
-    // per-doc table is built once, and the totals derive from the 1024-row
-    // model table, never the corpus
-    val bm = db.groupBy("bucket").agg(sum("tf").as("cr"),
+  }
+
+  /** S10's two models trained on the reference whose per-doc counts are
+    * `counts` (= `dsirCounts(reference)`): per-bucket raw and target counts
+    * `(bucket, cr, ct)` and the one-row token totals `nr`/`nt`.
+    */
+  private[graft] def dsirModel(counts: DataFrame): (DataFrame, DataFrame) = {
+    // BOTH models from one bucket-keyed aggregation (a conditional sum for
+    // the target counts): a separate filtered target frame would push its
+    // predicate below the shared exchange and de-canonicalize it
+    val bm = counts.groupBy("bucket").agg(sum("tf").as("cr"),
       sum(when(col("is_target"), col("tf")).otherwise(0L)).as("ct"))
-    // totals from a SEPARATE LIGHT corpus pass (Σ tf ≡ Σ (n_words − 1), a
-    // projection + one-row agg with no explode and no keyed shuffle) — the
-    // t13 vq recipe. Deriving them from bm would put two broadcast branches
-    // over the same corpus subtree, and AQE stage reuse does not reliably
-    // dedupe exchanges BETWEEN concurrent broadcast branches (observed:
-    // the totals branch re-exploded the corpus); main↔broadcast reuse for
-    // bm itself is the pair that does hold, and the plan contract pins it.
-    val totals = docs.select(isTarget.as("it"), (size(w) - 1).cast("long").as("nb"))
-      .filter(col("nb") >= 1)
-      .agg(sum("nb").as("nr"), sum(when(col("it"), col("nb")).otherwise(0L)).as("nt"))
+    // the totals sum the same bm rows, so the two share bm's exchange
+    (bm, bm.agg(sum("cr").as("nr"), sum("ct").as("nt")))
+  }
+
+  /** S10's weights of per-doc bucket `counts` against `model`. A bucket the
+    * model never saw backs off to the add-one zero-count estimate on both
+    * models (a left join, counts coalesced to 0).
+    */
+  private[graft] def dsirWeightsBy(counts: DataFrame,
+      model: (DataFrame, DataFrame)): DataFrame = {
+    val (bm, totals) = model
     def lnTerm(num: Column, den: Column): Column =
       (floor(col("tf") * log(num / den) * 10000.0 + 0.5) / 10000.0)
         .cast("decimal(18,4)")
-    val weights = db.join(broadcast(bm), Seq("bucket"))
+    val weights = counts.join(broadcast(bm), Seq("bucket"), "left")
       .crossJoin(broadcast(totals))
-      .withColumn("term_t", lnTerm(col("ct") + 1.0, col("nt") + 1024.0))
-      .withColumn("term_r", lnTerm(col("cr") + 1.0, col("nr") + 1024.0))
+      .withColumn("term_t", lnTerm(coalesce(col("ct"), lit(0L)) + 1.0, col("nt") + 1024.0))
+      .withColumn("term_r", lnTerm(coalesce(col("cr"), lit(0L)) + 1.0, col("nr") + 1024.0))
       .groupBy("doc_id")
       .agg(sum("tf").as("n_feats"),
         (sum(col("term_t")) - sum(col("term_r"))).cast("double").as("weight"))

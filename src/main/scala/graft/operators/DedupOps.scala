@@ -23,15 +23,14 @@ object DedupOps {
     * by the caller) — element i = `words[i] words[i+1] words[i+2]`.
     */
   private[operators] def shingleExpr(words: Column): Column =
-    // ONE native codegen'd call (graft.functions.KGrams) — the shifted
-    // zip_with fold this replaces ran interpreted lambdas per element and
-    // re-allocated every intermediate prefix (r14 optimization; bit-parity
-    // with the fold pinned in KGramsSpec)
+    // ONE native codegen'd call (graft.functions.KGrams): a zip_with fold
+    // runs interpreted lambdas per element and re-allocates every
+    // intermediate prefix (bit-parity with the fold pinned in KGramsSpec)
     graft.functions.KGrams(words, ShingleN)
 
   /** 3-shingle array of a raw text column, empty for sub-3-word docs —
-    * the map-side building block shared by the batch and streaming
-    * decontamination faces.
+    * the array form the native `intersect_count` kernel
+    * ([[graft.functions.IntersectCount]]) reads.
     */
   def shingleArray(text: Column): Column = {
     val w = split(text, " ")
@@ -694,25 +693,37 @@ object DedupOps {
     graft.functions.KGrams(words, k)
 
   /** Positional k-gram array of a raw text column (element i = the k-gram
-    * starting at token i), empty for sub-k-word docs — the map-side
-    * building block shared by the batch span operators and the streaming
-    * face ([[graft.streaming.StatsStreams.stripSpansStream]]).
+    * starting at token i), empty for sub-k-word docs — the array the
+    * native `dup_spans` kernel ([[graft.functions.DupSpans]]) reads.
     */
   def kgramArray(text: Column, k: Int): Column = {
     val w = split(text, " ")
     when(size(w) >= k, kgramExpr(w, k)).otherwise(array().cast("array<string>"))
   }
 
+  /** Positional k-gram rows `(doc_id, pos, gram)` of every ≥ k-word doc —
+    * the one gram table the seed count and the span cover both read.
+    */
+  private def gramRows(docs: DataFrame, k: Int): DataFrame =
+    graft.Tables.spread(docs)
+      .withColumn("words", split(col("text"), " "))
+      .filter(size(col("words")) >= k)
+      .select(col("doc_id"),
+        posexplode(kgramExpr(col("words"), k)).as(Seq("pos", "gram")))
+
+  /** Every gram of `grams` occurring ≥ 2 times: one gram-keyed count with
+    * map-side partials.
+    */
+  private def repeatedGrams(grams: DataFrame): DataFrame =
+    grams.groupBy("gram").agg(count(lit(1)).as("ct"))
+      .filter(col("ct") >= 2).select("gram")
+
   /** The corpus's duplicated-gram seed set (every k-gram occurring ≥ 2
     * times, within- and cross-document occurrences both counted) — d13's
-    * stage-2 output as a standalone frame, the reference set the streaming
-    * span face broadcasts. One gram-keyed count with map-side partials.
+    * stage-2 output as a standalone frame, the reference d14 strips against.
     */
   def duplicatedGrams(docs: DataFrame, k: Int = 8): DataFrame =
-    graft.Tables.spread(docs)
-      .select(explode(kgramArray(col("text"), k)).as("gram"))
-      .groupBy("gram").agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= 2).select("gram")
+    repeatedGrams(gramRows(docs, k))
 
   /** D13 — EXACT duplicated-substring spans, the modality the published
     * exact-substring dedup recipe targets (Lee et al. 2022, "Deduplicating
@@ -743,14 +754,15 @@ object DedupOps {
     * shuffle keys) with the same plan shape.
     */
   def exactSubstringSpans(docs: DataFrame, k: Int = 8): DataFrame = {
-    val grams = graft.Tables.spread(docs)
-      .withColumn("words", split(col("text"), " "))
-      .filter(size(col("words")) >= k)
-      .select(col("doc_id"),
-        posexplode(kgramExpr(col("words"), k)).as(Seq("pos", "gram")))
-    val dup = grams.groupBy("gram").agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= 2).select("gram")
-    val covered = grams.join(dup, "gram")
+    val grams = gramRows(docs, k)
+    spansOf(grams, repeatedGrams(grams), k)
+  }
+
+  /** The span core of d13, d14 and g5: every maximal token span of the
+    * `grams` rows whose every position is covered by a gram in `ref`.
+    */
+  private def spansOf(grams: DataFrame, ref: DataFrame, k: Int): DataFrame = {
+    val covered = grams.join(ref, "gram")
       .select(col("doc_id"),
         explode(sequence(col("pos").cast("long"),
           col("pos").cast("long") + (k - 1))).as("cov"))
@@ -764,12 +776,14 @@ object DedupOps {
         (col("span_end") - col("span_start") + 1).as("span_tokens"))
   }
 
-  /** D14 — the REMOVAL face of [[exactSubstringSpans]]: excise every
-    * duplicated span from every document (the conservative
-    * remove-all-occurrences policy — no global election of a keeper
-    * occurrence, so the operator stays one pass) and return the cleaned
-    * text plus removal accounting. Every input doc appears exactly once;
-    * a doc whose whole text is duplicated comes back with
+  /** D14 — the REMOVAL face of [[exactSubstringSpans]]: excise every span
+    * covered by the reference grams `refGrams` (the roster passes the
+    * corpus's own [[duplicatedGrams]]; a live stream runs it per
+    * micro-batch against a gram set built once) from every document — the
+    * conservative remove-all-occurrences policy, no global election of a
+    * keeper occurrence, so the operator stays one pass — and return the
+    * cleaned text plus removal accounting. Every input doc appears exactly
+    * once; a doc whose whole text is duplicated comes back with
     * `clean_text = ''`.
     *
     * Scale notes: spans collapse to ONE small array row per affected doc
@@ -779,11 +793,11 @@ object DedupOps {
     * The spans array is a join-produced attribute, so the per-element
     * `exists` probe reads a materialized value (not the d9 inlined-
     * expression trap); cost is O(words × spans-per-doc), the latter small
-    * by nature. The one corpus-sized cost is [[exactSubstringSpans]]'s own
-    * lineage, shared unchanged.
+    * by nature. The corpus-sized cost is d13's span core over the docs'
+    * gram rows (with the roster's reference, d13's exact lineage).
     */
-  def stripDuplicatedSpans(docs: DataFrame, k: Int = 8): DataFrame = {
-    val spanArrs = exactSubstringSpans(docs, k).groupBy("doc_id")
+  def stripDuplicatedSpans(docs: DataFrame, refGrams: DataFrame, k: Int = 8): DataFrame = {
+    val spanArrs = spansOf(gramRows(docs, k), refGrams, k).groupBy("doc_id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
     docs.join(spanArrs, Seq("doc_id"), "left")
       .withColumn("spans",
@@ -834,9 +848,11 @@ object DedupOps {
   val BoilerplateMinDf = 3
 
   /** D17 — corpus-frequency boilerplate removal, the RefinedWeb/Dolma
-    * line-dedup rule: a segment whose text occurs in ≥ `minDf` DISTINCT
-    * documents (nav bars, cookie banners, license headers) is excised from
-    * EVERY document — the complement of d12, which keeps the first
+    * line-dedup rule: every segment in the `boiler` set — the roster passes
+    * [[boilerplateSegments]], the segments occurring in ≥ `minDf` DISTINCT
+    * documents (nav bars, cookie banners, license headers) — is excised
+    * from EVERY document; a live stream runs it per micro-batch against a
+    * set built once. The complement of d12, which keeps the first
     * occurrence of every duplicated segment. Documents reassemble from the
     * surviving segments in original order; a document whose every segment is
     * boilerplate stays in the output with `clean_text = ''` (the d14
@@ -852,10 +868,8 @@ object DedupOps {
     * the probe side (two scan-projections — the d13/d14 shape); nothing is
     * quadratic.
     */
-  def boilerplateStrip(docs: DataFrame, minDf: Int = BoilerplateMinDf): DataFrame = {
-    val segs = segmentRows(docs)
-    val boiler = boilerplateSegments(docs, minDf)
-    val kept = segs.join(broadcast(boiler), Seq("seg"), "left_anti")
+  def boilerplateStrip(docs: DataFrame, boiler: DataFrame): DataFrame = {
+    val kept = segmentRows(docs).join(broadcast(boiler), Seq("seg"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("kept_ct"),
         sort_array(collect_list(struct(col("seg_idx"), col("seg")))).as("lst"))
@@ -873,10 +887,9 @@ object DedupOps {
           lit("")).as("clean_text"))
   }
 
-  /** The corpus's boilerplate segment set (d17's stage-1 output as a
-    * standalone frame — the reference set the streaming face broadcasts,
-    * like [[duplicatedGrams]] for the span family). One segment-keyed
-    * count-distinct shuffle; output small by construction.
+  /** The corpus's boilerplate segment set — d17's reference, like
+    * [[duplicatedGrams]] for d14. One segment-keyed count-distinct shuffle;
+    * output small by construction.
     */
   def boilerplateSegments(docs: DataFrame,
       minDf: Int = BoilerplateMinDf): DataFrame =

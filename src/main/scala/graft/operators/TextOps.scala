@@ -48,10 +48,17 @@ object TextOps {
       .withColumn("avg_word_len",
         floor(col("char_ct") * 100.0 / col("n_words") + 0.5) / 100.0)
       .withColumn("quality_score",
-        (when(col("n_words") >= 20, 1).otherwise(0) +
-         when(col("stop_ct") > 0, 1).otherwise(0) +
-         when(col("n_chars") >= 100, 1).otherwise(0)).cast("int"))
+        qualityScore(col("n_words"), col("stop_ct"), col("n_chars")).cast("int"))
   }
+
+  /** T2's additive quality score: one point each for ≥ 20 words, any
+    * stopword, ≥ 100 chars. t2's quality GATE is `score ≥ 2` — the filter
+    * of c1 and c2, t15's positive class and s10's target corpus.
+    */
+  private[graft] def qualityScore(nWords: Column, stopCt: Column, nChars: Column): Column =
+    when(nWords >= 20, 1).otherwise(0) +
+      when(stopCt > 0, 1).otherwise(0) +
+      when(nChars >= 100, 1).otherwise(0)
 
   /** T3 — token counting: whitespace tokens + a BPE-ish estimate (chars/4,
     * the published GPT-style rule of thumb), both exact integers.
@@ -100,9 +107,7 @@ object TextOps {
           .when(col("char_ct") * 10 >= col("n_words") * 46, "de")
           .otherwise("xx"))
       .withColumn("quality_score",
-        (when(col("n_words") >= 20, 1).otherwise(0) +
-         when(col("stop_ct") > 0, 1).otherwise(0) +
-         when(col("n_chars") >= 100, 1).otherwise(0)).cast("int"))
+        qualityScore(col("n_words"), col("stop_ct"), col("n_chars")).cast("int"))
       .withColumn("bpe_tokens", ceil(col("n_chars") / 4.0).cast("long"))
     val keepers = d.groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id"))
@@ -290,52 +295,75 @@ object TextOps {
     * average is quantized once more. Docs with fewer than two tokens have no
     * bigrams and are not scored (the model has nothing to say about them).
     *
+    * Three pieces: [[lmCounts]] (per-doc bigram counts), [[lmModel]] (the
+    * model trained on a reference) and [[lmScoreBy]] (counts scored against
+    * a model). This operator composes them over ONE count table, so the
+    * corpus is exploded once. A live stream runs the same pieces per
+    * micro-batch: `foreachBatch` with `lmScoreBy(lmCounts(batch), model)`
+    * against a model built once from the reference corpus.
+    *
     * Scale notes: ONE corpus-scale shuffle — the (doc_id, w1, w2) partial-
-    * aggregated bigram count. The model tables are derived from THAT
-    * aggregate, not from a second pass (`cb`/`ctx` group the already-
-    * vocabulary-sized rows, so Catalyst reuses the first exchange), and they
-    * join back as broadcasts: a bigram model is vocabulary², megabytes even
-    * for a 100 TB corpus. The vocab size rides in as a one-row broadcast
-    * aggregate, never a driver-side collect.
+    * aggregated bigram count. The model tables are vocabulary-sized
+    * aggregates of it and join back as broadcasts: a bigram model is
+    * vocabulary², megabytes even for a 100 TB corpus. The vocab size rides
+    * in as a one-row broadcast aggregate, never a driver-side collect.
     */
   def lmScore(d: DataFrame): DataFrame = {
-    // spread first: the bigram explode below is the corpus-scale work and
-    // otherwise runs inside the single-split scan stage (r14; t15's
-    // precedent); pass-through on well-split inputs
+    val db = lmCounts(d)
+    lmScoreBy(db, lmModel(db, d))
+  }
+
+  /** T13's per-doc bigram counts `(doc_id, w1, w2, tf)`, materialized: the
+    * model aggregates and the scoring probe all read these blocks, so the
+    * corpus-scale bigram explode runs once (unmaterialized, the optimizer
+    * collapses the aggregate chains and each model side re-explodes).
+    */
+  private[graft] def lmCounts(d: DataFrame): DataFrame = {
+    // spread first: the bigram explode is the corpus-scale work and would
+    // otherwise run inside a single-split scan stage; pass-through on
+    // well-split inputs
     val toks = graft.Tables.spread(d.select(col("doc_id"), col("text")))
       .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
     val bi = toks.select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      // explicit not-null on BOTH keys: the three joins below infer
-      // different null filters (w1+w2 vs w1-only), which de-canonicalizes
-      // the shared bigram subtree and blocks exchange reuse — with the
-      // filter uniform, cb/ctx reuse db's corpus-scale shuffle instead of
-      // re-exploding the corpus twice more
+      // a uniform not-null on BOTH keys: the model and probe joins would
+      // otherwise infer different null filters (w1+w2 vs w1-only) and
+      // de-canonicalize the shared bigram subtree
       .filter(col("w1").isNotNull && col("w2").isNotNull)
-    // materialized: cb and ctx would otherwise each re-run the corpus-scale
-    // bigram explode + partial agg over the (reused) spread exchange; this
-    // way the explode and its one corpus shuffle run once and all three
-    // consumers read the narrow (doc_id, w1, w2, tf) blocks
-    val db = Materialize(bi.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
-    // model counts from the per-doc aggregate (vocabulary-sized input)
-    val cb = db.groupBy("w1", "w2").agg(sum("tf").as("cb"))
-    // ctx from cb, not db: ctx(w1) = Σ_w2 cb(w1,w2) exactly (integer sums),
-    // and the ctx branch then rides cb's exchange reuse — its input shrinks
-    // from the per-doc-scale db rows to the vocabulary²-sized cb rows, and
-    // db's final aggregate runs once less (r14 batch 7)
+    Materialize(bi.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
+  }
+
+  /** T13's add-one bigram model trained on `reference`, whose per-doc
+    * counts are `counts` (= `lmCounts(reference)`): bigram counts
+    * `(w1, w2, cb)`, context counts `(w1, ctx)` and the one-row vocabulary
+    * size `v`. `ctx(w1) = Σ_w2 cb(w1, w2)` exactly (integer sums), so ctx
+    * reads the vocabulary²-sized cb rows, not the per-doc counts.
+    */
+  private[graft] def lmModel(counts: DataFrame,
+      reference: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val cb = counts.groupBy("w1", "w2").agg(sum("tf").as("cb"))
     val ctx = cb.groupBy("w1").agg(sum("cb").as("ctx"))
-    val vq = d.select(explode(words(col("text"))).as("x"))
+    val vq = reference.select(explode(words(col("text"))).as("x"))
       .agg(countDistinct(col("x")).as("v"))
-    // ONE broadcast model table (bigram count + context count + vocab size
-    // pre-joined on vocabulary-sized rows) instead of two broadcast-join
-    // probes plus a crossJoin per corpus row (r14): same counts, same
-    // arithmetic, one hash probe per (doc, bigram) row
-    val model = cb.join(ctx, Seq("w1")).crossJoin(vq)
-    db.join(broadcast(model), Seq("w1", "w2"))
+    (cb, ctx, vq)
+  }
+
+  /** T13's score of per-doc bigram `counts` against `model`. Keys look up
+    * with left joins: a bigram the model never saw backs off to the add-one
+    * zero-count estimate `1 / (ctx(w1) + V)`, with `ctx(w1) = 0` only when
+    * the model never saw `w1` either.
+    */
+  private[graft] def lmScoreBy(counts: DataFrame,
+      model: (DataFrame, DataFrame, DataFrame)): DataFrame = {
+    val (cb, ctx, vq) = model
+    counts.join(broadcast(cb), Seq("w1", "w2"), "left")
+      .join(broadcast(ctx), Seq("w1"), "left")
+      .crossJoin(broadcast(vq))
       .withColumn("term",
-        (floor(col("tf") * log((col("cb") + 1.0) / (col("ctx") + col("v")))
+        (floor(col("tf") * log((coalesce(col("cb"), lit(0L)) + 1.0) /
+            (coalesce(col("ctx"), lit(0L)) + col("v")))
           * 10000.0 + 0.5) / 10000.0).cast("decimal(18,4)"))
       .groupBy("doc_id")
       .agg(sum("tf").as("n_bigrams"),
@@ -359,13 +387,12 @@ object TextOps {
     * size): the thresholds come from a cumulative sum over that tiny
     * histogram (the single-partition window is histogram-sized, not
     * corpus-sized) and broadcast back; assignment is map-side. The t13
-    * scored frame — ONE (doc_id, nll) row per document, ~1/10⁵ of corpus
-    * bytes — is materialized so the corpus-scale LM work runs ONCE for the
-    * two consumers (histogram + assignment); pruning-divergent branches
-    * de-canonicalize the t13 subtree, so AQE exchange reuse does NOT cover
-    * this split. All threshold
-    * comparisons are integer (3·cum vs n); the only doubles are the
-    * already-quantized nll leaves.
+    * scored frame — ONE (doc_id, nll) row per document — is materialized
+    * so the corpus-scale LM work runs ONCE for the two consumers
+    * (histogram + assignment); pruning-divergent branches de-canonicalize
+    * the t13 subtree, so AQE exchange reuse does NOT cover this split. All
+    * threshold comparisons are integer (3·cum vs n); the only doubles are
+    * the already-quantized nll leaves.
     */
   def pplBuckets(d: DataFrame): DataFrame = {
     val scored = Materialize(lmScore(d).select(col("doc_id"), col("nll")))
@@ -374,10 +401,9 @@ object TextOps {
 
   /** T14's tertile cut and assignment: thresholds from `reference`'s nll
     * histogram, then each `(doc_id, nll)` row of `scored` classified
-    * against them (a broadcast one-row cross join). Shared by the batch
-    * face (reference = the scored docs themselves) and
-    * [[graft.streaming.StatsStreams.pplBucketsStream]] (reference = the
-    * indexed corpus).
+    * against them (a broadcast one-row cross join). [[pplBuckets]] passes
+    * the scored docs themselves; a live stream passes each micro-batch's
+    * [[lmScoreBy]] rows against a reference corpus scored once.
     */
   private[graft] def pplBucketsBy(scored: DataFrame, reference: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -413,86 +439,97 @@ object TextOps {
     * floor-quantized at the leaf and summed as DECIMAL(18,4) — the t13
     * convention, so shuffle merge order can never move the hash.
     *
+    * Three pieces, the t13 split: [[nbCounts]], [[nbModel]] and
+    * [[nbScoreBy]]; this operator composes them over one count table, a
+    * live stream scores each micro-batch's counts against a model built
+    * once.
+    *
     * Scale notes (100 TB): ONE corpus-scale shuffle and ONE corpus-scale
     * explode — the (doc_id, word) tf aggregation with `is_pos` riding the
     * grouping key (constant per doc; the s10 lesson — a joined-back label
     * would re-explode the corpus). The model groups those already
-    * doc-aggregated rows (vocabulary-sized output, exchange reused) and
-    * broadcasts back WITH |V| riding on its rows (see the vWin note — a
-    * separate vocab-count frame gets rewritten into a second corpus
-    * explode); doc/token totals ride a SEPARATE LIGHT scan (projection +
-    * one-row agg — deriving them from the model table would put two
-    * broadcast branches over one subtree, which AQE reuse does not
-    * reliably dedupe). Scoring is a map-side projection. Nothing
-    * quadratic, nothing driver-side.
+    * doc-aggregated rows (vocabulary-sized output) and broadcasts back;
+    * class token totals and |V| sum the model rows over the same (reused)
+    * exchange, class doc counts ride a light scan (projection + one-row
+    * agg). Scoring is a map-side projection. Nothing quadratic, nothing
+    * driver-side.
     */
   def nbQualityScore(docs: DataFrame): DataFrame = {
+    val dw = nbCounts(docs)
+    nbScoreBy(dw, nbModel(dw, docs))
+  }
+
+  /** T15's positive class: t2's quality gate. */
+  private def nbPositive: Column = {
     val w = words(col("text"))
-    val isPos = (when(nWords(w) >= 20, 1).otherwise(0) +
-      when(stopCt(w) > 0, 1).otherwise(0) +
-      when(col("n_chars") >= 100, 1).otherwise(0)) >= 2
+    qualityScore(nWords(w), stopCt(w), col("n_chars")) >= 2
+  }
+
+  /** T15's per-doc word counts `(doc_id, word, is_pos, tf)`, materialized:
+    * the model and the scoring probe both read these blocks, so the corpus
+    * word explode runs once and a composition's pushed predicates (c3)
+    * cannot split it.
+    */
+  private[graft] def nbCounts(docs: DataFrame): DataFrame = {
     // spread BEFORE the explode: a compacted corpus arriving as one parquet
-    // split would otherwise explode its whole token stream inside 1-2 tasks
-    // (measured 11 tasks / 3.7s at sf0.1 without it).
-    // The explicit isNotNull is LOAD-BEARING for exchange reuse, not a data
-    // filter (doc_id is a key column): when a composition joins this
-    // operator's output on doc_id (c3), Catalyst pushes isnotnull(doc_id)
-    // into the SCORING branch only, de-canonicalizing it from the model
-    // branch and silently doubling the one corpus-scale tf shuffle
-    // (measured +1.3s / +3.9 MB at sf0.1 inside c3). Filtering at the
-    // source puts the same predicate in BOTH branches, so the pushed copy
-    // is subsumed and the tf exchange canonicalizes equal → ReusedExchange.
+    // split would otherwise explode its whole token stream inside 1-2 tasks.
+    // The isNotNull is not a data filter (doc_id is a key): it puts the
+    // predicate a doc_id join pushes (c3) into the source, so both branches
+    // stay canonically equal.
     val toks = graft.Tables.spread(
         docs.filter(col("doc_id").isNotNull)
-          .select(col("doc_id"), isPos.as("is_pos"), col("text")))
+          .select(col("doc_id"), nbPositive.as("is_pos"), col("text")))
       .select(col("doc_id"), col("is_pos"), explode(words(col("text"))).as("word"))
       .filter(col("word").isNotNull)
-    // materialized: the optimizer collapses the model's sum-over-count
-    // through this groupBy, so the model broadcast branch would re-run the
-    // corpus word explode (the t13/s10 db discipline). Both consumers (model
-    // + scoring probe) read the narrow (doc_id, word, is_pos, tf) blocks,
-    // which also cannot be filter-split by c3's pushed predicates.
-    val dw = Materialize(toks.groupBy("doc_id", "word", "is_pos")
+    Materialize(toks.groupBy("doc_id", "word", "is_pos")
       .agg(count(lit(1)).as("tf")))
-    // per-class word counts from the per-doc aggregate (vocab-sized):
-    // conditional sums keep ONE shared exchange (the s10 bm recipe).
-    // |V| rides ON the model rows as an unpartitioned window count — the
-    // round-10 form computed it from a third corpus-scale explode, and a
-    // separate `model.agg(count)` frame gets REWRITTEN by Catalyst into a
-    // fresh corpus distinct (agg-over-agg collapse erases the per-doc
-    // grouping, de-canonicalizing the tf exchange → no reuse; observed in
-    // the executed plan). The window moves only the vocab-sized model rows
-    // through one partition — the frame is about to be broadcast anyway,
-    // which is equally single-point.
-    val vWin = org.apache.spark.sql.expressions.Window.partitionBy()
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val model = dw.groupBy("word").agg(
+  }
+
+  /** T15's model trained on `reference`, whose per-doc counts are `counts`
+    * (= `nbCounts(reference)`): per-class word counts `(word, cp, cn)` and
+    * one totals row — class doc counts `np`/`nn`, class token totals
+    * `tp`/`tn` and the vocabulary size `v`.
+    */
+  private[graft] def nbModel(counts: DataFrame,
+      reference: DataFrame): (DataFrame, DataFrame) = {
+    // conditional sums keep ONE word-keyed exchange for both classes
+    val model = counts.groupBy("word").agg(
       sum(when(col("is_pos"), col("tf")).otherwise(0L)).as("cp"),
       sum(when(!col("is_pos"), col("tf")).otherwise(0L)).as("cn"))
-      .withColumn("v", count(lit(1)).over(vWin))
-    // doc counts, per-class token totals, vocab size: light scans, no explode
-    val totals = docs.select(isPos.as("ip"), nWords(w).as("nw"))
+    // class doc counts: a light scan, no explode
+    val docCts = reference.select(nbPositive.as("ip"))
       .agg(sum(when(col("ip"), 1L).otherwise(0L)).as("np"),
-        sum(when(!col("ip"), 1L).otherwise(0L)).as("nn"),
-        sum(when(col("ip"), col("nw")).otherwise(0L)).as("tp"),
-        sum(when(!col("ip"), col("nw")).otherwise(0L)).as("tn"))
+        sum(when(!col("ip"), 1L).otherwise(0L)).as("nn"))
+    // class token totals and |V| from the model rows: the same word-keyed
+    // aggregate the broadcast reads, so the two share its exchange
+    val totals = docCts.crossJoin(model.agg(
+      sum("cp").as("tp"), sum("cn").as("tn"), count(lit(1)).as("v")))
+    (model, totals)
+  }
+
+  /** T15's score of per-doc word `counts` against `model`. A word the model
+    * never saw backs off to the add-one zero-count estimate for BOTH
+    * classes (a left join, counts coalesced to 0).
+    */
+  private[graft] def nbScoreBy(counts: DataFrame,
+      model: (DataFrame, DataFrame)): DataFrame = {
+    val (perWord, totals) = model
     def q4(c: Column): Column =
       (floor(c * 10000.0 + 0.5) / 10000.0).cast("decimal(18,4)")
-    val scored = dw.join(broadcast(model), Seq("word"))
+    counts.join(broadcast(perWord), Seq("word"), "left")
       .crossJoin(broadcast(totals))
-      .withColumn("term_p", q4(col("tf") * log((col("cp") + 1.0) / (col("tp") + col("v")))))
-      .withColumn("term_n", q4(col("tf") * log((col("cn") + 1.0) / (col("tn") + col("v")))))
-      .withColumn("prior", q4(log(col("np") / cast2d(col("nn")))))
+      .withColumn("term_p", q4(col("tf") *
+        log((coalesce(col("cp"), lit(0L)) + 1.0) / (col("tp") + col("v")))))
+      .withColumn("term_n", q4(col("tf") *
+        log((coalesce(col("cn"), lit(0L)) + 1.0) / (col("tn") + col("v")))))
+      .withColumn("prior", q4(log(col("np") / col("nn").cast("double"))))
       .groupBy("doc_id")
       .agg(sum("tf").as("n_tokens"),
         (max(col("prior")) + sum(col("term_p")) - sum(col("term_n")))
           .cast("double").as("log_odds"))
       .withColumn("predicted",
         when(col("log_odds") > 0, "keep").otherwise("drop"))
-    scored
   }
-  private def cast2d(c: Column): Column = c.cast("double")
 
   /** E1 — fuzzy entity matching (record linkage): every pair of DISTINCT
     * part names within Levenshtein distance ≤ `maxDist`, with each name's

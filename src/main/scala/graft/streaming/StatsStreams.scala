@@ -5,9 +5,12 @@ import graft.operators.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** DWS windowed streaming aggregations (SURVEY §2.5/§2.6) — the streaming
-  * twins of [[graft.operators.StatsOps]], with the reference's exact window
-  * and watermark widths.
+/** DWS windowed streaming aggregations (SURVEY §2.5/§2.6), with the
+  * reference's exact window and watermark widths, and the streaming faces
+  * whose answer depends on state carried across micro-batches (keyed dedup,
+  * quotas, funnels, monitors). A per-row operator scored against a fixed
+  * reference has no face here: a live stream runs the batch operator on
+  * each micro-batch (`writeStream.foreachBatch`).
   *
   * Scale notes: windowed streaming aggs keep incremental per-(key, window)
   * state with partial aggregation on the map side; watermark closes windows
@@ -234,39 +237,6 @@ object StatsStreams {
           col("prefix_key"), col("r.event_time").as("event_time"))
   }
 
-  /** Streaming boilerplate removal — the streaming face of
-    * [[graft.operators.DedupOps.boilerplateStrip]] (d17): incoming docs are
-    * cleaned against a STATIC boilerplate segment set (the indexed corpus's
-    * ≥ minDf cross-document segments from
-    * [[graft.operators.DedupOps.boilerplateSegments]], or any curated
-    * blocklist). The set aggregates to one row and cross-broadcasts; the
-    * per-row work is segment + filter inside the row projection — a
-    * STATELESS streaming projection: no watermark, no state store, no
-    * stream-side shuffle; identical in batch.
-    *
-    * A stream cannot know the future, so (like [[stripSpansStream]]) the
-    * contract is vs-reference: a FRESH boilerplate pattern flooding the
-    * stream dedups against the next index build. With
-    * `ref = boilerplateSegments(corpus)` the batch face of this call equals
-    * [[graft.operators.DedupOps.boilerplateStrip]] row-for-row on segmented
-    * docs (parity-spec-pinned). The probe is `array_contains` over the
-    * broadcast set — linear per segment in the set size, which is small BY
-    * CONSTRUCTION (only text repeated across ≥ minDf documents survives
-    * stage 1).
-    */
-  def boilerplateStripStream(docs: DataFrame, boilerSegs: DataFrame): DataFrame = {
-    val refSet = boilerSegs.agg(collect_set("seg").as("boiler_set"))
-    docs
-      .withColumn("segs", graft.operators.DedupOps.segmentArray(col("text")))
-      .crossJoin(broadcast(refSet))
-      .withColumn("kept",
-        filter(col("segs"), s => !array_contains(col("boiler_set"), s)))
-      .select(col("doc_id"),
-        size(col("segs")).cast("long").as("n_segs"),
-        size(col("kept")).cast("long").as("kept_segs"),
-        concat_ws(" ", col("kept")).as("clean_text"))
-  }
-
   /** Streaming per-domain quota cap — the streaming face of
     * [[graft.operators.CurationOps.domainCap]]'s COUNT bound: admit at most
     * `cap` documents per source, first arrivals win (within a micro-batch,
@@ -423,307 +393,6 @@ object StatsStreams {
           out.result().iterator
       }
       .toDF("user_id", "cohort_day", "day_offset")
-  }
-
-  /** Streaming benchmark decontamination — the streaming face of
-    * [[graft.operators.CurationOps.decontaminate]]: incoming docs are flagged
-    * against a STATIC held-out benchmark table. The bench shingle set is
-    * aggregated to a single set-row and cross-broadcast, so the per-doc
-    * overlap count is the native count-only [[graft.functions.IntersectCount]]
-    * on the doc's own (map-side) shingle array — a STATELESS streaming
-    * projection: no watermark, no state store, no stream-side shuffle; works
-    * identically in batch.
-    *
-    * Scale notes: right-sized for bench sets that fit an executor (the usual
-    * case — held-out benchmarks are small by construction). If the set is too
-    * large to broadcast, use the bloom route
-    * ([[graft.operators.CurationOps.bloomDecontaminate]] on micro-batches via
-    * foreachBatch).
-    */
-  def decontaminateStream(docs: DataFrame, bench: DataFrame): DataFrame = {
-    val benchSet = bench
-      .select(explode(array_distinct(
-        graft.operators.DedupOps.shingleArray(col("text")))).as("shingle"))
-      .agg(collect_set("shingle").as("bench_set"))
-    docs
-      .withColumn("sh", array_distinct(graft.operators.DedupOps.shingleArray(col("text"))))
-      .crossJoin(broadcast(benchSet))
-      .withColumn("overlap_ct",
-        graft.functions.IntersectCount(col("sh"), col("bench_set")))
-      .select(col("doc_id"), col("overlap_ct"), (col("overlap_ct") === 0).as("is_clean"))
-  }
-
-  /** Streaming exact-substring span removal — the streaming face of
-    * [[graft.operators.DedupOps.exactSubstringSpans]]/[[graft.operators.DedupOps.stripDuplicatedSpans]]:
-    * incoming docs are cleaned against a STATIC reference gram set (the
-    * indexed corpus's duplicated k-grams from
-    * [[graft.operators.DedupOps.duplicatedGrams]], or any curated
-    * boilerplate list). The set aggregates to one row and cross-broadcasts;
-    * the whole mark-merge-excise runs inside the row projection via the
-    * native [[graft.functions.DupSpans]] kernel (hash the ref once per row,
-    * O(1) probe per gram) plus an indexed filter over the split words
-    * against the row's own few spans — a STATELESS streaming projection: no
-    * watermark, no state store, no stream-side shuffle; identical in batch.
-    *
-    * A stream cannot know the future, so (like [[segmentDedupStream]]) the
-    * streaming contract is necessarily vs-reference rather than
-    * corpus-global: two never-before-seen docs that share a fresh span
-    * dedup against the NEXT index build, not within the stream. With
-    * `ref = duplicatedGrams(corpus)` the batch face of this call equals
-    * [[graft.operators.DedupOps.stripDuplicatedSpans]] row-for-row
-    * (parity-spec-pinned).
-    */
-  def stripSpansStream(docs: DataFrame, refGrams: DataFrame, k: Int = 8): DataFrame = {
-    val refSet = refGrams.agg(collect_set("gram").as("ref_set"))
-    docs
-      .withColumn("grams", graft.operators.DedupOps.kgramArray(col("text"), k))
-      .crossJoin(broadcast(refSet))
-      .withColumn("spans",
-        graft.functions.DupSpans(col("grams"), col("ref_set"), k))
-      .withColumn("words", split(col("text"), " "))
-      .withColumn("kept", filter(col("words"), (_, i) =>
-        !exists(col("spans"), s =>
-          i.cast("long") >= shiftright(s, 32) &&
-          i.cast("long") <= s.bitwiseAND(lit(0xffffffffL)))))
-      .select(col("doc_id"),
-        size(col("words")).cast("long").as("n_words"),
-        (size(col("words")) - size(col("kept"))).cast("long").as("removed_tokens"),
-        concat_ws(" ", col("kept")).as("clean_text"))
-  }
-
-  /** Streaming LM quality scoring — the streaming face of
-    * [[graft.operators.TextOps.lmScore]] (t13): incoming docs are scored
-    * against a STATIC pre-trained add-one bigram model (trained here from
-    * the indexed `corpus` with the same construction as the batch
-    * operator). The model aggregates to ONE row of two vocabulary-sized
-    * maps (bigram→count, context→count) plus the vocab size, and
-    * cross-broadcasts; each doc's whole score is computed inside the row
-    * projection — a STATELESS streaming projection: no watermark, no state
-    * store, no stream-side shuffle; identical in batch.
-    *
-    * Exact batch parity by construction: the in-row fold walks the SORTED
-    * bigram array, collapses equal runs to (bigram, tf), and accumulates
-    * `floor(tf·ln(P)·10⁴ + 0.5)` as an INTEGER deci-milli count — the very
-    * quantity the batch face sums as DECIMAL(18,4) — so `sum_logprob`/`nll`
-    * match [[graft.operators.TextOps.lmScore]] bit-for-bit (parity-pinned).
-    * Bigrams unseen by the model back off to `P = 1/(ctx+V)` — exactly the
-    * add-one estimate for a zero count, so live drift scores HIGH nll
-    * instead of crashing the query.
-    *
-    * Scale notes: a bigram model is vocabulary-sized — megabytes even for a
-    * 100 TB training corpus — so the broadcast is the right distribution;
-    * re-train and swap the model DataFrame per index build, like
-    * [[stripSpansStream]]'s reference grams.
-    */
-  def lmScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    val toks = corpus.select(split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 2)
-    val bi = toks.select(explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-    // ctx from the (w1,w2) counts, not a second pass over bi: the two model
-    // tables group by DIFFERENT keys and share no exchange. ctx(w1) =
-    // Σ_w2 cb(w1,w2) exactly (integer sums). Materialized, because the
-    // optimizer collapses aggregate-over-aggregate chains back to two direct
-    // corpus passes (the batch lmScore db discipline); the frame is
-    // vocabulary²-sized and paid once per model build.
-    val cbCounts = Materialize(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
-    val cbm = cbCounts
-      .agg(map_from_arrays(
-        collect_list(concat_ws(" ", col("w1"), col("w2"))),
-        collect_list(col("cb"))).as("cbmap"))
-    val ctxm = cbCounts.groupBy("w1").agg(sum("cb").as("ctx"))
-      .agg(map_from_arrays(collect_list(col("w1")), collect_list(col("ctx"))).as("ctxmap"))
-    val vq = corpus.select(explode(split(col("text"), " ")).as("x"))
-      .agg(countDistinct(col("x")).as("v"))
-    val model = cbm.crossJoin(ctxm).crossJoin(vq)
-
-    // integer deci-milli term for one collapsed (bigram, tf) run — the same
-    // double pipeline as the batch operator, floored to BIGINT
-    def term(bg: String, tf: String): String =
-      s"""CAST(FLOOR(CAST($tf AS DOUBLE) * ln(
-         |  (CAST(coalesce(element_at(cbmap, $bg), CAST(0 AS BIGINT)) AS DOUBLE) + 1.0) /
-         |  CAST((coalesce(element_at(ctxmap, split($bg, ' ')[0]), CAST(0 AS BIGINT)) + v) AS DOUBLE)
-         |) * 10000.0 + 0.5) AS BIGINT)""".stripMargin
-    val fold =
-      s"""aggregate(
-         |  array_sort(transform(sequence(1, size(w) - 1), i -> concat(w[i-1], ' ', w[i]))),
-         |  named_struct('prev', CAST(NULL AS STRING), 'run', CAST(0 AS BIGINT), 'acc', CAST(0 AS BIGINT)),
-         |  (a, x) -> IF(x <=> a.prev,
-         |    named_struct('prev', a.prev, 'run', a.run + CAST(1 AS BIGINT), 'acc', a.acc),
-         |    named_struct('prev', x, 'run', CAST(1 AS BIGINT),
-         |      'acc', a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${term("a.prev", "a.run")}))),
-         |  a -> a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${term("a.prev", "a.run")}))""".stripMargin
-    docs
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 2)
-      .crossJoin(broadcast(model))
-      .withColumn("acc", expr(fold))
-      .select(col("doc_id"),
-        (size(col("w")) - 1).cast("long").as("n_bigrams"),
-        (col("acc").cast("double") / 10000.0).as("sum_logprob"))
-      .withColumn("nll",
-        floor(col("sum_logprob") * -10000.0 / col("n_bigrams") + 0.5) / 10000.0)
-  }
-
-  /** Streaming DSIR scoring — the streaming face of
-    * [[graft.operators.CurationOps.dsirWeights]] (s10): incoming docs get
-    * importance weights against a STATIC hashed-bigram model pair trained
-    * from the indexed `corpus` (target = t2's quality gate, raw = all).
-    * The model is 1024 buckets — it aggregates to ONE row of two
-    * bucket→count maps plus the two totals and cross-broadcasts, and each
-    * doc's weight is an in-row fold: STATELESS — no watermark, no state
-    * store, no stream-side shuffle; identical in batch.
-    *
-    * Exact batch parity by construction (the [[lmScoreStream]] discipline):
-    * the fold walks the SORTED bucket array, collapses equal runs to
-    * (bucket, tf), and accumulates
-    * `floor(tf·ln p̂_t·10⁴ + 0.5) − floor(tf·ln p̂_r·10⁴ + 0.5)` as an
-    * INTEGER deci-milli count — exactly the two DECIMAL(18,4) leaf terms
-    * the batch face sums — so weight/gscore match bit-for-bit
-    * (parity-pinned). Buckets the model never saw back off to the add-one
-    * zero-count estimate on both models, so live drift scores low instead
-    * of crashing the query.
-    */
-  def dsirScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    val w0 = split(col("text"), " ")
-    val isTarget = (when(size(w0).cast("long") >= 20, 1).otherwise(0) +
-      when(size(filter(w0, x => x === "the" || x === "a")) > 0, 1).otherwise(0) +
-      when(col("n_chars") >= 100, 1).otherwise(0)) >= 2
-    val bi = corpus.select(w0.as("w"), isTarget.as("is_target"))
-      .filter(size(col("w")) >= 2)
-      .select(col("is_target"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> concat(w[i-1], ' ', w[i]))")).as("bg"))
-      .select(col("is_target"),
-        (conv(substring(md5(concat(lit("dsir:"), col("bg"))), 1, 4), 16, 10)
-          .cast("long") % 1024).as("bucket"))
-    val perBucket = bi.groupBy("bucket").agg(
-      count(lit(1)).as("cr"),
-      sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"))
-    val model = perBucket.agg(
-      map_from_arrays(collect_list(col("bucket")), collect_list(col("ct"))).as("ctmap"),
-      map_from_arrays(collect_list(col("bucket")), collect_list(col("cr"))).as("crmap"),
-      sum("cr").as("nr"), sum("ct").as("nt"))
-    def term(b: String, tf: String, cmap: String, tot: String): String =
-      s"""CAST(FLOOR(CAST($tf AS DOUBLE) * ln(
-         |  (CAST(coalesce(element_at($cmap, $b), CAST(0 AS BIGINT)) AS DOUBLE) + 1.0) /
-         |  (CAST($tot AS DOUBLE) + 1024.0)) * 10000.0 + 0.5) AS BIGINT)""".stripMargin
-    def terms(b: String, tf: String): String =
-      s"""(${term(b, tf, "ctmap", "nt")} - ${term(b, tf, "crmap", "nr")})"""
-    val fold =
-      s"""aggregate(
-         |  array_sort(transform(sequence(1, size(w) - 1),
-         |    i -> CAST(conv(substring(md5(concat('dsir:', w[i-1], ' ', w[i])), 1, 4), 16, 10) AS BIGINT) % 1024)),
-         |  named_struct('prev', CAST(NULL AS BIGINT), 'run', CAST(0 AS BIGINT), 'acc', CAST(0 AS BIGINT)),
-         |  (a, x) -> IF(x <=> a.prev,
-         |    named_struct('prev', a.prev, 'run', a.run + CAST(1 AS BIGINT), 'acc', a.acc),
-         |    named_struct('prev', x, 'run', CAST(1 AS BIGINT),
-         |      'acc', a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${terms("a.prev", "a.run")}))),
-         |  a -> a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${terms("a.prev", "a.run")}))""".stripMargin
-    docs
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 2)
-      .crossJoin(broadcast(model))
-      .withColumn("acc", expr(fold))
-      .select(col("doc_id"),
-        (size(col("w")) - 1).cast("long").as("n_feats"),
-        (col("acc").cast("double") / 10000.0).as("weight"))
-      .withColumn("gumbel",
-        floor(-log(-log((conv(substring(md5(concat(lit("gum:"), col("doc_id").cast("string"))), 1, 4), 16, 10)
-          .cast("double") + 0.5) / 65536.0)) * 10000.0 + 0.5) / 10000.0)
-      .withColumn("gscore", col("weight") + col("gumbel"))
-  }
-
-  /** Streaming perplexity bucketing — the streaming face of
-    * [[graft.operators.TextOps.pplBuckets]] (t14): incoming docs are scored
-    * with [[lmScoreStream]]'s broadcast bigram model and cut against STATIC
-    * head/middle/tail thresholds derived from the indexed corpus's own
-    * 4-dp-quantized nll histogram — the batch operator's exact threshold
-    * construction, aggregated to one broadcast row. A stream cannot know
-    * its own future score distribution, so the streaming contract is
-    * vs-reference (the CCNet production shape: thresholds come from the
-    * reference corpus snapshot, live docs classify against them); re-train
-    * and swap per index build like the other model faces. Everything after
-    * the model broadcasts is a per-row projection — no state store, no
-    * stream-side shuffle.
-    *
-    * With `corpus` = the indexed corpus, the batch face of this call equals
-    * [[graft.operators.TextOps.pplBuckets]] row-for-row (parity-pinned):
-    * the nll values ride [[lmScoreStream]]'s bit-exact integer fold and
-    * the thresholds are the same histogram cut.
-    */
-  def pplBucketsStream(docs: DataFrame, corpus: DataFrame): DataFrame =
-    graft.operators.TextOps.pplBucketsBy(
-      lmScoreStream(docs, corpus).select(col("doc_id"), col("nll")),
-      graft.operators.TextOps.lmScore(corpus))
-
-  /** Streaming NB quality classification — the streaming face of
-    * [[graft.operators.TextOps.nbQualityScore]] (t15): incoming docs are
-    * scored against a STATIC pre-trained Naive-Bayes model (trained here
-    * from the indexed `corpus` with the same construction as the batch
-    * operator). The model aggregates to one row of two vocabulary-sized
-    * maps (word→pos count, word→neg count) plus token totals and vocab
-    * size; class doc-counts ride a second one-row broadcast; each doc's
-    * whole log-odds is computed inside the row projection — a STATELESS
-    * streaming projection, the [[lmScoreStream]] recipe.
-    *
-    * Exact batch parity by construction: the in-row fold walks the SORTED
-    * word array, collapses equal runs to (word, tf), and accumulates
-    * `floor(tf·ln(P)·10⁴ + 0.5)` per class as INTEGER deci-milli counts —
-    * the very quantities the batch face sums as DECIMAL(18,4) — plus the
-    * identically-quantized prior, so `log_odds`/`predicted` match
-    * bit-for-bit (parity-pinned). Model-unseen words back off to the
-    * add-one zero-count estimate for BOTH classes, so live vocabulary
-    * drift shifts scores smoothly instead of crashing the query.
-    *
-    * Scale notes: an NB unigram model is vocabulary-sized — megabytes for
-    * any corpus — so the broadcast is the right distribution; re-train and
-    * swap the model per index build, like [[stripSpansStream]]'s grams.
-    */
-  def nbScoreStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    val w0 = split(col("text"), " ")
-    val isPos = (when(size(w0).cast("long") >= 20, 1).otherwise(0) +
-      when(size(filter(w0, x => x === "the" || x === "a")) > 0, 1).otherwise(0) +
-      when(col("n_chars") >= 100, 1).otherwise(0)) >= 2
-    val tf = corpus.select(isPos.as("is_pos"), explode(w0).as("word"))
-      .filter(col("word").isNotNull)
-    val perWord = tf.groupBy("word").agg(
-      sum(when(col("is_pos"), 1L).otherwise(0L)).as("cp"),
-      sum(when(!col("is_pos"), 1L).otherwise(0L)).as("cn"))
-    val maps = perWord.agg(
-      map_from_arrays(collect_list(col("word")), collect_list(col("cp"))).as("cpmap"),
-      map_from_arrays(collect_list(col("word")), collect_list(col("cn"))).as("cnmap"),
-      sum("cp").as("tp"), sum("cn").as("tn"), count(lit(1)).as("v"))
-    val docsCt = corpus.agg(
-      sum(when(isPos, 1L).otherwise(0L)).as("np"),
-      sum(when(!isPos, 1L).otherwise(0L)).as("nn"))
-    def term(wrd: String, tfE: String, cmap: String, tot: String): String =
-      s"""CAST(FLOOR(CAST($tfE AS DOUBLE) * ln(
-         |  (CAST(coalesce(element_at($cmap, $wrd), CAST(0 AS BIGINT)) AS DOUBLE) + 1.0) /
-         |  (CAST($tot AS DOUBLE) + CAST(v AS DOUBLE))) * 10000.0 + 0.5) AS BIGINT)""".stripMargin
-    def terms(wrd: String, tfE: String): String =
-      s"""(${term(wrd, tfE, "cpmap", "tp")} - ${term(wrd, tfE, "cnmap", "tn")})"""
-    val fold =
-      s"""aggregate(
-         |  array_sort(w),
-         |  named_struct('prev', CAST(NULL AS STRING), 'run', CAST(0 AS BIGINT), 'acc', CAST(0 AS BIGINT)),
-         |  (a, x) -> IF(x <=> a.prev,
-         |    named_struct('prev', a.prev, 'run', a.run + CAST(1 AS BIGINT), 'acc', a.acc),
-         |    named_struct('prev', x, 'run', CAST(1 AS BIGINT),
-         |      'acc', a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${terms("a.prev", "a.run")}))),
-         |  a -> a.acc + IF(a.prev IS NULL, CAST(0 AS BIGINT), ${terms("a.prev", "a.run")}))""".stripMargin
-    docs
-      .withColumn("w", split(col("text"), " "))
-      .crossJoin(broadcast(maps))
-      .crossJoin(broadcast(docsCt))
-      .withColumn("acc", expr(fold))
-      .withColumn("prior_dm", expr(
-        "CAST(FLOOR(ln(CAST(np AS DOUBLE) / CAST(nn AS DOUBLE)) * 10000.0 + 0.5) AS BIGINT)"))
-      .select(col("doc_id"),
-        size(col("w")).cast("long").as("n_tokens"),
-        ((col("prior_dm") + col("acc")).cast("double") / 10000.0).as("log_odds"))
-      .withColumn("predicted",
-        when(col("log_odds") > 0, "keep").otherwise("drop"))
   }
 
   /** Continuous freshness monitoring — DQ5's streaming face, and the one

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +29,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory(prefix)
     ownedDirs += dir
     dir.toString
+  }
+
+  /** `rows` (columns named `columns`) run live: a MemoryStream drained
+    * with Trigger.AvailableNow, each micro-batch handed to `op` through
+    * `writeStream.foreachBatch` inside its own [[graft.operators.Materialize.scope]].
+    * Returns every row `op` produced.
+    */
+  def liveRun[T: Encoder](rows: Seq[T], columns: String*)(
+      op: DataFrame => DataFrame): Seq[Row] = {
+    implicit val ctx: SQLContext = spark.sqlContext
+    val input = MemoryStream[T]
+    input.addData(rows)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val q = input.toDF().toDF(columns: _*).writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.operators.Materialize.scope { out ++= op(batch).collect(); () }
+      }
+      .start()
+    try q.awaitTermination() finally q.stop()
+    out.toSeq
   }
 
   override protected def afterAll(): Unit =

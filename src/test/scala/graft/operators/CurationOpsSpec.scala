@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
 class CurationOpsSpec extends SparkSpec {
 
   private def docs = Tables.table(spark, sf, "documents")
+  // t5's roster reference: every 97th doc stands in for the benchmark
+  private def bench = docs.filter(col("doc_id") % 97 === 0)
 
   test("decontaminate covers every doc once; benchmark docs self-flag") {
-    val d = CurationOps.decontaminate(docs).cache()
+    val d = CurationOps.decontaminate(docs, bench).cache()
     assert(d.count() === docs.count())
     assert(d.select("doc_id").distinct().count() === docs.count())
     // a benchmark doc with >= 3 words shares its own shingles -> contaminated
@@ -73,7 +75,8 @@ class CurationOpsSpec extends SparkSpec {
     assert(j.filter(col("cluster_id") =!= col("cid")).count() === 0)
     // boilerplate dominance gate + cleaned text comes from d17
     assert(out.filter(col("kept_segs") * 2 <= col("n_segs")).count() === 0)
-    val strip = graft.operators.DedupOps.boilerplateStrip(docs)
+    val strip = graft.operators.DedupOps.boilerplateStrip(docs,
+      graft.operators.DedupOps.boilerplateSegments(docs))
       .select(col("doc_id"), col("clean_text").as("ct"))
     assert(out.join(strip, Seq("doc_id")).filter(col("clean_text") =!= col("ct")).count() === 0)
     // the leakage guarantee carries through: no exported doc's cluster has a
@@ -89,7 +92,8 @@ class CurationOpsSpec extends SparkSpec {
     // stands in for the pipeline's parquet write), the export pays only the
     // three doc_id joins — and the result is row-identical to the
     // self-contained oracle query
-    val cleaned = graft.operators.DedupOps.boilerplateStrip(docs).localCheckpoint(true)
+    val cleaned = graft.operators.DedupOps.boilerplateStrip(docs,
+      graft.operators.DedupOps.boilerplateSegments(docs)).localCheckpoint(true)
     val scored = graft.operators.TextOps.nbQualityScore(docs).localCheckpoint(true)
     val split = graft.SparkEntry.queries("s11_leakage_split")(spark, sf).localCheckpoint(true)
     val piped = CurationOps.curatedTrainExportOf(cleaned, scored, split)
@@ -122,7 +126,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("bloom decontamination equals the exact pipeline row for row") {
-    val exact = CurationOps.decontaminate(docs)
+    val exact = CurationOps.decontaminate(docs, bench)
     val bloom = CurationOps.bloomDecontaminate(docs)
     assert(bloom.count() === exact.count())
     assert(bloom.exceptAll(exact).count() === 0)
@@ -189,7 +193,7 @@ class CurationOpsSpec extends SparkSpec {
     assert(out.count() > 0)
     val keepers = DedupOps.dedupExact(docs).select(col("keeper_id").as("doc_id"))
     assert(out.join(keepers, Seq("doc_id"), "left_anti").count() === 0)
-    val dirty = CurationOps.decontaminate(docs).filter(!col("is_clean")).select("doc_id")
+    val dirty = CurationOps.decontaminate(docs, bench).filter(!col("is_clean")).select("doc_id")
     assert(out.join(dirty, "doc_id").count() === 0)
     val lowQ = TextOps.textQuality(docs).filter(col("quality_score") < 2).select("doc_id")
     assert(out.join(lowQ, "doc_id").count() === 0)

@@ -283,7 +283,7 @@ class DedupPropertiesSpec extends SparkSpec {
     // stage 1: exactly the one >=3-doc segment is boilerplate
     val boiler = DedupOps.boilerplateSegments(df).collect().map(_.getString(0)).toSet
     assert(boiler === Set(B), s"boilerplate set: $boiler")
-    val out = DedupOps.boilerplateStrip(df).collect()
+    val out = DedupOps.boilerplateStrip(df, DedupOps.boilerplateSegments(df)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(out.size === 8, "every segmented doc surfaces exactly once")
     assert(out(0L) === ((2L, 1L, U0)))
@@ -362,7 +362,8 @@ class DedupPropertiesSpec extends SparkSpec {
 
     // the removal face excises exactly the spans, order-preserved; every
     // doc surfaces once, a fully-duplicated doc as the empty string
-    val clean = DedupOps.stripDuplicatedSpans(fixtures, k = 4)
+    val clean = DedupOps.stripDuplicatedSpans(fixtures,
+        DedupOps.duplicatedGrams(fixtures, k = 4), k = 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(clean.size === 6)
     assert(clean(0L) === ((11L, 6L, "alpha bravo charlie delta echo")))

@@ -267,7 +267,7 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("stripSpansStream is a STATELESS streaming face; batch face == stripDuplicatedSpans (D13/D14)") {
-    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.DedupOps
     val k = 4
     val corpus = Seq(
       (0L, "alpha bravo charlie all rights reserved by the owner delta"),
@@ -275,32 +275,18 @@ class StatefulParitySpec extends SparkSpec {
       (2L, "red green blue white red green blue white"),
       (3L, "one lonely sentence with nothing repeated anywhere at all"))
     val corpusDf = corpus.toDF("doc_id", "text")
-    val ref = graft.operators.DedupOps.duplicatedGrams(corpusDf, k)
+    // the reference gram set, built once outside the batch function
+    val ref = DedupOps.duplicatedGrams(corpusDf, k)
+    def rows(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("removed_tokens"),
+        r.getAs[String]("clean_text"))).toSet
 
-    // 1) with ref = the corpus's own duplicated grams, the BATCH face must
-    //    reproduce stripDuplicatedSpans row-for-row (same island semantics)
-    val viaStream = graft.streaming.StatsStreams.stripSpansStream(corpusDf, ref, k)
-      .select("doc_id", "n_words", "removed_tokens", "clean_text")
-    val viaBatch = graft.operators.DedupOps.stripDuplicatedSpans(corpusDf, k)
-      .select("doc_id", "n_words", "removed_tokens", "clean_text")
-    assert(viaStream.exceptAll(viaBatch).count() === 0)
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) the same call on a real MemoryStream (AvailableNow) agrees with
-    //    its own batch face — stateless projection, nothing batch-dependent
-    val input = MemoryStream[(Long, String)]
-    input.addData(corpus: _*)
-    val q = graft.streaming.StatsStreams.stripSpansStream(
-        input.toDF().toDF("doc_id", "text"), ref, k)
-      .writeStream.format("memory").queryName("sp_spans")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_spans")
-      .select("doc_id", "removed_tokens", "clean_text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val batched = viaStream
-      .select("doc_id", "removed_tokens", "clean_text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    // stripped live against the corpus's own duplicated grams, the stream
+    // equals the batch operator on the corpus row-for-row
+    val streamed = rows(liveRun(corpus, "doc_id", "text")(
+      DedupOps.stripDuplicatedSpans(_, ref, k)))
+    val batched = rows(DedupOps.stripDuplicatedSpans(
+      corpusDf, DedupOps.duplicatedGrams(corpusDf, k), k).collect().toSeq)
     assert(streamed === batched, "span strip diverged between stream and batch")
     // sanity on content: boilerplate removed cross-doc, unique doc untouched
     assert(streamed.contains((3L, 0L, "one lonely sentence with nothing repeated anywhere at all")))
@@ -419,51 +405,42 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("lmScoreStream is a STATELESS streaming face; batch face == lmScore bit-for-bit (T13)") {
-    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.TextOps
     val corpus = Seq(
       (1L, "a b a b"), (2L, "a b"), (3L, "c"),
       (4L, "the data and the model go to the store"),
       (5L, "the data the data the data"))
     val corpusDf = corpus.toDF("doc_id", "text")
+    // the reference model, built once outside the batch function
+    val model = TextOps.lmModel(TextOps.lmCounts(corpusDf), corpusDf)
+    def scores(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => r.getAs[Long]("doc_id") ->
+      ((r.getAs[Long]("n_bigrams"), r.getAs[Double]("sum_logprob"), r.getAs[Double]("nll")))).toMap
 
-    // 1) scored against its own training corpus, the BATCH face must equal
-    //    the batch operator row-for-row INCLUDING the quantized doubles —
-    //    the integer deci-milli fold is the same sum the decimal path takes
-    val viaStream = graft.streaming.StatsStreams.lmScoreStream(corpusDf, corpusDf)
-      .select("doc_id", "n_bigrams", "sum_logprob", "nll")
-    val viaBatch = graft.operators.TextOps.lmScore(corpusDf)
-      .select("doc_id", "n_bigrams", "sum_logprob", "nll")
-    assert(viaStream.exceptAll(viaBatch).count() === 0,
-      s"stream face drifted:\n${viaStream.collect().mkString("\n")}\nvs\n${viaBatch.collect().mkString("\n")}")
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) the same call on a real MemoryStream (AvailableNow) agrees with its
-    //    own batch face, and docs with model-unseen bigrams score finite
-    //    HIGH nll (add-one backoff) instead of failing
-    val live = corpus :+ (9L, "zz qq zz qq zz")
-    val input = MemoryStream[(Long, String)]
-    input.addData(live: _*)
-    val q = graft.streaming.StatsStreams.lmScoreStream(
-        input.toDF().toDF("doc_id", "text"), corpusDf)
-      .writeStream.format("memory").queryName("sp_lm")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_lm")
-      .select("doc_id", "n_bigrams", "sum_logprob", "nll").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val batched = graft.streaming.StatsStreams.lmScoreStream(
-        live.toDF("doc_id", "text"), corpusDf)
-      .select("doc_id", "n_bigrams", "sum_logprob", "nll").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(streamed.size === batched.size && streamed.forall { case (k, v) => batched(k) == v },
-      "lm scoring diverged between stream and batch")
+    // scored live against the corpus's own model, the stream equals the
+    // batch operator row-for-row INCLUDING the quantized doubles; a doc of
+    // model-unseen bigrams scores finite HIGH nll (add-one backoff)
+    val streamed = scores(liveRun(corpus :+ ((9L, "zz qq zz qq zz")), "doc_id", "text")(
+      b => TextOps.lmScoreBy(TextOps.lmCounts(b), model)))
+    val batched = scores(TextOps.lmScore(corpusDf).collect().toSeq)
+    assert(streamed - 9L === batched, "lm scoring diverged between stream and batch")
     // the all-unseen doc is the WORST-scored doc in the stream
-    assert(batched(9L)._3 === batched.values.map(_._3).max)
+    assert(streamed(9L)._3 === streamed.values.map(_._3).max)
+  }
+
+  test("lm live scoring backs off with the reference's context count (T13)") {
+    import graft.operators.TextOps
+    // reference "a b", "a c": ctx(a) = 2, V = 3. The live bigram (a, d) is
+    // unseen, so P = (0 + 1) / (ctx(a) + V) = 1/5 and nll = ln 5 = 1.6094;
+    // a scorer that dropped the reference's ctx(a) would give ln 3 = 1.0986
+    val ref = Seq((1L, "a b"), (2L, "a c")).toDF("doc_id", "text")
+    val model = TextOps.lmModel(TextOps.lmCounts(ref), ref)
+    val got = liveRun(Seq((9L, "a d")), "doc_id", "text")(
+      b => TextOps.lmScoreBy(TextOps.lmCounts(b), model))
+    assert(got.map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("nll"))) === Seq((9L, 1.6094)))
   }
 
   test("boilerplateStripStream is a STATELESS streaming face; batch face == boilerplateStrip row-for-row (D17)") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{length => slen, col => c}
+    import graft.operators.DedupOps
     val B = "this site uses cookies accept terms to continue reading now"
     val U0 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val U1 = "kilo lima mike november oscar papa quebec romeo sierra tango"
@@ -472,45 +449,24 @@ class StatefulParitySpec extends SparkSpec {
       (0L, s"$B $U0"), (1L, s"$B $U1"), (2L, s"$U2 $B"), (3L, B),
       (4L, "tiny words here"))
     val corpusDf = corpus.toDF("doc_id", "text")
-      .withColumn("n_chars", slen(c("text")).cast("long"))
-    val ref = graft.operators.DedupOps.boilerplateSegments(corpusDf)
+    // the reference boilerplate set, built once outside the batch function
+    val ref = DedupOps.boilerplateSegments(corpusDf)
+    def rows(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => r.getAs[Long]("doc_id") ->
+      ((r.getAs[Long]("n_segs"), r.getAs[Long]("kept_segs"), r.getAs[String]("clean_text")))).toMap
 
-    // 1) cleaned against its own corpus's boilerplate set, the BATCH face
-    //    must equal the batch operator row-for-row (all docs here segment)
-    val viaStream = graft.streaming.StatsStreams
-      .boilerplateStripStream(corpusDf, ref)
-      .select("doc_id", "n_segs", "kept_segs", "clean_text")
-    val viaBatch = graft.operators.DedupOps.boilerplateStrip(corpusDf)
-      .select("doc_id", "n_segs", "kept_segs", "clean_text")
-    assert(viaStream.exceptAll(viaBatch).count() === 0,
-      s"stream face drifted:\n${viaStream.collect().mkString("\n")}\nvs\n${viaBatch.collect().mkString("\n")}")
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) the same call on a real MemoryStream (AvailableNow) agrees with its
-    //    own batch face; a live doc whose text is entirely indexed
-    //    boilerplate is cleaned to '' without any state store
-    val live = corpus :+ (9L, s"$B $B")
-    val input = MemoryStream[(Long, String)]
-    input.addData(live: _*)
-    val q = graft.streaming.StatsStreams.boilerplateStripStream(
-        input.toDF().toDF("doc_id", "text"), ref)
-      .writeStream.format("memory").queryName("sp_boiler")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_boiler")
-      .select("doc_id", "n_segs", "kept_segs", "clean_text").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    val batched = graft.streaming.StatsStreams.boilerplateStripStream(
-        live.toDF("doc_id", "text"), ref)
-      .select("doc_id", "n_segs", "kept_segs", "clean_text").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    assert(streamed.size === batched.size && streamed.forall { case (k, v) => batched(k) == v },
-      "boilerplate strip diverged between stream and batch")
+    // cleaned live against the corpus's own boilerplate set, the stream
+    // equals the batch operator row-for-row; a live doc whose text is
+    // entirely indexed boilerplate is cleaned to '' without any state store
+    val streamed = rows(liveRun(corpus :+ ((9L, s"$B $B")), "doc_id", "text")(
+      DedupOps.boilerplateStrip(_, ref)))
+    val batched = rows(DedupOps.boilerplateStrip(corpusDf,
+      DedupOps.boilerplateSegments(corpusDf)).collect().toSeq)
+    assert(streamed - 9L === batched, "boilerplate strip diverged between stream and batch")
     assert(streamed(9L) === ((2L, 0L, "")))
   }
 
   test("pplBucketsStream is a STATELESS streaming face; batch face == pplBuckets row-for-row (T14)") {
-    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.{Materialize, TextOps}
     import org.apache.spark.sql.functions.{length => slen, col => c}
     // three fluency tiers (the TextOpsSpec t14 fixture shape)
     val corpus = (1L to 4L).map(i => (i, "the data the data the data")) ++
@@ -518,124 +474,75 @@ class StatefulParitySpec extends SparkSpec {
       (9L to 12L).map(i => (i, s"q$i w$i e$i r$i t$i"))
     val corpusDf = corpus.toDF("doc_id", "text")
       .withColumn("n_chars", slen(c("text")).cast("long"))
+    // the reference, built once outside the batch function: the corpus's
+    // model and its own scored nll rows (the thresholds' histogram)
+    val model = TextOps.lmModel(TextOps.lmCounts(corpusDf), corpusDf)
+    val refScored = Materialize(TextOps.lmScore(corpusDf).select("doc_id", "nll"))
+    def rows(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r =>
+      r.getAs[Long]("doc_id") -> ((r.getAs[Double]("nll"), r.getAs[String]("bucket")))).toMap
 
-    // 1) bucketed against its own corpus's thresholds, the BATCH face must
-    //    equal the batch operator row-for-row (nll AND bucket)
-    val viaStream = graft.streaming.StatsStreams.pplBucketsStream(corpusDf, corpusDf)
-      .select("doc_id", "nll", "bucket")
-    val viaBatch = graft.operators.TextOps.pplBuckets(corpusDf)
-      .select("doc_id", "nll", "bucket")
-    assert(viaStream.exceptAll(viaBatch).count() === 0,
-      s"stream face drifted:\n${viaStream.collect().mkString("\n")}\nvs\n${viaBatch.collect().mkString("\n")}")
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) a real MemoryStream run agrees with its own batch face; a live
-    //    noise doc of model-unseen bigrams classifies into the TAIL
-    val live = corpus :+ (99L, "zz qq zz qq zz")
-    val input = MemoryStream[(Long, String)]
-    input.addData(live: _*)
-    val q = graft.streaming.StatsStreams.pplBucketsStream(
-        input.toDF().toDF("doc_id", "text"), corpusDf)
-      .writeStream.format("memory").queryName("sp_ppl")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_ppl")
-      .select("doc_id", "nll", "bucket").collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getString(2)))).toMap
-    val batched = graft.streaming.StatsStreams.pplBucketsStream(
-        live.toDF("doc_id", "text"), corpusDf)
-      .select("doc_id", "nll", "bucket").collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getString(2)))).toMap
-    assert(streamed.size === batched.size && streamed.forall { case (k, v) => batched(k) == v },
-      "ppl bucketing diverged between stream and batch")
+    // bucketed live against the corpus's own thresholds, the stream equals
+    // the batch operator row-for-row (nll AND bucket); a live noise doc of
+    // model-unseen bigrams classifies into the TAIL
+    val streamed = rows(liveRun(corpus :+ ((99L, "zz qq zz qq zz")), "doc_id", "text")(b =>
+      TextOps.pplBucketsBy(
+        TextOps.lmScoreBy(TextOps.lmCounts(b), model).select("doc_id", "nll"), refScored)))
+    val batched = rows(TextOps.pplBuckets(corpusDf).collect().toSeq)
+    assert(streamed - 99L === batched, "ppl bucketing diverged between stream and batch")
     assert(streamed(99L)._2 === "tail")
   }
 
   test("nbScoreStream is a STATELESS streaming face; batch face == nbQualityScore bit-for-bit (T15)") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{length => slen, col => c}
+    import graft.operators.TextOps
     // long stopworded docs pass the t2 positive gate; short ones don't
     val corpus = Seq(
       (1L, ("the data and the model go to the store and that works fine " * 3).trim),
       (2L, "a b a b a b"), (3L, "c d"), (4L, "short noise tokens qq"),
       (5L, ("the quick brown fox jumps over the lazy dog again and again today " * 2).trim))
-    val corpusDf = corpus.toDF("doc_id", "text")
-      .withColumn("n_chars", slen(c("text")).cast("long"))
+      .map { case (id, t) => (id, t, t.length.toLong) }
+    val corpusDf = corpus.toDF("doc_id", "text", "n_chars")
+    // the reference model, built once outside the batch function
+    val model = TextOps.nbModel(TextOps.nbCounts(corpusDf), corpusDf)
+    def scores(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => r.getAs[Long]("doc_id") ->
+      ((r.getAs[Long]("n_tokens"), r.getAs[Double]("log_odds"), r.getAs[String]("predicted")))).toMap
 
-    // 1) scored against its own training corpus, the BATCH face must equal
-    //    the batch operator row-for-row including the quantized doubles —
-    //    the integer deci-milli fold is the same sum the decimal path takes
-    val viaStream = graft.streaming.StatsStreams.nbScoreStream(corpusDf, corpusDf)
-      .select("doc_id", "n_tokens", "log_odds", "predicted")
-    val viaBatch = graft.operators.TextOps.nbQualityScore(corpusDf)
-      .select("doc_id", "n_tokens", "log_odds", "predicted")
-    assert(viaStream.exceptAll(viaBatch).count() === 0,
-      s"stream face drifted:\n${viaStream.collect().mkString("\n")}\nvs\n${viaBatch.collect().mkString("\n")}")
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) the same call on a real MemoryStream (AvailableNow) agrees with
-    //    its own batch face; a doc of model-unseen words still scores
-    //    finite (both-class add-one backoff)
-    val live = corpus :+ (9L, "zz qq zz qq zz")
-    val input = MemoryStream[(Long, String)]
-    input.addData(live: _*)
-    val q = graft.streaming.StatsStreams.nbScoreStream(
-        input.toDF().toDF("doc_id", "text"), corpusDf)
-      .writeStream.format("memory").queryName("sp_nb")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_nb")
-      .select("doc_id", "n_tokens", "log_odds", "predicted").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
-    val batched = graft.streaming.StatsStreams.nbScoreStream(
-        live.toDF("doc_id", "text"), corpusDf)
-      .select("doc_id", "n_tokens", "log_odds", "predicted").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getString(3)))).toMap
-    assert(streamed.size === batched.size && streamed.forall { case (k, v) => batched(k) == v },
-      "nb scoring diverged between stream and batch")
+    // scored live against the corpus's own model, the stream equals the
+    // batch operator row-for-row including the quantized doubles; a doc of
+    // model-unseen words still scores finite (both-class add-one backoff)
+    val noise = "zz qq zz qq zz"
+    val streamed = scores(liveRun(corpus :+ ((9L, noise, noise.length.toLong)),
+        "doc_id", "text", "n_chars")(
+      b => TextOps.nbScoreBy(TextOps.nbCounts(b), model)))
+    val batched = scores(TextOps.nbQualityScore(corpusDf).collect().toSeq)
+    assert(streamed - 9L === batched, "nb scoring diverged between stream and batch")
     assert(!streamed(9L)._2.isNaN && !streamed(9L)._2.isInfinite)
   }
 
   test("dsirScoreStream is a STATELESS streaming face; batch face == dsirWeights bit-for-bit (S10)") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{length => slen, col => c}
+    import graft.operators.CurationOps
     // long docs with stopwords pass the t2 target gate; short ones don't
     val corpus = Seq(
       (1L, ("the data and the model go to the store and that works fine " * 3).trim),
       (2L, "a b a b a b"), (3L, "c d"), (4L, "short noise tokens qq"),
       (5L, ("the quick brown fox jumps over the lazy dog again and again today " * 2).trim))
-    val corpusDf = corpus.toDF("doc_id", "text").withColumn("n_chars", slen(c("text")).cast("long"))
+      .map { case (id, t) => (id, t, t.length.toLong) }
+    val corpusDf = corpus.toDF("doc_id", "text", "n_chars")
+    // the reference models, built once outside the batch function
+    val model = CurationOps.dsirModel(CurationOps.dsirCounts(corpusDf))
+    def weights(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => r.getAs[Long]("doc_id") ->
+      ((r.getAs[Long]("n_feats"), r.getAs[Double]("weight"), r.getAs[Double]("gumbel"),
+        r.getAs[Double]("gscore")))).toMap
 
-    // 1) scored against its own training corpus, the BATCH face must equal
-    //    the batch operator row-for-row including the quantized doubles
-    val viaStream = graft.streaming.StatsStreams.dsirScoreStream(corpusDf, corpusDf)
-      .select("doc_id", "n_feats", "weight", "gumbel", "gscore")
-    val viaBatch = graft.operators.CurationOps.dsirWeights(corpusDf)
-      .select("doc_id", "n_feats", "weight", "gumbel", "gscore")
-    assert(viaStream.exceptAll(viaBatch).count() === 0,
-      s"stream face drifted:\n${viaStream.collect().mkString("\n")}\nvs\n${viaBatch.collect().mkString("\n")}")
-    assert(viaBatch.exceptAll(viaStream).count() === 0)
-
-    // 2) the same call on a real MemoryStream (AvailableNow) agrees with its
-    //    own batch face; a doc of model-unseen bigrams still scores finite
-    val live = corpus :+ (9L, "zz qq zz qq zz")
-    val input = MemoryStream[(Long, String)]
-    input.addData(live: _*)
-    val q = graft.streaming.StatsStreams.dsirScoreStream(
-        input.toDF().toDF("doc_id", "text"), corpusDf)
-      .writeStream.format("memory").queryName("sp_dsir")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_dsir")
-      .select("doc_id", "n_feats", "weight", "gscore").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val batched = graft.streaming.StatsStreams.dsirScoreStream(
-        live.toDF("doc_id", "text"), corpusDf)
-      .select("doc_id", "n_feats", "weight", "gscore").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(streamed.size === batched.size && streamed.forall { case (k, v) => batched(k) == v },
-      "dsir scoring diverged between stream and batch")
-    assert(java.lang.Double.isFinite(batched(9L)._2))
+    // weighed live against the corpus's own models, the stream equals the
+    // batch operator row-for-row including the quantized doubles; a doc of
+    // model-unseen bigrams still scores finite
+    val noise = "zz qq zz qq zz"
+    val streamed = weights(liveRun(corpus :+ ((9L, noise, noise.length.toLong)),
+        "doc_id", "text", "n_chars")(
+      b => CurationOps.dsirWeightsBy(CurationOps.dsirCounts(b), model)))
+    val batched = weights(CurationOps.dsirWeights(corpusDf).collect().toSeq)
+    assert(streamed - 9L === batched, "dsir scoring diverged between stream and batch")
+    assert(java.lang.Double.isFinite(streamed(9L)._2))
   }
 
   test("gopherRules is a STATELESS streaming face: stream == batch per row (T12)") {

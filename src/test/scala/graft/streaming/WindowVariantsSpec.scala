@@ -87,31 +87,17 @@ class WindowVariantsSpec extends SparkSpec {
   }
 
   test("streaming decontamination flags overlap against a static bench, stateless") {
-    implicit val sqlCtx = spark.sqlContext
+    // the bench frame is built once, outside the batch function
     val bench = Seq((100L, "held out benchmark prompt text here")).toDF("doc_id", "text")
-    val input = MemoryStream[(Long, String)]
-    val out = StatsStreams.decontaminateStream(input.toDF().toDF("doc_id", "text"), bench)
-    val q = out.writeStream.format("memory").queryName("decon_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(
+    val rows = liveRun(Seq(
         (1L, "contains the held out benchmark prompt inside"), // shares shingles
         (2L, "completely unrelated clean document text"),
-        (3L, "too short")) // < 3 words of overlap structure, empty shingles
-      q.processAllAvailable()
-      val rows = spark.table("decon_stream").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(rows(1L)._1 >= 1 && !rows(1L)._2, "overlapping doc must be flagged")
-      assert(rows(2L) === ((0L, true)))
-      assert(rows(3L) === ((0L, true)))
-      // batch face agrees with the streaming face on the same inputs
-      val batch = StatsStreams.decontaminateStream(
-        Seq((1L, "contains the held out benchmark prompt inside"),
-          (2L, "completely unrelated clean document text"),
-          (3L, "too short")).toDF("doc_id", "text"), bench)
-      assert(batch.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
-        .toMap === rows)
-    } finally q.stop()
+        (3L, "too short")), // < 3 words of overlap structure, empty shingles
+        "doc_id", "text")(graft.operators.CurationOps.decontaminate(_, bench))
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(rows(1L)._1 >= 1 && !rows(1L)._2, "overlapping doc must be flagged")
+    assert(rows(2L) === ((0L, true)))
+    assert(rows(3L) === ((0L, true)))
   }
 
   test("stateless text/curation operators run unchanged on streams, batch-identical") {
