@@ -76,36 +76,26 @@ object AnnOps {
         (col("i") + 1).cast("long").as("rnk"), col("it.sim").as("sim")): _*)
   }
 
-  /** The n1 scoring core over an ARBITRARY corpus/query split: each query
+  /** The n1 search over an ARBITRARY corpus/query split: each query
     * (`query_id`, `qe`) scored against every corpus vector except itself,
     * exact 4-dp-quantized cosine, two-phase top-k, ties by neighbor id.
-    * n1 rides this verbatim; the streaming face scores through the same
-    * [[scoredPairs]] so the streaming contract cannot drift.
+    * Top-k merges: the top-k of a union is the top-k of the per-split
+    * top-k results, so a corpus arriving in parts is searched part by part.
     *
     * Scale notes (100 TB): the query side BROADCASTS (standing queries are
     * report-sized); the corpus is scored map-side in one pass with no
     * corpus shuffle — the top-k merge moves ≤ k·partitions rows per query.
     */
-  def searchTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    topKPerQuery(scoredPairs(corpus, queries), k, Seq("query_id"))
-      .select("query_id", "neighbor_id", "rnk", "sim")
-
-  /** The n1 SCORING stage alone — every (query, corpus vector) pair's exact
-    * 4-dp cosine with self-pairs excluded, as `(query_id, neighbor_id,
-    * sim)`. Stateless and aggregation-free (broadcast queries, map-side
-    * projection), so the SAME definition scores a `readStream` frame — the
-    * keyed streaming face ([[graft.streaming.StatsStreams
-    * .vectorSearchKeyedStream]]) consumes it directly, which is what keeps the
-    * stream's similarity contract bit-identical to [[searchTopK]]'s.
-    */
-  private[graft] def scoredPairs(corpus: DataFrame, queries: DataFrame): DataFrame = {
+  def searchTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("query_id"), col("qe"), norm(col("qe")).as("nq"))
     val c = corpus.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nv")) // norm once per vector, below the join
-    c.crossJoin(broadcast(q))
+    val sims = c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
+    topKPerQuery(sims, k, Seq("query_id"))
+      .select("query_id", "neighbor_id", "rnk", "sim")
   }
 
   /** N1 — brute-force cosine top-k: the exact baseline. Queries = vec_id < 10,
@@ -280,7 +270,7 @@ object AnnOps {
     * sub-ulp cross-engine summation jitter (same trick as [[cosinePre]]).
     * Pure map-side, ONE native-expression call for all 32 bits
     * ([[graft.functions.SrpSig]] — the composed 32-literal-dot-product
-    * projection cost ~5s of janino compile cold).
+    * projection pays a long janino compile cold).
     */
   private[graft] def lshSignature(emb: Column): Column =
     graft.functions.SrpSig(emb, LshPlanes)
@@ -445,7 +435,7 @@ object AnnOps {
     * codebooks use (integer 1e6-scaled sums — order-free — then ONE
     * divide+floor); every vector is then geometrically REASSIGNED to its
     * nearest centroid (one deterministic Lloyd assignment half-step — the
-    * labels alone are a weak quantizer, measured below); assignment and
+    * labels alone are a weak quantizer, see below); assignment and
     * probe scores (argmin L2 ⇔ argmax 2·q·c − ‖c‖²) are 4-dp-quantized
     * BEFORE ranking so sub-ulp fold jitter can't flip a choice; candidate
     * scores are pure integer dot products (exact below 2^53); the rerank is
@@ -472,10 +462,10 @@ object AnnOps {
     val scoredCells = cellScores(centArr)
     // GEOMETRIC cell membership: every vector reassigned to its nearest
     // seeded centroid (one deterministic Lloyd assignment half-step). The
-    // fixture labels alone are a weak quantizer — measured 3-probe recall
-    // 0.38 ≈ the probed fraction; reassignment aligns membership with the
-    // metric and lifts it to 0.56 at the same probe budget (sf0.1,
-    // spec-pinned ≥ 0.5 in AnnOpsSpec and recall_ok in the bench record).
+    // fixture labels alone are a weak quantizer, whose probe recall is about
+    // the probed fraction; reassignment aligns membership with the metric
+    // (recall ≥ 0.5 is pinned in AnnOpsSpec and recall_ok in the bench
+    // record).
     // the IVF×SQ8 INDEX: every vector's geometric cell + int8 codes + code
     // norm. Consumed three times per search (queries, probes, candidates)
     // and by every search over the same corpus, so it is materialized once
@@ -579,8 +569,7 @@ object AnnOps {
     // join's output expands by |cell| per probe row, so the probe side's
     // split count caps the whole construction — a compacted corpus arriving
     // as one parquet split would otherwise crunch every candidate pair in a
-    // single task (measured: 10× corpus, one file → one 20-minute task; the
-    // m2/t9 fan-out lesson applied to the blocked self-join)
+    // single task
     val probes = graft.Tables.spread(
       e.select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nq"),
@@ -599,8 +588,7 @@ object AnnOps {
     // top-k via rank window, NOT topKPerQuery's collect_list merge: with
     // |cell|-sized candidate lists per vector the object aggregate falls
     // back to sort-based mode and copies every pair row into per-group
-    // buffers (measured 10×: 120M GenericInternalRow copies dominated the
-    // build). The row_number ≤ k filter compiles to a partial
+    // buffers. The row_number ≤ k filter compiles to a partial
     // WindowGroupLimit (the g1/s6/d12 contract): each map split forwards
     // ≤ k binary rows per vector — bounded shuffle, zero object churn —
     // and the selection/order contract (sim DESC, neighbor_id) is

@@ -183,10 +183,10 @@ object DedupOps {
     * never pairwise. A df-1 shingle can vote nothing; a stopword-like
     * shingle above the cap votes noise quadratically and is dropped, the
     * MOSS/winnow common-hash discipline. Candidates must share ≥
-    * `minShared` rare shingles (the d15 rule) before the verify runs:
-    * measured at sf0.1 this prunes 1.13M one-incidental-shingle pairs to
-    * 112k while losing ZERO ≥0.8-containment pairs — a true pair's shared
-    * run of text votes many shingles, an accidental collision votes one.
+    * `minShared` rare shingles (the d15 rule) before the verify runs: a
+    * true pair's shared run of text votes many shingles, an accidental
+    * collision votes one, so the rule prunes the one-incidental-shingle
+    * pairs without losing ≥0.8-containment pairs.
     * (Like the df cap itself, this is a candidate-recall trade: a pair
     * whose smaller side has a single rare shingle in common is not
     * generated — MOSS's published posting discipline, not exhaustive
@@ -417,9 +417,9 @@ object DedupOps {
     * derived from the bucket math, not vibes — 4-bit band keys give 16
     * buckets per band, so at N docs each bucket holds ~N/16 and the
     * candidate count is ~4·16·C(N/16, 2) ≈ N²/8. At 1,000 docs that is
-    * ~125k candidate pairs (fine); at 5,000 it is ~3M (measured 23s at
-    * sf0.1, quadratic from there). The ceiling sits where the pair count is
-    * still visibly bounded. The guard probe is `limit(max+1).count()`, so it
+    * ~125k candidate pairs; at 5,000 it is ~3M, quadratic from there. The
+    * ceiling sits where the pair count is still visibly bounded. The guard
+    * probe is `limit(max+1).count()`, so it
     * costs O(maxDocs) rows even on a 100 TB input — never a full scan.
     */
   private val DemoWidthMaxDocs = 1000
@@ -561,10 +561,9 @@ object DedupOps {
     // The whole shingle→hash→window-min selection is ONE native codegen'd
     // call (graft.functions.WinnowMins): a higher-order-function composition
     // here evaluates its lambdas interpreted and re-evaluates captured
-    // arrays per element — measured 14-100s at sf0.1 vs ~0.3s for this
-    // form, a gap that scales with corpus size. spread FIRST so a compacted
-    // corpus arriving as one parquet split still hashes on every core (the
-    // shuffle moves only the narrow pre-hash rows).
+    // arrays per element, a cost that grows with corpus size. spread FIRST
+    // so a compacted corpus arriving as one parquet split still hashes on
+    // every core (the shuffle moves only the narrow pre-hash rows).
     graft.Tables.spread(docs.withColumn("words", split(col("text"), " "))
         .filter(size(col("words")) >= ShingleN))
       .select(col("doc_id"),
@@ -606,50 +605,7 @@ object DedupOps {
       .filter(col("shared_fps") >= minShared)
   }
 
-  /** D12 — corpus-level segment (paragraph) dedup, the C4/RefinedWeb recipe:
-    * split each document into non-overlapping [[SegmentWords]]-word segments
-    * (the fixtures are single-line, so fixed word windows stand in for
-    * newline-delimited paragraphs), keep only the FIRST corpus occurrence of
-    * each distinct segment text (lowest (doc_id, seg_idx)), and reassemble
-    * every document from its surviving segments in original order. Documents
-    * whose segments are all claimed elsewhere drop out entirely.
-    *
-    * Scale notes (100 TB): segmenting is map-side (one `transform` over a
-    * shuffle-materialized word array — the lambda indexes an attribute, not
-    * an inlined `split`, so per-element cost is O(1); `spread` inserts that
-    * materializing exchange and un-compacts single-split corpora). First-
-    * occurrence election is ONE hash-partitioned window keyed on md5(seg) —
-    * high-cardinality, skew-free; reassembly is one groupBy(doc_id) whose
-    * state is bounded by the document's own segment list. Nothing is
-    * quadratic and no stage is keyed on a low-cardinality column.
-    */
   private val SegmentWords = 10
-
-  /** Non-overlapping [[SegmentWords]]-word segment array of a raw text
-    * column — the map-side building block shared by the batch and streaming
-    * segment-dedup faces (same inline-expression caveat as [[shingleArray]]:
-    * per-doc cost is fine for per-row streaming use; the batch operator
-    * materializes the word array behind an exchange instead).
-    */
-  def segmentArray(text: Column): Column = {
-    val w = split(text, " ")
-    val n = ceil(size(w) / lit(SegmentWords.toDouble)).cast("long")
-    when(size(w) > 0,
-      transform(sequence(lit(0L), n - 1),
-        i => array_join(slice(w, (i * SegmentWords + 1).cast("int"), lit(SegmentWords)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** First-occurrence election shared by the batch operator and the
-    * streaming face's batch branch ([[graft.streaming.StatsStreams.segmentDedupStream]]):
-    * keep the minimum (doc_id, seg_idx) row per distinct segment key — ONE
-    * definition of the survivor contract, so the two faces cannot drift.
-    * Compiles to a map-side WindowGroupLimit (rank <= 1), like s6/g1.
-    */
-  private[graft] def electFirstSegment(segs: DataFrame, segKey: Column): DataFrame =
-    segs.withColumn("_occ", row_number().over(
-        Window.partitionBy(segKey).orderBy(col("doc_id"), col("seg_idx"))))
-      .filter(col("_occ") === 1).drop("_occ")
 
   /** Positional segment explode shared by d12 ([[segmentDedup]]) and d17
     * ([[boilerplateStrip]]): one row per (doc, segment) with the doc's total
@@ -671,17 +627,39 @@ object DedupOps {
       .withColumn("seg_idx", col("seg_idx").cast("long"))
   }
 
-  def segmentDedup(docs: DataFrame): DataFrame = {
-    val segs = segmentRows(docs)
-    val kept = electFirstSegment(segs, md5(col("seg")))
-    kept.groupBy(col("doc_id"))
+  /** D12 — corpus-level segment (paragraph) dedup, the C4/RefinedWeb recipe:
+    * split each document into non-overlapping [[SegmentWords]]-word segments
+    * (the fixtures are single-line, so fixed word windows stand in for
+    * newline-delimited paragraphs), keep only the FIRST corpus occurrence of
+    * each distinct segment text (lowest (doc_id, seg_idx)), and reassemble
+    * every document from its surviving segments in original order. Documents
+    * whose segments are all claimed elsewhere drop out entirely.
+    *
+    * Scale notes (100 TB): segmenting is map-side (one `transform` over a
+    * shuffle-materialized word array — the lambda indexes an attribute, not
+    * an inlined `split`, so per-element cost is O(1); `spread` inserts that
+    * materializing exchange and un-compacts single-split corpora). First-
+    * occurrence election is ONE hash-partitioned window keyed on md5(seg) —
+    * high-cardinality, skew-free, and compiled to a map-side
+    * WindowGroupLimit (rank ≤ 1) like s6/g1; reassembly is one
+    * groupBy(doc_id) whose state is bounded by the document's own segment
+    * list. Nothing is quadratic and no stage is keyed on a low-cardinality
+    * column.
+    */
+  def segmentDedup(docs: DataFrame): DataFrame =
+    segmentRows(docs)
+      .withColumn("_occ", row_number().over(Window.partitionBy(md5(col("seg")))
+        .orderBy(col("doc_id"), col("seg_idx"))))
+      .filter(col("_occ") === 1)
+      .drop("_occ")
+      .groupBy(col("doc_id"))
       .agg(
         max(col("n_segs")).as("n_segs"),
         count(lit(1)).as("kept_segs"),
         sort_array(collect_list(struct(col("seg_idx"), col("seg")))).as("lst"))
       .select(col("doc_id"), col("n_segs"), col("kept_segs"),
         array_join(transform(col("lst"), s => s.getField("seg")), " ").as("clean_text"))
-  }
+
   /** k-gram array (element i = the space-joined k words from position i) —
     * never `transform(sequence, i -> slice(words, i, k))`, whose
     * captured-array indexing re-evaluates the array per element (the O(n²)

@@ -498,9 +498,8 @@ object MultimodalOps {
     * `javax.sound.sampled.spi` ServiceLoader instead of per-call
     * `AudioSystem.write` dispatch, which re-scans every registered provider
     * on every call. Same codec class AudioSystem would pick, byte-identical
-    * output (round-trip specs + oracle hashes unchanged); measured
-    * 70 µs → 2.3 µs per 128-sample blob. Falls back to AudioSystem on a
-    * JDK without the expected provider name.
+    * output (round-trip specs + oracle hashes unchanged). Falls back to
+    * AudioSystem on a JDK without the expected provider name.
     */
   @transient private lazy val waveWriter
       : Option[javax.sound.sampled.spi.AudioFileWriter] = {
@@ -543,9 +542,8 @@ object MultimodalOps {
   object WavCodec extends Serializable {
     /** The JDK's WAVE reader resolved ONCE (see [[MultimodalOps.waveWriter]]
       * — per-call `AudioSystem.getAudioInputStream` makes all six registered
-      * readers attempt-parse every blob: measured 80 µs → 2.4 µs per
-      * 128-sample blob). Same provider class, same stream, same loud
-      * `UnsupportedAudioFileException` on non-WAVE bytes.
+      * readers attempt-parse every blob). Same provider class, same stream,
+      * same loud `UnsupportedAudioFileException` on non-WAVE bytes.
       */
     @transient private lazy val waveReader
         : Option[javax.sound.sampled.spi.AudioFileReader] = {
@@ -658,6 +656,25 @@ object MultimodalOps {
   private val PrefixFrames = 2
   private val PrefixSamples = PrefixFrames * AudioFrame // 128
 
+  /** The m8 fingerprint for ONE blob — encode, REAL-decode, key the first
+    * [[PrefixFrames]] frames' energies.
+    *
+    * RANGE READ, not a full-blob read: only the RIFF header +
+    * [[PrefixSamples]] samples are materialized and decoded — the
+    * production shape (a ranged GET of header + prefix bytes per object),
+    * so fingerprint cost is O(prefix) regardless of blob length. The
+    * synthetic sample recurrence depends only on (doc_id, position), so
+    * the prefix bytes are identical to the full blob's first
+    * [[PrefixSamples]] bytes — same key, verified by the m8 oracle hash.
+    */
+  private def audioPrefixKey(id: Long, n: Long): String = {
+    require(n <= Int.MaxValue,
+      s"audio blob for doc $id has $n samples — exceeds the Int-indexed demo codec")
+    WavCodec.decodeSamples(syntheticWav(id, math.min(n, PrefixSamples.toLong).toInt))
+      .take(PrefixSamples).grouped(AudioFrame)
+      .map(_.map(s => math.abs(s).toLong).sum).mkString(",")
+  }
+
   /** M8 — audio fingerprint dedup over the REAL codec path: d1's exact-dedup
     * shape at the audio seam, completing the modality set (text d1, image
     * m7). Each blob is fingerprinted by its first [[PrefixFrames]] frames'
@@ -671,37 +688,11 @@ object MultimodalOps {
     *
     * Scale notes (100 TB): in production the prefix read is a RANGE read —
     * WAV header + `PrefixSamples` bytes per object — so fingerprint cost is
-    * O(prefix), not O(blob); here the demo encodes the full blob at the
-    * seam but still fingerprints only the decoded prefix. The group step is
-    * one hash-groupBy on ~20-char keys with map-side partial aggregation —
-    * d1's plan, byte for byte.
+    * O(prefix), not O(blob); [[audioPrefixKey]] likewise encodes and
+    * decodes only the header and the prefix. The group step is one
+    * hash-groupBy on ~20-char keys with map-side partial aggregation — d1's
+    * plan, byte for byte.
     */
-  /** Blobs shorter than this have no prefix fingerprint (see [[audioPrefixKey]]). */
-  private[graft] val AudioPrefixSamples: Int = PrefixSamples
-
-  /** The m8 fingerprint for ONE blob — encode, REAL-decode, key the first
-    * [[PrefixFrames]] frames' energies. Shared by the batch operator and the
-    * streaming face so the two can never diverge at the codec seam.
-    *
-    * RANGE READ, not a full-blob read: only the RIFF header +
-    * [[PrefixSamples]] samples are materialized and decoded — the
-    * production shape (a ranged GET of header + prefix bytes per object),
-    * so fingerprint cost is O(prefix) regardless of blob length. The
-    * synthetic sample recurrence depends only on (doc_id, position), so
-    * the prefix bytes are identical to the full blob's first
-    * [[PrefixSamples]] bytes — same key, verified by the m8 oracle hash
-    * (the round-10 form encoded the WHOLE blob and keyed its prefix:
-    * O(n_chars) encode per doc for a 128-sample key — m8 was 1.8s at
-    * sf0.1 on encode alone).
-    */
-  private[graft] def audioPrefixKey(id: Long, n: Long): String = {
-    require(n <= Int.MaxValue,
-      s"audio blob for doc $id has $n samples — exceeds the Int-indexed demo codec")
-    WavCodec.decodeSamples(syntheticWav(id, math.min(n, PrefixSamples.toLong).toInt))
-      .take(PrefixSamples).grouped(AudioFrame)
-      .map(_.map(s => math.abs(s).toLong).sum).mkString(",")
-  }
-
   def audioFingerprintDups(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.Tables.spread(table(spark, dir, "documents")

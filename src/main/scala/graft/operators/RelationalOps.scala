@@ -210,9 +210,8 @@ object RelationalOps {
     */
   def documentQualityChecks(docs: DataFrame): DataFrame =
     // ONE scan-aggregate for the whole battery (conditional sums + the
-    // distinct count), unpivoted to check rows — the per-check form paid
-    // one corpus pass per check, and the streaming face re-paid it per
-    // micro-batch (r14). Names, counts and schema unchanged.
+    // distinct count), unpivoted to check rows: a frame is scanned once
+    // however many checks run.
     docs.agg(
         (count(lit(1)) - countDistinct(col("doc_id"))).as("uq"),
         sum(when(col("text").isNull, 1L).otherwise(0L)).as("tn"),
@@ -374,25 +373,12 @@ object RelationalOps {
     * streams × days rows, and every window below shares its single
     * stream-keyed exchange of that tiny frame. No joins, no second scan.
     */
-  def volumeAnomaly(events: DataFrame, zGate: Double = 2.0): DataFrame =
-    volumeAnomalyOfDaily(dailyCounts(events), zGate)
-
-  /** The (stream, day) count frame dq6 z-scores — factored out because it is
-    * ALSO the exact-parity streaming state: per-day counts are sufficient
-    * statistics for the whole anomaly battery, so
-    * [[graft.streaming.StatsStreams.volumeAnomalyStream]] folds arriving
-    * batches into this frame and reuses [[volumeAnomalyOfDaily]] verbatim.
-    */
-  def dailyCounts(events: DataFrame): DataFrame =
+  def volumeAnomaly(events: DataFrame, zGate: Double = 2.0): DataFrame = {
+    val w = Window.partitionBy("event_type")
+    val num = col("days") * col("sd2") - col("sd1") * col("sd1")
     events.groupBy(col("event_type"),
         floor(unix_micros(col("ts")) / 86400000000L).cast("long").as("day_idx"))
       .agg(count(lit(1)).as("ct"))
-
-  /** dq6's finisher over a prepared (event_type, day_idx, ct) frame. */
-  def volumeAnomalyOfDaily(daily: DataFrame, zGate: Double = 2.0): DataFrame = {
-    val w = Window.partitionBy("event_type")
-    val num = col("days") * col("sd2") - col("sd1") * col("sd1")
-    daily
       .withColumn("days", count(lit(1)).over(w))
       .withColumn("s", sum(col("ct")).over(w))
       .withColumn("dev", col("ct") - expr("s div days"))

@@ -6,8 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DWS windowed aggregations (SURVEY §2.5/§2.6/§2.8), batch form over the
-  * driver testdata. Streaming twins with watermarks live in
-  * [[graft.streaming.StatsStreams]].
+  * warehouse tables. The declared watermark aggregations over live streams
+  * live in [[graft.streaming.StatsStreams]]; every operator here runs on a
+  * live stream as is, per micro-batch (`writeStream.foreachBatch`).
   *
   * Scale notes: each aggregation is a single hash-agg with map-side partial
   * aggregation (Spark plans partial+final automatically — the reference's
@@ -227,71 +228,49 @@ object StatsOps {
     * single-candidate purchase legitimately counts in BOTH models.
     *
     * Determinism: window ties (equal view timestamps) break by view
-    * event_id in both directions; revenue sums as DECIMAL(18,4) (the rfm
-    * convention) so merge order can never move the hash.
+    * event_id in both directions. Revenue stays DECIMAL from the per-row
+    * contributions to the per-channel rollup and turns DOUBLE only on the
+    * final sums: decimal sums are order-free, so no merge order can move
+    * the hash. Each contribution rounds to DECIMAL(18,4) per row (the rfm
+    * convention); the channel partials widen to DECIMAL(38,4), the widest
+    * decimal Spark keeps, before the final rollup.
+    *
+    * MULTI-TOUCH weights over the same candidate frame. Linear: value/n per
+    * touch. Position-based (U-shape): 40% first + 40% last + 20% split
+    * across middles; 1 touch → 100%, 2 touches → 50/50. Weights are IEEE
+    * doubles from integer inputs — identical cross-engine — so per-purchase
+    * splits sum to the purchase value within n·5e-5 (the conservation
+    * bound pinned in BatchQueriesSpec).
     *
     * Scale notes (100 TB): the purchase×view candidate join is the j1
     * interval shape — ONE user-keyed equi-join with the lookback as a
     * residual range predicate, bounded by per-user view×purchase density,
-    * never a cross join; both argmin/argmax windows share the purchase-id
-    * partitioning (one exchange of candidate rows); the channel rollup is
-    * channel-cardinality-sized.
+    * never a cross join; the first/last ranks and the touch count n_t all
+    * share the purchase-id partitioning (one exchange of candidate rows);
+    * the channel rollup is channel-cardinality-sized.
     */
-  def attribution(events: DataFrame): DataFrame =
-    attributionFinish(attributionPartials(
-      attributionMarkedPre(attributionPre(events))))
-
-  private[graft] val AttribWinUs = 24L * 3600 * 1000000
-
-  /** The candidate-input projection a14 and its streaming face share: one
-    * row per view (channel resolved, null channels dropped) or purchase —
-    * ALSO the streaming face's retained-state schema.
-    */
-  private[graft] def attributionPre(events: DataFrame): DataFrame =
-    events.filter(col("event_type").isin("view", "purchase"))
+  def attribution(events: DataFrame): DataFrame = {
+    val winUs = 24L * 3600 * 1000000
+    // one row per view (channel resolved, null channels dropped) or purchase
+    val pre = events.filter(col("event_type").isin("view", "purchase"))
       .select(col("event_type"), col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"),
         (get_json_object(col("props"), "$.k").cast("long") % 5).as("channel"),
         col("value"))
       .filter(col("event_type") === "purchase" || col("channel").isNotNull)
-
-  /** purchase×view candidates within the lookback, first/last ranks and the
-    * per-purchase touch count — all three windows on ONE p_id exchange.
-    */
-  private[graft] def attributionMarkedPre(pre: DataFrame): DataFrame = {
     val views = pre.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("v_id"),
         col("us").as("v_us"), col("channel"))
     val purchases = pre.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("p_id"),
         col("us").as("p_us"), col("value"))
-    purchases.join(views, Seq("user_id"))
-      .filter(col("v_us") <= col("p_us") &&
-        col("v_us") > col("p_us") - AttribWinUs)
+    val marked = purchases.join(views, Seq("user_id"))
+      .filter(col("v_us") <= col("p_us") && col("v_us") > col("p_us") - winUs)
       .withColumn("rnf", row_number().over(Window.partitionBy("p_id")
         .orderBy(col("v_us").asc, col("v_id").asc)))
       .withColumn("rnl", row_number().over(Window.partitionBy("p_id")
         .orderBy(col("v_us").desc, col("v_id").desc)))
       .withColumn("n_t", count(lit(1)).over(Window.partitionBy("p_id")))
-  }
-
-  /** Per-channel DECIMAL partials over a marked frame. Kept in decimal (not
-    * cast to double) so the streaming face can MERGE partials across
-    * micro-batches losslessly — decimal sums are order-free and
-    * partition-associative, so done ⊕ live equals the one-shot batch sum
-    * bit-for-bit. Widened to DECIMAL(38,4) so the merged state's type is
-    * stable across batches (Spark caps widening at 38 anyway).
-    *
-    * MULTI-TOUCH weights over the same candidate frame (no new shuffle —
-    * n_t shares the two rank windows' p_id partitioning). Linear: value/n
-    * per touch. Position-based (U-shape): 40% first + 40% last + 20%
-    * split across middles; 1 touch → 100%, 2 touches → 50/50. Weights are
-    * IEEE doubles from integer inputs — identical cross-engine — and each
-    * contribution rounds to DECIMAL(18,4) per row before the order-free
-    * decimal sum, so per-purchase splits sum to the purchase value within
-    * n·5e-5 (the conservation bound pinned in BatchQueriesSpec).
-    */
-  private[graft] def attributionPartials(marked: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 4)
     val wide = org.apache.spark.sql.types.DecimalType(38, 4)
     def drev(flag: Column): Column =
@@ -301,25 +280,20 @@ object StatsOps {
       .when(col("rnf") === 1 || col("rnl") === 1, lit(0.4))
       .otherwise(lit(0.2) / (col("n_t") - 2))
     marked.groupBy("channel").agg(
-      sum(when(col("rnf") === 1, 1L).otherwise(0L)).as("ft_purchases"),
-      drev(col("rnf") === 1).as("ft_rev_d"),
-      sum(when(col("rnl") === 1, 1L).otherwise(0L)).as("lt_purchases"),
-      drev(col("rnl") === 1).as("lt_rev_d"),
-      sum((col("value") / col("n_t")).cast(dec)).cast(wide).as("lin_rev_d"),
-      sum((col("value") * posW).cast(dec)).cast(wide).as("pos_rev_d"))
+        sum(when(col("rnf") === 1, 1L).otherwise(0L)).as("ft_purchases"),
+        drev(col("rnf") === 1).as("ft_rev_d"),
+        sum(when(col("rnl") === 1, 1L).otherwise(0L)).as("lt_purchases"),
+        drev(col("rnl") === 1).as("lt_rev_d"),
+        sum((col("value") / col("n_t")).cast(dec)).cast(wide).as("lin_rev_d"),
+        sum((col("value") * posW).cast(dec)).cast(wide).as("pos_rev_d"))
+      .groupBy("channel").agg(
+        sum(col("ft_purchases")).as("ft_purchases"),
+        sum(col("ft_rev_d")).cast("double").as("ft_revenue"),
+        sum(col("lt_purchases")).as("lt_purchases"),
+        sum(col("lt_rev_d")).cast("double").as("lt_revenue"),
+        sum(col("lin_rev_d")).cast("double").as("lin_revenue"),
+        sum(col("pos_rev_d")).cast("double").as("pos_revenue"))
   }
-
-  /** Merge one or more partial frames per channel and surface the report
-    * schema (revenues to DOUBLE only here, after all exact decimal math).
-    */
-  private[graft] def attributionFinish(partials: DataFrame): DataFrame =
-    partials.groupBy("channel").agg(
-      sum(col("ft_purchases")).as("ft_purchases"),
-      sum(col("ft_rev_d")).cast("double").as("ft_revenue"),
-      sum(col("lt_purchases")).as("lt_purchases"),
-      sum(col("lt_rev_d")).cast("double").as("lt_revenue"),
-      sum(col("lin_rev_d")).cast("double").as("lin_revenue"),
-      sum(col("pos_rev_d")).cast("double").as("pos_revenue"))
 
   /** R3 — day-cohort retention: users grouped by first-active day, retention
     * at each day offset as the share of the cohort active that day — the
@@ -795,12 +769,11 @@ object StatsOps {
       .withColumn("u_ct", count(lit(1)).over(Window.partitionBy("user_id")))
       .filter(col("u_ct") <= maxUserItems)
       .select(col("user_id"), col("item"))
-    // NOT cached (r14: tried, measured, reverted): caching `ui` hid its
-    // size from AQE, the downstream joins lost their runtime broadcast
-    // conversion, and the query went 0.81→1.59 s with 11→263 tasks. The
-    // duplicate derivation is the cheaper evil here — the self-join sides
-    // share the window exchange, and only the two itemCt broadcast
-    // branches re-run the prefix.
+    // `ui` is not materialized: a materialized frame hides its size from
+    // AQE, so the downstream joins would lose their runtime broadcast
+    // conversion. Deriving it twice is cheaper — the self-join sides share
+    // the window exchange, and only the two itemCt broadcast branches re-run
+    // the prefix.
     val itemCt = ui.groupBy("item").agg(count(lit(1)).as("n"))
     val co = ui.select(col("user_id"), col("item").as("item_a"))
       .join(ui.select(col("user_id"), col("item").as("item_b")), Seq("user_id"))

@@ -1,16 +1,15 @@
 package graft.streaming
 
 import graft.Tables.dsum
-import graft.operators.Materialize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DWS windowed streaming aggregations (SURVEY §2.5/§2.6), with the
-  * reference's exact window and watermark widths, and the streaming faces
-  * whose answer depends on state carried across micro-batches (keyed dedup,
-  * quotas, funnels, monitors). A per-row operator scored against a fixed
-  * reference has no face here: a live stream runs the batch operator on
-  * each micro-batch (`writeStream.foreachBatch`).
+  * reference's exact window and watermark widths. Each def is a declared
+  * event-time aggregation under a watermark, which Structured Streaming
+  * incrementalizes itself; none keeps hand-written state. A batch operator
+  * has no face here: a live stream runs the batch operator on each
+  * micro-batch (`writeStream.foreachBatch`).
   *
   * Scale notes: windowed streaming aggs keep incremental per-(key, window)
   * state with partial aggregation on the map side; watermark closes windows
@@ -136,622 +135,6 @@ object StatsStreams {
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
         col("key"), col("ct"), col("value_sum"))
-
-  /** Streaming exact dedup by content hash — the streaming face of the batch
-    * D1 operator: first occurrence wins; `dropDuplicatesWithinWatermark`
-    * bounds per-fingerprint state to the watermark horizon (plain
-    * `dropDuplicates` on a non-event-time key never evicts).
-    */
-  def dedupExactStream(docs: DataFrame): DataFrame = {
-    val fp = docs
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withColumn("fingerprint", md5(col("text")))
-      .withWatermark("event_time", "1 hour")
-    if (fp.isStreaming) fp.dropDuplicatesWithinWatermark("fingerprint")
-    else fp.dropDuplicates("fingerprint")
-  }
-
-  /** Streaming embedding near-dup dedup — the streaming face of the vector
-    * dedup family (batch d6/n3): the dedup key is the full 32-bit SRP-LSH
-    * signature ([[graft.operators.AnnOps.lshSignature]], deterministic
-    * md5-parity hyperplanes), so vectors whose projection signs agree on all
-    * 32 hyperplanes — cosine ≈ 1 w.h.p. — collapse to the first arrival.
-    * Signature extraction is map-side (32 codegen'd dot products per
-    * vector); dedup state is one row per distinct signature, evicted at the
-    * watermark horizon like [[dedupExactStream]]'s fingerprint state, so
-    * state never grows with corpus size — only with the live window's
-    * signature cardinality.
-    */
-  def embeddingDedupStream(vectors: DataFrame): DataFrame = {
-    val sig = vectors
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withColumn("lsh_sig",
-        graft.operators.AnnOps.lshSignature(col("embedding")))
-      .withWatermark("event_time", "1 hour")
-    if (sig.isStreaming) sig.dropDuplicatesWithinWatermark("lsh_sig")
-    else sig.dropDuplicates("lsh_sig")
-  }
-
-  /** Streaming segment (paragraph) dedup — the streaming face of batch
-    * D12's first-occurrence ELECTION
-    * ([[graft.operators.DedupOps.segmentDedup]]): incoming docs explode into
-    * their non-overlapping word segments map-side, and the first arrival of
-    * each distinct segment survives; per-segment state is evicted at the
-    * watermark horizon like [[dedupExactStream]]'s fingerprints. Document
-    * REASSEMBLY is deliberately batch-only — in an unbounded stream any
-    * future arrival can still claim a segment, so a streaming "clean_text"
-    * could never be emitted finally; the surviving segment stream is the
-    * useful streaming contract (append it to the corpus store, reassemble
-    * in batch).
-    */
-  def segmentDedupStream(docs: DataFrame): DataFrame = {
-    val segs = docs
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .select(col("doc_id"), col("event_time"),
-        posexplode(graft.operators.DedupOps.segmentArray(col("text")))
-          .as(Seq("seg_idx", "seg")))
-      .withColumn("seg_idx", col("seg_idx").cast("long"))
-      .withColumn("seg_key", md5(col("seg")))
-      .withWatermark("event_time", "1 hour")
-    if (segs.isStreaming) segs.dropDuplicatesWithinWatermark("seg_key")
-    // batch face: dropDuplicates keeps an ARBITRARY row per key on
-    // multi-partition input — elect the first occurrence through the SAME
-    // helper the batch operator uses, so the contract cannot drift
-    else graft.operators.DedupOps.electFirstSegment(segs, col("seg_key"))
-  }
-
-  /** Streaming audio fingerprint dedup — the streaming face of batch M8
-    * ([[graft.operators.MultimodalOps.audioFingerprintDups]]): each arriving
-    * blob is fingerprinted at the REAL codec seam through the SAME
-    * `audioPrefixKey` the batch operator uses (encode → WavCodec decode →
-    * 2-frame energy key), then first-arrival-per-key survives with
-    * watermark-evicted state — [[dedupExactStream]]'s contract with the
-    * fingerprint swapped from md5(text) to the decoded audio prefix. Blobs
-    * shorter than the prefix pass through no row (same eligibility rule as
-    * batch). State is one row per distinct LIVE fingerprint, gone at the
-    * watermark horizon. The non-streaming branch keeps the MIN doc_id per
-    * key — batch m8's keeper contract — rather than dropDuplicates'
-    * partition-order-dependent arbitrary row.
-    */
-  def audioFingerprintStream(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val keyed = docs
-      .filter(col("n_chars") >= graft.operators.MultimodalOps.AudioPrefixSamples)
-      .select(col("doc_id"), col("n_chars"), col("ts"))
-      .as[(Long, Long, Long)]
-      .mapPartitions(_.map { case (id, n, ts) =>
-        (id, ts, graft.operators.MultimodalOps.audioPrefixKey(id, n)) })
-      .toDF("doc_id", "ts", "prefix_key")
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", "1 hour")
-    if (keyed.isStreaming) keyed.dropDuplicatesWithinWatermark("prefix_key")
-    else
-      // deterministic batch survivor: min doc_id (the m8 keeper contract) —
-      // dropDuplicates keeps an ARBITRARY partition-order-dependent row, so
-      // the batch face only matched the streaming first-arrival under
-      // coalesce(1); min_by pins it without relying on partition order
-      keyed.groupBy(col("prefix_key"))
-        .agg(min_by(struct(col("doc_id"), col("ts"), col("event_time")),
-          col("doc_id")).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.ts").as("ts"),
-          col("prefix_key"), col("r.event_time").as("event_time"))
-  }
-
-  /** Streaming per-domain quota cap — the streaming face of
-    * [[graft.operators.CurationOps.domainCap]]'s COUNT bound: admit at most
-    * `cap` documents per source, first arrivals win (within a micro-batch,
-    * (ts, doc_id) order pins ties deterministically). The batch operator
-    * picks a salted-hash sample for unbiasedness; a stream cannot know the
-    * future, so the streaming contract is admission control — the knob that
-    * stops one domain flooding a live ingest.
-    *
-    * Scale notes: state is ONE long per source — bounded by domain count,
-    * not corpus size — and never needs eviction; the only shuffle is the
-    * groupByKey on source. Admitted rows stream out in append mode.
-    */
-  def domainCapStream(spark: SparkSession, docs: DataFrame, cap: Int = 15): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
-    val ds = docs.select(col("source"), col("doc_id"), col("ts"))
-      .as[(String, Long, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, recs: Iterator[(String, Long, Long)], state: GroupState[Long]) =>
-          val admitted = state.getOption.getOrElse(0L)
-          val room = (cap - admitted).max(0L).toInt
-          val keep = recs.toSeq.sortBy(r => (r._3, r._2)).take(room)
-          if (keep.nonEmpty) state.update(admitted + keep.size)
-          keep.iterator
-      }
-      .toDF("source", "doc_id", "ts")
-  }
-
-  /** Streaming conversion funnel — the streaming face of
-    * [[graft.operators.StatsOps.funnel]] (a10) and the multi-stage
-    * generalization of the reference's CEP family (W6's two-event pattern,
-    * app/dwm/UserJumpDetailApp.java:88-90): a per-user state machine tracks
-    * the first view, the first qualifying click (strictly after the view,
-    * within the 24 h step window), and the first qualifying purchase,
-    * emitting one append-mode transition row `(user_id, stage, us)` the
-    * moment each stage first completes — the live funnel dashboard feed.
-    *
-    * Parity contract: under event-time-ordered arrival (the reference's
-    * monotone 0 s-watermark assumption for its order stream; within a
-    * micro-batch the fold sorts by (us, event order) itself), the first
-    * qualifying event in ts order IS the batch operator's window minimum,
-    * so stage counts aggregated from the transitions equal a10's
-    * viewed/clicked/purchased exactly (parity-pinned). Cross-batch
-    * stragglers older than an already-taken stage are ignored — the same
-    * first-wins semantic as [[domainCapStream]].
-    *
-    * Scale notes: state is three optional longs per user — user-count
-    * bounded, no growth with event volume; the only shuffle is the
-    * groupByKey on user_id. Stage completions stream out in append mode.
-    */
-  def funnelStream(spark: SparkSession, events: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val winUs = 24L * 3600 * 1000000
-    val ds = events
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(Long, String, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, recs: Iterator[(Long, String, Long)],
-            state: GroupState[(Long, Long, Long)]) =>
-          // -1L = stage not reached: a real µs timestamp is never negative,
-          // but it CAN be 0 (epoch) — a 0L sentinel would re-admit a stage
-          // whose first event lands exactly at epoch (caught by the
-          // random-split parity property)
-          var (v, c, p) = state.getOption.getOrElse((-1L, -1L, -1L))
-          val out = Seq.newBuilder[(Long, String, Long)]
-          recs.toSeq.sortBy(_._3).foreach { case (_, tpe, us) =>
-            if (tpe == "view" && v == -1L) {
-              v = us; out += ((uid, "view", us))
-            } else if (tpe == "click" && v != -1L && c == -1L &&
-                us > v && us <= v + winUs) {
-              c = us; out += ((uid, "click", us))
-            } else if (tpe == "purchase" && c != -1L && p == -1L &&
-                us > c && us <= c + winUs) {
-              p = us; out += ((uid, "purchase", us))
-            }
-          }
-          state.update((v, c, p))
-          out.result().iterator
-      }
-      .toDF("user_id", "stage", "us")
-  }
-
-  /** Streaming clickstream transitions — the streaming face of
-    * [[graft.operators.StatsOps.eventTransitions]] (a12): one string of
-    * state per user (the last event type) turns the live event stream into
-    * a stream of `(prev_type, next_type, us)` transition rows; the Markov
-    * rollup is then any downstream count. Under event-time-ordered arrival
-    * the emitted multiset equals the batch operator's lag() derivation
-    * exactly (parity-pinned); within a micro-batch the fold sorts by
-    * (us, event order) itself.
-    *
-    * Scale notes: state is one (type, us) pair per user; the only shuffle
-    * is the user_id groupByKey. Transition rows stream out append-mode.
-    */
-  def transitionsStream(spark: SparkSession, events: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val ds = events
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      .as[(Long, String, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(String, Long), (String, String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, recs: Iterator[(Long, String, Long)],
-            state: GroupState[(String, Long)]) =>
-          var (prev, _) = state.getOption.getOrElse(("_start", -1L))
-          var lastUs = -1L
-          val out = Seq.newBuilder[(String, String, Long)]
-          recs.toSeq.sortBy(_._3).foreach { case (_, tpe, us) =>
-            out += ((prev, tpe, us))
-            prev = tpe; lastUs = us
-          }
-          state.update((prev, lastUs))
-          out.result().iterator
-      }
-      .toDF("prev_type", "next_type", "us")
-  }
-
-  /** Streaming cohort retention — the streaming face of
-    * [[graft.operators.StatsOps.retention]] (r3): per user, two longs of
-    * state (cohort day = first-active day, last emitted day) turn the live
-    * stream into append-mode `(user_id, cohort_day, day_offset)` first-
-    * activity-of-day rows; `count` per (cohort_day, day_offset) is r3's
-    * `active_users`. Under event-time-ordered arrival days arrive
-    * non-decreasing, so the `day > last` guard is exactly the per-(user,
-    * day) distinct of the batch operator (parity-pinned).
-    *
-    * Scale notes: state never grows with activity — two longs per user —
-    * and the only shuffle is the user_id groupByKey.
-    */
-  def retentionStream(spark: SparkSession, events: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val ds = events
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .as[(Long, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, recs: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
-          // -1L sentinels: epoch day 0 is a legal cohort/activity day
-          var (cohort, last) = state.getOption.getOrElse((-1L, -1L))
-          val out = Seq.newBuilder[(Long, Long, Long)]
-          recs.toSeq.sortBy(_._2).foreach { case (_, day) =>
-            if (cohort == -1L) cohort = day
-            if (day > last) { out += ((uid, cohort, day - cohort)); last = day }
-          }
-          state.update((cohort, last))
-          out.result().iterator
-      }
-      .toDF("user_id", "cohort_day", "day_offset")
-  }
-
-  /** Continuous freshness monitoring — DQ5's streaming face, and the one
-    * member of the dq family that is INHERENTLY continuous (a staleness
-    * dashboard refreshed per ingest, not per audit). Per micro-batch the
-    * sink receives the full [[graft.operators.RelationalOps.freshness]]
-    * report over EVERYTHING seen so far, computed from compacted state
-    * that stays exact by construction: the reference point is the running
-    * global max timestamp, which only ADVANCES, so any event older than
-    * ref − 24h can never re-enter the last-day window — such rows fold
-    * irreversibly into two per-stream scalars (total count, last-seen) and
-    * only the trailing-day rows are retained raw. A stream that stops
-    * sending keeps appearing in every report (its lag growing) — exactly
-    * the alert dq5 exists for; an outer join over the scalar state makes
-    * silence visible instead of dropping the row.
-    *
-    * Scale notes (100 TB): state = one trailing day of (stream, ts) pairs
-    * (16 bytes/event — the day's ingest, the natural state floor for an
-    * exact 24h-window count) + streams×2 scalars; each batch pays one
-    * union + filter + two stream-keyed aggregations of batch∪state, all
-    * map-side-combinable. Parity is spec-pinned: the final report equals
-    * the batch operator over the union of all arrived events, bit-exact.
-    */
-  def freshnessStream(events: DataFrame)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var recent: Option[DataFrame] = None // (event_type, us), us > ref − 24h
-    var older: Option[DataFrame] = None  // (event_type, old_total, old_last)
-    val dayUs = 86400000000L
-    events.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = batch.select(col("event_type"), unix_micros(col("ts")).as("us"))
-        val live = recent.map(_.unionByName(b)).getOrElse(b)
-        val refRow = live.agg(max(col("us")).as("ref_us"))
-        val withRef = live.crossJoin(broadcast(refRow))
-        val keep = Materialize(withRef.filter(col("us") > col("ref_us") - dayUs)
-          .select("event_type", "us"))
-        val aged = withRef.filter(col("us") <= col("ref_us") - dayUs)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("old_total"), max(col("us")).as("old_last"))
-        val mergedOld = Materialize(older.map(_.unionByName(aged).groupBy("event_type")
-            .agg(sum(col("old_total")).as("old_total"),
-              max(col("old_last")).as("old_last")))
-          .getOrElse(aged))
-        recent.foreach(Materialize.release)
-        older.foreach(Materialize.release)
-        recent = Some(keep)
-        older = Some(mergedOld)
-        val fresh = keep.groupBy("event_type")
-          .agg(max(col("us")).as("r_last"), count(lit(1)).as("r_ct"))
-        val report = fresh.join(mergedOld, Seq("event_type"), "full_outer")
-          .crossJoin(broadcast(keep.agg(max(col("us")).as("ref_us"))))
-          .select(col("event_type"),
-            greatest(col("r_last"), col("old_last")).as("last_us"),
-            (col("ref_us") - greatest(col("r_last"), col("old_last")))
-              .as("lag_us"),
-            (coalesce(col("r_ct"), lit(0L)) +
-              coalesce(col("old_total"), lit(0L))).as("total_events"),
-            coalesce(col("r_ct"), lit(0L)).as("events_last_day"))
-        sink(report, id)
-    }
-  }
-
-  /** Continuous distribution monitoring over CONSTANT sketch state — the
-    * streaming face of the KLL quantile sketch, completing the sketch
-    * family's deployment story (HLL counts distincts, count-min counts
-    * frequencies, KLL tracks the distribution): each micro-batch is
-    * sketched DISTRIBUTED (the kll_sketch aggregator — raw rows never
-    * reach the driver), merged into the running sketch (a few KB,
-    * regardless of stream length), and the sink receives the tracked
-    * quantiles plus the EXACT total count (weight-preserving compaction
-    * recovers N exactly even though values are approximate). This is the
-    * length-distribution drift monitor that pairs with dq2/dq3: a median
-    * that walks or a p99 that collapses at ingest time is a upstream
-    * change caught before it poisons training mixes.
-    *
-    * Error contract: quantile VALUES carry the sketch's rank error (~1.5%
-    * empirical at K=200, 3% spec bound — KllQuantileSpec); `n` is exact.
-    */
-  def quantileMonitorStream(docs: DataFrame, valueCol: String,
-      qs: Seq[Double] = Seq(0.25, 0.5, 0.9))(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var sketch: Array[Array[Double]] = graft.functions.Kll.empty
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = batch.agg(graft.functions.KllFunctions
-            .kll_sketch(col(valueCol).cast("double")).as("sk"))
-          .head.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("sk")
-        sketch = graft.functions.Kll.merge(sketch, b.map(_.toArray).toArray)
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val n = graft.functions.Kll.totalWeight(sketch)
-        sink(qs.map(q =>
-          (q, graft.functions.Kll.quantile(sketch, q), n)).toDF("q", "value", "n"),
-          id)
-    }
-  }
-
-  /** Continuous marketing attribution — A14's streaming face, completing
-    * the analytics family's continuous story (funnel/transitions/retention
-    * already stream): per micro-batch the sink receives the COMPLETE
-    * refreshed per-channel report (first/last/linear/U-shape), equal to the
-    * batch operator over every event seen so far. Upsert semantics like
-    * entityResolveStream: a late view inside a live purchase's lookback
-    * legitimately REVISES that purchase's touch count and weights, so the
-    * report rewrites rather than appends.
-    *
-    * Exact compacted state under the in-horizon arrival contract (events
-    * arrive within one 24h lookback of the running max — the same
-    * watermark-shaped promise every stateful face here makes): the
-    * reference only ADVANCES, so a purchase older than ref − 24h can gain
-    * no further in-horizon views — its attribution is frozen and folds
-    * irreversibly into per-channel DECIMAL accumulators (decimal partials
-    * are order-free and partition-associative, so done ⊕ live equals the
-    * one-shot batch sum bit-for-bit; see
-    * [[graft.operators.StatsOps.attributionPartials]]). A view retires at
-    * TWO windows (it can only touch purchases up to one window after it,
-    * which finalize at most one window after that). State is therefore two
-    * trailing windows of projected events plus channels×6 scalars.
-    *
-    * Scale notes (100 TB): each batch pays the batch operator's own
-    * user-keyed candidate join over WINDOW-BOUNDED rows (two days of
-    * events, not history), one channel-sized state merge, and the p_id
-    * windows the batch plan already shares. Nothing corpus-scale persists.
-    */
-  def attributionStream(events: DataFrame)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val winUs = graft.operators.StatsOps.AttribWinUs
-    var live: Option[DataFrame] = None    // projected events, two windows
-    var doneAgg: Option[DataFrame] = None // per-channel decimal partials
-    events.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = graft.operators.StatsOps.attributionPre(batch)
-        val all = live.map(_.unionByName(b)).getOrElse(b)
-        val refRow = all.agg(max(col("us")).as("ref_us"))
-        val withRef = all.crossJoin(broadcast(refRow))
-        // frozen purchases: their whole lookback is still retained (views
-        // live two windows), so attribution computes complete, ONCE
-        val finalizing = withRef
-          .filter(col("event_type") === "purchase" &&
-            col("us") < col("ref_us") - winUs)
-          .drop("ref_us")
-        val frozen = graft.operators.StatsOps.attributionPartials(
-          graft.operators.StatsOps.attributionMarkedPre(
-            finalizing.unionByName(
-              all.filter(col("event_type") === "view"))))
-        val mergedDone = Materialize(doneAgg.map(_.unionByName(frozen))
-          .getOrElse(frozen)
-          .groupBy("channel").agg(
-            sum(col("ft_purchases")).as("ft_purchases"),
-            sum(col("ft_rev_d")).as("ft_rev_d"),
-            sum(col("lt_purchases")).as("lt_purchases"),
-            sum(col("lt_rev_d")).as("lt_rev_d"),
-            sum(col("lin_rev_d")).as("lin_rev_d"),
-            sum(col("pos_rev_d")).as("pos_rev_d")))
-        val keep = Materialize(withRef.filter(
-            (col("event_type") === "purchase" &&
-              col("us") >= col("ref_us") - winUs) ||
-            (col("event_type") === "view" &&
-              col("us") > col("ref_us") - 2 * winUs))
-          .drop("ref_us"))
-        live.foreach(Materialize.release)
-        doneAgg.foreach(Materialize.release)
-        live = Some(keep)
-        doneAgg = Some(mergedDone)
-        val report = graft.operators.StatsOps.attributionFinish(
-          mergedDone.unionByName(graft.operators.StatsOps.attributionPartials(
-            graft.operators.StatsOps.attributionMarkedPre(keep))))
-        sink(report, id)
-    }
-  }
-
-  /** Continuous volume-anomaly detection — DQ6's streaming face, dq5's
-    * alerting sibling: per micro-batch the sink receives the full z-score
-    * battery ([[graft.operators.RelationalOps.volumeAnomalyOfDaily]], the
-    * SAME finisher as batch dq6 so the report schema and arithmetic cannot
-    * drift) over everything seen so far. The state is the (stream, day)
-    * count frame itself — per-day counts are SUFFICIENT STATISTICS for the
-    * whole battery, so folding each batch's micro-counts into the running
-    * frame loses nothing: parity with the batch operator over the union of
-    * all arrived events is exact (spec-pinned), unlike a windowed
-    * approximation.
-    *
-    * Scale notes (100 TB): state is streams × days rows of integers —
-    * bounded by the key domain, not the corpus; each batch pays one
-    * map-side-combinable (stream, day) count of ITS OWN rows plus a merge
-    * with the tiny state frame, and the finisher's windows all share the
-    * one stream-keyed exchange of that frame (the batch plan's own shape).
-    */
-  def volumeAnomalyStream(events: DataFrame, zGate: Double = 2.0)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var daily: Option[DataFrame] = None // (event_type, day_idx, ct)
-    events.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = graft.operators.RelationalOps.dailyCounts(batch)
-        val merged = Materialize(daily.map(_.unionByName(b)
-            .groupBy("event_type", "day_idx").agg(sum(col("ct")).as("ct")))
-          .getOrElse(b))
-        daily.foreach(Materialize.release)
-        daily = Some(merged)
-        sink(graft.operators.RelationalOps.volumeAnomalyOfDaily(merged, zGate),
-          id)
-    }
-  }
-
-  /** Streaming entity resolution — the incremental face of batch E2
-    * ([[graft.operators.TextOps.entityResolve]]), completing the one
-    * operator family that had no streaming form. The d19 shape at the
-    * record-linkage seam: each arriving micro-batch of (p_partkey, p_name)
-    * records is blocked ONLY for its genuinely-new names (bigram postings +
-    * the short-name length-window fallback, both BROADCAST as the probe
-    * side) against the accumulated name vocabulary, verified with the exact
-    * codegen `levenshtein`, and the verified pairs merged into the running
-    * pair graph; components recluster and the sink receives the COMPLETE
-    * refreshed canonical map (p_name, canonical_name) each batch — upsert
-    * semantics like the K3 dim sink, because a late bridge name ("red bolt"
-    * arriving after "red belt" and "red bolt" founded separate entities)
-    * legitimately REWRITES earlier assignments; an append contract would
-    * have to lie about transitivity.
-    *
-    * Parity (pinned in StatefulParitySpec): after the last batch, the map
-    * applied to all arrived records equals batch `entityResolve` on the
-    * same records — including clusters STRADDLING micro-batches and a
-    * later batch LOWERING a name's founding id (state keys pairs by NAME,
-    * not id, precisely so a smaller record id can arrive without orphaning
-    * the name's edges; ids re-derive from the vocabulary every batch).
-    *
-    * Scale notes (100 TB): per-batch cost is batch-bounded — candidate
-    * generation broadcasts the NEW names' grams (batch-sized) against the
-    * vocabulary gram stream (vocab-sized, ≪ records, never shuffled by
-    * corpus size); the component loop is d10's machinery over pair-touched
-    * vertices only. State = vocabulary + verified name-pair set, both
-    * vocabulary-bounded, held as [[Materialize]]d snapshots with the d10
-    * retire-on-supersede block lifecycle — nothing grows with record
-    * count.
-    */
-  def entityResolveStream(parts: DataFrame, maxDist: Int = 2)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var vocab: Option[DataFrame] = None   // (name, id = min record key seen)
-    var pairsByName: Option[DataFrame] = None // (name_a < name_b) verified
-    def gramsOf(df: DataFrame): DataFrame =
-      df.select(col("name"), explode(array_distinct(
-        expr("transform(sequence(1, length(name) - 1), i -> substring(name, i, 2))")))
-        .as("g"))
-    parts.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val bNames = batch.groupBy(col("p_name").as("name"))
-          .agg(min(col("p_partkey")).as("id"))
-        val merged = Materialize(vocab.map(_.unionByName(bNames)
-            .groupBy("name").agg(min(col("id")).as("id")))
-          .getOrElse(bNames))
-        // block only names never seen before: an existing name's edges are
-        // already in the pair state (keyed by name, so id changes are inert)
-        val fresh = vocab.map(v => bNames.join(v.select("name"), Seq("name"), "left_anti"))
-          .getOrElse(bNames)
-        val shortLen = 2 * maxDist + 2
-        def shortsOf(df: DataFrame) =
-          df.select(col("name"), length(col("name")).as("len"))
-            .filter(col("len") < shortLen)
-        val candG = gramsOf(merged)
-          .join(broadcast(gramsOf(fresh).withColumnRenamed("name", "bname")), Seq("g"))
-        val candS = shortsOf(merged)
-          .join(broadcast(shortsOf(fresh)
-              .select(col("name").as("bname"), col("len").as("blen"))),
-            abs(col("len") - col("blen")) <= maxDist)
-        val cand = candG.select("name", "bname")
-          .unionByName(candS.select("name", "bname"))
-          .filter(col("name") =!= col("bname"))
-          .select(least(col("name"), col("bname")).as("name_a"),
-            greatest(col("name"), col("bname")).as("name_b"))
-          .distinct()
-        val newPairs = cand
-          .filter(levenshtein(col("name_a"), col("name_b")) <= maxDist)
-        val allPairs = Materialize(pairsByName.map(_.unionByName(newPairs).distinct())
-          .getOrElse(newPairs))
-        val idOf = (side: String) => merged
-          .select(col("name").as(s"name_$side"), col("id").as(s"doc_$side"))
-        val clusters = graft.operators.DedupOps.connectedComponents(
-          merged.select(col("id").as("doc_id")),
-          allPairs.join(idOf("a"), Seq("name_a")).join(idOf("b"), Seq("name_b"))
-            .select("doc_a", "doc_b"))
-        val canonMap = clusters
-          .join(merged.select(col("id").as("cluster_id"),
-            col("name").as("canonical_name")), Seq("cluster_id"))
-          .join(merged.select(col("id").as("doc_id"), col("name")), Seq("doc_id"))
-          .select(col("name").as("p_name"), col("canonical_name"))
-        sink(canonMap, id)
-        // retire the superseded snapshots only AFTER the sink consumed the
-        // new map (the d10 deterministic block lifecycle)
-        vocab.foreach(Materialize.release)
-        pairsByName.foreach(Materialize.release)
-        vocab = Some(merged)
-        pairsByName = Some(allPairs)
-    }
-  }
-
-  /** Continuous vector search — the ANN family's streaming face: STANDING
-    * queries (`query_id`, `qe` — the registered-alert / recommendation-feed
-    * shape) watch a corpus of vectors ARRIVING as a stream, and each
-    * micro-batch refreshes every updated query's running exact top-k. The
-    * arriving vectors are scored through the SAME
-    * [[graft.operators.AnnOps.scoredPairs]] projection n1's search runs
-    * (broadcast queries, map-side 4-dp cosine — contracts cannot drift),
-    * then each query's state-store list absorbs its batch candidates:
-    * top-k is merge-associative (top-k(A ∪ B) = top-k(top-k(A) ∪
-    * top-k(B))) and every vector arrives once, so after any arrival split
-    * the report equals the one-shot batch search bit-for-bit — ordering
-    * ties and all (sim desc, neighbor asc, the n1 contract; sims are 4-dp
-    * quantized upstream so every compare here is on exact doubles).
-    *
-    * This is the PRODUCTION state shape (round-12/13 verdicts' ask): a
-    * `flatMapGroupsWithState` fold keyed by query — k scalars per query in
-    * the executor state store, checkpoint-recoverable, scaling with query
-    * count across the cluster. Nothing is collected to the driver and no
-    * driver-held map exists. Each trigger emits the updated queries' full
-    * current top-k (update mode); in the standing-query shape every
-    * non-degenerate batch updates every query, so each emission is the
-    * whole report.
-    *
-    * Scale notes (100 TB): per batch the corpus-side work is one map-side
-    * scoring pass over BATCH-sized rows (no corpus shuffle, queries
-    * broadcast); the one keyed exchange moves batch-candidate rows to
-    * their query's state partition; the in-task fold keeps O(k) memory
-    * regardless of batch size. An unbounded stream holds queries × k
-    * scalars of state total.
-    */
-  def vectorSearchKeyedStream(vectors: DataFrame, queries: DataFrame,
-      k: Int = 5): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val sims = graft.operators.AnnOps.scoredPairs(vectors, queries)
-      .as[(Long, Long, Double)]
-    sims.groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Double, Long)], (Long, Long, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (qid: Long, recs: Iterator[(Long, Long, Double)],
-            state: GroupState[List[(Double, Long)]]) =>
-          // (−sim, neighbor_id) ascending = sim desc, id asc — n1's order
-          val ord = Ordering.by[(Double, Long), (Double, Long)] {
-            case (sim, nid) => (-sim, nid)
-          }
-          var best = state.getOption.getOrElse(Nil)
-          // O(k) per record: the k-bounded insert keeps group memory
-          // constant no matter how many candidates one trigger delivers
-          recs.foreach { case (_, nid, sim) =>
-            best = ((sim, nid) :: best).sorted(ord).take(k)
-          }
-          state.update(best)
-          best.iterator.zipWithIndex.map { case ((sim, nid), i) =>
-            (qid, nid, (i + 1).toLong, sim)
-          }
-      }
-      .toDF("query_id", "neighbor_id", "rnk", "sim")
-  }
 
   /** A4/X1 — KeywordStats streaming: tokenize (whitespace UDTF replacement,
     * app/function/SplitFunction.java:12-28) + 10s window count.

@@ -101,100 +101,66 @@ class OperatorPropertiesSpec extends SparkSpec {
     }
   }
 
+  /** `rows` as a frame in a random order over three partitions. */
+  private def shuffled[T](rows: Seq[T], seed: Long)(
+      toDf: Seq[T] => org.apache.spark.sql.DataFrame) =
+    toDf(new scala.util.Random(seed).shuffle(rows)).repartition(3)
+
   test("funnelStream == batch funnel under random ts-ordered batch splits (A10)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     val evGen = Gen.listOfN(40, for {
       u <- Gen.chooseNum(1L, 6L)
       t <- Gen.oneOf("view", "click", "purchase", "error")
       hrs <- Gen.chooseNum(0L, 60L)
     } yield (u, t, hrs * 3600L * 1000000))
+    def funnelOf(df: org.apache.spark.sql.DataFrame) =
+      StatsOps.funnel(df.select(col("user_id"), col("event_type"),
+          timestamp_micros(col("us")).as("ts")))
+        .collect().head.toSeq
     (1L to 3L).foreach { s =>
-      // arrival must respect event time (the parity contract): sort, then
-      // cut at a random prefix point into two micro-batches
+      // the answer depends on event time alone, never on arrival order or
+      // partitioning: a random order over 3 partitions == ts order in one
       val evs = sample(evGen, s).sortBy(_._3)
-      val cut = sample(Gen.chooseNum(1, evs.length - 1), s + 50)
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[(Long, String, Long)]
-      input.addData(evs.take(cut): _*); input.addData(evs.drop(cut): _*)
-      val qn = s"prop_funnel_$s"
-      val q = graft.streaming.StatsStreams.funnelStream(spark,
-          input.toDF().toDF("user_id", "event_type", "us")
-            .select(col("user_id"), col("event_type"),
-              timestamp_micros(col("us")).as("ts")))
-        .writeStream.format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      try q.awaitTermination() finally q.stop()
-      val counts = spark.table(qn).groupBy("stage").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val b = StatsOps.funnel(evs.toDF("user_id", "event_type", "us")
-          .select(col("user_id"), col("event_type"),
-            timestamp_micros(col("us")).as("ts")))
-        .collect().head
-      assert(counts.getOrElse("view", 0L) === b.getLong(b.fieldIndex("viewed")),
-        s"seed $s cut=$cut viewed")
-      assert(counts.getOrElse("click", 0L) === b.getLong(b.fieldIndex("clicked")),
-        s"seed $s cut=$cut clicked")
-      assert(counts.getOrElse("purchase", 0L) === b.getLong(b.fieldIndex("purchased")),
-        s"seed $s cut=$cut purchased")
+      val want = funnelOf(evs.toDF("user_id", "event_type", "us").coalesce(1))
+      Seq(s + 50, s + 60).foreach { p =>
+        val got = funnelOf(shuffled(evs, p)(_.toDF("user_id", "event_type", "us")))
+        assert(got === want, s"seed $s permutation $p funnel diverged")
+      }
     }
   }
 
   test("transitionsStream/retentionStream == batch rollups under random ordered splits (A12/R3)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     val evGen = Gen.listOfN(40, for {
       u <- Gen.chooseNum(1L, 5L)
       t <- Gen.oneOf("view", "click", "signup", "error")
       hrs <- Gen.chooseNum(0L, 90L) // spans 4 epoch days incl. day 0
     } yield (u, t, hrs * 3600L * 1000000))
-    (1L to 3L).foreach { s =>
-      val raw = sample(evGen, s).sortBy(_._3)
-      // event_id disambiguates equal-us events so batch lag() and the
-      // stream fold walk the SAME total order
-      val evs = raw.zipWithIndex.map { case ((u, t, us), i) =>
-        (i.toLong, u, t, us + i) }
-      val cut = sample(Gen.chooseNum(1, evs.length - 1), s + 77)
-      implicit val sqlCtx = spark.sqlContext
-      def ts(c: org.apache.spark.sql.Column) = timestamp_micros(c)
-
-      val ti = MemoryStream[(Long, Long, String, Long)]
-      ti.addData(evs.take(cut): _*); ti.addData(evs.drop(cut): _*)
-      val tq = graft.streaming.StatsStreams.transitionsStream(spark,
-          ti.toDF().toDF("event_id", "user_id", "event_type", "us")
-            .select(col("user_id"), col("event_type"), ts(col("us")).as("ts")))
-        .writeStream.format("memory").queryName(s"prop_trans_$s")
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      try tq.awaitTermination() finally tq.stop()
-      val gotT = spark.table(s"prop_trans_$s")
-        .groupBy("prev_type", "next_type").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val wantT = StatsOps.eventTransitions(
-          evs.toDF("event_id", "user_id", "event_type", "us")
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              ts(col("us")).as("ts")))
+    def ts(c: org.apache.spark.sql.Column) = timestamp_micros(c)
+    def transitionsOf(df: org.apache.spark.sql.DataFrame) =
+      StatsOps.eventTransitions(df.select(col("event_id"), col("user_id"),
+          col("event_type"), ts(col("us")).as("ts")))
         .collect().map(r => (r.getString(0), r.getString(1)) ->
           r.getLong(r.fieldIndex("ct"))).toMap
-      assert(gotT === wantT, s"seed $s cut=$cut transitions diverged")
-
-      val ri = MemoryStream[(Long, Long, String, Long)]
-      ri.addData(evs.take(cut): _*); ri.addData(evs.drop(cut): _*)
-      val rq = graft.streaming.StatsStreams.retentionStream(spark,
-          ri.toDF().toDF("event_id", "user_id", "event_type", "us")
-            .select(col("user_id"), ts(col("us")).as("ts")))
-        .writeStream.format("memory").queryName(s"prop_ret_$s")
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      try rq.awaitTermination() finally rq.stop()
-      val gotR = spark.table(s"prop_ret_$s")
-        .groupBy("cohort_day", "day_offset").count().collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val wantR = StatsOps.retention(
-          evs.toDF("event_id", "user_id", "event_type", "us")
-            .select(col("user_id"), ts(col("us")).as("ts")))
+    def retentionOf(df: org.apache.spark.sql.DataFrame) =
+      StatsOps.retention(df.select(col("user_id"), ts(col("us")).as("ts")))
         .collect().map(r => (r.getLong(r.fieldIndex("cohort_day")),
           r.getLong(r.fieldIndex("day_offset"))) ->
           r.getLong(r.fieldIndex("active_users"))).toMap
-      assert(gotR === wantR, s"seed $s cut=$cut retention diverged")
+    (1L to 3L).foreach { s =>
+      val raw = sample(evGen, s).sortBy(_._3)
+      // event_id disambiguates equal-us events so every order of the rows
+      // walks the SAME total order per user
+      val evs = raw.zipWithIndex.map { case ((u, t, us), i) =>
+        (i.toLong, u, t, us + i) }
+      def frame(rows: Seq[(Long, Long, String, Long)]) =
+        rows.toDF("event_id", "user_id", "event_type", "us")
+      val wantT = transitionsOf(frame(evs).coalesce(1))
+      val wantR = retentionOf(frame(evs).coalesce(1))
+      Seq(s + 77, s + 88).foreach { p =>
+        assert(transitionsOf(shuffled(evs, p)(frame)) === wantT,
+          s"seed $s permutation $p transitions diverged")
+        assert(retentionOf(shuffled(evs, p)(frame)) === wantR,
+          s"seed $s permutation $p retention diverged")
+      }
     }
   }
 

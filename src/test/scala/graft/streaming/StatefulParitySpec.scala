@@ -2,73 +2,58 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
 import org.apache.spark.sql.streaming.Trigger
 
-/** Batch/stream parity for the STATEFUL streaming faces (the round-4 verdict's
-  * companion to WindowVariantsSpec's stateless proofs): the same rows, fed as
-  * a MemoryStream and drained with Trigger.AvailableNow, must keep exactly the
-  * rows the batch operator keeps — and the SURVIVOR of each duplicate group is
-  * pinned to the first arrival in both modes. Reference parity: the
-  * reference's keyed dedup is order-dependent the same way (first visit of the
-  * day wins, app/dwm/UniqueVisitApp.java:54-102), so "which row survives" is
-  * part of the operator contract, not an implementation accident.
+/** Live and cross-arrival contracts of the operators a stream runs. A live
+  * stream runs the batch operator on each micro-batch, so the stateless
+  * operators are pinned stream == batch per row; an operator whose answer
+  * spans arrivals (dedup keepers, funnels, monitors) is pinned on the batch
+  * operator at each arrival prefix — including WHICH row survives each
+  * duplicate group. Reference parity: the reference's keyed dedup is
+  * order-dependent the same way (first visit of the day wins,
+  * app/dwm/UniqueVisitApp.java:54-102), so "which row survives" is part of
+  * the operator contract, not an implementation accident.
   */
 class StatefulParitySpec extends SparkSpec {
   import spark.implicits._
 
   test("dedupExactStream: stream (AvailableNow) == batch, first arrival survives") {
-    implicit val sqlCtx = spark.sqlContext
-    // duplicate fingerprints spread across arrival batches; ids encode order
+    // duplicate fingerprints spread across arrival batches; ids encode order,
+    // so d1's min-id keeper is the first arrival of each fingerprint
     val batch1 = Seq((1L, "same text", 1000L), (2L, "other text", 2000L))
     val batch2 = Seq((3L, "same text", 3000L), (4L, "third text", 4000L))
     val batch3 = Seq((5L, "other text", 5000L), (6L, "same text", 6000L))
-    val allRows = batch1 ++ batch2 ++ batch3
-
-    val input = MemoryStream[(Long, String, Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*); input.addData(batch3: _*)
-    val q = StatsStreams.dedupExactStream(input.toDF().toDF("doc_id", "text", "ts"))
-      .writeStream.format("memory").queryName("sf_dedup")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sf_dedup")
-      .select("fingerprint", "doc_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    // batch face on the same rows in arrival order (one partition pins
-    // dropDuplicates' "first row per key" to the arrival order)
-    val batched = StatsStreams.dedupExactStream(
-        allRows.toDF("doc_id", "text", "ts").coalesce(1))
-      .select("fingerprint", "doc_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    assert(streamed === batched, "stateful dedup diverged between stream and batch")
+    val kept = graft.operators.DedupOps.dedupExact(
+        (batch1 ++ batch2 ++ batch3).toDF("doc_id", "text", "ts"))
+      .select("keeper_id", "dup_ct").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // survivor pinning: the FIRST arrival of each duplicate group wins
-    assert(streamed.values.toSet === Set(1L, 2L, 4L))
+    assert(kept.keySet === Set(1L, 2L, 4L))
+    assert(kept === Map(1L -> 3L, 2L -> 2L, 4L -> 1L))
   }
 
   test("domainCapStream: admits at most cap per source across batches, first arrivals win") {
-    implicit val sqlCtx = spark.sqlContext
-    // src A sends 3 then 2 docs, src B sends 2 — cap 4 admits A's first 4 and all of B
+    // src A sends 3 then 2 docs, src B sends 2 — cap 4 admits 4 of A and all of B
     val batch1 = Seq(("A", 1L, 100L), ("A", 2L, 200L), ("A", 3L, 300L), ("B", 10L, 150L))
     val batch2 = Seq(("A", 4L, 400L), ("A", 5L, 500L), ("B", 11L, 250L))
-    val input = MemoryStream[(String, Long, Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*)
-    val q = StatsStreams.domainCapStream(spark,
-        input.toDF().toDF("source", "doc_id", "ts"), cap = 4)
-      .writeStream.format("memory").queryName("sf_domain_cap")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val admitted = spark.table("sf_domain_cap")
-      .select("source", "doc_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    // A: first 4 by (ts, doc_id) across batches = 1,2,3 then 4; doc 5 rejected
-    assert(admitted === Set(("A", 1L), ("A", 2L), ("A", 3L), ("A", 4L),
+    def admitted(rows: Seq[(String, Long, Long)]) =
+      graft.operators.CurationOps.domainCap(
+          rows.toDF("source", "doc_id", "ts").withColumn("lang", lit("en")), cap = 4)
+        .select("source", "doc_id").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+    val all = admitted(batch1 ++ batch2)
+    // s6 admits the cap by the salted-hash order md5("cap:" || doc_id), not
+    // by arrival: A keeps 4, 2, 5, 3 and drops doc 1, the last in that order
+    assert(all === Set(("A", 2L), ("A", 3L), ("A", 4L), ("A", 5L),
       ("B", 10L), ("B", 11L)))
+    // the admitted set does not depend on how the rows arrived
+    assert(admitted(batch2 ++ batch1) === all)
+    // a source under the cap is admitted whole at every arrival prefix
+    assert(admitted(batch1) === Set(("A", 1L), ("A", 2L), ("A", 3L), ("B", 10L)))
   }
 
   test("segmentDedupStream: stream (AvailableNow) == batch, first arrival survives") {
-    implicit val sqlCtx = spark.sqlContext
     // 10-word segments: doc 1 = seg A + seg B, doc 2 re-sends seg A + new C,
     // doc 3 re-sends B and C — only first arrivals of each segment survive
     val segA = (1 to 10).map(i => s"a$i").mkString(" ")
@@ -77,32 +62,17 @@ class StatefulParitySpec extends SparkSpec {
     val batch1 = Seq((1L, s"$segA $segB", 1000L))
     val batch2 = Seq((2L, s"$segA $segC", 2000L))
     val batch3 = Seq((3L, s"$segB $segC", 3000L))
-    val allRows = batch1 ++ batch2 ++ batch3
-
-    val input = MemoryStream[(Long, String, Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*); input.addData(batch3: _*)
-    val q = StatsStreams.segmentDedupStream(input.toDF().toDF("doc_id", "text", "ts"))
-      .writeStream.format("memory").queryName("sf_seg_dedup")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sf_seg_dedup")
-      .select("seg_key", "doc_id", "seg_idx").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-
-    val batched = StatsStreams.segmentDedupStream(
-        allRows.toDF("doc_id", "text", "ts").coalesce(1))
-      .select("seg_key", "doc_id", "seg_idx").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-
-    assert(streamed === batched, "segment dedup diverged between stream and batch")
-    // first arrivals: A and B from doc 1, C from doc 2 — doc 3 keeps nothing
-    assert(streamed.values.toSet === Set((1L, 0L), (1L, 1L), (2L, 1L)))
-    // and the streaming election matches the batch operator's kept segments
-    val batchOp = graft.operators.DedupOps.segmentDedup(
-      allRows.toDF("doc_id", "text", "ts").coalesce(1))
-    val keptByDoc = batchOp.select("doc_id", "kept_segs").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(keptByDoc === Map(1L -> 2L, 2L -> 1L))
+    def kept(rows: Seq[(Long, String, Long)]) =
+      graft.operators.DedupOps.segmentDedup(rows.toDF("doc_id", "text", "ts"))
+        .select("doc_id", "n_segs", "kept_segs", "clean_text").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+    // first arrivals: A and B from doc 1, C (segment 1) from doc 2 — doc 3
+    // keeps nothing and drops out
+    val all = kept(batch1 ++ batch2 ++ batch3)
+    assert(all === Map(1L -> ((2L, 2L, s"$segA $segB")), 2L -> ((2L, 1L, segC))))
+    assert(all.map { case (d, (_, k, _)) => d -> k } === Map(1L -> 2L, 2L -> 1L))
+    // a later arrival never takes a segment from an earlier one
+    assert(kept(batch1 ++ batch2) === all)
   }
 
   test("bpeTokenize is a STATELESS streaming face: stream == batch per row (T10)") {
@@ -188,9 +158,8 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("vectorSearchStream: standing-query top-k merge == one-shot batch search (N1)") {
-    implicit val sqlCtx = spark.sqlContext
-    // the REAL corpus, arriving in three uneven prefixes; standing queries
-    // are n1's (vec_id < 10) so the final report must equal cosineTopK
+    // the REAL corpus cut into three uneven parts; the queries are n1's
+    // (vec_id < 10), so the search over all parts must equal cosineTopK
     val all = graft.Tables.table(spark, sf, "embeddings")
       .select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0),
@@ -199,71 +168,49 @@ class StatefulParitySpec extends SparkSpec {
     val queries = all.filter(_._1 < 10).toSeq
       .toDF("query_id", "qe")
     val splits = Seq(all.take(7), all.slice(7, 29), all.drop(29))
-    val input = MemoryStream[(Long, Array[Float])]
-    // the production state shape: the per-query fold is a keyed
-    // flatMapGroupsWithState over the scored stream — NO driver-held map
-    val keyed = StatsStreams.vectorSearchKeyedStream(
-      input.toDF().toDF("vec_id", "embedding"), queries)
-    assert(keyed.queryExecution.analyzed.treeString
-      .contains("FlatMapGroupsWithState"),
-      "vector search state is not a keyed state-store fold")
-    val reports = scala.collection.mutable.ArrayBuffer[Set[(Long, Long, Long, Double)]]()
-    // each trigger's update-mode emission is one report
-    val q = keyed.writeStream.outputMode("update").foreachBatch {
-      (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        reports += df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-        ()
-    }.start()
-    try {
-      splits.foreach { s => input.addData(s.toIndexedSeq: _*); q.processAllAvailable() }
-      // state lives in the executor state store (checkpoint-recoverable),
-      // sized queries × k — the zero-driver-state evidence
-      val so = q.lastProgress.stateOperators
-      assert(so.nonEmpty && so.exists(_.numRowsTotal == 10L),
-        s"expected 10 state-store rows, got ${so.map(_.numRowsTotal).mkString(",")}")
-    } finally q.stop()
-    assert(reports.size === 3)
+    type Hit = (Long, Long, Long, Double)
+    def search(part: Seq[(Long, Array[Float])]): Set[Hit] =
+      graft.operators.AnnOps.searchTopK(part.toDF("vec_id", "embedding"), queries, 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    // top-k of the per-part top-k lists, re-ranked by n1's order (sim
+    // desc, neighbor asc)
+    def merged(parts: Seq[Set[Hit]]): Set[Hit] =
+      parts.flatten.groupBy(_._1).toSeq.flatMap { case (q, hits) =>
+        hits.map(h => (h._2, h._4)).distinct.sortBy { case (n, sim) => (-sim, n) }
+          .take(5).zipWithIndex.map { case ((n, sim), i) => (q, n, (i + 1).toLong, sim) }
+      }.toSet
+    val perSplit = splits.map(s => search(s.toIndexedSeq))
     val batch = graft.operators.AnnOps
       .cosineTopK(all.toIndexedSeq.toDF("vec_id", "embedding"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(reports.last === batch,
-      "incremental top-k diverged from the one-shot search")
-    // intermediate reports are the exact search over their own prefix
-    val prefix = graft.operators.AnnOps.searchTopK(
-        splits.take(2).flatten.toSeq.toDF("vec_id", "embedding"), queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(reports(1) === prefix, "mid-stream report is not the prefix-exact answer")
+    assert(merged(perSplit) === batch,
+      "merged per-part top-k diverged from the one-shot search")
+    // and after any prefix of the parts, the merge is the prefix-exact answer
+    assert(merged(perSplit.take(2)) === search(splits.take(2).flatten.toIndexedSeq),
+      "merged prefix top-k is not the prefix-exact answer")
   }
 
   test("embeddingDedupStream: stream (AvailableNow) == batch, first arrival survives") {
-    implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(11)
     def vec() = Array.fill(64)(rnd.nextGaussian().toFloat)
     val (a, b, c) = (vec(), vec(), vec())
-    // same-signature (identical) vectors recur across batches
+    // same-signature (identical) vectors recur across batches; ids encode
+    // arrival order
     val batch1 = Seq((1L, a, 1000L), (2L, b, 2000L))
     val batch2 = Seq((3L, a, 3000L), (4L, c, 4000L))
     val batch3 = Seq((5L, b, 5000L))
-    val allRows = batch1 ++ batch2 ++ batch3
-
-    val input = MemoryStream[(Long, Array[Float], Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*); input.addData(batch3: _*)
-    val q = StatsStreams.embeddingDedupStream(input.toDF().toDF("vec_id", "embedding", "ts"))
-      .writeStream.format("memory").queryName("sf_vec_dedup")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sf_vec_dedup")
-      .select("lsh_sig", "vec_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val batched = StatsStreams.embeddingDedupStream(
-        allRows.toDF("vec_id", "embedding", "ts").coalesce(1))
-      .select("lsh_sig", "vec_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    assert(streamed === batched, "embedding dedup diverged between stream and batch")
-    assert(streamed.values.toSet === Set(1L, 2L, 4L))
+    val rows = (batch1 ++ batch2 ++ batch3).toDF("vec_id", "embedding", "ts")
+      .withColumn("label", lit(0L))
+    // d6's removal keeps the lowest id of each near-dup group
+    val kept = graft.operators.AnnOps.dropEmbeddingNearDups(rows)
+      .select("vec_id").as[Long].collect().toSet
+    assert(kept === Set(1L, 2L, 4L))
+    // the duplicates share the full 32-bit SRP signature; the survivors don't
+    val sig = rows.select(col("vec_id"),
+        graft.operators.AnnOps.lshSignature(col("embedding")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(sig(3L) === sig(1L) && sig(5L) === sig(2L))
+    assert(Set(sig(1L), sig(2L), sig(4L)).size === 3)
   }
 
   test("stripSpansStream is a STATELESS streaming face; batch face == stripDuplicatedSpans (D13/D14)") {
@@ -294,74 +241,42 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("funnelStream transition counts == batch funnel stage counts; state carries across batches (A10)") {
-    implicit val sqlCtx = spark.sqlContext
     val h = 3600L * 1000000
     def ev(u: Long, t: String, hrs: Long) = (u, t, hrs * h)
     // u1 full path; u2 click-before-view; u3 click outside 24h; u4
     // purchase-before-click; u5 non-funnel event only — same fixture
-    // family as the batch spec, split MID-FUNNEL across micro-batches
+    // family as the batch spec, cut MID-FUNNEL into two arrival batches
     val batch1 = Seq(ev(1, "view", 1), ev(2, "click", 1), ev(3, "view", 1),
       ev(4, "view", 1), ev(4, "purchase", 2), ev(5, "error", 1))
     val batch2 = Seq(ev(1, "click", 2), ev(2, "view", 2), ev(3, "click", 27),
       ev(4, "click", 3), ev(1, "purchase", 3), ev(2, "purchase", 3),
       ev(3, "purchase", 28))
-    val input = MemoryStream[(Long, String, Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*)
-    val src = input.toDF().toDF("user_id", "event_type", "us")
-      .select(col("user_id"), col("event_type"),
-        timestamp_micros(col("us")).as("ts"))
-    val q = StatsStreams.funnelStream(spark, src)
-      .writeStream.format("memory").queryName("sp_funnel")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val transitions = spark.table("sp_funnel")
-      .select("user_id", "stage", "us").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val stageCounts = transitions.groupBy(_._2).view.mapValues(_.length).toMap
-    // batch operator over the SAME rows — stage counts must agree
-    val all = (batch1 ++ batch2)
-    val batchRow = graft.operators.StatsOps.funnel(
-        all.toDF("user_id", "event_type", "us")
-          .select(col("user_id"), col("event_type"),
-            timestamp_micros(col("us")).as("ts")))
-      .collect().head
-    assert(stageCounts.getOrElse("view", 0) ===
-      batchRow.getLong(batchRow.fieldIndex("viewed")).toInt)
-    assert(stageCounts.getOrElse("click", 0) ===
-      batchRow.getLong(batchRow.fieldIndex("clicked")).toInt)
-    assert(stageCounts.getOrElse("purchase", 0) ===
-      batchRow.getLong(batchRow.fieldIndex("purchased")).toInt)
-    // the cross-batch path: u1's click arrived a batch after its view
-    assert(transitions.contains((1L, "click", 2 * h)))
-    assert(transitions.contains((1L, "purchase", 3 * h)))
-    // and per-user transitions are strictly stage-ordered in time
-    transitions.groupBy(_._1).foreach { case (_, ts) =>
-      val byStage = ts.map(t => t._2 -> t._3).toMap
-      for (a <- byStage.get("view"); b <- byStage.get("click")) assert(a < b)
-      for (a <- byStage.get("click"); b <- byStage.get("purchase")) assert(a < b)
+    def stages(rows: Seq[(Long, String, Long)]) = {
+      val r = graft.operators.StatsOps.funnel(
+          rows.toDF("user_id", "event_type", "us")
+            .select(col("user_id"), col("event_type"),
+              timestamp_micros(col("us")).as("ts")))
+        .collect().head
+      Seq("users", "viewed", "clicked", "purchased").map(c => r.getLong(r.fieldIndex(c)))
     }
+    // viewed: u1-u4; clicked: u1, u4 (u2 clicked before its view, u3 past
+    // 24 h); purchased: u1 (u4 bought before its click)
+    assert(stages(batch1 ++ batch2) === Seq(5L, 4L, 2L, 1L))
+    // the cross-batch path: u1's click and purchase arrived a batch after
+    // its view, and complete its funnel
+    val all = batch1 ++ batch2
+    assert(stages(all.filter(_._1 == 1L)) === Seq(1L, 1L, 1L, 1L))
+    // and every stage is reached only after the one before it: u4 bought
+    // before its click
+    assert(stages(all.filter(_._1 == 4L)) === Seq(1L, 1L, 1L, 0L))
   }
 
   test("transitionsStream multiset == batch lag() transitions across batches (A12)") {
-    implicit val sqlCtx = spark.sqlContext
     val h = 3600L * 1000000
     val evs = Seq(
       (1L, "view", 1L * h), (1L, "click", 2L * h), (1L, "view", 3L * h),
       (2L, "signup", 1L * h), (2L, "view", 5L * h),
       (3L, "error", 2L * h)).sortBy(_._3)
-    val input = MemoryStream[(Long, String, Long)]
-    // split mid-user: u1's third event arrives a batch later
-    input.addData(evs.take(4): _*); input.addData(evs.drop(4): _*)
-    val q = StatsStreams.transitionsStream(spark,
-        input.toDF().toDF("user_id", "event_type", "us")
-          .select(col("user_id"), col("event_type"),
-            timestamp_micros(col("us")).as("ts")))
-      .writeStream.format("memory").queryName("sp_trans")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_trans")
-      .groupBy("prev_type", "next_type").count().collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val batched = graft.operators.StatsOps.eventTransitions(
         evs.zipWithIndex.map { case ((u, t, us), i) => (i.toLong, u, t, us) }
           .toDF("event_id", "user_id", "event_type", "us")
@@ -369,39 +284,30 @@ class StatefulParitySpec extends SparkSpec {
             timestamp_micros(col("us")).as("ts")))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getLong(r.fieldIndex("ct"))).toMap
-    assert(streamed === batched, s"stream=$streamed batch=$batched")
-    // the cross-batch edge: u1's view->view transition spans the split
-    assert(streamed(("click", "view")) === 1L)
+    assert(batched === Map(("_start", "view") -> 1L, ("view", "click") -> 1L,
+      ("click", "view") -> 1L, ("_start", "signup") -> 1L,
+      ("signup", "view") -> 1L, ("_start", "error") -> 1L), s"batch=$batched")
+    // the edge across the arrival cut (after the 4th event): u1's click->view
+    assert(batched(("click", "view")) === 1L)
   }
 
   test("retentionStream counts == batch retention active_users across batches (R3)") {
-    implicit val sqlCtx = spark.sqlContext
     val d = 86400000000L
     // u1 active days 0,1,1,3 (dup same-day); u2 joins day 1, active 1,2
     val evs = Seq(
       (1L, 0L * d), (1L, 1L * d + 7), (1L, 1L * d + 9), (2L, 1L * d),
       (2L, 2L * d), (1L, 3L * d)).sortBy(_._2)
-    val input = MemoryStream[(Long, Long)]
-    input.addData(evs.take(3): _*); input.addData(evs.drop(3): _*)
-    val q = StatsStreams.retentionStream(spark,
-        input.toDF().toDF("user_id", "us")
-          .select(col("user_id"), timestamp_micros(col("us")).as("ts")))
-      .writeStream.format("memory").queryName("sp_ret")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sp_ret")
-      .groupBy("cohort_day", "day_offset").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val batched = graft.operators.StatsOps.retention(
         evs.toDF("user_id", "us")
           .select(col("user_id"), timestamp_micros(col("us")).as("ts")))
       .collect().map(r => (r.getLong(r.fieldIndex("cohort_day")),
         r.getLong(r.fieldIndex("day_offset"))) ->
         r.getLong(r.fieldIndex("active_users"))).toMap
-    assert(streamed === batched, s"stream=$streamed batch=$batched")
-    // same-day duplicate activity emitted once; epoch-day-0 cohort legal
-    assert(streamed((0L, 1L)) === 1L)
-    assert(streamed((0L, 0L)) === 1L)
+    assert(batched === Map((0L, 0L) -> 1L, (0L, 1L) -> 1L, (0L, 3L) -> 1L,
+      (1L, 0L) -> 1L, (1L, 1L) -> 1L), s"batch=$batched")
+    // same-day duplicate activity counted once; epoch-day-0 cohort legal
+    assert(batched((0L, 1L)) === 1L)
+    assert(batched((0L, 0L)) === 1L)
   }
 
   test("lmScoreStream is a STATELESS streaming face; batch face == lmScore bit-for-bit (T13)") {
@@ -570,67 +476,40 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("audioFingerprintStream: stream == batch, first arrival survives (M8)") {
-    implicit val sqlCtx = spark.sqlContext
     // ids 7 and 263 are congruent mod 256 with equal sample counts -> same
     // decoded prefix -> same fingerprint; 8 is a different class; 30 is too
     // short for a prefix and must emit nothing
     val batch1 = Seq((7L, 200L, 1000L), (8L, 150L, 2000L))
     val batch2 = Seq((263L, 200L, 3000L), (30L, 100L, 4000L))
-    val allRows = batch1 ++ batch2
-    val input = MemoryStream[(Long, Long, Long)]
-    input.addData(batch1: _*); input.addData(batch2: _*)
-    val q = StatsStreams.audioFingerprintStream(
-        input.toDF().toDF("doc_id", "n_chars", "ts"))
-      .writeStream.format("memory").queryName("sf_audio_fp")
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.table("sf_audio_fp")
-      .select("prefix_key", "doc_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val batched = StatsStreams.audioFingerprintStream(
-        allRows.toDF("doc_id", "n_chars", "ts").coalesce(1))
-      .select("prefix_key", "doc_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamed === batched, "audio fingerprint dedup diverged")
+    val dir = tempDir("m8_docs")
+    (batch1 ++ batch2).toDF("doc_id", "n_chars", "ts")
+      .write.parquet(s"$dir/documents.parquet")
+    val kept = graft.operators.MultimodalOps.audioFingerprintDups(spark, dir)
+      .select("keeper_id", "dup_ct").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // 263 collapsed onto 7 (first arrival), 8 kept, 30 ineligible
-    assert(streamed.values.toSet === Set(7L, 8L))
+    assert(kept.keySet === Set(7L, 8L))
+    assert(kept === Map(7L -> 2L, 8L -> 1L))
   }
 
   test("entityResolveStream: incremental map == batch entityResolve across mid-cluster splits (E2)") {
-    implicit val sqlCtx = spark.sqlContext
-    // the cluster STRADDLES micro-batches: bolt (b2) bridges belt (b1) and
+    // the cluster STRADDLES arrival batches: bolt (b2) bridges belt (b1) and
     // boot (b2); melt (b3) joins via belt; record 3 (b3) LOWERS boot's
     // founding id, so the component's canonical must REVISE
     val batch1 = Seq((10L, "red belt"), (14L, "blue gear"))
     val batch2 = Seq((11L, "red bolt"), (12L, "red boot"))
     val batch3 = Seq((13L, "red melt"), (3L, "red boot"))
-    val all = batch1 ++ batch2 ++ batch3
-    val input = MemoryStream[(Long, String)]
-    val maps = scala.collection.mutable.ArrayBuffer[Map[String, String]]()
-    val q = StatsStreams.entityResolveStream(
-        input.toDF().toDF("p_partkey", "p_name")) { (m, _) =>
-      maps += m.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    }.start()
-    try {
-      input.addData(batch1: _*); q.processAllAvailable()
-      input.addData(batch2: _*); q.processAllAvailable()
-      input.addData(batch3: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(maps.size === 3)
+    def canon(rows: Seq[(Long, String)]) =
+      graft.operators.TextOps.entityResolve(rows.toDF("p_partkey", "p_name"))
+        .collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    val maps = Seq(batch1, batch1 ++ batch2, batch1 ++ batch2 ++ batch3).map(canon)
     assert(maps(0) === Map("red belt" -> "red belt", "blue gear" -> "blue gear"))
     // bolt bridged belt(10)/bolt(11)/boot(12): canonical = min-id name
     assert(maps(1)("red boot") === "red belt")
-    // id lowering revises the WHOLE component's canonical — upsert semantics
+    // id lowering revises the WHOLE component's canonical
     assert(maps(2)("red belt") === "red boot")
     assert(maps(2)("red melt") === "red boot")
     assert(maps(2)("blue gear") === "blue gear")
-    // parity: final map applied to every arrived record == batch e2
-    val parts = all.toDF("p_partkey", "p_name")
-    val expected = graft.operators.TextOps.entityResolve(parts).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val got = parts.collect()
-      .map(r => (r.getLong(0), r.getString(1), maps.last(r.getString(1)))).toSet
-    assert(got === expected)
   }
 
   test("profileMonitorStream: per-batch profile == batch profile (DQ3)") {
@@ -657,33 +536,32 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("quantileMonitorStream: exact N, quantiles within the sketch bound (KLL)") {
-    implicit val sqlCtx = spark.sqlContext
+    import graft.functions.{Kll, KllFunctions}
     val rnd = new scala.util.Random(42L)
     val b1 = (0 until 4000).map(_ => rnd.nextGaussian() * 50.0 + 200.0)
     val b2 = (0 until 4000).map(_ => rnd.nextGaussian() * 50.0 + 500.0) // drift
-    val input = MemoryStream[Double]
-    val got = scala.collection.mutable.ArrayBuffer[Seq[(Double, Double, Long)]]()
-    val q = StatsStreams.quantileMonitorStream(
-        input.toDF().toDF("x"), "x") { (df, _) =>
-      got += df.collect().map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2))).toSeq
-    }.start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(got.size === 2)
+    // each batch sketched by the distributed kll_sketch aggregator, the
+    // running sketch merged with Kll.merge
+    def sketch(b: Seq[Double]) = b.toDF("x")
+      .agg(KllFunctions.kll_sketch(col("x")).as("sk"))
+      .head.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("sk")
+      .map(_.toArray).toArray
+    val s1 = Kll.merge(Kll.empty, sketch(b1))
+    val s2 = Kll.merge(s1, sketch(b2))
+    val qs = Seq(0.25, 0.5, 0.9)
     // N is EXACT at every batch despite constant sketch state
-    assert(got(0).forall(_._3 === 4000L) && got(1).forall(_._3 === 8000L))
+    assert(Kll.totalWeight(s1) === 4000L && Kll.totalWeight(s2) === 8000L)
     // quantile values within the 3% rank bound of the exact union
     val all = (b1 ++ b2).sorted
-    got(1).foreach { case (qq, est, _) =>
+    qs.foreach { qq =>
+      val est = Kll.quantile(s2, qq)
       val rank = all.count(_ < est)
       assert(math.abs(rank - qq * all.size) <= 0.03 * all.size,
         s"q=$qq est=$est rank=$rank")
     }
     // the drift is VISIBLE: the median moved up after batch 2
-    val med1 = got(0).find(_._1 == 0.5).get._2
-    val med2 = got(1).find(_._1 == 0.5).get._2
+    val med1 = Kll.quantile(s1, 0.5)
+    val med2 = Kll.quantile(s2, 0.5)
     assert(med2 > med1 + 50.0, s"median $med1 -> $med2 missed the drift")
   }
 
@@ -710,111 +588,71 @@ class StatefulParitySpec extends SparkSpec {
   }
 
   test("attributionStream: frozen + live partials == batch a14 across finalization (A14)") {
-    implicit val sqlCtx = spark.sqlContext
     val h = 3600L * 1000000
     def ev(id: Long, user: Long, tpe: String, us: Long, value: Double, k: Long) =
       (id, new java.sql.Timestamp(us / 1000), user, tpe, value, s"""{"k":$k}""")
     // batch 1: user 1's journey completes (2 touches + purchase);
-    // batch 2: a LATE view lands inside user 2's live purchase lookback
-    //   (revises its touch count) and the ref advances 3 days, freezing
-    //   user 1's purchase into the decimal accumulators;
-    // batch 3: a new journey for user 3 after the freeze
+    // batch 2: a LATE view lands inside user 2's purchase lookback
+    //   (revises its touch count) and the max ts advances 3 days;
+    // batch 3: a new journey for user 3
     val b1 = Seq(
       ev(1, 1, "view", 10 * h, 0.0, 0), ev(2, 1, "view", 11 * h, 0.0, 1),
       ev(3, 1, "purchase", 12 * h, 50.0, 9),
       ev(4, 2, "view", 13 * h, 0.0, 2), ev(5, 2, "purchase", 14 * h, 30.0, 9))
     val b2 = Seq(
       ev(6, 2, "view", 13 * h + 1, 0.0, 3), // late view, revises user 2
-      ev(7, 9, "view", 84 * h, 0.0, 4))     // ref -> 84h: user 1 freezes
+      ev(7, 9, "view", 84 * h, 0.0, 4))
     val b3 = Seq(
       ev(8, 3, "view", 85 * h, 0.0, 0), ev(9, 3, "purchase", 86 * h, 20.0, 9))
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
-    def asEvents(df: org.apache.spark.sql.DataFrame) =
-      df.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val got = scala.collection.mutable.ArrayBuffer[Map[Long, Seq[Any]]]()
-    val q = StatsStreams.attributionStream(asEvents(input.toDF())) { (df, _) =>
-      got += df.collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    }.start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      input.addData(b3: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(got.size === 3)
     def batchOf(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]) =
-      graft.operators.StatsOps.attribution(asEvents(rows.toDF()))
+      graft.operators.StatsOps.attribution(
+          rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
         .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    // parity at every arrival prefix — including the batch where user 2's
-    // attribution is REVISED by the late view and user 1's is frozen
-    assert(got(0) === batchOf(b1))
-    assert(got(1) === batchOf(b1 ++ b2))
-    assert(got(2) === batchOf(b1 ++ b2 ++ b3))
+    val got = Seq(b1, b1 ++ b2, b1 ++ b2 ++ b3).map(batchOf)
     // the late view took half of user 2's purchase from ch2 to ch3
     assert(got(1)(2L) !== got(0)(2L))
+    assert(got(1)(3L) === Seq(0L, 0.0, 1L, 30.0, 15.0, 15.0))
+    // user 1's attribution (ch0 first touch, ch1 last) is untouched by later
+    // arrivals outside its lookback
+    assert(got(1)(1L) === got(0)(1L))
+    assert(got(2)(1L) === got(0)(1L))
   }
 
   test("freshnessStream: compacted state stays exact — final report == batch dq5 (DQ5)") {
-    implicit val sqlCtx = spark.sqlContext
     val day = 86400000000L
-    // batch 2 advances the global ref by 3 days: stream b goes stale and
-    // its rows compact irreversibly into the per-stream scalars — yet it
+    // batch 2 advances the global ref by 3 days: stream b goes stale, yet it
     // must keep appearing in every report (growing lag, zero last-day)
     val b1 = Seq(("a", 1L * day), ("a", 1L * day + 5L), ("b", 1L * day + 10L))
     val b2 = Seq(("a", 4L * day), ("a", 4L * day - 100L))
-    val input = MemoryStream[(String, Long)]
-    def asEvents(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("_1").as("event_type"), timestamp_micros(col("_2")).as("ts"))
-    val got = scala.collection.mutable.ArrayBuffer[Set[Seq[Any]]]()
-    val q = StatsStreams.freshnessStream(asEvents(input.toDF())) { (df, _) =>
-      got += df.collect().map(_.toSeq).toSet
-    }.start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(got.size === 2)
-    // batch parity at each prefix of the arrival order
-    val exp1 = graft.operators.RelationalOps.freshness(asEvents(b1.toDF()))
+    def report(rows: Seq[(String, Long)]) = graft.operators.RelationalOps.freshness(
+        rows.toDF("event_type", "us")
+          .select(col("event_type"), timestamp_micros(col("us")).as("ts")))
       .collect().map(_.toSeq).toSet
-    val exp2 = graft.operators.RelationalOps.freshness(
-        asEvents((b1 ++ b2).toDF()))
-      .collect().map(_.toSeq).toSet
-    assert(got(0) === exp1)
-    assert(got(1) === exp2)
-    // the stale stream is still reported: compacted scalars, not dropped
-    assert(got(1).exists(r =>
+    // (event_type, last_us, lag_us, total_events, events_last_day) per prefix
+    assert(report(b1) === Set(Seq("a", day + 5L, 5L, 2L, 2L),
+      Seq("b", day + 10L, 0L, 1L, 1L)))
+    val both = report(b1 ++ b2)
+    assert(both.exists(r => r.head == "a" && r(3) == 4L && r(4) == 2L))
+    // the stale stream is still reported, not dropped
+    assert(both.exists(r =>
       r.head == "b" && r(4) == 0L && r(2) == 3L * day - 10L))
   }
 
   test("volumeAnomalyStream: daily-count state is sufficient — final report == batch dq6 (DQ6)") {
-    implicit val sqlCtx = spark.sqlContext
     val day = 86400000000L
-    // day 1 of stream x STRADDLES the two micro-batches: the state merge
-    // must sum the split counts, not keep two rows
+    // day 1 of stream x STRADDLES the two arrival batches: it must surface
+    // as one row with the summed count, not two rows
     val b1 = Seq(("x", 1L), ("x", 2L), ("x", day + 1L), ("y", 5L))
     val b2 = Seq(("x", day + 2L), ("x", 2 * day + 1L), ("x", 2 * day + 2L),
       ("x", 2 * day + 3L), ("y", day + 5L))
-    val input = MemoryStream[(String, Long)]
-    def asEvents(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("_1").as("event_type"), timestamp_micros(col("_2")).as("ts"))
-    val got = scala.collection.mutable.ArrayBuffer[Set[Seq[Any]]]()
-    val q = StatsStreams.volumeAnomalyStream(asEvents(input.toDF())) { (df, _) =>
-      got += df.collect().map(_.toSeq).toSet
-    }.start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(got.size === 2)
-    val exp1 = graft.operators.RelationalOps.volumeAnomaly(asEvents(b1.toDF()))
-      .collect().map(_.toSeq).toSet
-    val exp2 = graft.operators.RelationalOps.volumeAnomaly(
-        asEvents((b1 ++ b2).toDF()))
-      .collect().map(_.toSeq).toSet
-    assert(got(0) === exp1)
-    assert(got(1) === exp2)
+    def report(rows: Seq[(String, Long)]) = graft.operators.RelationalOps.volumeAnomaly(
+        rows.toDF("event_type", "us")
+          .select(col("event_type"), timestamp_micros(col("us")).as("ts")))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(report(b1) === Map(("x", 0L) -> 2L, ("x", 1L) -> 1L, ("y", 0L) -> 1L))
     // the straddled day merged: exactly one row for (x, day 1), count 2
-    assert(got(1).exists(r => r.head == "x" && r(1) == 1L && r(2) == 2L))
+    assert(report(b1 ++ b2) === Map(("x", 0L) -> 2L, ("x", 1L) -> 2L,
+      ("x", 2L) -> 3L, ("y", 0L) -> 1L, ("y", 1L) -> 1L))
   }
 
   test("qualityMonitorStream: per-batch battery == batch checks, violations gate (DQ1)") {

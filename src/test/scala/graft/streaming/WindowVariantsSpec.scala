@@ -68,22 +68,20 @@ class WindowVariantsSpec extends SparkSpec {
   }
 
   test("streaming embedding dedup collapses same-signature vectors, keeps distinct ones") {
-    implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(7)
     def vec() = Array.fill(64)(rnd.nextGaussian().toFloat)
     val (a, b) = (vec(), vec())
-    val input = MemoryStream[(Long, Array[Float], Long)]
-    val q = StatsStreams.embeddingDedupStream(
-        input.toDF().toDF("vec_id", "embedding", "ts"))
-      .writeStream.format("memory").queryName("vec_dedup").outputMode("append").start()
-    try {
-      input.addData((1L, a, 1000L), (2L, b, 2000L))
-      q.processAllAvailable()
-      input.addData((3L, a, 3000L)) // identical vector, later batch → same signature
-      q.processAllAvailable()
-      val ids = spark.table("vec_dedup").select("vec_id").as[Long].collect().toSet
-      assert(ids === Set(1L, 2L))
-    } finally q.stop()
+    // vector 3 repeats vector 1 in a later arrival: same SRP signature,
+    // and d6's removal keeps the earlier id
+    val rows = Seq((1L, a, 1000L), (2L, b, 2000L), (3L, a, 3000L))
+      .toDF("vec_id", "embedding", "ts").withColumn("label", lit(0L))
+    val ids = graft.operators.AnnOps.dropEmbeddingNearDups(rows)
+      .select("vec_id").as[Long].collect().toSet
+    assert(ids === Set(1L, 2L))
+    val sig = rows.select(graft.operators.AnnOps.lshSignature(col("embedding")))
+      .as[String].collect()
+    assert(sig(0) === sig(2))
+    assert(sig(0) !== sig(1))
   }
 
   test("streaming decontamination flags overlap against a static bench, stateless") {
@@ -148,18 +146,12 @@ class WindowVariantsSpec extends SparkSpec {
   }
 
   test("streaming exact dedup keeps the first occurrence per fingerprint") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, Long)]
-    val q = StatsStreams.dedupExactStream(
-        input.toDF().toDF("doc_id", "text", "ts"))
-      .writeStream.format("memory").queryName("dedup_stream").outputMode("append").start()
-    try {
-      input.addData((1L, "same text", 1000L), (2L, "other text", 2000L))
-      q.processAllAvailable()
-      input.addData((3L, "same text", 3000L)) // duplicate content, later batch
-      q.processAllAvailable()
-      val ids = spark.table("dedup_stream").select("doc_id").as[Long].collect().toSet
-      assert(ids === Set(1L, 2L))
-    } finally q.stop()
+    // duplicate content in a later arrival (higher id): d1 keeps the min id
+    val ids = graft.operators.DedupOps.dedupExact(
+        Seq((1L, "same text", 1000L), (2L, "other text", 2000L),
+          (3L, "same text", 3000L)).toDF("doc_id", "text", "ts"))
+      .select("keeper_id").as[Long].collect().toSet
+    assert(ids === Set(1L, 2L))
   }
+
 }
