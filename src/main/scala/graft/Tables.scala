@@ -71,10 +71,9 @@ object Tables {
     else if (df.rdd.getNumPartitions >=
         df.sparkSession.sparkContext.defaultParallelism)
       // already at least core-wide: the expansion below it cannot be capped
-      // by the input layout, so the round-robin shuffle would only move
-      // every row for nothing — at 100 TB that is a full corpus pass
-      // removed from each spread site (r14); bench-scale single-split
-      // inputs take the branch below exactly as before
+      // by the input layout, so a round-robin shuffle would move every row
+      // (a full corpus pass at 100 TB) for nothing; narrower inputs take
+      // the branch below
       df
     else df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 }

@@ -16,9 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * precedent): the composed form — k−1 shifted `zip_with` passes each
   * `concat`ing a growing prefix — runs its lambdas interpreted per element
   * and RE-ALLOCATES every intermediate prefix string (a k-gram is built k−1
-  * times), excluded from whole-stage codegen. Measured at sf0.1 the shingle
-  * projection was 2.7 ms/doc inside d18's signature stage; this call does
-  * the identical work in one pass per row with one allocation per k-gram.
+  * times), excluded from whole-stage codegen. This call does the identical
+  * work in one pass per row with one allocation per k-gram.
   *
   * Bit-identical by construction to
   * `slice(zip_with-fold, 1, size(words)-(k-1))`: same space joints, and a

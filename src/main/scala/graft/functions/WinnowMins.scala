@@ -16,10 +16,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * (`transform` to build shingles, `transform(md5)` to hash, shifted
   * `zip_with` mins) is built from higher-order functions whose lambdas are
   * interpreted per element and excluded from codegen subexpression
-  * elimination — measured 14s+ at sf0.1 where this call does the same work
-  * in ~0.1s, and the gap scales linearly with corpus size. Bit-identical to
-  * the DuckDB oracle: hash = int of the first 4 hex chars of md5(shingle);
-  * docs with fewer hashes than one window degrade to their global min.
+  * elimination; this call hashes each shingle once in compiled code, so its
+  * cost is linear in corpus words with no per-element interpretation.
+  * Bit-identical to the DuckDB oracle: hash = int of the first 4 hex chars
+  * of md5(shingle); docs with fewer hashes than one window degrade to
+  * their global min.
   */
 case class WinnowMinsExpr(child: Expression, w: Int) extends UnaryExpression {
 

@@ -429,11 +429,10 @@ object RelationalOps {
     val lineitem = table(spark, dir, "lineitem")
     val customer = table(spark, dir, "customer")
     val nation = table(spark, dir, "nation")
-    // the three lineitem FK checks FUSE into ONE pass over the fact table
+    // the three lineitem FK checks share ONE pass over the fact table
     // (three left joins on distinct'd dims — no row multiplication — then
-    // conditional orphan sums, unpivoted): the per-check form scanned the
-    // corpus-scale fact three times (r14). Relations/counts/schema
-    // unchanged.
+    // conditional orphan sums, unpivoted): the corpus-scale fact is scanned
+    // once however many of its FKs are checked.
     val liChecks = lineitem
       .join(orders.select(col("o_orderkey").as("_pk1")).distinct(),
         col("l_orderkey") === col("_pk1"), "left")
@@ -555,11 +554,11 @@ object RelationalOps {
     val part = table(spark, dir, "part")
     val docs = table(spark, dir, "documents")
     val events = table(spark, dir, "events")
-    // same-table predicate checks FUSE into one scan-aggregate per table
+    // same-table predicate checks share one scan-aggregate per table
     // (conditional sums + the distinct count in a single pass, unpivoted to
-    // check rows) — the unfused form paid one corpus pass PER CHECK at
-    // 100 TB; the FK checks keep their own anti-joins (they need the other
-    // table regardless). Same check names, same counts, same schema (r14).
+    // check rows): each table is scanned once however many checks it has;
+    // the FK checks keep their own anti-joins (they need the other table
+    // regardless).
     val ordersChecks = orders.agg(
         sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("nn"),
         (count(lit(1)) - countDistinct(col("o_orderkey"))).as("pk"))

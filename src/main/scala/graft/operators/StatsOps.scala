@@ -151,8 +151,8 @@ object StatsOps {
     */
   def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
     // spread first: the 2-way pane Expand + DECIMAL partial aggregation
-    // otherwise run inside the single-split scan stage (r14); pass-through
-    // on well-split inputs
+    // run at least core-wide, never inside a single-split scan stage;
+    // pass-through on well-split inputs
     graft.Tables.spread(
         table(spark, dir, "events").select("ts", "event_type", "value"))
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
@@ -189,7 +189,8 @@ object StatsOps {
     * previous stage and inside the conversion window (min-over-window
     * chaining, the standard formulation), so out-of-order clicks before the
     * first view never count and stale conversions age out. Emits stage
-    * user-counts plus 4dp step/overall conversion.
+    * user-counts plus 4dp step/overall conversion; a ratio over a stage no
+    * user reached is NULL, as in SQL (no DIVIDE_BY_ZERO under ANSI).
     *
     * Scale notes: ONE shuffle — all three stage minima are windows over the
     * same user_id partitioning (Catalyst stacks them on one exchange+sort),
@@ -208,7 +209,7 @@ object StatsOps {
         min(when(col("event_type") === "view", col("us"))).over(w))
       .withColumn("c_us", stepMin("click", col("v_us")))
       .withColumn("p_us", stepMin("purchase", col("c_us")))
-    def pct(a: Column, b: Column): Column = floor(a * 10000.0 / b + 0.5) / 10000.0
+    def pct(a: Column, b: Column): Column = floor(try_divide(a * 10000.0, b) + 0.5) / 10000.0
     staged.groupBy("user_id")
       .agg(max("v_us").as("v"), max("c_us").as("c"), max("p_us").as("p"))
       .agg(count(lit(1)).as("users"), count(col("v")).as("viewed"),
@@ -232,8 +233,8 @@ object StatsOps {
     * contributions to the per-channel rollup and turns DOUBLE only on the
     * final sums: decimal sums are order-free, so no merge order can move
     * the hash. Each contribution rounds to DECIMAL(18,4) per row (the rfm
-    * convention); the channel partials widen to DECIMAL(38,4), the widest
-    * decimal Spark keeps, before the final rollup.
+    * convention, [[graft.Tables.dsum]]); their per-channel sum is
+    * DECIMAL(28,4), exact for up to 10^10 contributions.
     *
     * MULTI-TOUCH weights over the same candidate frame. Linear: value/n per
     * touch. Position-based (U-shape): 40% first + 40% last + 20% split
@@ -271,28 +272,18 @@ object StatsOps {
       .withColumn("rnl", row_number().over(Window.partitionBy("p_id")
         .orderBy(col("v_us").desc, col("v_id").desc)))
       .withColumn("n_t", count(lit(1)).over(Window.partitionBy("p_id")))
-    val dec = org.apache.spark.sql.types.DecimalType(18, 4)
-    val wide = org.apache.spark.sql.types.DecimalType(38, 4)
-    def drev(flag: Column): Column =
-      sum(when(flag, col("value")).otherwise(0.0).cast(dec)).cast(wide)
+    def firstOrLast(rn: String): Column = when(col(rn) === 1, col("value")).otherwise(0.0)
     val posW = when(col("n_t") === 1, lit(1.0))
       .when(col("n_t") === 2, lit(0.5))
       .when(col("rnf") === 1 || col("rnl") === 1, lit(0.4))
       .otherwise(lit(0.2) / (col("n_t") - 2))
     marked.groupBy("channel").agg(
-        sum(when(col("rnf") === 1, 1L).otherwise(0L)).as("ft_purchases"),
-        drev(col("rnf") === 1).as("ft_rev_d"),
-        sum(when(col("rnl") === 1, 1L).otherwise(0L)).as("lt_purchases"),
-        drev(col("rnl") === 1).as("lt_rev_d"),
-        sum((col("value") / col("n_t")).cast(dec)).cast(wide).as("lin_rev_d"),
-        sum((col("value") * posW).cast(dec)).cast(wide).as("pos_rev_d"))
-      .groupBy("channel").agg(
-        sum(col("ft_purchases")).as("ft_purchases"),
-        sum(col("ft_rev_d")).cast("double").as("ft_revenue"),
-        sum(col("lt_purchases")).as("lt_purchases"),
-        sum(col("lt_rev_d")).cast("double").as("lt_revenue"),
-        sum(col("lin_rev_d")).cast("double").as("lin_revenue"),
-        sum(col("pos_rev_d")).cast("double").as("pos_revenue"))
+      sum(when(col("rnf") === 1, 1L).otherwise(0L)).as("ft_purchases"),
+      dsum(firstOrLast("rnf")).as("ft_revenue"),
+      sum(when(col("rnl") === 1, 1L).otherwise(0L)).as("lt_purchases"),
+      dsum(firstOrLast("rnl")).as("lt_revenue"),
+      dsum(col("value") / col("n_t")).as("lin_revenue"),
+      dsum(col("value") * posW).as("pos_revenue"))
   }
 
   /** R3 — day-cohort retention: users grouped by first-active day, retention
@@ -464,11 +455,10 @@ object StatsOps {
     * repartitioned on the window key FIRST, so the per-row `props` JSON
     * parse runs after the exchange on every core — the window's required
     * distribution is already satisfied, so this adds NO exchange; it only
-    * moves the parse off the scan task (r14: a single-row-group bench
-    * input ran the whole 100k-row parse in one ~850 ms task). At scale the
-    * trade is the same one user-keyed shuffle carrying `props` bytes
-    * instead of the parsed long — and the parse runs exactly once per row
-    * either way.
+    * moves the parse off the scan task, so its width is the shuffle's, not
+    * the input's row-group count. At scale the trade is the same one
+    * user-keyed shuffle carrying `props` bytes instead of the parsed long —
+    * and the parse runs exactly once per row either way.
     */
   private def nodeSeq(events: DataFrame): DataFrame =
     events.select(col("event_id"), col("user_id"), col("ts"), col("props"))

@@ -55,6 +55,7 @@ object LogPipeline {
     */
   def fixIsNew(spark: SparkSession, clean: DataFrame): DataFrame = {
     import spark.implicits._
+    StateRelease.install(spark)
     val ds = clean.select(col("common.mid").as("mid"),
       col("common.is_new").as("is_new"), col("ts")).as[(String, String, Long)]
     ds.groupByKey(_._1)
@@ -81,6 +82,7 @@ object LogPipeline {
     * Input columns: mid, page_id, last_page_id, ts (millis).
     */
   def uniqueVisit(pages: DataFrame): DataFrame = {
+    StateRelease.install(pages.sparkSession)
     val entries = pages
       .filter(col("last_page_id").isNull || col("last_page_id") === "")
       .withColumn("event_time", timestamp_millis(col("ts")))

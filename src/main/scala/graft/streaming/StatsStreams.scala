@@ -20,6 +20,14 @@ import org.apache.spark.sql.functions._
   */
 object StatsStreams {
 
+  /** `df` under an event-time watermark: the aggregation built over it
+    * keeps state, so the session's [[StateRelease]] is installed here.
+    */
+  private def watermark(column: String, delay: String)(df: DataFrame): DataFrame = {
+    StateRelease.install(df.sparkSession)
+    df.withWatermark(column, delay)
+  }
+
   /** A1/W1/W3 — VisitorStats: 10s tumbling event-time window keyed by
     * (vc, ch, ar, is_new), 11s watermark (app/dws/VisitorStatsApp.java:133-198).
     * Input columns: common struct + page struct + ts (millis).
@@ -30,7 +38,7 @@ object StatsStreams {
         col("common.ar").as("ar"), col("common.is_new").as("is_new"),
         col("page.during_time").as("during_time"),
         timestamp_millis(col("ts")).as("event_time"))
-      .withWatermark("event_time", "11 seconds")
+      .transform(watermark("event_time", "11 seconds"))
       .groupBy(window(col("event_time"), "10 seconds"),
         col("vc"), col("ch"), col("ar"), col("is_new"))
       .agg(count(lit(1)).as("pv_ct"), sum(col("during_time")).as("dur_sum"))
@@ -51,7 +59,7 @@ object StatsStreams {
   def visitorStatsUnion(streams: Seq[DataFrame]): DataFrame =
     streams.reduce(_ unionByName _)
       .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", "11 seconds")
+      .transform(watermark("event_time", "11 seconds"))
       .groupBy(window(col("event_time"), "10 seconds"),
         col("vc"), col("ch"), col("ar"), col("is_new"))
       .agg(sum("uv_ct").as("uv_ct"), sum("pv_ct").as("pv_ct"),
@@ -72,7 +80,7 @@ object StatsStreams {
   private def provinceWindows(orders: DataFrame, distinctOrders: Column): DataFrame =
     orders
       .withColumn("rt", timestamp_millis(col("create_ts")))
-      .withWatermark("rt", "1 second")
+      .transform(watermark("rt", "1 second"))
       .groupBy(window(col("rt"), "10 seconds"), col("province_id"), col("province_name"))
       .agg(distinctOrders.as("orders"),
         dsum(col("split_total_amount")).as("order_amount"))
@@ -112,7 +120,7 @@ object StatsStreams {
   def slidingEventCounts(events: DataFrame, size: String, slide: String): DataFrame =
     events
       .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", "11 seconds")
+      .transform(watermark("event_time", "11 seconds"))
       .groupBy(window(col("event_time"), size, slide), col("key"))
       .agg(count(lit(1)).as("ct"))
       .select(
@@ -128,7 +136,7 @@ object StatsStreams {
   def sessionCounts(events: DataFrame, gap: String): DataFrame =
     events
       .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", "11 seconds")
+      .transform(watermark("event_time", "11 seconds"))
       .groupBy(session_window(col("event_time"), gap), col("key"))
       .agg(count(lit(1)).as("ct"), sum(col("value")).as("value_sum"))
       .select(
@@ -143,7 +151,7 @@ object StatsStreams {
   def keywordStats(searches: DataFrame): DataFrame =
     searches
       .withColumn("rt", timestamp_millis(col("ts")))
-      .withWatermark("rt", "1 second")
+      .transform(watermark("rt", "1 second"))
       .select(col("rt"), explode(split(col("full_word"), "\\s+")).as("keyword"))
       .filter(length(col("keyword")) > 0)
       .groupBy(window(col("rt"), "10 seconds"), col("keyword"))

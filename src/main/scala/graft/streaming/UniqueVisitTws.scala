@@ -50,6 +50,7 @@ object UniqueVisitTws {
     */
   def apply(spark: SparkSession, pages: DataFrame): Dataset[PageEvent] = {
     import spark.implicits._
+    StateRelease.install(spark)
     pages.select(col("mid"), col("page_id"), col("last_page_id"), col("ts"))
       .as[PageEvent]
       .groupByKey(_.mid)

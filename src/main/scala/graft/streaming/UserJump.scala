@@ -56,6 +56,7 @@ object UserJump {
     */
   def detect(spark: SparkSession, pages: DataFrame): Dataset[PageEvent] = {
     import spark.implicits._
+    StateRelease.install(spark)
     val ds = pages
       .withColumn("event_time", timestamp_millis(col("ts")))
       .withWatermark("event_time", WatermarkDelay)

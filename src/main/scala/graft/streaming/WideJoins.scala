@@ -22,6 +22,7 @@ object WideJoins {
     * like the reference's forMonotonousTimestamps (:65-91).
     */
   def orderWide(orderInfo: DataFrame, orderDetail: DataFrame): DataFrame = {
+    StateRelease.install(orderInfo.sparkSession)
     val oi = orderInfo
       .withColumn("oi_time", timestamp_millis(col("create_ts")))
       .withWatermark("oi_time", "0 seconds")
@@ -46,6 +47,7 @@ object WideJoins {
     * (bean/PaymentWide.java:82) and its other columns pass through.
     */
   def paymentWide(paymentInfo: DataFrame, orderWide: DataFrame): DataFrame = {
+    StateRelease.install(paymentInfo.sparkSession)
     val pay = paymentInfo
       .withColumnRenamed("id", "payment_id")
       .withColumn("pay_time", timestamp_millis(col("callback_ts")))

@@ -251,14 +251,28 @@ class StatefulParitySpec extends SparkSpec {
     val batch2 = Seq(ev(1, "click", 2), ev(2, "view", 2), ev(3, "click", 27),
       ev(4, "click", 3), ev(1, "purchase", 3), ev(2, "purchase", 3),
       ev(3, "purchase", 28))
-    def stages(rows: Seq[(Long, String, Long)]) = {
-      val r = graft.operators.StatsOps.funnel(
+    def funnelRow(rows: Seq[(Long, String, Long)]) =
+      graft.operators.StatsOps.funnel(
           rows.toDF("user_id", "event_type", "us")
             .select(col("user_id"), col("event_type"),
               timestamp_micros(col("us")).as("ts")))
         .collect().head
+    def stages(rows: Seq[(Long, String, Long)]) = {
+      val r = funnelRow(rows)
       Seq("users", "viewed", "clicked", "purchased").map(c => r.getLong(r.fieldIndex(c)))
     }
+    // the first arrival batch alone: five users and no qualifying click
+    // (u2's click precedes its view), so click_to_purchase divides by zero
+    // and is NULL, as in SQL; the ratios over `viewed` are 0 of 3
+    assert(stages(batch1) === Seq(5L, 3L, 0L, 0L))
+    val early = funnelRow(batch1)
+    assert(early.isNullAt(early.fieldIndex("click_to_purchase")))
+    assert(early.getAs[Double]("view_to_click") === 0.0)
+    assert(early.getAs[Double]("full_funnel") === 0.0)
+    // no view at all: every ratio is NULL
+    val unviewed = funnelRow(batch1.filter(e => e._1 == 2L || e._1 == 5L))
+    assert(Seq("view_to_click", "click_to_purchase", "full_funnel")
+      .forall(c => unviewed.isNullAt(unviewed.fieldIndex(c))))
     // viewed: u1-u4; clicked: u1, u4 (u2 clicked before its view, u3 past
     // 24 h); purchased: u1 (u4 bought before its click)
     assert(stages(batch1 ++ batch2) === Seq(5L, 4L, 2L, 1L))

@@ -8,6 +8,8 @@
 #   materialize_calls     `Materialize(` call sites in src/main
 #   defaulted_params      parameters with a default value in the def / class
 #                         signatures of src/main
+#   spark_bridges         source files under src/main/scala/org/apache/spark:
+#                         each one reaches into Spark internals
 #
 # A comment line is one whose first non-blank characters are `//`, `/*` or
 # `*` (scaladoc bodies). A top-level def is one indented by exactly two
@@ -35,6 +37,7 @@ echo "public_defs_operators $(public_defs operators)"
 echo "public_defs_streaming $(public_defs streaming)"
 echo "materialize_calls $(find src/main -name '*.scala' -print0 | xargs -0 cat |
   grep -Ev '^\s*(//|\*|/\*)' | grep -o 'Materialize(' | wc -l)"
+echo "spark_bridges $(find src/main/scala/org/apache/spark -name '*.scala' | wc -l)"
 
 python3 - <<'PY'
 import glob, re
