@@ -102,8 +102,8 @@ object GraftExtensions {
     * aggregators (exact_count_distinct, hll sketches) register as UDAFs.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    functions.foreach { case (name, _, builder) => bridge.registerFunction(spark, name, builder) }
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    functions.foreach { case (name, _, builder) => ColumnBridge.registerFunction(spark, name, builder) }
     spark.udf.register("exact_count_distinct", graft.functions.ExactDistinct.asUdaf)
     spark.udf.register("hll_count_distinct", graft.functions.HllDistinct.asUdaf)
     spark.udf.register("hll_sketch", graft.functions.HllSketch.asUdaf)

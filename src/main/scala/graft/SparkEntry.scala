@@ -439,8 +439,8 @@ object SparkEntry {
           .when(backWins, lit("backward")).otherwise(lit("forward")).as("direction"))
   }
 
-  /** X2 — the typed `Aggregator` (ProductStatsAggregator's distinct-set
-    * family, UDAF row of SURVEY §2.9) exercised through the registered SQL
+  /** X2 — the typed `Aggregator` ([[graft.functions.ExactDistinct]], the
+    * UDAF row of SURVEY §2.9) exercised through the registered SQL
     * surface: exact per-group distinct user counts over events, proven
     * against the oracle's COUNT(DISTINCT). The merge-associative Set buffer
     * is the same mechanism the streaming exact count-distinct uses.

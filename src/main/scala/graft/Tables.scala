@@ -14,10 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   * matching DuckDB's TIMESTAMP_NS → TIMESTAMP cast (integer floor division).
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Read one testdata table. Idempotently flips the nanos conf (runtime-settable).
     *
     * `events.ts` has shipped in two physical encodings across driver testdata

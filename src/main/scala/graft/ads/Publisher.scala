@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Publisher {
 
-  /** K6/A7 — daily GMV (ProductStatsMapper.java:12-13:
-    * `select sum(order_amount) from product_stats where toYYYYMMDD(stt)=#{date}`).
-    * `stats` columns: stt (yyyy-MM-dd HH:mm:ss), order_amount.
-    */
-  def gmvByDay(stats: DataFrame, yyyymmdd: String): DataFrame =
-    stats
-      .filter(date_format(to_timestamp(col("stt")), "yyyyMMdd") === yyyymmdd)
-      .agg(sum(col("order_amount")).as("order_amount"))
-
   /** Dashboard rollup shape (SugarController.java:20-41 returns
     * {status, msg, data}); here: the data series — amount per key ordered
     * descending, top N.

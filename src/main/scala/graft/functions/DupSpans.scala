@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,14 +94,5 @@ object DupSpans {
     var x = 0
     while (x < arr.length) { arr(x) = out.get(x); x += 1 }
     new GenericArrayData(arr)
-  }
-
-  /** Column entry point: `DupSpans(grams, ref, k)` → ARRAY<BIGINT> of
-    * packed `(start << 32) | end` spans (token positions, inclusive).
-    */
-  def apply(grams: Column, ref: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(DupSpansExpr(
-      ColumnBridge.expression(grams), ColumnBridge.expression(ref), k))
   }
 }

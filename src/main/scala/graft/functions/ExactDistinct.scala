@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions.udaf
   * Cost model, stated plainly: the state per (group, window) is the distinct
   * id set itself — identical to what the reference's Flink state held. Where
   * per-window distinct cardinality is unbounded at 100 TB, use an HLL
-  * sketch buffer instead; both paths are offered
-  * (StatsStreams.provinceStatsExact vs provinceStatsHll).
+  * sketch buffer instead (`hll_sketch` / `hll_merge_count`, [[HllSketch]]).
   */
 object ExactDistinct extends Aggregator[Long, Set[Long], Long] {
   override def zero: Set[Long] = Set.empty

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -85,7 +85,6 @@ object HllDistinct extends Aggregator[Long, Array[Byte], Long] {
   override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   override def outputEncoder: Encoder[Long] = Encoders.scalaLong
   lazy val asUdaf: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(this)
-  def apply(c: Column): Column = asUdaf(c)
 }
 
 /** `hll_sketch(idCol)` — the sketch itself, for persistence + later rollup. */
@@ -97,17 +96,6 @@ object HllSketch extends Aggregator[Long, Array[Byte], Array[Byte]] {
   override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   lazy val asUdaf: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(this)
-  def apply(c: Column): Column = asUdaf(c)
-}
-
-/** Scalar `hll_estimate(sketchCol)` — read a stored sketch's cardinality.
-  * Runs once per AGGREGATED row (not per event), so a plain udf is fine —
-  * it never sits in the per-record hot path.
-  */
-object HllSketchEstimate {
-  private lazy val f =
-    org.apache.spark.sql.functions.udf((b: Array[Byte]) => Hll.estimate(b))
-  def apply(c: Column): Column = f(c)
 }
 
 /** `hll_merge_count(sketchCol)` — rollup: merge stored sketches, estimate. */
@@ -119,5 +107,4 @@ object HllMergeCount extends Aggregator[Array[Byte], Array[Byte], Long] {
   override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   override def outputEncoder: Encoder[Long] = Encoders.scalaLong
   lazy val asUdaf: org.apache.spark.sql.expressions.UserDefinedFunction = udaf(this)
-  def apply(c: Column): Column = asUdaf(c)
 }

@@ -2,11 +2,9 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Typed record shapes mirroring the reference's Lombok beans and the Kafka
-  * topic contracts (SURVEY §1.2, FIXTURES.md). Money columns are
-  * DecimalType(16,2) (reference uses BigDecimal, bean/OrderInfo.java:13-17);
-  * timestamps stay epoch-millis longs plus formatted strings exactly like the
-  * reference's `create_time yyyy-MM-dd HH:mm:ss` + `create_ts` pairs.
+/** The schemas of the two ODS topic contracts (SURVEY §1.2, FIXTURES.md):
+  * the behavior-log event and the CDC envelope. Timestamps stay epoch-millis
+  * longs, as the reference's `ts` fields are.
   */
 object Schemas {
 
@@ -51,48 +49,4 @@ object Schemas {
     // dropping the envelope at decodeEnvelope's isNotNull filter — the
     // string survives and is cast (null on garbage → seq 0) downstream.
     StructField("ts", StringType)))
-
-  /** Routing config row (table_process, bean/TableProcess.java:14-26). */
-  val tableProcess: StructType = StructType(Seq(
-    StructField("sourceTable", StringType),
-    StructField("operateType", StringType),
-    StructField("sinkType", StringType),
-    StructField("sinkTable", StringType),
-    StructField("sinkColumns", StringType),
-    StructField("sinkPk", StringType),
-    StructField("sinkExtend", StringType)))
 }
-
-/** bean/OrderInfo.java:9-23 (derived create_date/create_hour/create_ts
-  * computed in app/dwm/OrderWideApp.java:50-73).
-  */
-case class OrderInfo(
-    id: Long, province_id: Long, order_status: String, user_id: Long,
-    total_amount: BigDecimal, activity_reduce_amount: BigDecimal,
-    coupon_reduce_amount: BigDecimal, original_total_amount: BigDecimal,
-    feight_fee: BigDecimal, expire_time: String, create_time: String,
-    operate_time: String, create_date: String, create_hour: String,
-    create_ts: Long)
-
-/** bean/OrderDetail.java:9-19. */
-case class OrderDetail(
-    id: Long, order_id: Long, sku_id: Long, order_price: BigDecimal,
-    sku_num: Long, sku_name: String, create_time: String,
-    split_total_amount: BigDecimal, split_activity_amount: BigDecimal,
-    split_coupon_amount: BigDecimal, create_ts: Long)
-
-/** bean/PaymentInfo.java:10-17. */
-case class PaymentInfo(
-    id: Long, order_id: Long, user_id: Long, total_amount: BigDecimal,
-    subject: String, payment_type: String, create_time: String,
-    callback_time: String)
-
-/** bean/VisitorStats.java:11-23 — DWS visitor row. */
-case class VisitorStats(
-    stt: String, edt: String, vc: String, ch: String, ar: String,
-    is_new: String, uv_ct: Long, pv_ct: Long, sv_ct: Long, uj_ct: Long,
-    dur_sum: Long, ts: Long)
-
-/** bean/KeywordStats.java:11-16. */
-case class KeywordStats(
-    keyword: String, ct: Long, source: String, stt: String, edt: String, ts: Long)

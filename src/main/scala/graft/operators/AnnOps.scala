@@ -226,19 +226,6 @@ object AnnOps {
         (col("sim") >= threshold).as("is_dup"))
   }
 
-  /** Corpus-level embedding near-dup REMOVAL — the vector-space analog of
-    * [[DedupOps.dropNearDuplicates]]: drop every vector whose within-cell
-    * nearest neighbor is ≥ `threshold` similar and has a lower id (greedy
-    * keep-first). One anti-join over the candidate-bounded d6 pairs.
-    */
-  def dropEmbeddingNearDups(e: DataFrame, threshold: Double = 0.95): DataFrame = {
-    val losers = embeddingNearDups(e, threshold)
-      .filter(col("is_dup") && col("vec_id") > col("nn_id"))
-      .select(col("vec_id"))
-      .distinct()
-    e.join(losers, Seq("vec_id"), "left_anti")
-  }
-
   // ---- Random-hyperplane (SRP) LSH -----------------------------------------
 
   private val LshPlanes = 32
@@ -292,7 +279,7 @@ object AnnOps {
     lshSearch(e, e.filter(col("vec_id") < 20), k)
 
   /** Full SRP-LSH search over arbitrary corpus/query frames — the general
-    * API behind [[lshTopK]], parallel to [[ivfSearch]]. Self-pairs (shared
+    * API behind [[lshTopK]], parallel to [[ivfSearchAssigned]]. Self-pairs (shared
     * `vec_id`) are excluded.
     */
   def lshSearch(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -956,23 +943,10 @@ object AnnOps {
       .select(col("cell"),
         transform(col("dm"), x => x.getField("m").cast("float")).as("centroid"))
 
-  /** IVF cell assignment: nearest centroid in euclidean distance over the
-    * broadcast centroid table — the real quantization step (ivfTopK's `label`
-    * column models its output). argmin ‖x−c‖² = argmax (2·x·c − ‖c‖²), so one
-    * native dot product per (vector, centroid). Corpus side is map-only:
-    * broadcast join + max_by.
-    */
-  def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
-    e.join(broadcast(cents))
-      .select(col("vec_id"), col("cell"),
-        (dot(col("embedding"), col("centroid")) * 2.0 -
-          dot(col("centroid"), col("centroid"))).as("score"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("score"), -col("cell"))).as("assigned_cell"))
-
-  /** IVF cell assignment against DRIVER-HELD centroid constants — the
-    * streaming-capable twin of [[assignCells]]: per row, one codegen'd dot
-    * product per centroid and an `array_max` over (score, −cell) structs, so
+  /** IVF cell assignment: nearest centroid in euclidean distance against
+    * DRIVER-HELD centroid constants. argmin ‖x−c‖² = argmax (2·x·c − ‖c‖²):
+    * per row, one codegen'd dot product per centroid and an `array_max`
+    * over (score, −cell) structs, so
     * the argmax happens inside the row projection with NO join and NO
     * aggregation. That statelessness is the point: the same call works on a
     * `readStream` frame (continuous IVF indexing of an embedding stream) and
@@ -980,8 +954,8 @@ object AnnOps {
     * The centroid table is the coarse quantizer — small and slow-changing by
     * construction (the analog of the reference's driver-held router config,
     * app/dwd/BaseDBApp.java:100-118) — so holding it as literals is the same
-    * contract as broadcasting it. Tie-break (max score, then min cell) and
-    * float→double accumulation order match [[assignCells]] exactly.
+    * contract as broadcasting it. Ties break to the max score, then the
+    * min cell.
     */
   def assignCellsLit(vectors: DataFrame, cents: Array[(Int, Array[Float])]): DataFrame = {
     require(cents.nonEmpty, "assignCellsLit needs at least one centroid")
@@ -1113,23 +1087,13 @@ object AnnOps {
     cents.sortBy(_._1)
   }
 
-  /** Full IVF search: corpus pre-assigned to cells, each query probes its
-    * `nProbe` nearest cells and ranks candidates by exact cosine — the
-    * standard recall/throughput dial (nProbe = all cells ⇒ exact brute
-    * force). The query side is small, so probe selection is a local sort; the
+  /** Full IVF search over a corpus whose `cell` column already exists:
+    * each query probes its `nProbe` nearest cells and ranks candidates by
+    * exact cosine — the standard recall/throughput dial (nProbe = all cells
+    * ⇒ exact brute force). Assignment is paid once at indexing time,
+    * map-side via [[assignCellsLit]]; search never re-quantizes the corpus.
+    * The query side is small, so probe selection is a local sort; the
     * corpus side touches only the probed cells via the equi-join on cell.
-    */
-  def ivfSearch(corpus: DataFrame, cents: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val assigned = corpus.join(
-      assignCells(corpus, cents).withColumnRenamed("assigned_cell", "cell"), Seq("vec_id"))
-    ivfSearchAssigned(assigned, cents, queries, k, nProbe)
-  }
-
-  /** [[ivfSearch]] over a corpus whose `cell` column already exists — the
-    * form a real deployment runs (assignment is paid once at indexing time,
-    * or map-side via [[assignCellsLit]]; search never re-quantizes the
-    * corpus).
     *
     * Over a SPILLED index ([[assignCellsLitSpill]] with spill > 1) a vector
     * indexed under two probed cells surfaces as two identical candidate
@@ -1464,20 +1428,6 @@ object AnnOps {
       .join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("label"), col("cent_sim"),
         col("_drop").isNull.as("keep"))
-  }
-
-  /** [[semDedup]] end-to-end with a TRAINED coarse clustering — the form a
-    * corpus with no precomputed cluster column runs: [[kmeansTrain]] learns
-    * k centroids, [[assignCellsLit]] labels every vector map-side (no
-    * corpus shuffle), and the SemDeDup prune runs within the learned
-    * cells. Not oracle-stateable (Lloyd's loop — the n2b precedent);
-    * behavior is spec-pinned instead.
-    */
-  def semDedupTrained(e: DataFrame, k: Int = 8,
-      threshold: Double = 0.95): DataFrame = {
-    val clustered = assignCellsLit(e.drop("label"), kmeansTrain(e, k))
-      .withColumnRenamed("assigned_cell", "label")
-    semDedup(clustered, threshold)
   }
 
   /** B2 — semantic benchmark decontamination: the embedding-space complement

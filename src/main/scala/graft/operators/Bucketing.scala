@@ -3,37 +3,17 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Bucketed-table layout helpers — the co-located join path (SURVEY §4 /
-  * the 100 TB playbook's "pre-partition what you join repeatedly").
-  *
-  * A fact table joined against the same key family every run (orders ⋈
-  * customer, events ⋈ users) pays a full shuffle of both sides per query.
-  * Writing both sides bucketed AND sorted by the join key pins rows to
-  * hash-stable files at WRITE time: every later join on that key plans as a
-  * zero-Exchange sort-merge join — each task zips bucket i of both tables
-  * straight off storage. At 100 TB that converts the recurring dominant
-  * shuffle into a one-time write cost, and bucket pruning serves point
-  * lookups from a single file per side.
+/** Lakehouse layout operators (SURVEY §4, the 100 TB playbook's "lay out
+  * what you scan repeatedly"): the z-order and Hilbert clustering keys, the
+  * data-skipping audit that compares layouts, and the compaction plan.
+  * Each is a query over frames; the layout a deployment writes is the one
+  * these keys sort by (range-partition on the key, sort within partitions).
   *
   * The reference's analog is Phoenix salting/pre-split regions for its dim
   * tables (app/function/TableProcessFunction.java:70-127 creates dim tables
   * keyed on id) — here the layout is declared once on the lake instead.
   */
 object Bucketing {
-
-  /** Write `df` as a parquet table bucketed and sorted by `key` —
-    * `buckets` must match across tables meant to join shuffle-free.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
-
-  /** Join two same-bucketed tables on their bucket key. The plan contract
-    * (zero Exchange operators) is pinned by `BucketingSpec`.
-    */
-  def bucketedJoin(spark: org.apache.spark.sql.SparkSession,
-      leftTable: String, rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** Z-ORDER key: bit-interleave two non-negative integer columns
     * (clamped to `bits` bits each) into one Morton code — the
@@ -61,7 +41,8 @@ object Bucketing {
   /** L1 — z-order layout keys for the event stream: (user_id, props.k)
     * interleaved, plus the 1024-way range bucket (`zkey >> 22`) a
     * repartitionByRange layout would split files on. The query face is
-    * the key computation (oracle-exact); [[zorderWrite]] applies it.
+    * the key computation (oracle-exact); a z-ordered write range-partitions
+    * and sorts on `zkey`.
     *
     * Scale notes (100 TB): the key is a map-side projection — layout cost
     * is the one range-exchange of the WRITE, paid once, after which every
@@ -76,24 +57,11 @@ object Bucketing {
       .withColumn("zkey", zorderKey(col("user_id"), col("k")))
       .withColumn("zbucket", shiftright(col("zkey"), 22))
 
-  /** Write `df` z-order-clustered on (x, y): range-partition then sort by
-    * the Morton key so file k holds one compact curve segment — both
-    * dimensions' min/max footers stay tight.
-    */
-  def zorderWrite(df: DataFrame, x: String, y: String, path: String,
-      files: Int = 32): Unit = {
-    val keyed = df.withColumn("_z", zorderKey(col(x), col(y)))
-    keyed.repartitionByRange(files, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** L4 — data-SKIPPING effectiveness audit, the number that justifies l1:
     * for the same box predicate (`user_id ≤ uHi AND k ≤ kHi`), how many
     * files must a scan touch under the ARRIVAL layout (event_id-contiguous
     * 1024-row files — what a stream sink writes) versus the Z-ORDER layout
-    * (fixed zkey ranges — what [[zorderWrite]] produces)? Emits one row per
+    * (fixed zkey ranges — what a z-ordered write produces)? Emits one row per
     * layout: files_total, files_touched (file [min,max] boxes overlapping
     * the predicate), rows_read (read amplification), rows_matched — the
     * before/after table every OPTIMIZE ZORDER decision is argued from.

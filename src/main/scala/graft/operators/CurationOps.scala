@@ -529,8 +529,8 @@ object CurationOps {
     val keepers = docs.groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     // near-dup losers: every doc ≥ ndThreshold Jaccard-similar to a LOWER-id
-    // doc (the same greedy keep-first policy as DedupOps.dropNearDuplicates);
-    // the quantized jaccard compares bit-identically across engines
+    // doc (greedy keep-first: of each pair, the higher id goes); the
+    // quantized jaccard compares bit-identically across engines
     val ndLosers = DedupOps.minhashLshPairs(docs)
       .filter(col("jaccard") >= ndThreshold)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -822,54 +822,8 @@ object CurationOps {
       replace(s, lit(s" $a$BpeSep$b "), lit(s" $a$b "))
     }
 
-  /** Train `numMerges` BPE merges over the corpus.
-    *
-    * The published training trick keeps this tractable at any corpus size:
-    * iterate over the DISTINCT-WORD frequency table, not the corpus — ONE
-    * corpus-sized shuffle builds the (word, count) dict (vocabulary
-    * cardinality, bounded by language, not data volume), then each merge
-    * rank costs one aggregation over that small frame. Per-round hygiene
-    * matches [[graft.operators.DedupOps.connectedComponents]]: the updated
-    * vocab is materialized (and its predecessor released) so lineage and
-    * planning time stay constant across ranks; the argmax collect brings back
-    * ONE row per rank. Ties break (count desc, first asc, second asc) —
-    * fully deterministic, so the learned table is reproducible.
-    */
-  def bpeTrain(docs: DataFrame, numMerges: Int): Seq[(String, String)] = {
-    var vocab = Materialize(
-      graft.Tables.spread(docs.select(split(col("text"), " ").as("ws")))
-        .select(explode(col("ws")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy("word").agg(count(lit(1)).as("wct"))
-        .select(bpeSymbols(col("word")).as("sym"), col("wct")))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var exhausted = false
-    while (merges.size < numMerges && !exhausted) {
-      val toks = split(trim(col("sym")), BpeSep)
-      val best = vocab
-        .select(explode(zip_with(toks, slice(toks, lit(2), size(toks)),
-          (a, b) => struct(a.as("f"), b.as("s")))).as("p"), col("wct"))
-        .filter(col("p.s").isNotNull) // zip_with pads the last window
-        .groupBy(col("p.f").as("first"), col("p.s").as("second"))
-        .agg(sum(col("wct")).as("ct"))
-        .orderBy(col("ct").desc, col("first"), col("second"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val m = (best(0).getString(0), best(0).getString(1))
-        merges += m
-        val next = Materialize(
-          vocab.select(bpeApply(col("sym"), Seq(m)).as("sym"), col("wct")))
-        Materialize.release(vocab)
-        vocab = next
-      }
-    }
-    Materialize.release(vocab)
-    merges.toSeq
-  }
-
-  /** Fixed demo merge table for the oracle-checked t10 face (training
-    * determinism is pinned by CurationOpsSpec): plausible English merges,
+  /** Fixed demo merge table for the oracle-checked t10 face: plausible
+    * English merges,
     * ordered so later ranks consume earlier outputs (th→the, an→and,
     * in→ing) — the sequencing is what the oracle must reproduce.
     */

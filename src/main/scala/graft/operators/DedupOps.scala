@@ -28,15 +28,6 @@ object DedupOps {
     // intermediate prefix (bit-parity with the fold pinned in KGramsSpec)
     graft.functions.KGrams(words, ShingleN)
 
-  /** 3-shingle array of a raw text column, empty for sub-3-word docs —
-    * the array form the native `intersect_count` kernel
-    * ([[graft.functions.IntersectCount]]) reads.
-    */
-  def shingleArray(text: Column): Column = {
-    val w = split(text, " ")
-    when(size(w) >= ShingleN, shingleExpr(w)).otherwise(array().cast("array<string>"))
-  }
-
   /** (doc_id, shingle) distinct pairs for docs with >= 3 words. Distinctness
     * is per doc, so it happens MAP-SIDE (array_distinct before the explode) —
     * a global `.distinct()` would shuffle the whole corpus's shingle stream
@@ -162,15 +153,39 @@ object DedupOps {
     * verifies' scale contract (pairs carry only ids; the arrays never ride
     * a shuffle). The materialized set table exposes its exact size, and
     * past the broadcast threshold AQE would flip both join-backs to SMJs
-    * that shuffle a shingle array per pair side. At set sizes beyond
-    * executor memory the posting-list formulation ([[containmentPairs]]'
-    * candidate shape) is the swap-in.
+    * that shuffle a shingle array per pair side.
+    *
+    * The broadcast is bounded: a set table larger than [[broadcastBound]]
+    * (read from its plan statistics, which launches no job) fails here,
+    * before any broadcast, instead of failing inside one. At that size the
+    * posting-list formulation ([[containmentPairs]]' shared-shingle posting
+    * join, with |A∩B| counted from the postings) is the swap-in.
     */
-  private def withIntersections(cand: DataFrame, sets: DataFrame): DataFrame =
+  private def withIntersections(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val size = sets.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bound = broadcastBound
+    require(size <= bound,
+      s"the per-doc shingle-set table ($size bytes) exceeds the set join-back's " +
+        s"broadcast bound ($bound bytes: the lesser of spark.sql.maxBroadcastTableSize " +
+        s"and 1/$DriverHeapShare of the driver heap); a corpus this size needs d18's " +
+        s"posting-list formulation (containmentPairs' shared-shingle posting join), " +
+        s"which counts |A∩B| from postings instead of broadcasting the sets")
     cand
       .join(broadcast(sets.select(col("doc_id").as("a"), col("shset").as("sa"), col("n").as("na"))), Seq("a"))
       .join(broadcast(sets.select(col("doc_id").as("b"), col("shset").as("sb"), col("n").as("nb"))), Seq("b"))
       .withColumn("inter_ct", graft.functions.IntersectCount(col("sa"), col("sb")))
+  }
+
+  /** The driver collects a broadcast table and builds its hash relation,
+    * once per join-back side: both sides of [[withIntersections]] together
+    * must stay well inside its heap.
+    */
+  private val DriverHeapShare = 4
+
+  /** The largest set table [[withIntersections]] broadcasts. */
+  private def broadcastBound: Long =
+    math.min(org.apache.spark.sql.internal.SQLConf.get.maxBroadcastTableSizeInBytes,
+      Runtime.getRuntime.maxMemory / DriverHeapShare)
 
   /** D18 — asymmetric CONTAINMENT pairs: `|A∩B| / min(|A|, |B|)` over the
     * distinct shingle sets, the quote/inclusion case symmetric Jaccard
@@ -230,20 +245,6 @@ object DedupOps {
       .filter(col("containment") >= threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("inter_ct"), col("na"), col("nb"), col("containment"))
-  }
-
-  /** Corpus-level near-dup REMOVAL: drop every doc that is ≥ `threshold`
-    * Jaccard-similar to a lower-id doc (greedy keep-first, the standard
-    * training-data dedup policy; exact duplicates always drop since their
-    * jaccard is 1). One anti-join against the LSH pair set — no iteration,
-    * so it composes with the candidate-bounded pair generation at any scale.
-    */
-  def dropNearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
-    val losers = minhashLshPairs(docs)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_b").as("doc_id"))
-      .distinct()
-    docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
   /** Transitive near-dup clusters: connected components over the LSH pair
@@ -669,15 +670,6 @@ object DedupOps {
     // native KGrams call, same rationale (and bit-parity spec) as
     // [[shingleExpr]]
     graft.functions.KGrams(words, k)
-
-  /** Positional k-gram array of a raw text column (element i = the k-gram
-    * starting at token i), empty for sub-k-word docs — the array the
-    * native `dup_spans` kernel ([[graft.functions.DupSpans]]) reads.
-    */
-  def kgramArray(text: Column, k: Int): Column = {
-    val w = split(text, " ")
-    when(size(w) >= k, kgramExpr(w, k)).otherwise(array().cast("array<string>"))
-  }
 
   /** Positional k-gram rows `(doc_id, pos, gram)` of every ≥ k-word doc —
     * the one gram table the seed count and the span cover both read.

@@ -203,27 +203,6 @@ object RelationalOps {
       col("violations").cast("long").as("violations"))
   private def ofCount(df: DataFrame) = df.agg(count(lit(1)).as("violations"))
 
-  /** The document-frame slice of the battery, reusable on ANY frame of
-    * (doc_id, text, n_chars) rows — applied per micro-batch inside a
-    * `foreachBatch` it is the continuous load gate (quarantine or alert when
-    * a batch reports `violations > 0`).
-    */
-  def documentQualityChecks(docs: DataFrame): DataFrame =
-    // ONE scan-aggregate for the whole battery (conditional sums + the
-    // distinct count), unpivoted to check rows: a frame is scanned once
-    // however many checks run.
-    docs.agg(
-        (count(lit(1)) - countDistinct(col("doc_id"))).as("uq"),
-        sum(when(col("text").isNull, 1L).otherwise(0L)).as("tn"),
-        sum(when(length(col("text")) =!= col("n_chars"), 1L).otherwise(0L)).as("nc"),
-        sum(when(col("n_chars") < 64, 1L).otherwise(0L)).as("ml"))
-      .select(explode(map(
-        lit("doc_id_unique"), col("uq"),
-        lit("text_not_null"), col("tn"),
-        lit("n_chars_consistent"), col("nc"),
-        lit("documents_min_length"), col("ml"))).as(Seq("check", "violations")))
-      .withColumn("violations", coalesce(col("violations"), lit(0L)))
-
   /** DQ2 — distribution DRIFT detection: the population stability index
     * (PSI), the standard model-monitoring statistic, between two corpus
     * snapshots — here the d19 split (even ids = history, odd = incoming)

@@ -100,6 +100,6 @@ private[graft] object SessionMemo {
   def size: Int = memo.synchronized(memo.size())
 
   /** Ids of the blocks the live entries own. */
-  def blockIds: Set[Int] =
+  private[graft] def blockIds: Set[Int] =
     memo.synchronized(memo.values.asScala.flatMap(_.blocks.map(_.id)).toSet)
 }

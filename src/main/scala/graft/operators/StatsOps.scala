@@ -140,8 +140,8 @@ object StatsOps {
     */
   /** W2-batch — sliding (hopping) window counts over events: 10-minute
     * windows every 5 minutes, so each event lands in exactly size/slide = 2
-    * panes. Batch face of [[graft.streaming.StatsStreams.slidingEventCounts]]
-    * — proves the pane-assignment arithmetic against an oracle stating the
+    * panes. A live stream runs it per micro-batch. Proves the
+    * pane-assignment arithmetic against an oracle stating the
     * floor-based pane starts explicitly (the §2.6 sliding-window row's
     * NOT-PRESENT bonus, upgraded from behavioral spec to oracle-checked).
     *
@@ -165,8 +165,7 @@ object StatsOps {
   /** W3-batch — Spark's NATIVE `session_window` (gap-merge operator) proven
     * against the relational formulation: the oracle derives the same sessions
     * via lag + cumulative session numbering (the a9 technique) and states
-    * Spark's end semantics (last event + gap) arithmetically. Batch face of
-    * [[graft.streaming.StatsStreams.sessionCounts]].
+    * Spark's end semantics (last event + gap) arithmetically.
     *
     * Scale notes: session_window shuffles once on the session key, then
     * merges adjacent windows per key in a sort-based pass — the same shape as

@@ -185,40 +185,6 @@ object DbRouter {
     else None
   }
 
-  /** Read a dim's full SCD2 version history (rules with history = true). */
-  def readDimHistory(spark: SparkSession, sinkRoot: String, sinkTable: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$sinkRoot/dimh/$sinkTable")
-
-  /** Rules loaded from a `table_process` parquet/csv-style config table
-    * (columns of Schemas.tableProcess) — re-read on every call, so a config
-    * writer updates routing live, like the reference's CDC-fed config stream
-    * (app/dwd/BaseDBApp.java:61-77).
-    */
-  def rulesFromTable(spark: SparkSession, path: String): Seq[RouteRule] =
-    spark.read.parquet(path).collect().toSeq.map { r =>
-      RouteRule(
-        r.getAs[String]("sourceTable"), r.getAs[String]("operateType"),
-        r.getAs[String]("sinkType"), r.getAs[String]("sinkTable"),
-        r.getAs[String]("sinkColumns").split(",").toSeq.map(_.trim),
-        r.getAs[String]("sinkPk"))
-    }
-
-  /** The reference's table_process rules transposed (FIXTURES §3). */
-  def referenceRules: Seq[RouteRule] = Seq(
-    RouteRule("order_info", "insert", "kafka", "dwd_order_info",
-      Seq("id", "user_id", "province_id", "total_amount", "create_time"), "id"),
-    RouteRule("order_detail", "insert", "kafka", "dwd_order_detail",
-      Seq("id", "order_id", "sku_id", "order_price", "sku_num", "create_time"), "id"),
-    RouteRule("payment_info", "insert", "kafka", "dwd_payment_info",
-      Seq("id", "order_id", "user_id", "total_amount", "callback_time"), "id"),
-    RouteRule("user_info", "insert", "hbase", "dim_user_info",
-      Seq("id", "name", "gender", "birthday"), "id"),
-    RouteRule("user_info", "update", "hbase", "dim_user_info",
-      Seq("id", "name", "gender", "birthday"), "id"),
-    RouteRule("base_province", "insert", "hbase", "dim_base_province",
-      Seq("id", "name", "area_code", "iso_code"), "id"))
-
   /** S2 — decode raw CDC-envelope JSON lines (CustomerDeserialization output,
     * app/function/CustomerDeserialization.java:30-90) incl. `create`→`insert`
     * normalization (:74-79) and the delete filter (P3,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables.dsum
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DWS windowed streaming aggregations (SURVEY §2.5/§2.6), with the
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * state with partial aggregation on the map side; watermark closes windows
   * and evicts state (the reference's window-close finisher + state purge,
   * app/dws/VisitorStatsApp.java:158-198). Spark's built-in count(distinct)
-  * is not supported in append-mode streaming; the A3 faces use the typed
-  * ExactDistinct aggregator or an HLL sketch instead (SURVEY §7.4.1).
+  * is not supported in append-mode streaming; the A3 face uses the typed
+  * ExactDistinct aggregator instead (SURVEY §7.4.1).
   */
 object StatsStreams {
 
@@ -71,78 +71,24 @@ object StatsStreams {
         col("vc"), col("ch"), col("ar"), col("is_new"),
         col("uv_ct"), col("pv_ct"), col("sv_ct"), col("uj_ct"), col("dur_sum"))
 
-  /** A3/W2/W5 — ProvinceStats streaming: 10s tumbling window × province with
-    * a distinct-order aggregate `orders` + amount
-    * (app/dws/ProvinceStatsSQLApp.java:112-132), the one windowed core of
-    * both faces below. Input columns: province_id, province_name, order_id,
+  /** A3/W2/W5 — ProvinceStats streaming: 10s tumbling window × province
+    * with an EXACT windowed distinct-order count via the typed
+    * [[graft.functions.ExactDistinct]] Aggregator (the reference's exact
+    * count(distinct) semantics, app/dws/ProvinceStatsSQLApp.java:112-132).
+    * Input columns: province_id, province_name, order_id,
     * split_total_amount, create_ts (millis).
     */
-  private def provinceWindows(orders: DataFrame, distinctOrders: Column): DataFrame =
+  def provinceStatsExact(orders: DataFrame): DataFrame =
     orders
       .withColumn("rt", timestamp_millis(col("create_ts")))
       .transform(watermark("rt", "1 second"))
       .groupBy(window(col("rt"), "10 seconds"), col("province_id"), col("province_name"))
-      .agg(distinctOrders.as("orders"),
+      .agg(graft.functions.ExactDistinct(col("order_id")).as("order_count"),
         dsum(col("split_total_amount")).as("order_amount"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
         date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("province_id"), col("province_name"), col("orders"), col("order_amount"))
-
-  /** A3 exact path — EXACT windowed distinct via the typed
-    * [[graft.functions.ExactDistinct]] Aggregator (the reference's exact
-    * count(distinct) semantics); choose this when per-window distinct
-    * cardinality is bounded, [[provinceStatsHll]] otherwise.
-    */
-  def provinceStatsExact(orders: DataFrame): DataFrame =
-    provinceWindows(orders, graft.functions.ExactDistinct(col("order_id")))
-      .withColumnRenamed("orders", "order_count")
-
-  /** A3 bounded-state path — the [[graft.functions.HllSketch]] sketch kept
-    * as a column: per-(window, province) state is a constant 4 KiB
-    * regardless of distinct-order cardinality (the shape that survives
-    * unbounded keys at 100 TB), the emitted count is the sketch estimate,
-    * and the persisted sketch re-aggregates (day→week, province→country)
-    * via [[graft.functions.HllMergeCount]] without rescanning events.
-    */
-  def provinceStatsHll(orders: DataFrame): DataFrame =
-    provinceWindows(orders, graft.functions.HllSketch(col("order_id")))
-      .select(col("stt"), col("edt"), col("province_id"), col("province_name"),
-        graft.functions.HllSketchEstimate(col("orders")).as("order_count"),
-        col("orders").as("order_count_sketch"), col("order_amount"))
-
-  /** Beyond the reference (SURVEY §2.6 NOT-PRESENT row): sliding-window
-    * variant of visitor counts — same aggregation over `window(size, slide)`.
-    * The reference rejects sliding windows only because its mutable-bean
-    * reduce can't share state across panes (VisitorStatsApp.java:174);
-    * Spark's immutable agg buffers have no such constraint.
-    */
-  def slidingEventCounts(events: DataFrame, size: String, slide: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .transform(watermark("event_time", "11 seconds"))
-      .groupBy(window(col("event_time"), size, slide), col("key"))
-      .agg(count(lit(1)).as("ct"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("key"), col("ct"))
-
-  /** Beyond the reference: session windows (gap-based) — the natural model
-    * for the reference's per-mid visit sessions (UserJump's 10s horizon is a
-    * hand-rolled session boundary). State closes when a key is idle past the
-    * gap + watermark.
-    */
-  def sessionCounts(events: DataFrame, gap: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .transform(watermark("event_time", "11 seconds"))
-      .groupBy(session_window(col("event_time"), gap), col("key"))
-      .agg(count(lit(1)).as("ct"), sum(col("value")).as("value_sum"))
-      .select(
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("key"), col("ct"), col("value_sum"))
+        col("province_id"), col("province_name"), col("order_count"), col("order_amount"))
 
   /** A4/X1 — KeywordStats streaming: tokenize (whitespace UDTF replacement,
     * app/function/SplitFunction.java:12-28) + 10s window count.

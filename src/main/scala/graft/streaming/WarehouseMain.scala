@@ -83,8 +83,9 @@ object WarehouseMain {
         unix_millis(col("ts")).as("ts"))).as("value"))
       .write.mode("overwrite").text(s"$work/ods_base_log")
 
-    // topic transport: file bus here; a deployment flips to KafkaBus via
-    // TopicIO.fromConf (spark.graft.bus=kafka://…) with no code change
+    // topic transport: a file bus over the ODS text files written above. A
+    // deployment whose ODS topics arrive on Kafka reads them through
+    // TopicIO.fromConf (spark.graft.bus=kafka://…) instead, and writes no ODS
     val bus = graft.sources.FileBus(work)
 
     // ---- DWD: CDC router (BaseDBApp) --------------------------------------

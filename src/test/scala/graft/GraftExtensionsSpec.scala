@@ -66,11 +66,12 @@ class GraftExtensionsSpec extends SparkSpec {
     val sqlSpans = spark.sql("SELECT dup_spans(array('g1','x','g2'), ref, 3) FROM ge_native")
       .head.getSeq[Long](0)
     val colSpans = spark.table("ge_native")
-      .select(graft.functions.DupSpans(
-        org.apache.spark.sql.functions.array(
-          org.apache.spark.sql.functions.lit("g1"),
-          org.apache.spark.sql.functions.lit("x"),
-          org.apache.spark.sql.functions.lit("g2")), org.apache.spark.sql.functions.col("ref"), 3))
+      .select {
+        import org.apache.spark.sql.functions.{array, col, lit}
+        import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+        column(graft.functions.DupSpansExpr(
+          expression(array(lit("g1"), lit("x"), lit("g2"))), expression(col("ref")), 3))
+      }
       .head.getSeq[Long](0)
     assert(sqlSpans === colSpans)
     // seeds 0 and 2 with k=3 merge: one span [0,4] packed

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 class SqlSurfaceSpec extends SparkSpec {
 
   private def register(): Unit =
-    Tables.all.foreach(t =>
+    Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings").foreach(t =>
       Tables.table(spark, sf, t).createOrReplaceTempView(t))
 
   test("province stats via spark.sql ≡ DataFrame API (A3/S4)") {
@@ -56,7 +57,10 @@ class SqlSurfaceSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again", 41L), // dup of 0
       (2L, "completely different words about spark joins and shuffles here", 55L))
       .toDF("doc_id", "text", "n_chars")
-    val kept = operators.DedupOps.dropNearDuplicates(docs, 0.9)
+    // greedy keep-first over the d3 pairs: of each pair, the higher id goes
+    val losers = operators.DedupOps.minhashLshPairs(docs)
+      .filter(col("jaccard") >= 0.9).select(col("doc_b").as("doc_id"))
+    val kept = docs.join(losers, Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(0L, 2L))
   }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -12,6 +14,17 @@ class DupSpansSpec extends SparkSpec {
     g(Gen.Parameters.default, Seed(seed)).get
 
   private def unpack(l: Long): (Long, Long) = (l >> 32, l & 0xffffffffL)
+
+  /** `dup_spans(grams, ref, k)` as a Column. */
+  private def dupSpans(grams: Column, ref: Column, k: Int): Column =
+    ColumnBridge.column(DupSpansExpr(
+      ColumnBridge.expression(grams), ColumnBridge.expression(ref), k))
+
+  /** Positional k-gram array of a text column, empty for sub-k-word docs. */
+  private def kgramArray(text: Column, k: Int): Column = {
+    val w = split(text, " ")
+    when(size(w) >= k, KGrams(w, k)).otherwise(array().cast("array<string>"))
+  }
 
   /** Independent reference model: seed positions whose gram ∈ ref, covered
     * ranges [i, i+k−1], islands merged on overlap-or-touch.
@@ -45,14 +58,14 @@ class DupSpansSpec extends SparkSpec {
       (Seq(null, "XX"), Seq("XX"), Seq((1L, 3L))))
       .map { case (g, r, want) => (g, r, want.map { case (s, e) => (s << 32) | e }) }
       .toDF("grams", "ref", "want")
-    val got = rows.select(DupSpans(col("grams"), col("ref"), 3).as("got"), col("want"))
+    val got = rows.select(dupSpans(col("grams"), col("ref"), 3).as("got"), col("want"))
     got.collect().foreach { r =>
       assert(r.getSeq[Long](0) === r.getSeq[Long](1), r)
     }
     // empty ref and null-only ref → no spans
     val edge = Seq((Seq("a"), Seq.empty[String]), (Seq("a"), Seq(null: String)))
       .toDF("grams", "ref")
-    edge.select(DupSpans(col("grams"), col("ref"), 3)).collect()
+    edge.select(dupSpans(col("grams"), col("ref"), 3)).collect()
       .foreach(r => assert(r.getSeq[Long](0).isEmpty, r))
   }
 
@@ -68,7 +81,7 @@ class DupSpansSpec extends SparkSpec {
           val cases = sample(caseGen, s)
           cases.zipWithIndex.foreach { case ((grams, ref, k), idx) =>
             val got = Seq((grams, ref)).toDF("grams", "ref")
-              .select(DupSpans(col("grams"), col("ref"), k))
+              .select(dupSpans(col("grams"), col("ref"), k))
               .head.getSeq[Long](0).map(unpack)
             assert(got === model(grams, ref.toSet, k),
               s"codegen=$codegen seed=$s case=$idx grams=$grams ref=$ref k=$k")
@@ -84,10 +97,10 @@ class DupSpansSpec extends SparkSpec {
     val k = 4
     val ref = DedupOps.duplicatedGrams(docs, k)
     val viaExpr = docs
-      .withColumn("grams", DedupOps.kgramArray(col("text"), k))
+      .withColumn("grams", kgramArray(col("text"), k))
       .crossJoin(broadcast(ref.agg(collect_set("gram").as("ref_set"))))
       .select(col("doc_id"),
-        explode(DupSpans(col("grams"), col("ref_set"), k)).as("p"))
+        explode(dupSpans(col("grams"), col("ref_set"), k)).as("p"))
       .select(col("doc_id"), shiftright(col("p"), 32).as("span_start"),
         col("p").bitwiseAND(lit(0xffffffffL)).as("span_end"))
     val viaBatch = DedupOps.exactSubstringSpans(docs, k)
@@ -99,10 +112,10 @@ class DupSpansSpec extends SparkSpec {
   test("rejects non-string-array inputs and k < 1") {
     val df = Seq((Seq(1L, 2L), Seq("a"))).toDF("nums", "strs")
     intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(DupSpans(col("nums"), col("strs"), 3)).collect()
+      df.select(dupSpans(col("nums"), col("strs"), 3)).collect()
     }
     intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(DupSpans(col("strs"), col("strs"), 0)).collect()
+      df.select(dupSpans(col("strs"), col("strs"), 0)).collect()
     }
   }
 

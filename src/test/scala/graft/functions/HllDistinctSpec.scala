@@ -34,7 +34,7 @@ class HllDistinctSpec extends SparkSpec {
     val n = 50000L
     val df = spark.range(n).select((col("id") % 10).as("k"), col("id"))
       .repartition(8)
-    val perKey = df.groupBy("k").agg(HllDistinct(col("id")).as("dc"))
+    val perKey = df.groupBy("k").agg(HllDistinct.asUdaf(col("id")).as("dc"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // each key sees n/10 = 5000 distinct ids
     perKey.values.foreach(est => assert(relErr(est, n / 10) < 0.05, perKey))
@@ -46,14 +46,14 @@ class HllDistinctSpec extends SparkSpec {
       (col("id") % 3).as("day"), (col("id") % 2).as("province"),
       (col("id") % 9000).as("user_id")) // users recur across days/provinces
     val daily = events.groupBy("day", "province")
-      .agg(HllSketch(col("user_id")).as("sketch"))
+      .agg(HllSketch.asUdaf(col("user_id")).as("sketch"))
     // ...then a month/country rollup merges sketches only
     val total = daily.groupBy()
-      .agg(HllMergeCount(col("sketch")).as("dc")).head.getLong(0)
+      .agg(HllMergeCount.asUdaf(col("sketch")).as("dc")).head.getLong(0)
     val exact = events.select("user_id").distinct().count()
     assert(relErr(total, exact) < 0.05, s"rollup=$total exact=$exact")
-    // and the scalar estimate reads one stored sketch directly
-    val one = daily.select(HllSketchEstimate(col("sketch")).as("e")).head.getLong(0)
+    // and one stored sketch estimates directly
+    val one = Hll.estimate(daily.head.getAs[Array[Byte]]("sketch"))
     assert(one > 0)
   }
 
@@ -61,8 +61,14 @@ class HllDistinctSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Long, Double, Long)]
-    val out = graft.streaming.StatsStreams.provinceStatsHll(input.toDF()
-      .toDF("province_id", "province_name", "order_id", "split_total_amount", "create_ts"))
+    // the sketch kept as a column of a 10s event-time window per province
+    val out = input.toDF()
+      .toDF("province_id", "province_name", "order_id", "split_total_amount", "create_ts")
+      .withColumn("rt", timestamp_millis(col("create_ts")))
+      .withWatermark("rt", "1 second")
+      .groupBy(window(col("rt"), "10 seconds"), col("province_id"))
+      .agg(HllSketch.asUdaf(col("order_id")).as("order_count_sketch"),
+        sum(col("split_total_amount")).as("order_amount"))
     val q = out.writeStream.format("memory").queryName("province_hll")
       .outputMode("append").start()
     try {
@@ -73,11 +79,11 @@ class HllDistinctSpec extends SparkSpec {
       input.addData((1L, "hebei", 999L, 1.0, base + 60000)) // advance watermark
       q.processAllAvailable()
       val rows = spark.table("province_hll")
-        .filter(col("province_id") === 1L && col("order_count") > 1)
+        .filter(col("province_id") === 1L && col("order_amount") > 1.0)
         .collect()
       assert(rows.nonEmpty)
       val r = rows.head
-      assert(relErr(r.getAs[Long]("order_count"), 200L) < 0.05)
+      assert(relErr(Hll.estimate(r.getAs[Array[Byte]]("order_count_sketch")), 200L) < 0.05)
       assert(r.getAs[Array[Byte]]("order_count_sketch").length === Hll.M) // 4 KiB state
       assert(r.getAs[Double]("order_amount") === 400.0)
     } finally q.stop()

@@ -63,7 +63,9 @@ class IntersectCountSpec extends SparkSpec {
 
   test("expression participates in whole-stage codegen") {
     val d = graft.Tables.table(spark, sf, "documents").limit(50)
-      .withColumn("sh", graft.operators.DedupOps.shingleArray(col("text")))
+      .withColumn("w", split(col("text"), " "))
+      .withColumn("sh", when(size(col("w")) >= 3, KGrams(col("w"), 3))
+        .otherwise(array().cast("array<string>")))
     val plan = d.select(IntersectCount(col("sh"), col("sh")))
       .queryExecution.executedPlan.toString
     // the Project evaluating intersect_count must sit inside a *(N) codegen span

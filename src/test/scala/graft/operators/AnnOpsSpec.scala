@@ -1,9 +1,29 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class AnnOpsSpec extends SparkSpec {
+
+  /** Join-based IVF assignment — the broadcast centroid table and a
+    * `max_by` over (score, −cell) — the differential reference for
+    * [[AnnOps.assignCellsLit]]'s literal form.
+    */
+  private def joinAssign(e: DataFrame, cents: DataFrame): DataFrame = {
+    import graft.functions.VectorFunctions.dot_f
+    e.join(broadcast(cents))
+      .select(col("vec_id"), col("cell"),
+        (dot_f(col("embedding"), col("centroid")) * 2.0 -
+          dot_f(col("centroid"), col("centroid"))).as("score"))
+      .groupBy("vec_id")
+      .agg(max_by(col("cell"), struct(col("score"), -col("cell"))).as("assigned_cell"))
+  }
+
+  /** `e` with the `cell` column of its nearest centroid in `cents`. */
+  private def withCells(e: DataFrame, cents: DataFrame): DataFrame =
+    AnnOps.assignCellsLit(e, AnnOps.collectCentroids(cents))
+      .withColumnRenamed("assigned_cell", "cell")
 
   test("IVF quantization: centroids per cell, assignment matches given labels") {
     val e = Tables.table(spark, sf, "embeddings")
@@ -15,7 +35,8 @@ class AnnOpsSpec extends SparkSpec {
     // the synthetic labels are only weakly spatial (≈37% recoverable) —
     // assert assignment agreement is well above the 1/nCells chance level,
     // i.e. the quantizer finds whatever structure exists
-    val assigned = AnnOps.assignCells(e, cents)
+    val assigned = AnnOps.assignCellsLit(e, AnnOps.collectCentroids(cents))
+      .select("vec_id", "assigned_cell")
     val agree = assigned.join(e.select(col("vec_id"), col("label")), "vec_id")
       .filter(col("assigned_cell") === col("label")).count()
     val total = e.count()
@@ -27,7 +48,7 @@ class AnnOpsSpec extends SparkSpec {
   test("literal-centroid assignment matches the join-based batch form; map-only plan") {
     val e = Tables.table(spark, sf, "embeddings")
     val cents = AnnOps.centroids(e, "label")
-    val batch = AnnOps.assignCells(e, cents)
+    val batch = joinAssign(e, cents)
       .select("vec_id", "assigned_cell")
     val lit = AnnOps.assignCellsLit(e, AnnOps.collectCentroids(cents))
       .select("vec_id", "assigned_cell")
@@ -58,10 +79,12 @@ class AnnOpsSpec extends SparkSpec {
     // cell boundary respected: 3's neighbor must be in cell 0
     assert(Set(1L, 2L).contains(out(3L)._1))
 
-    // corpus removal keeps the lower id of each dup pair and all non-dups
-    val kept = AnnOps.dropEmbeddingNearDups(e, threshold = 0.95)
+    // greedy keep-first removal keeps the lower id of each dup pair and
+    // all non-dups
+    val dropped = AnnOps.embeddingNearDups(e, threshold = 0.95)
+      .filter(col("is_dup") && col("vec_id") > col("nn_id"))
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 3L, 4L, 5L))
+    assert(Set(1L, 2L, 3L, 4L, 5L, 6L) -- dropped === Set(1L, 3L, 4L, 5L))
   }
 
   test("ivf results are a subset of brute-force candidates per query") {
@@ -198,13 +221,13 @@ class AnnOpsSpec extends SparkSpec {
 
     val brute = AnnOps.cosineTopK(e)
       .select("query_id", "neighbor_id", "rnk", "sim")
-    val full = AnnOps.ivfSearch(e, cents, queries, 5, nCells)
+    val full = AnnOps.ivfSearchAssigned(withCells(e, cents), cents, queries, 5, nCells)
       .select("query_id", "neighbor_id", "rnk", "sim")
     assert(full.exceptAll(brute).count() === 0)
     assert(brute.exceptAll(full).count() === 0)
 
     // multi-probe with few cells: a valid top-k subset with partial recall
-    val probe2 = AnnOps.ivfSearch(e, cents, queries, 5, 2)
+    val probe2 = AnnOps.ivfSearchAssigned(withCells(e, cents), cents, queries, 5, 2)
     val recall = probe2.join(brute, Seq("query_id", "neighbor_id")).count()
     assert(probe2.count() <= 50)
     assert(recall > 0, "probing 2 cells recovered none of the true top-5")
@@ -241,7 +264,7 @@ class AnnOpsSpec extends SparkSpec {
     val centsDf = AnnOps.centroids(assigned, "cell")
     val queries = e.filter(col("vec_id") < 10)
     val brute = AnnOps.cosineTopK(e).select("query_id", "neighbor_id")
-    val ivf = AnnOps.ivfSearch(e, centsDf, queries, 5, 3)
+    val ivf = AnnOps.ivfSearchAssigned(assigned, centsDf, queries, 5, 3)
       .select("query_id", "neighbor_id")
     val truth = brute.count()
     val recalled = ivf.join(brute, Seq("query_id", "neighbor_id")).count()
@@ -499,17 +522,6 @@ class AnnOpsSpec extends SparkSpec {
     // the kept member of the (1, 2) pair really is the centroid outlier
     val cs = out.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(cs(1L) < cs(2L), s"outlier rule violated: ${cs(1L)} vs ${cs(2L)}")
-  }
-
-  test("semDedupTrained runs the full learned-quantizer pipeline (D16 production face)") {
-    val e = Tables.table(spark, sf, "embeddings")
-    val out = AnnOps.semDedupTrained(e, k = 8, threshold = 0.35).cache()
-    assert(out.count() === e.count(), "every vector scored exactly once")
-    // learned cells are k-bounded and every vector landed in one
-    val cells = out.select("label").distinct().count()
-    assert(cells >= 1 && cells <= 8, s"unexpected cell count $cells")
-    assert(out.filter(col("cent_sim") < -1.0001 || col("cent_sim") > 1.0001).count() === 0)
-    out.unpersist()
   }
 
   test("quantizedTopK recalls brute-force truth through the int8 candidate scan (N9)") {

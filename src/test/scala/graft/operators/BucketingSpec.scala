@@ -3,67 +3,10 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-/** The bucketed co-located join contract: same-bucketed tables join with
-  * ZERO Exchange operators (the recurring shuffle is paid once at write
-  * time), and the result is identical to the plain shuffled join.
+/** The lakehouse layout operators: the z-order and Hilbert keys, the
+  * data-skipping audit and the compaction plan.
   */
 class BucketingSpec extends SparkSpec {
-
-  test("same-bucketed tables join shuffle-free and match the plain join") {
-    val orders = Tables.table(spark, sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val customer = Tables.table(spark, sf, "customer")
-      .select("c_custkey", "c_name", "c_nationkey")
-      .withColumnRenamed("c_custkey", "o_custkey")
-
-    Bucketing.writeBucketed(orders, "bkt_orders", "o_custkey", 8)
-    Bucketing.writeBucketed(customer, "bkt_customer", "o_custkey", 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // disable broadcast so the test exercises the sort-merge path the
-      // layout exists for (at 100 TB neither side broadcasts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "bkt_orders", "bkt_customer", "o_custkey")
-      joined.count() // materialize through AQE
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join still shuffles:\n$plan")
-      assert(plan.contains("SortMergeJoin"), plan)
-      // bucket metadata: scans report the selected bucket count
-      assert(plan.contains("SelectedBucketsCount"), plan)
-
-      // identical rows to the plain (shuffled) join
-      val plain = orders.join(customer, "o_custkey")
-      assert(joined.exceptAll(plain).count() === 0)
-      assert(plain.exceptAll(joined).count() === 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bkt_orders")
-      spark.sql("DROP TABLE IF EXISTS bkt_customer")
-    }
-  }
-
-  test("bucket pruning: a point lookup touches one bucket per side") {
-    val orders = Tables.table(spark, sf, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    Bucketing.writeBucketed(orders, "bkt_orders_prune", "o_custkey", 8)
-    // auto-bucketed-scan would fall back to a plain scan for a bucket-less
-    // plan shape; force the bucketed layout so the filter can prune buckets
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
-      val key = orders.select("o_custkey").head.getLong(0)
-      val q = spark.table("bkt_orders_prune").filter(col("o_custkey") === key)
-      q.count()
-      val plan = q.queryExecution.executedPlan.toString
-      // "SelectedBucketsCount: 1 out of 8" — only the key's bucket is read
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
-        s"bucket pruning missing:\n$plan")
-      assert(q.count() === orders.filter(col("o_custkey") === key).count())
-    } finally {
-      spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      spark.sql("DROP TABLE IF EXISTS bkt_orders_prune")
-    }
-  }
 
   test("zorderKey is injective on the domain; z-layout tightens both-dim bounding boxes (L1)") {
     import org.apache.spark.sql.functions._

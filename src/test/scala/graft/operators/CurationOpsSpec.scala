@@ -373,26 +373,6 @@ class CurationOpsSpec extends SparkSpec {
     assert(out.filter(_._1 == 3L).map(_._2).toSeq === Seq("the", "and"))
   }
 
-  test("bpeTrain learns the frequency-ordered merges deterministically (T10)") {
-    import spark.implicits._
-    // "aa" appears in 3 words (weight 5 total), "ab" in 2; rank 1 must be
-    // (a,a) by count, then (aa,b) once "aa" is a symbol
-    val d = Seq((1L, "aab aab aa"), (2L, "aab ax"), (3L, "by")).toDF("doc_id", "text")
-    val m = CurationOps.bpeTrain(d, 2)
-    assert(m === Seq(("a", "a"), ("aa", "b")))
-    // training twice is bit-identical (deterministic tie-breaks)
-    assert(CurationOps.bpeTrain(d, 2) === m)
-    // tokenizing with the learned table round-trips: concat(tokens) == word
-    val toks = CurationOps.bpeTokenize(d, m)
-      .groupBy("doc_id", "word_idx", "word")
-      .agg(concat_ws("", sort_array(collect_list(struct(col("tok_idx"), col("token"))))
-        .getField("token")).as("joined"))
-    assert(toks.filter(col("joined") =!= col("word")).count() === 0)
-    // exhaustion: asking for more merges than exist terminates
-    val all = CurationOps.bpeTrain(Seq((1L, "ab")).toDF("doc_id", "text"), 50)
-    assert(all === Seq(("a", "b")))
-  }
-
   test("sessionize partitions all events; sessions are well-formed") {
     val s = StatsOps.sessionize(spark, sf).cache()
     val total = Tables.table(spark, sf, "events").count()

@@ -142,6 +142,28 @@ class DedupPropertiesSpec extends SparkSpec {
     assert(DedupOps.simhashPairs(docs, maxHamming = 3, maxDocs = 12).columns.nonEmpty)
   }
 
+  test("set join-back fails before broadcasting a set table past the broadcast bound (D3/D5/D18)") {
+    val docs = docsDf(sample(corpusGen, 1L))
+    spark.conf.set("spark.sql.maxBroadcastTableSize", "16b")
+    // no automatic broadcasts (d18 materializes a join before its verify):
+    // only the explicit join-back broadcast is left to hit the bound
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      Seq[() => Any](() => DedupOps.minhashLshPairs(docs), () => DedupOps.ngramJaccard(docs),
+          () => DedupOps.containmentPairs(docs)).foreach { op =>
+        // the scope releases what the operator materialized before failing
+        val e = intercept[IllegalArgumentException](Materialize.scope(op()))
+        assert(e.getMessage.contains("spark.sql.maxBroadcastTableSize") &&
+          e.getMessage.contains("posting-list"), e.getMessage)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.maxBroadcastTableSize")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    // under the default bound the same corpus verifies
+    assert(DedupOps.minhashLshPairs(docs).columns.contains("jaccard"))
+  }
+
   test("banded pairing rejects maxHamming >= nBands (pigeonhole contract)") {
     val docs = Seq((0L, "a b c d"), (1L, "a b c e")).toDF("doc_id", "text")
     val e7 = intercept[IllegalArgumentException](DedupOps.simhashPairs(docs, maxHamming = 4))

@@ -38,8 +38,11 @@ class LshRecallSpec extends SparkSpec {
     assert(recalled.size * 10 >= planted.size * 9,
       s"recall ${recalled.size}/${planted.size}")
 
-    // dropNearDuplicates removes exactly one of each recovered twin pair
-    val kept = DedupOps.dropNearDuplicates(df, 0.8).count()
+    // greedy keep-first removal (the higher id of each pair goes) removes
+    // exactly one of each recovered twin pair
+    val losers = DedupOps.minhashLshPairs(df)
+      .filter(col("jaccard") >= 0.8).select(col("doc_b").as("doc_id"))
+    val kept = df.join(losers, Seq("doc_id"), "left_anti").count()
     assert(kept === docs.size - recalled.size)
   }
 }

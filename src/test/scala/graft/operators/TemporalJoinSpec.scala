@@ -65,7 +65,7 @@ class TemporalJoinSpec extends SparkSpec {
   }
 
   test("router dim history + asOf restores lookup-at-event-time semantics") {
-    import graft.streaming.{DbRouter, RouteRule}
+    import graft.streaming.{DbRouter, RouteRule, RouterFixtures}
     val root = tempDir("dimh")
     val rules = Seq(RouteRule("user_info", "insert", "hbase", "dim_user_info",
       Seq("id", "tier"), "id", history = true))
@@ -75,7 +75,7 @@ class TemporalJoinSpec extends SparkSpec {
     router.processBatch(DbRouter.decodeEnvelope(Seq(env(10, "bronze")).toDF("value")), 0L)
     router.processBatch(DbRouter.decodeEnvelope(Seq(env(10, "gold")).toDF("value")), 5L)
 
-    val history = DbRouter.readDimHistory(spark, root, "dim_user_info")
+    val history = RouterFixtures.dimHistory(spark, root, "dim_user_info")
       .select(col("id").cast("long").as("user_id"), col("tier"), col("valid_from"))
     assert(history.count() === 2)
 

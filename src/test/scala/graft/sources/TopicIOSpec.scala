@@ -2,23 +2,35 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
-/** No-broker contract test for the topic transport (S3/S4/K1/K2): the file
-  * and kafka buses must present IDENTICAL schemas, and the kafka bus must be
-  * configured with exactly the reference factory's options
-  * (utils/MyKafkaUtil.java:19-57) — asserted as data, since no broker (or
+/** No-broker contract test for the topic transport (S3/S4): the file and
+  * kafka buses must present IDENTICAL schemas, and the kafka bus must be
+  * configured with exactly the reference consumer factory's options
+  * (utils/MyKafkaUtil.java:45-57) — asserted as data, since no broker (or
   * kafka connector jar) exists in the sandbox.
   */
 class TopicIOSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The kafka source's fixed output schema (public connector contract) —
+    * what `format("kafka").load()` returns before `TopicIO.decodeKafka`.
+    */
+  private val kafkaSourceSchema = StructType(Seq(
+    StructField("key", BinaryType), StructField("value", BinaryType),
+    StructField("topic", StringType), StructField("partition", IntegerType),
+    StructField("offset", LongType), StructField("timestamp", TimestampType),
+    StructField("timestampType", IntegerType)))
+
+  /** Append `values` to a FileBus topic as one text file, as a producer would. */
+  private def produce(bus: FileBus, topic: String, values: String*): Unit =
+    values.toDF("value").write.mode("append").text(s"${bus.root}/$topic")
+
   test("FileBus round-trips values and presents the contract schema") {
     val root = tempDir("bus")
     val bus = FileBus(root)
-    bus.append(Seq("a", "b").toDF("value"), "t1")
-    bus.append(Seq("c").toDF("value"), "t1") // append, not overwrite
+    produce(bus, "t1", "a", "b")
+    produce(bus, "t1", "c")
 
     val batch = bus.read(spark, "t1")
     assert(batch.schema === TopicIO.valueSchema)
@@ -35,19 +47,6 @@ class TopicIOSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("FileBus dynamic append routes rows to per-topic dirs in one write job") {
-    val root = tempDir("bus-dyn")
-    val bus = FileBus(root)
-    bus.append(Seq("pre").toDF("value"), "hot") // existing topic data survives
-    bus.appendDynamic(Seq(("hot", "x"), ("hot", "y"), ("cold", "z"))
-      .toDF("sink_topic", "value"), "sink_topic")
-    assert(bus.read(spark, "hot").as[String].collect().sorted.toSeq ===
-      Seq("pre", "x", "y"))
-    assert(bus.read(spark, "cold").as[String].collect().toSeq === Seq("z"))
-    // staging is gc'd — only real topic dirs remain
-    assert(!new java.io.File(root).listFiles.exists(_.getName.startsWith("_dyn_staging")))
-  }
-
   test("KafkaBus reader options match the reference consumer factory (S3)") {
     val bus = KafkaBus("broker1:9092,broker2:9092", groupId = Some("ods_dwd_group"))
     assert(bus.readerOptions("ods_base_log") === Map(
@@ -56,23 +55,8 @@ class TopicIOSpec extends SparkSpec {
       "startingOffsets" -> "earliest",
       "failOnDataLoss" -> "false",
       "kafka.group.id" -> "ods_dwd_group"))
-    // no group id (producer-side reads), extra options pass through
-    assert(KafkaBus("b:9092", extra = Map("kafka.security.protocol" -> "SSL"))
-      .readerOptions("t")("kafka.security.protocol") === "SSL")
-  }
-
-  test("KafkaBus writer options match the reference producer factory (K1/K2)") {
-    val bus = KafkaBus("b:9092")
-    // fixed-topic producer (MyKafkaUtil.getKafkaProducer, :19-25)
-    assert(bus.writerOptions(Some("dwd_page_log")) === Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "kafka.transaction.timeout.ms" -> "900000", // the reference's 15 min
-      "topic" -> "dwd_page_log"))
-    // dynamic producer: no topic option — each row's `topic` column routes
-    // it (MyKafkaUtil.java:29-43)
-    assert(bus.writerOptions(None) === Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "kafka.transaction.timeout.ms" -> "900000"))
+    // no group id: the option is absent, not empty
+    assert(!KafkaBus("b:9092").readerOptions("t").contains("kafka.group.id"))
   }
 
   test("kafka decode normalizes the connector frame to the bus contract schema") {
@@ -83,7 +67,7 @@ class TopicIOSpec extends SparkSpec {
           java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 0),
         Row(null, """{"id":2}""".getBytes, "ods_base_db", 1, 7L,
           java.sql.Timestamp.valueOf("2024-01-01 00:00:01"), 0)),
-      TopicIO.kafkaSourceSchema)
+      kafkaSourceSchema)
     val decoded = TopicIO.decodeKafka(kafkaShaped)
     assert(decoded.schema === TopicIO.valueSchema) // identical to FileBus
     assert(decoded.as[String].collect().sorted.toSeq ===
@@ -93,9 +77,10 @@ class TopicIOSpec extends SparkSpec {
   test("CdcSource.tail decodes envelopes identically over the bus (S1/S3)") {
     val root = tempDir("bus-cdc")
     val bus = FileBus(root)
-    val snapshot = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
-    CdcSource.seedSnapshot(snapshot, "g", "user_info", bus, "ods_base_db")
-    val q = CdcSource.tail(spark, bus, "ods_base_db", None)
+    produce(bus, "ods_base_db",
+      """{"database":"g","tableName":"user_info","before":null,"after":"{\"id\":1,\"name\":\"alice\"}","type":"insert","ts":0}""",
+      """{"database":"g","tableName":"user_info","before":null,"after":"{\"id\":2,\"name\":\"bob\"}","type":"insert","ts":0}""")
+    val q = graft.streaming.DbRouter.decodeEnvelope(bus.tail(spark, "ods_base_db"))
       .writeStream.format("memory").queryName("bus_cdc").start()
     try {
       q.processAllAvailable()
@@ -106,38 +91,12 @@ class TopicIOSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("FileBus streaming producer appends a running query's output to a topic (K1)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val root = tempDir("bus-stream")
-    val bus = FileBus(root)
-    val input = MemoryStream[String]
-    val q = bus.startAppendStream(input.toDF().toDF("value"), "dwd_page_log",
-      s"$root/_ckpt")
-    try {
-      input.addData("a", "b")
-      q.processAllAvailable()
-      assert(bus.read(spark, "dwd_page_log").as[String].collect().sorted.toSeq ===
-        Seq("a", "b"))
-      input.addData("c")
-      q.processAllAvailable()
-      assert(bus.read(spark, "dwd_page_log").count() === 3)
-    } finally q.stop()
-  }
-
-  test("toJsonValues serializes any frame to the wire shape") {
-    val df = Seq((1L, "a")).toDF("id", "name")
-    val wire = TopicIO.toJsonValues(df)
-    assert(wire.schema === TopicIO.valueSchema)
-    assert(wire.as[String].head() === """{"id":1,"name":"a"}""")
-  }
-
   test("fromConf flips transport without code changes") {
     spark.conf.set("spark.graft.bus", "kafka://h1:9092")
     spark.conf.set("spark.graft.bus.groupId", "g1")
     try {
       TopicIO.fromConf(spark) match {
-        case KafkaBus(bootstrap, group, _, _) =>
+        case KafkaBus(bootstrap, group) =>
           assert(bootstrap === "h1:9092"); assert(group === Some("g1"))
         case other => fail(s"expected KafkaBus, got $other")
       }

@@ -31,7 +31,7 @@ class DbRouterSpec extends SparkSpec {
 
   test("router splits facts vs dims, projects sinkColumns, upserts dims (P5/P6/K2/K3)") {
     val root = tempDir("router")
-    val router = new DbRouter(DbRouter.referenceRules, root)
+    val router = new DbRouter(RouterFixtures.referenceRules, root)
 
     val batch1 = DbRouter.decodeEnvelope(mkEnvelopes(
       ("order_info", "insert",
@@ -72,7 +72,7 @@ class DbRouterSpec extends SparkSpec {
 
   test("dim upsert resolves same-pk updates by binlog seq, not partition order") {
     val root = tempDir("router-seq")
-    val router = new DbRouter(DbRouter.referenceRules, root)
+    val router = new DbRouter(RouterFixtures.referenceRules, root)
     // The NEWER update (ts=500) goes in partition 0, the OLDER (ts=300) in
     // partition 1: a union of single-row DFs keeps each row in its own
     // partition, so monotonically_increasing_id-desc ordering (the old bug)
@@ -106,7 +106,7 @@ class DbRouterSpec extends SparkSpec {
       ("user_info", "update", """{"id":"10","name":"b"}"""))), 0L)
     assert(DbRouter.readTopic(spark, root, "dwd_order_info")
       .select("id").as[String].collect().sorted.toSeq === Seq("1", "2"))
-    assert(DbRouter.readDimHistory(spark, root, "dim_user_info")
+    assert(RouterFixtures.dimHistory(spark, root, "dim_user_info")
       .select("name").as[String].collect().sorted.toSeq === Seq("a", "b"))
   }
 
@@ -134,7 +134,7 @@ class DbRouterSpec extends SparkSpec {
 
   test("dim snapshot survives a crash between retire and promote") {
     val root = tempDir("router-crash")
-    val router = new DbRouter(DbRouter.referenceRules, root)
+    val router = new DbRouter(RouterFixtures.referenceRules, root)
     router.processBatch(DbRouter.decodeEnvelope(mkEnvelopes(
       ("user_info", "insert", """{"id":"10","name":"alice","gender":"F","birthday":"1990-01-01"}"""))), 0L)
 
@@ -156,7 +156,7 @@ class DbRouterSpec extends SparkSpec {
 
   test("a failed staging promote throws and preserves the retired snapshot") {
     val root = tempDir("router-promote")
-    val router = new DbRouter(DbRouter.referenceRules, root)
+    val router = new DbRouter(RouterFixtures.referenceRules, root)
     router.processBatch(DbRouter.decodeEnvelope(mkEnvelopes(
       ("user_info", "insert", """{"id":"10","name":"alice","gender":"F","birthday":"1990-01-01"}"""))), 0L)
 
@@ -189,7 +189,7 @@ class DbRouterSpec extends SparkSpec {
 
   test("a corrupt dim snapshot read fails loudly instead of dropping history") {
     val root = tempDir("router-corrupt")
-    val router = new DbRouter(DbRouter.referenceRules, root)
+    val router = new DbRouter(RouterFixtures.referenceRules, root)
     // a live path that exists but isn't parquet must throw, not be treated
     // as "no snapshot" (which would silently lose all prior dim rows)
     val dimDir = new java.io.File(s"$root/dim/dim_user_info")

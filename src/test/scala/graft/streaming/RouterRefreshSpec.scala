@@ -31,17 +31,6 @@ class RouterRefreshSpec extends SparkSpec {
     assert(DbRouter.readTopic(spark, root, "dwd_new_table").count() === 1)
   }
 
-  test("rulesFromTable round-trips the table_process schema") {
-    val path = tempDir("tp") + "/table_process"
-    Seq(("order_info", "insert", "kafka", "dwd_order_info", "id,user_id", "id", ""))
-      .toDF("sourceTable", "operateType", "sinkType", "sinkTable",
-        "sinkColumns", "sinkPk", "sinkExtend")
-      .write.parquet(path)
-    val rules = DbRouter.rulesFromTable(spark, path)
-    assert(rules === Seq(RouteRule("order_info", "insert", "kafka",
-      "dwd_order_info", Seq("id", "user_id"), "id")))
-  }
-
   test("visitorStatsUnion merges three normalized streams per window (A1 full)") {
     implicit val sqlCtx = spark.sqlContext
     val pages = MemoryStream[VsRow]; val uv = MemoryStream[VsRow]; val uj = MemoryStream[VsRow]

@@ -201,10 +201,11 @@ class StatefulParitySpec extends SparkSpec {
     val batch3 = Seq((5L, b, 5000L))
     val rows = (batch1 ++ batch2 ++ batch3).toDF("vec_id", "embedding", "ts")
       .withColumn("label", lit(0L))
-    // d6's removal keeps the lowest id of each near-dup group
-    val kept = graft.operators.AnnOps.dropEmbeddingNearDups(rows)
+    // d6's greedy keep-first keeps the lowest id of each near-dup group
+    val dropped = graft.operators.AnnOps.embeddingNearDups(rows)
+      .filter(col("is_dup") && col("vec_id") > col("nn_id"))
       .select("vec_id").as[Long].collect().toSet
-    assert(kept === Set(1L, 2L, 4L))
+    assert(Set(1L, 2L, 3L, 4L, 5L) -- dropped === Set(1L, 2L, 4L))
     // the duplicates share the full 32-bit SRP signature; the survivors don't
     val sig = rows.select(col("vec_id"),
         graft.operators.AnnOps.lshSignature(col("embedding")))
@@ -549,36 +550,6 @@ class StatefulParitySpec extends SparkSpec {
     assert(batch.exists(r => r.head == "lang" && r(2) == 1L))
   }
 
-  test("quantileMonitorStream: exact N, quantiles within the sketch bound (KLL)") {
-    import graft.functions.{Kll, KllFunctions}
-    val rnd = new scala.util.Random(42L)
-    val b1 = (0 until 4000).map(_ => rnd.nextGaussian() * 50.0 + 200.0)
-    val b2 = (0 until 4000).map(_ => rnd.nextGaussian() * 50.0 + 500.0) // drift
-    // each batch sketched by the distributed kll_sketch aggregator, the
-    // running sketch merged with Kll.merge
-    def sketch(b: Seq[Double]) = b.toDF("x")
-      .agg(KllFunctions.kll_sketch(col("x")).as("sk"))
-      .head.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("sk")
-      .map(_.toArray).toArray
-    val s1 = Kll.merge(Kll.empty, sketch(b1))
-    val s2 = Kll.merge(s1, sketch(b2))
-    val qs = Seq(0.25, 0.5, 0.9)
-    // N is EXACT at every batch despite constant sketch state
-    assert(Kll.totalWeight(s1) === 4000L && Kll.totalWeight(s2) === 8000L)
-    // quantile values within the 3% rank bound of the exact union
-    val all = (b1 ++ b2).sorted
-    qs.foreach { qq =>
-      val est = Kll.quantile(s2, qq)
-      val rank = all.count(_ < est)
-      assert(math.abs(rank - qq * all.size) <= 0.03 * all.size,
-        s"q=$qq est=$est rank=$rank")
-    }
-    // the drift is VISIBLE: the median moved up after batch 2
-    val med1 = Kll.quantile(s1, 0.5)
-    val med2 = Kll.quantile(s2, 0.5)
-    assert(med2 > med1 + 50.0, s"median $med1 -> $med2 missed the drift")
-  }
-
   test("fkMonitorStream: per-batch orphan audit == fkCheck; dim refresh picked up (DQ7)") {
     implicit val sqlCtx = spark.sqlContext
     var dim = Seq(1L, 2L).toDF("pk")
@@ -667,42 +638,6 @@ class StatefulParitySpec extends SparkSpec {
     // the straddled day merged: exactly one row for (x, day 1), count 2
     assert(report(b1 ++ b2) === Map(("x", 0L) -> 2L, ("x", 1L) -> 2L,
       ("x", 2L) -> 3L, ("y", 0L) -> 1L, ("y", 1L) -> 1L))
-  }
-
-  test("qualityMonitorStream: per-batch battery == batch checks, violations gate (DQ1)") {
-    implicit val sqlCtx = spark.sqlContext
-    // batch 1 is clean; batch 2 plants one violation of each kind
-    // one planted violation of each kind, delivered as ONE micro-batch
-    // (per-batch gating semantics need the dup pair to arrive together)
-    val dirty = Seq(
-      (1L, "x" * 80, 80L), (2L, "y" * 100, 100L), // clean rows
-      (3L, "z" * 70, 70L), (3L, "w" * 90, 90L),   // duplicate doc_id
-      (4L, "short", 5L),                           // under min length
-      (5L, "a" * 80, 70L))                         // n_chars inconsistent (only)
-    val input = MemoryStream[(Long, String, Long)]
-    input.addData(dirty: _*)
-    val reports = scala.collection.mutable.Map[Long, Map[String, Long]]()
-    val q = input.toDF().toDF("doc_id", "text", "n_chars")
-      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        reports(id) = graft.operators.RelationalOps.documentQualityChecks(b)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }.trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    val rep = reports.values.head
-    assert(rep("doc_id_unique") === 1L)
-    assert(rep("documents_min_length") === 1L)
-    assert(rep("n_chars_consistent") === 1L)
-    assert(rep("text_not_null") === 0L)
-    // stream face == batch operator on the same rows
-    val batchRep = graft.operators.RelationalOps.documentQualityChecks(
-        dirty.toDF("doc_id", "text", "n_chars"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rep === batchRep)
-    // and a clean frame reports all zeros through the same shared battery
-    val cleanRep = graft.operators.RelationalOps.documentQualityChecks(
-        Seq((9L, "q" * 80, 80L)).toDF("doc_id", "text", "n_chars"))
-      .collect().map(r => r.getLong(1))
-    assert(cleanRep.forall(_ === 0L))
   }
 
   test("incrementalDedupStream: per-micro-batch triage == batch operator (D19)") {

@@ -106,4 +106,26 @@ class WideJoinsSpec extends SparkSpec {
     assert(got.toMap === Map(10L -> Some("v0"), 11L -> None,
       12L -> Some("v1"), 13L -> Some("w0"), 14L -> None))
   }
+
+  test("paymentWide streaming interval join honors [-15m, +5m] (J2)") {
+    implicit val sqlCtx = spark.sqlContext
+    val pay = MemoryStream[(Long, Long, Long)] // id, order_id, callback_ts
+    val ow = MemoryStream[(Long, String, Long)] // order_id, create_time, create_ts
+    val joined = WideJoins.paymentWide(
+      pay.toDF().toDF("id", "order_id", "callback_ts"),
+      ow.toDF().toDF("order_id", "create_time", "create_ts"))
+    val q = joined.writeStream.format("memory").queryName("payment_wide")
+      .outputMode("append").start()
+    try {
+      val t = 3600000L // payment callback at t
+      pay.addData((1L, 100L, t), (2L, 200L, t))
+      ow.addData(
+        (100L, "in-bound-10m-before", t - 600000L),
+        (200L, "out-of-bound-20m-before", t - 1200000L))
+      q.processAllAvailable()
+      val got = spark.table("payment_wide").select("order_create_time")
+        .collect().map(_.getString(0)).toSet
+      assert(got === Set("in-bound-10m-before"), got)
+    } finally q.stop()
+  }
 }

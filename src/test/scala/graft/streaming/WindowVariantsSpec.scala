@@ -7,45 +7,6 @@ import org.apache.spark.sql.functions._
 class WindowVariantsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("sliding windows emit one pane per slide covering each event") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long)]
-    val q = StatsStreams.slidingEventCounts(
-        input.toDF().toDF("key", "ts"), "10 seconds", "5 seconds")
-      .writeStream.format("memory").queryName("sliding").outputMode("append").start()
-    try {
-      input.addData(("a", 7000L)) // lives in panes [0,10) and [5,15)
-      q.processAllAvailable()
-      input.addData(("z", 100000L))
-      q.processAllAvailable()
-      val panes = spark.table("sliding").filter(col("key") === "a")
-        .select("stt").collect().map(_.getString(0)).toSet
-      assert(panes === Set("1970-01-01 00:00:00", "1970-01-01 00:00:05"))
-    } finally q.stop()
-  }
-
-  test("session windows merge events within the gap, split across it") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Double)]
-    val q = StatsStreams.sessionCounts(
-        input.toDF().toDF("key", "ts", "value"), "10 seconds")
-      .writeStream.format("memory").queryName("sessions").outputMode("append").start()
-    try {
-      // one session: 1s,5s,12s (each within 10s of previous); second session at 60s
-      input.addData(("m", 1000L, 1.0), ("m", 5000L, 2.0), ("m", 12000L, 3.0),
-        ("m", 60000L, 4.0))
-      q.processAllAvailable()
-      input.addData(("z", 300000L, 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("sessions").filter(col("key") === "m")
-        .collect().map(r => (r.getString(0), r.getLong(3), r.getDouble(4)))
-      assert(rows.length === 2, rows.mkString(","))
-      val bySize = rows.sortBy(-_._2)
-      assert(bySize.head._2 === 3L && bySize.head._3 === 6.0) // merged session
-      assert(bySize(1)._2 === 1L && bySize(1)._3 === 4.0)
-    } finally q.stop()
-  }
-
   test("streaming IVF assignment: vectors get their nearest centroid cell, map-side") {
     implicit val sqlCtx = spark.sqlContext
     val cents = Array(
@@ -72,12 +33,13 @@ class WindowVariantsSpec extends SparkSpec {
     def vec() = Array.fill(64)(rnd.nextGaussian().toFloat)
     val (a, b) = (vec(), vec())
     // vector 3 repeats vector 1 in a later arrival: same SRP signature,
-    // and d6's removal keeps the earlier id
+    // and d6's greedy keep-first drops the later id
     val rows = Seq((1L, a, 1000L), (2L, b, 2000L), (3L, a, 3000L))
       .toDF("vec_id", "embedding", "ts").withColumn("label", lit(0L))
-    val ids = graft.operators.AnnOps.dropEmbeddingNearDups(rows)
+    val dropped = graft.operators.AnnOps.embeddingNearDups(rows)
+      .filter(col("is_dup") && col("vec_id") > col("nn_id"))
       .select("vec_id").as[Long].collect().toSet
-    assert(ids === Set(1L, 2L))
+    assert(Set(1L, 2L, 3L) -- dropped === Set(1L, 2L))
     val sig = rows.select(graft.operators.AnnOps.lshSignature(col("embedding")))
       .as[String].collect()
     assert(sig(0) === sig(2))

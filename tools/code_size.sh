@@ -10,6 +10,7 @@
 #                         signatures of src/main
 #   spark_bridges         source files under src/main/scala/org/apache/spark:
 #                         each one reaches into Spark internals
+#   unreached_public_defs public names of src/main that no product file calls
 #
 # A comment line is one whose first non-blank characters are `//`, `/*` or
 # `*` (scaladoc bodies). A top-level def is one indented by exactly two
@@ -17,9 +18,108 @@
 # line says `private` or `protected`. An `override def` implements a trait
 # member rather than adding a name, so it is not counted.
 #
-# Usage: tools/code_size.sh [repo-root]   (default: the current directory)
+# A public name (for unreached_public_defs) is a top-level object, class,
+# trait or case class of src/main, or a member of one: a def, val, object or
+# class indented by two spaces that is neither private, protected nor an
+# override. It is reached when a product file names it outside its own
+# declaration. The product files are src/main, perfbench/src/main and
+# tools/*.scala, with comments stripped:
+#   - a type is reached when its name appears;
+#   - an object member when `Owner.name` appears, when a file imports it (or
+#     `Owner._`) and uses the name, or when the owner's own file uses the
+#     bare name; `apply` is reached by `Owner(`;
+#   - a class or trait member when `.name` appears in a file that names the
+#     owner, a parent or a subclass, or when the owner's own file uses the
+#     bare name.
+# A bare name in another file does not count, so Spark's `split` cannot reach
+# `LogPipeline.split`, nor `StringBuilder.append` a `TopicBus.append`. An
+# object that defines `main` is a JVM entry point, and is reached. src/test
+# does not count: a name that only tests call is unreached.
+#
+# Usage: tools/code_size.sh [--list-unreached] [repo-root]
+#   The root defaults to the current directory. --list-unreached prints the
+#   unreached names instead, one `Owner.name` or `Type` per line, sorted.
 set -euo pipefail
+mode=counters
+if [ "${1:-}" = "--list-unreached" ]; then mode=list; shift; fi
 cd "${1:-.}"
+
+unreached() {
+  python3 - <<'PY'
+import glob, re
+
+# Comments blank out (a scaladoc mention is not a call); string literals
+# stay, so a class named in a config string is reached.
+TOKENS = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|/\*[\s\S]*?\*/|//[^\n]*')
+TYPE = re.compile(r'^((?:[\w\[\]]+\s+)*?)(object|class|trait)\s+(\w+)', re.M)
+MEMBER = re.compile(r'^  ((?:[\w\[\]]+\s+)*?)(def|val|lazy val|var|object|class|trait)'
+                    r'\s+(\w+)', re.M)
+PARENT = re.compile(r'^(?:[\w\[\]]+\s+)*(?:class|trait|object)\s+(\w+)[^{\n]*?'
+                    r'\bextends\s+(\w+)', re.M)
+
+def strip(text):
+    return TOKENS.sub(lambda m: m.group(0) if m.group(0)[0] == '"'
+                      else re.sub(r'[^\n]', ' ', m.group(0)), text)
+
+main = sorted(glob.glob('src/main/**/*.scala', recursive=True))
+product = (main + sorted(glob.glob('perfbench/src/main/**/*.scala', recursive=True))
+           + sorted(glob.glob('tools/*.scala')))
+src = {f: strip(open(f, encoding='utf-8').read()) for f in product}
+
+def uses(text, name):
+    """Whether `name` occurs in `text` other than where it is declared."""
+    return any(not re.search(r'(def|val|var|object|class|trait)\s+$',
+                             text[max(0, m.start() - 20):m.start()])
+               for m in re.finditer(r'\b%s\b' % re.escape(name), text))
+
+def anywhere(pattern):
+    return any(re.search(pattern, t) for t in src.values())
+
+parents = {}
+for t in src.values():
+    for m in PARENT.finditer(t):
+        parents.setdefault(m.group(1), set()).add(m.group(2))
+
+def family(owner):
+    return ({owner} | parents.get(owner, set())
+            | {c for c, ps in parents.items() if owner in ps})
+
+unreached = []
+for f in main:
+    text = src[f]
+    tops = list(TYPE.finditer(text))
+    for i, top in enumerate(tops):
+        mods, kind, owner = top.groups()
+        body = text[top.start():tops[i + 1].start() if i + 1 < len(tops) else len(text)]
+        if re.search(r'\bdef main\s*\(', body):
+            continue  # a JVM entry point
+        if 'private' not in mods and not any(uses(t, owner) for t in src.values()):
+            unreached.append(owner)
+        for m in MEMBER.finditer(body):
+            mmods, _, name = m.groups()
+            if re.search(r'\b(private|protected|override)\b', mmods) or uses(text, name):
+                continue
+            if name == 'apply':
+                hit = anywhere(r'\b%s\s*(\(|\.\s*apply\b)' % owner)
+            elif kind == 'object':
+                imported = re.compile(r'import\s+[\w.]*\b%s\.(_|\{[^}]*\b%s\b[^}]*\}|%s\b)'
+                                      % (owner, name, name))
+                hit = anywhere(r'\b%s\s*\.\s*%s\b' % (owner, name)) or any(
+                    imported.search(t) and uses(t, name) for t in src.values())
+            else:
+                names = r'\b(%s)\b' % '|'.join(sorted(family(owner)))
+                hit = any(re.search(r'\.\s*%s\b' % name, t) and re.search(names, t)
+                          for t in src.values())
+            if not hit:
+                unreached.append(f'{owner}.{name}')
+print('\n'.join(sorted(unreached)))
+PY
+}
+
+if [ "$mode" = list ]; then
+  unreached
+  exit 0
+fi
 
 code_lines() {
   find "$@" -name '*.scala' -print0 | xargs -0 cat |
@@ -38,6 +138,7 @@ echo "public_defs_streaming $(public_defs streaming)"
 echo "materialize_calls $(find src/main -name '*.scala' -print0 | xargs -0 cat |
   grep -Ev '^\s*(//|\*|/\*)' | grep -o 'Materialize(' | wc -l)"
 echo "spark_bridges $(find src/main/scala/org/apache/spark -name '*.scala' | wc -l)"
+echo "unreached_public_defs $(unreached | grep -c . || true)"
 
 python3 - <<'PY'
 import glob, re
