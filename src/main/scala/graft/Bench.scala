@@ -77,15 +77,19 @@ object Bench {
       String.format(java.util.Locale.ROOT, p, Double.box(v))
     private def sec(d: Double, decimals: Int): String =
       if (d < 0) "-1" else fmt(s"%.${decimals}f", d)
-    /** JSON string-escape: backslash, quote, and all control chars < 0x20
-      * (a newline or tab smuggled into a path or query name would otherwise
-      * split the one-line driver contract mid-record).
+    /** JSON string-escape: backslash, quote, and all control chars < 0x20,
+      * newline, CR and tab in their short forms (a newline or tab smuggled
+      * into a path or query name would otherwise split the one-line driver
+      * contract mid-record).
       */
     private[graft] def esc(s: String): String = {
       val sb = new StringBuilder(s.length)
       s.foreach {
         case '\\' => sb.append("\\\\")
         case '"' => sb.append("\\\"")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
         case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
         case c => sb.append(c)
       }

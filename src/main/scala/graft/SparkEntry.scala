@@ -190,13 +190,12 @@ object SparkEntry {
     // broadcast hash join (filter-then-score)
     "n8_ann_filtered_topk" -> on("embeddings")(AnnOps.filteredTopK(_)),
     "n2_ann_ivf_topk" -> on("embeddings")(AnnOps.ivfTopK),
-    // n2b: the TRAINED quantizer end-to-end (kmeansTrain → assignCellsLit →
-    // ivfSearchAssigned). Lloyd's loop is not oracle-stateable in one SQL
-    // query, so no oracleSql entry (driver records rows-only); the recall
-    // bound vs n1's brute-force truth is spec-pinned at sf0.1 (AnnOpsSpec).
-    // spill = 2: at the same 3/8 probe fraction the spilled index buys
-    // recall with 2× index rows and zero extra probe I/O
-    "n2b_ann_ivf_trained" -> on("embeddings")(AnnOps.ivfTrainedTopK(_, spill = 2)),
+    // n2b: the TRAINED quantizer end-to-end (kmeansTrain → assignCells →
+    // ivfSearchAssigned). Lloyd's loop stops at convergence, so no single
+    // SQL query states it: no oracleSql entry (driver records rows-only);
+    // the recall bound vs n1's brute-force truth is spec-pinned at sf0.1
+    // (AnnOpsSpec)
+    "n2b_ann_ivf_trained" -> on("embeddings")(AnnOps.ivfTrainedTopK),
     "n3_ann_lsh_topk" -> on("embeddings")(AnnOps.lshTopK(_)),
     "n6_pq_adc" -> on("embeddings")(AnnOps.pqAdcTopK(_)),
     // n7: k-NN weak labeling — majority label of the top-5 cosine

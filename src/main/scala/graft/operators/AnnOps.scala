@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * corpus scan per query batch. The IVF variant prunes the corpus by cluster
   * id (the `label` column models a coarse-quantizer assignment): the join key
   * turns top-k into per-cell work, the standard inverted-file layout. Dot
-  * products use `zip_with`+`aggregate` in double precision — codegen'd, no
-  * UDF, deterministic left-to-right summation.
+  * products are the native codegen'd [[graft.functions.DotProductF]] and
+  * DotProductFD expressions: double precision, no UDF, deterministic
+  * left-to-right summation.
   */
 object AnnOps {
   /** The n10/n13/c5 serving defaults, shared BY NAME with the DuckDB oracle
@@ -435,7 +436,7 @@ object AnnOps {
     * here is the self-contained oracle query). The codebook collects to the
     * driver (cells × dims doubles, the IVF/PQ codebook pattern), so cell
     * assignment is a LITERAL per-row argmax — no join, no corpus shuffle,
-    * streaming-safe (the assignCellsLit contract). The search: probes are
+    * streaming-safe (the [[assignCells]] contract). The search: probes are
     * a literal per-query argsort; the candidate scan is an equi-join on
     * `cell` against broadcast probes — reading int8 codes only (4× less
     * I/O than float), never a corpus shuffle and never a full scan; the
@@ -444,9 +445,7 @@ object AnnOps {
     */
   def ivfQuantizedTopK(e: DataFrame, k: Int = ServeK, cand: Int = ServePool,
       nProbe: Int = ServeNProbe): DataFrame = {
-    val centArr = seededCentroids(e)
-    require(centArr.nonEmpty, "ivfQuantizedTopK needs at least one cell")
-    val scoredCells = cellScores(centArr)
+    val cents = seededCentroids(e)
     // GEOMETRIC cell membership: every vector reassigned to its nearest
     // seeded centroid (one deterministic Lloyd assignment half-step). The
     // fixture labels alone are a weak quantizer, whose probe recall is about
@@ -459,8 +458,7 @@ object AnnOps {
     // per (session, corpus) and memoized — the build-once/serve-many shape
     // (a deployment persists exactly this frame)
     val qz = SessionMemo.getOrCompute(SessionMemo.key("n10:qz", e)) {
-      Materialize(sq8Encode(e.select(col("vec_id"), col("embedding"),
-          array_max(scoredCells).getField("cell").as("cell")))
+      Materialize(sq8Encode(assignCells(e.select(col("vec_id"), col("embedding")), cents, 1))
         .select(col("vec_id"), col("embedding"), col("cell"), col("qv"),
           col("qn")))
     }
@@ -468,12 +466,9 @@ object AnnOps {
       .select(col("vec_id").as("query_id"), col("qv").as("qq"),
         col("qn").as("qqn"), col("embedding").as("qe"),
         norm(col("embedding")).as("nq"))
-    // probe selection: nProbe best cells by the same literal scores —
-    // descending sort on (sc, negcell) keeps the min-cell tie-break
+    // probe selection: the nProbe best cells by the same literal scores
     val probes = qz.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        explode(slice(reverse(array_sort(scoredCells)), 1, nProbe)).as("pc"))
-      .select(col("query_id"), col("pc.cell").as("cell"))
+      .select(col("vec_id").as("query_id"), nearestCells(cents, nProbe).as("cell"))
     // int8 candidate scan over probed cells only — integer dots, exact
     val qside = probes.join(
       broadcast(queries.select(col("query_id"), col("qq"), col("qqn"))),
@@ -490,20 +485,14 @@ object AnnOps {
 
   /** The n10/n11 coarse ASSIGNMENT as a standalone face: every vector's
     * geometric cell under the memoized label-seeded centroids (the same
-    * [[seededCentroids]] + 4-dp integer-score argmax n10's index uses, so
-    * its consumers — s14's cluster-balanced sampler — ride the trained
-    * quantizer the memo already holds). Map-only against driver-held
-    * literals: no join, no corpus shuffle, streaming-safe (the
-    * assignCellsLit contract), and oracle-stateable end-to-end (the
-    * ivfSq8Rer prefix states it verbatim), unlike [[kmeansTrain]]'s
-    * iterative loop.
+    * [[seededCentroids]] + [[assignCells]] n10's index uses, so its
+    * consumers — s14's cluster-balanced sampler — ride the quantizer the
+    * memo already holds). Map-only against driver-held literals, and
+    * oracle-stateable end-to-end (the ivfSq8Rer prefix states it
+    * verbatim), unlike [[kmeansTrain]]'s loop that stops at convergence.
     */
-  def seededCellAssign(e: DataFrame): DataFrame = {
-    val centArr = seededCentroids(e)
-    require(centArr.nonEmpty, "seededCellAssign needs at least one cell")
-    e.select(col("vec_id"),
-      array_max(cellScores(centArr)).getField("cell").as("cell"))
-  }
+  def seededCellAssign(e: DataFrame): DataFrame =
+    assignCells(e, seededCentroids(e), 1).select("vec_id", "cell")
 
   /** N14 — kNN-GRAPH construction: every corpus vector's top-`k` cosine
     * neighbors, probe-bounded by the trained coarse quantizer. n1–n13
@@ -547,27 +536,21 @@ object AnnOps {
     * PlanContractSpec pins; [[knnJoin]] wraps it in the session memo.
     */
   private[graft] def knnJoinStage(e: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val centArr = seededCentroids(e)
-    require(centArr.nonEmpty, "knnJoin needs at least one cell")
-    val scoredCells = cellScores(centArr)
-    // probe side: every vector × its nProbe best cells (descending sort on
-    // (sc, negcell) keeps the min-cell tie-break); norm computed ONCE below
-    // the join (the cosinePre contract). SPREAD before the pair join: the
+    val cents = seededCentroids(e)
+    // probe side: every vector × its nProbe best cells; norm computed ONCE
+    // below the join (the cosinePre contract). SPREAD before the pair join: the
     // join's output expands by |cell| per probe row, so the probe side's
     // split count caps the whole construction — a compacted corpus arriving
     // as one parquet split would otherwise crunch every candidate pair in a
     // single task
     val probes = graft.Tables.spread(
-      e.select(col("vec_id"), col("embedding"),
-          norm(col("embedding")).as("nq"),
-          explode(slice(reverse(array_sort(scoredCells)), 1, nProbe)).as("pc"))
-        .select(col("vec_id"), col("embedding"), col("nq"),
-          col("pc.cell").as("cell")))
+      e.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nq"),
+        nearestCells(cents, nProbe).as("cell")))
     // member side: every vector filed under its ONE geometric cell, so each
     // (vector, neighbor) candidate pair arises at most once — no dedup stage
     val members = e.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ne"), norm(col("embedding")).as("nn"),
-        array_max(scoredCells).getField("cell").as("cell"))
+        nearestCells(cents, 1).as("cell"))
     val cands = probes.join(members, Seq("cell"))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"),
@@ -622,59 +605,94 @@ object AnnOps {
       .select(col("vec_id"), col("cell"), col("density"), col("outlier"))
   }
 
-  /** n10/n11's shared coarse quantizer: centroids SEEDED by the fixture's
-    * label cells — n6's exact-mean pattern (per-dim integer 1e6 sums,
-    * order-free, one divide + one floor), collected driver-side in ascending
-    * cell order. The codebook is cells × dims doubles — the same bounded
-    * collect as the IVF/PQ codebooks — so cell assignment and probe
-    * selection run as literal per-row argmax/argsort inside one codegen'd
-    * projection: zero joins, zero corpus shuffle (the assignCellsLit
-    * contract).
-    */
-  private def seededCentroids(e: DataFrame): Array[(Int, Seq[Double])] =
-    // trained once per (session, corpus): the coarse quantizer belongs to
-    // the INDEX, not the query, so n10/n11/c5 share one derivation
-    SessionMemo.getOrCompute(SessionMemo.key("seededCentroids", e)) {
-      seededCentroidsCompute(e)
-    }
+  // ---- The coarse quantizer ------------------------------------------------
+  //
+  // Every IVF query rides one mechanism per step. Centroids are driver-held
+  // `(cell, centroid)` pairs in ascending cell order, built by [[cellMeans]];
+  // a vector's cells are ranked by [[cellScores]] and picked by
+  // [[nearestCells]], for assignment, the spilled index and probing alike.
 
-  private def seededCentroidsCompute(e: DataFrame): Array[(Int, Seq[Double])] = {
-    val cents = e
-      .select(col("label").as("cell"),
-        posexplode(transform(col("embedding"), x => x.cast("double")))
-          .as(Seq("dim", "v")))
-      .withColumn("iv", floor(col("v") * 1000000.0 + 0.5).cast("long"))
+  /** The 6-dp integer-exact mean of every cell, over `(cell, dim, v)` rows:
+    * each value is scaled by 10⁶ and floored to a BIGINT, summed
+    * exactly, then divided by the member count once and re-floored, so no
+    * partition layout or merge order can move a centroid, and the DuckDB
+    * oracles state the same recipe. Returns each cell's means in ascending
+    * `dim` order, the cells ascending. One (cell, dim)-keyed aggregation
+    * with map-side partials; the collect is cells × dims doubles.
+    */
+  private[graft] def cellMeans(rows: DataFrame): Array[(Int, Seq[Double])] =
+    rows.withColumn("iv", floor(col("v").cast("double") * 1e6 + 0.5).cast("long"))
       .groupBy("cell", "dim")
       .agg(sum(col("iv")).as("s"), count(lit(1)).as("n"))
-      .withColumn("m",
-        floor(col("s").cast("double") / col("n") + 0.5) / 1000000.0)
+      .withColumn("m", floor(col("s").cast("double") / col("n") + 0.5) / 1e6)
       .groupBy("cell")
       .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cell"), transform(col("dm"), x => x.getField("m")).as("centroid"))
-    cents.collect().map { r =>
-      (r.getAs[Number]("cell").intValue(), r.getSeq[Double](1))
-    }.sortBy(_._1)
-  }
+      .select(col("cell").cast("int"), transform(col("dm"), x => x.getField("m")))
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
 
-  /** The 4-dp-quantized literal cell-score array over [[seededCentroids]]:
+  /** The `(cell, dim, v)` rows of a frame's `cell` and `embedding` columns. */
+  private def vectorRows(df: DataFrame): DataFrame =
+    df.select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
+
+  /** The label-seeded quantizer: the [[cellMeans]] of the fixture's label
+    * cells. Trained once per (session, corpus): the coarse quantizer belongs
+    * to the INDEX, not the query, so n10, n11, n14, c5, s14 and d16 share
+    * one derivation.
+    */
+  private def seededCentroids(e: DataFrame): Array[(Int, Seq[Double])] =
+    SessionMemo.getOrCompute(SessionMemo.key("seededCentroids", e)) {
+      cellMeans(vectorRows(e.select(col("label").as("cell"), col("embedding"))))
+    }
+
+  /** The 4-dp-quantized literal cell-score array of the row's `embedding`:
     * floor((2·v·c − ‖c‖²)·1e4 + 0.5) per cell — argmin L2 as an integer
     * score, so sub-ulp fold jitter cannot flip an assignment or a probe
-    * choice (array_max picks the nearest cell, min-cell ties via negcell).
-    * The float×double dot is the native codegen'd DotProductFD
-    * (bit-identical to the lambda fold; centroids are DOUBLE — 6-dp means
-    * are not float-representable — so dot_f cannot apply).
+    * choice — as (sc, negcell, cell) structs, so the max struct is the
+    * nearest cell with ties to the min cell. The float×double dot is the
+    * native codegen'd DotProductFD (centroids are DOUBLE — 6-dp means are
+    * not float-representable — so dot_f cannot apply).
     */
-  private def cellScores(centArr: Array[(Int, Seq[Double])]): Column = {
-    def ddot(a: Column, b: Column): Column =
-      graft.functions.VectorFunctions.dot_fd(a, b)
-    array(centArr.map { case (cell, c) =>
+  private def cellScores(cents: Array[(Int, Seq[Double])]): Column =
+    array(cents.map { case (cell, c) =>
       val cnorm2 = c.foldLeft(0.0)((a, x) => a + x * x)
       struct(
-        floor((ddot(col("embedding"), typedlit(c)) * 2.0 - lit(cnorm2))
-          * 10000.0 + 0.5).as("sc"),
+        floor((graft.functions.VectorFunctions.dot_fd(col("embedding"), typedlit(c)) * 2.0
+          - lit(cnorm2)) * 10000.0 + 0.5).as("sc"),
         lit(-cell).as("negcell"), lit(cell).as("cell"))
     }.toIndexedSeq: _*)
+
+  /** The row's `m` best cells by [[cellScores]], one output row per (row,
+    * cell): for m = 1 a plain `array_max` column (one row per input row),
+    * otherwise a generator over the descending-sorted m-best slice, whose
+    * first cell is the m = 1 cell. The one pick behind assignment (m = 1),
+    * the spilled index (m = 2) and probe selection (m = nProbe).
+    */
+  private def nearestCells(cents: Array[(Int, Seq[Double])], m: Int): Column = {
+    require(cents.nonEmpty, "a quantizer needs at least one cell")
+    require(m >= 1, s"m must be at least 1, got $m")
+    val scores = cellScores(cents)
+    if (m == 1) array_max(scores).getField("cell")
+    else explode(slice(reverse(array_sort(scores)), 1, m).getField("cell"))
   }
+
+  /** IVF cell assignment: `vectors` with a `cell` column, one row per
+    * (vector, cell) for each vector's `m` nearest cells under the
+    * DRIVER-HELD centroids `cents` ([[nearestCells]]). The argmax happens
+    * inside the row projection with NO join and NO aggregation, so the same
+    * call works on a `readStream` frame (continuous IVF indexing of an
+    * embedding stream) and on a batch frame, and at 100 TB the corpus is
+    * never shuffled. The centroid table is small and slow-changing by
+    * construction (the analog of the reference's driver-held router config,
+    * app/dwd/BaseDBApp.java:100-118), so holding it as literals is the same
+    * contract as broadcasting it.
+    *
+    * m > 1 is the SPILLED index, the replicated-IVF recall dial: boundary
+    * vectors whose true neighbors straddle a cell edge become findable from
+    * either side without probing more cells (multi-assignment, cf. spill
+    * trees and ScaNN's SOAR). Index rows grow ×m; probe I/O is unchanged.
+    */
+  def assignCells(vectors: DataFrame, cents: Array[(Int, Seq[Double])], m: Int): DataFrame =
+    vectors.withColumn("cell", nearestCells(cents, m))
 
   /** N11 — IVFADC (Jégou, Douze, Schmid, TPAMI 2011 §V; FAISS `IVFx,PQy`):
     * the inverted-file coarse quantizer composed with RESIDUAL product
@@ -710,10 +728,8 @@ object AnnOps {
     */
   def ivfPqTopK(e: DataFrame, k: Int = 5, cand: Int = 150,
       nProbe: Int = 4): DataFrame = {
-    val centArr = seededCentroids(e)
-    require(centArr.nonEmpty, "ivfPqTopK needs at least one cell")
-    val scoredCells = cellScores(centArr)
-    val centMap = typedlit(centArr.toMap)
+    val cents = seededCentroids(e)
+    val centMap = typedlit(cents.toMap)
     val ee = transform(col("embedding"), x => x.cast("double"))
     // geometric cell membership (n10's reassignment half-step) + exact
     // double residual from the assigned centroid — one map-only projection.
@@ -722,7 +738,7 @@ object AnnOps {
     // corpus) and memoized
     val asg = SessionMemo.getOrCompute(SessionMemo.key("n11:asg", e)) {
       Materialize(e.select(col("vec_id"), col("embedding"), ee.as("ee"),
-          array_max(scoredCells).getField("cell").as("cell"))
+          nearestCells(cents, 1).as("cell"))
         .withColumn("res",
           zip_with(col("ee"), element_at(centMap, col("cell")), (x, c) => x - c))
         .select(col("vec_id"), col("cell"), col("res")))
@@ -753,10 +769,10 @@ object AnnOps {
     }
     val qside = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), ee.as("qee"),
-        explode(slice(reverse(array_sort(scoredCells)), 1, nProbe)).as("pc"))
+        nearestCells(cents, nProbe).as("cell"))
       .withColumn("qres",
-        zip_with(col("qee"), element_at(centMap, col("pc.cell")), (x, c) => x - c))
-      .select(col("query_id"), col("pc.cell").as("cell"), array(dt: _*).as("dt"))
+        zip_with(col("qee"), element_at(centMap, col("cell")), (x, c) => x - c))
+      .select(col("query_id"), col("cell"), array(dt: _*).as("dt"))
     // ADC over probed cells only: 8 lookups + 8 decimal adds per candidate
     val adc = enc.join(broadcast(qside), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -930,125 +946,40 @@ object AnnOps {
     mmrOver(e, ivfQuantizedTopK(e, k = pool, cand = pool, nProbe = nProbe)
       .select(col("query_id"), col("neighbor_id"), col("sim")), k, lambda, mu)
 
-  /** Coarse-quantizer training: centroid = element-wise mean vector per
-    * cluster. One shuffle on (cell, dim) — dimension count is a constant, so
-    * this scales as a plain aggregation of the corpus.
-    */
-  def centroids(e: DataFrame, cellCol: String): DataFrame =
-    e.select(col(cellCol).as("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("cell", "dim")
-      .agg(avg(col("v")).as("m"))
-      .groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cell"),
-        transform(col("dm"), x => x.getField("m").cast("float")).as("centroid"))
-
-  /** IVF cell assignment: nearest centroid in euclidean distance against
-    * DRIVER-HELD centroid constants. argmin ‖x−c‖² = argmax (2·x·c − ‖c‖²):
-    * per row, one codegen'd dot product per centroid and an `array_max`
-    * over (score, −cell) structs, so
-    * the argmax happens inside the row projection with NO join and NO
-    * aggregation. That statelessness is the point: the same call works on a
-    * `readStream` frame (continuous IVF indexing of an embedding stream) and
-    * on a batch frame, and at 100 TB the corpus is never shuffled at all.
-    * The centroid table is the coarse quantizer — small and slow-changing by
-    * construction (the analog of the reference's driver-held router config,
-    * app/dwd/BaseDBApp.java:100-118) — so holding it as literals is the same
-    * contract as broadcasting it. Ties break to the max score, then the
-    * min cell.
-    */
-  def assignCellsLit(vectors: DataFrame, cents: Array[(Int, Array[Float])]): DataFrame = {
-    require(cents.nonEmpty, "assignCellsLit needs at least one centroid")
-    val scored = cents.map { case (cell, c) =>
-      val cnorm2 = c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      struct((dot(col("embedding"), typedlit(c)) * 2.0 - lit(cnorm2)).as("score"),
-        lit(-cell).as("negcell"), lit(cell).as("cell"))
-    }
-    vectors.withColumn("assigned_cell",
-      array_max(array(scored.toIndexedSeq: _*)).getField("cell"))
-  }
-
-  /** SPILLED IVF assignment: index each vector under its `spill` nearest
-    * cells (one output row per (vector, cell)) instead of only the nearest.
-    * This is the replicated-IVF recall dial — boundary vectors whose true
-    * neighbors straddle a cell edge become findable from EITHER side, so a
-    * search hits them without probing more cells. The trade is explicit and
-    * the standard one from the ANN literature (multi-assignment / spilling,
-    * cf. spill trees and ScaNN's SOAR): index rows ×`spill`, query-time
-    * probe I/O unchanged. Prefer raising `spill` over `nProbe` when queries
-    * vastly outnumber index builds (probe cost is paid per query, spill cost
-    * once per indexed vector).
-    *
-    * Same stateless map-only contract as [[assignCellsLit]] (centroids ride
-    * as literals, works on streaming frames, corpus never shuffled): the
-    * per-row argmax merely widens to a sort + slice over the k scored
-    * structs, still inside one codegen'd projection. Descending sort on
-    * (score, negcell) keeps the rank-1 cell byte-identical to
-    * [[assignCellsLit]]'s tie-break (max score, then min cell).
-    */
-  def assignCellsLitSpill(vectors: DataFrame, cents: Array[(Int, Array[Float])],
-      spill: Int): DataFrame = {
-    require(cents.nonEmpty, "assignCellsLitSpill needs at least one centroid")
-    require(spill >= 1 && spill <= cents.length,
-      s"spill must be in [1, ${cents.length}], got $spill")
-    val scored = cents.map { case (cell, c) =>
-      val cnorm2 = c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      struct((dot(col("embedding"), typedlit(c)) * 2.0 - lit(cnorm2)).as("score"),
-        lit(-cell).as("negcell"), lit(cell).as("cell"))
-    }
-    vectors.withColumn("assigned_cell",
-      explode(transform(
-        slice(reverse(array_sort(array(scored.toIndexedSeq: _*))), 1, spill),
-        x => x.getField("cell"))))
-  }
-
-  /** Collect a centroid frame ([[centroids]] output) to the driver-held form
-    * [[assignCellsLit]] consumes. Bounded by the quantizer's cell count.
-    */
-  def collectCentroids(cents: DataFrame): Array[(Int, Array[Float])] =
-    cents.select(col("cell").cast("int"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-
   /** Lloyd's k-means training for the IVF coarse quantizer: iterate
     * assign → average until the largest centroid movement drops under `tol`
     * (euclidean) or `maxIter` rounds pass. Returns the trained centroids in
-    * [[assignCellsLit]]'s driver-held form, sorted by cell.
+    * [[assignCells]]'s driver-held form, in ascending cell order.
     *
-    * Deterministic CONTROL FLOW (auditable at 100 TB like the hash
+    * Deterministic end to end (auditable at 100 TB like the hash
     * samplers): seeding partitions the corpus by `vec_id % k` — no RNG —
-    * and assignment tie-breaks (max score, min cell) are pinned in
-    * [[assignCellsLit]]. The one caveat: centroid averaging sums doubles
-    * across shuffle partials, whose merge order a cluster does not
-    * guarantee, so re-training on a different partition layout can differ
-    * in the last ulp (the standard distributed-k-means property; bounded
-    * by float rounding, not by seed or tie-break nondeterminism).
+    * every round assigns by the 4-dp integer [[cellScores]] (ties to the min
+    * cell) and averages by the 6-dp integer-exact [[cellMeans]], so the
+    * trained centroids do not depend on the partition layout or the
+    * shuffle merge order. Only the round count is data-dependent: the loop
+    * stops at convergence, which is why no single SQL query states it.
     *
     * Scale notes: each round is ONE corpus aggregation — assignment is a
     * map-side projection against the k driver-held centroids (no join, no
-    * corpus shuffle; [[assignCellsLit]]), and the mean reduces on
-    * (cell, dim) with map-side partial agg, k·dims rows total. Driver state
-    * and per-round collect are k centroids — the coarse quantizer is small
-    * by construction. Empty cells keep their previous centroid (the
-    * standard Lloyd fallback), so the cell count never silently shrinks.
-    * Convergence is measured on the driver from the just-collected
-    * centroids: no extra job, no growing lineage (each round's frame is
-    * built fresh from the raw corpus and k literals).
+    * corpus shuffle), and the mean reduces on (cell, dim) with map-side
+    * partial agg, k·dims rows total. Empty cells keep their previous
+    * centroid (the standard Lloyd fallback), so the cell count never
+    * silently shrinks. Convergence is measured on the driver from the
+    * just-collected centroids: no extra job, no growing lineage (each
+    * round's frame is built fresh from the raw corpus and k literals).
     *
     * `trainFrac` < 1 trains on a deterministic hash SAMPLE of the corpus —
     * the production shape at 100 TB: a coarse quantizer needs only enough
     * vectors to place k centroids (k ≪ corpus), so every Lloyd round
     * scanning the full corpus is waste — train on `trainFrac`, then assign
-    * EVERYTHING once with [[assignCellsLit]]/[[assignCellsLitSpill]]
-    * (assignment is the map-only pass; training is the iterated one).
-    * Sampling is a per-row `xxhash64(vec_id)` predicate — deterministic,
-    * seedless, pushdown-friendly, the s1 recipe — so re-training on the
-    * same corpus sees the same sample regardless of layout. Training rounds
-    * then cost `trainFrac` of the corpus scan each; centroid quality
-    * degrades only as the sample stops being representative (centroids are
-    * means — their variance shrinks with sample size, not corpus size).
+    * EVERYTHING once with [[assignCells]] (assignment is the map-only pass;
+    * training is the iterated one). Sampling is a per-row `xxhash64(vec_id)`
+    * predicate — deterministic, seedless, pushdown-friendly, the s1 recipe —
+    * so re-training on the same corpus sees the same sample regardless of
+    * layout.
     */
   def kmeansTrain(e: DataFrame, k: Int, maxIter: Int = 10, tol: Double = 1e-4,
-      trainFrac: Double = 1.0): Array[(Int, Array[Float])] =
+      trainFrac: Double = 1.0): Array[(Int, Seq[Double])] =
     // converged centroids memoized per (session, corpus, params): the Lloyd
     // loop is an INDEX-time cost, not a per-search one.
     // SessionMemo.clear() forces a genuine re-train where a spec needs one.
@@ -1058,7 +989,7 @@ object AnnOps {
     }
 
   private def kmeansTrainCompute(e: DataFrame, k: Int, maxIter: Int,
-      tol: Double, trainFrac: Double): Array[(Int, Array[Float])] = {
+      tol: Double, trainFrac: Double): Array[(Int, Seq[Double])] = {
     require(k > 0, "k-means needs k > 0")
     require(trainFrac > 0.0 && trainFrac <= 1.0,
       s"trainFrac must be in (0, 1], got $trainFrac")
@@ -1066,89 +997,76 @@ object AnnOps {
       if (trainFrac >= 1.0) e
       else e.filter(pmod(xxhash64(col("vec_id")), lit(10000L)) <
         lit((trainFrac * 10000).toLong))
-    var cents = collectCentroids(centroids(
-      train.withColumn("cell", (col("vec_id") % k).cast("int")), "cell"))
+    var cents = cellMeans(vectorRows(
+      train.withColumn("cell", (col("vec_id") % k).cast("int"))))
     var moved = Double.MaxValue
     var iter = 0
     while (iter < maxIter && moved > tol) {
-      val assigned = assignCellsLit(train, cents)
-        .withColumnRenamed("assigned_cell", "cell")
-      val next = collectCentroids(centroids(assigned, "cell")).toMap
+      val next = cellMeans(vectorRows(assignCells(train, cents, 1))).toMap
       moved = cents.map { case (cell, c) =>
         next.get(cell).fold(0.0) { n =>
-          math.sqrt(c.zip(n).foldLeft(0.0) { case (a, (x, y)) =>
-            a + (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble)
-          })
+          math.sqrt(c.zip(n).foldLeft(0.0) { case (a, (x, y)) => a + (x - y) * (x - y) })
         }
       }.foldLeft(0.0)(math.max)
       cents = cents.map { case (cell, c) => (cell, next.getOrElse(cell, c)) }
       iter += 1
     }
-    cents.sortBy(_._1)
+    cents
   }
 
   /** Full IVF search over a corpus whose `cell` column already exists:
-    * each query probes its `nProbe` nearest cells and ranks candidates by
-    * exact cosine — the standard recall/throughput dial (nProbe = all cells
-    * ⇒ exact brute force). Assignment is paid once at indexing time,
-    * map-side via [[assignCellsLit]]; search never re-quantizes the corpus.
-    * The query side is small, so probe selection is a local sort; the
-    * corpus side touches only the probed cells via the equi-join on cell.
+    * each query probes its `nProbe` nearest cells under the driver-held
+    * centroids `cents` ([[nearestCells]], the pick that assigned the
+    * corpus) and ranks candidates by exact cosine — the standard
+    * recall/throughput dial (nProbe = all cells ⇒ exact brute force).
+    * Assignment is paid once at indexing time, map-side via
+    * [[assignCells]]; search never re-quantizes the corpus, and the corpus
+    * side touches only the probed cells via the equi-join on cell.
     *
-    * Over a SPILLED index ([[assignCellsLitSpill]] with spill > 1) a vector
-    * indexed under two probed cells surfaces as two identical candidate
-    * rows, which would otherwise occupy two top-k slots — `dedupCandidates`
-    * collapses them before ranking. The distinct keys on (query, neighbor,
-    * sim): candidate volume, not corpus volume (queries × probed fraction),
-    * so the extra exchange stays query-sized at any corpus scale. Keep it
-    * OFF for single-assignment indexes where candidates are unique by
-    * construction.
+    * A spilled index (m > 1) files a vector under several cells, so one
+    * probed twice surfaces as identical candidate rows that would occupy
+    * two top-k slots: the candidates are made distinct before ranking. The
+    * distinct keys on (query, neighbor, sim) — candidate volume (queries ×
+    * probed fraction), not corpus volume, so it stays query-sized.
     */
-  def ivfSearchAssigned(assigned: DataFrame, cents: DataFrame,
-      queries: DataFrame, k: Int, nProbe: Int,
-      dedupCandidates: Boolean = false): DataFrame = {
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        norm(col("embedding")).as("nq"))
-      .join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("nq"), col("cell"),
-        (dot(col("qe"), col("centroid")) * 2.0 -
-          dot(col("centroid"), col("centroid"))).as("score"))
-      .withColumn("pr", expr(s"row_number() over (partition by query_id order by score desc, cell)"))
-      .filter(col("pr") <= nProbe)
-      .select("query_id", "qe", "nq", "cell")
+  def ivfSearchAssigned(assigned: DataFrame, cents: Array[(Int, Seq[Double])],
+      queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+      norm(col("embedding")).as("nq"), nearestCells(cents, nProbe).as("cell"))
     val sims = assigned
       .withColumn("nv", norm(col("embedding")))
       .join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
-    topKPerQuery(if (dedupCandidates) sims.distinct() else sims, k,
-      Seq("query_id"))
+    topKPerQuery(sims.distinct(), k, Seq("query_id"))
   }
 
-  /** N2b — the TRAINED IVF pipeline end-to-end: [[kmeansTrain]] learns the
-    * coarse quantizer, [[assignCellsLit]] assigns every corpus vector
-    * map-side against the k driver-held centroids (no join, no corpus
-    * shuffle), and [[ivfSearchAssigned]] probes each query's `nProbe`
-    * nearest trained cells. n2's face consumes the fixture's pre-assigned
-    * `label` column; this face is what a deployment with no precomputed
-    * labels runs. Not oracle-stateable in one SQL query (Lloyd's loop is
-    * iterative float averaging), so the gate is behavioral: `AnnOpsSpec`
-    * pins the recall bound (≥ 50% of n1's brute-force truth at 3/8 probes,
-    * asserted at sf0.1) and the bench records its wall time.
+  /** n2b's index: k-means cells, top-k per query, probed cells per query. */
+  private val TrainedCells = 8
+  private val TrainedTopK = 5
+  private val TrainedNProbe = 3
+  /** n2b files each vector under its 2 nearest cells: at the same 3/8 probe
+    * fraction the spilled index buys recall with 2× index rows and zero
+    * extra probe I/O.
     */
-  def ivfTrainedTopK(e: DataFrame, k: Int = 8, topK: Int = 5,
-      nProbe: Int = 3, spill: Int = 1): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val cents = kmeansTrain(e, k)
-    val assigned = (if (spill == 1) assignCellsLit(e, cents)
-      else assignCellsLitSpill(e, cents, spill))
-      .withColumnRenamed("assigned_cell", "cell")
-    val centsDf = cents.toSeq.toDF("cell", "centroid")
-    ivfSearchAssigned(assigned, centsDf, e.filter(col("vec_id") < 10), topK,
-      nProbe, dedupCandidates = spill > 1)
+  private val TrainedSpill = 2
+
+  /** N2b — the TRAINED IVF pipeline end-to-end: [[kmeansTrain]] learns the
+    * coarse quantizer, [[assignCells]] files every corpus vector under its
+    * `TrainedSpill` nearest cells map-side against the driver-held
+    * centroids (no join, no corpus shuffle), and [[ivfSearchAssigned]]
+    * probes each query's `TrainedNProbe` nearest trained cells. n2's face
+    * consumes the fixture's pre-assigned `label` column; this face is what
+    * a deployment with no precomputed labels runs. Not oracle-stateable in
+    * one SQL query (Lloyd's loop stops at convergence), so the gate is
+    * behavioral: `AnnOpsSpec` pins the recall bound at sf0.1 and the bench
+    * records its wall time.
+    */
+  def ivfTrainedTopK(e: DataFrame): DataFrame = {
+    val cents = kmeansTrain(e, TrainedCells)
+    ivfSearchAssigned(assignCells(e, cents, TrainedSpill), cents,
+      e.filter(col("vec_id") < 10), TrainedTopK, TrainedNProbe)
       .select("query_id", "neighbor_id", "rnk", "sim")
   }
 
@@ -1162,38 +1080,45 @@ object AnnOps {
   private val PqK = 16
   private val PqDims = 8
 
-  /** PQ codebook from SEED-PARTITION MEANS: code (s, j) = the 6-dp
-    * integer-exact mean (d16's centroid recipe) of subvector s over vectors
-    * with `vec_id % PqK == j` — Lloyd's SEEDING step stated as one
-    * aggregation, which keeps the whole PQ pipeline oracle-stateable in a
-    * single SQL query (a full per-subspace Lloyd's refinement drops in via
-    * [[kmeansTrain]] on the sliced subvectors — same map, same consumers —
-    * but is iterative float averaging, n2b's sanctioned no-oracle
-    * territory, so the gated face stays with seed means).
+  /** PQ codebook from SEED-PARTITION MEANS: code (s, j) = subvector s of
+    * the [[cellMeans]] of the vectors with `vec_id % PqK == j` — Lloyd's
+    * SEEDING step stated as one aggregation, which keeps the whole PQ
+    * pipeline oracle-stateable in a single SQL query (a Lloyd refinement
+    * that stops at convergence is n2b's no-oracle territory, so the gated
+    * face stays with seed means). Trained once per (session, corpus).
     *
     * Returns ((s, j) → (centroid, ‖centroid‖²)); `PqM·PqK` entries — tiny,
-    * driver-held by construction like [[assignCellsLit]]'s centroids.
-    * Scale: ONE (j, s, p)-keyed aggregation of the corpus with map-side
+    * driver-held by construction like [[assignCells]]'s centroids.
+    * Scale: ONE (j, dim)-keyed aggregation of the corpus with map-side
     * partials.
     */
   def pqCodebook(e: DataFrame): Map[(Int, Int), (Array[Double], Double)] =
-    pqCodebookOf(e, "embedding")
+    SessionMemo.getOrCompute(SessionMemo.key("pqCodebook", e)) {
+      cellMeans(vectorRows(e.withColumn("cell", (col("vec_id") % PqK).cast("int"))))
+        .flatMap { case (j, c) =>
+          (0 until PqM).map(s => (s, j) -> pqCode(c.slice(s * PqDims, (s + 1) * PqDims)))
+        }.toMap
+    }
+
+  /** A PQ code with its squared norm, the codebook entry form. */
+  private def pqCode(c: Seq[Double]): (Array[Double], Double) =
+    (c.toArray, c.foldLeft(0.0)((a, x) => a + x * x))
 
   /** n11's residual codebook: POINT seeds (the residual subvectors of
     * vec_id 0..PqK-1 — Lloyd's "first k points" seeding, deterministic and
     * collected in one tiny filter) refined by `rounds` unrolled Lloyd
     * steps. Each step assigns every subvector to its nearest code by the
     * SAME 4-dp-quantized sq-L2 the encoder uses (ties to the lower code
-    * id) and recomputes each code as the 6-dp integer-exact mean of its
-    * members; a code that attracts no members keeps its previous centroid
-    * (the standard empty-cell rule, stated as a left-join coalesce in the
-    * oracle). A fixed round count — not convergence — keeps the whole
-    * training prefix oracle-stateable, the g7/g13 convention for
-    * iterative work.
+    * id) and recomputes each code as the [[cellMeans]] of its members, the
+    * code (s, j) as cell `s·PqK + j`; a code that attracts no members keeps
+    * its previous centroid (the standard empty-cell rule, stated as a
+    * left-join coalesce in the oracle). A fixed round count — not
+    * convergence — keeps the whole training prefix oracle-stateable, the
+    * g7/g13 convention for iterative work.
     *
-    * Scale notes (100 TB): each round is ONE (s, j, p)-keyed aggregation
+    * Scale notes (100 TB): each round is ONE (cell, dim)-keyed aggregation
     * of the corpus with map-side partials (assignment is a literal
-    * projection against the driver-held codebook, the assignCellsLit
+    * projection against the driver-held codebook, the [[assignCells]]
     * contract); PqM·PqK·PqDims output doubles collect per round. This is
     * index-time cost, amortized across queries.
     */
@@ -1202,12 +1127,8 @@ object AnnOps {
     val seeds = df.filter(col("vec_id") < PqK)
       .select(col("vec_id").cast("int").as("j"), col("res"))
       .collect().flatMap { r =>
-        val j = r.getInt(0)
         val v = r.getSeq[Double](1)
-        (0 until PqM).map { s =>
-          val c = v.slice(s * PqDims, (s + 1) * PqDims).toArray
-          ((s, j), (c, c.foldLeft(0.0)((a, x) => a + x * x)))
-        }
+        (0 until PqM).map(s => (s, r.getInt(0)) -> pqCode(v.slice(s * PqDims, (s + 1) * PqDims)))
       }.toMap
     // downstream encode does cb((s, j)) for EVERY j < PqK — a corpus
     // missing any vec_id in 0..PqK-1 would otherwise surface as an opaque
@@ -1218,62 +1139,19 @@ object AnnOps {
     for (_ <- 1 to rounds) {
       // assignment via the native one-pass PqEncodeExpr — bit-identical to
       // the composed array_min(pqScoredCodes(...)) form (spec-pinned) but
-      // codegen'd: the composed form paid 2·PqM·PqK interpreted lambda
-      // folds per row and re-analyzed a PqM·PqK-branch struct tree every
-      // round. Computed BEFORE the generator select: an aliased generator
-      // in the same projection re-resolves lambda structs (analyzer
-      // CleanupAliases quirk)
-      val upd = df.withColumn("codes",
+      // codegen'd. Computed BEFORE the generator select: an aliased
+      // generator in the same projection re-resolves lambda structs
+      // (analyzer CleanupAliases quirk)
+      val upd = cellMeans(df.withColumn("codes",
           graft.functions.PqFunctions.pq_encode(col("res"), cb, PqM, PqDims, PqK))
         .select(col("codes"), posexplode(col("res")).as(Seq("dim", "v")))
         .withColumn("s", expr(s"dim div $PqDims").cast("int"))
-        .withColumn("p", expr(s"dim % $PqDims").cast("int"))
-        .withColumn("j", element_at(col("codes"), col("s") + 1).cast("int"))
-        .withColumn("vq", floor(col("v") * 1e6 + 0.5).cast("long"))
-        .groupBy("s", "j", "p")
-        .agg(sum("vq").as("sm"), count(lit(1)).as("n"))
-        .withColumn("m", floor(col("sm").cast("double") / col("n") + 0.5) / 1e6)
-        .groupBy("s", "j")
-        .agg(array_sort(collect_list(struct(col("p"), col("m")))).as("pm"))
-        .select(col("s"), col("j"),
-          transform(col("pm"), x => x.getField("m")).as("c"))
-        .collect().map { r =>
-          val c = r.getSeq[Double](2).toArray
-          ((r.getInt(0), r.getInt(1)), (c, c.foldLeft(0.0)((a, x) => a + x * x)))
-        }.toMap
-      cb = cb ++ upd // codes with no members keep their previous centroid
+        .select((col("s") * PqK + element_at(col("codes"), col("s") + 1)).as("cell"),
+          (col("dim") % PqDims).as("dim"), col("v")))
+      cb = cb ++ upd.map { case (cell, c) => (cell / PqK, cell % PqK) -> pqCode(c) }
+      // codes with no members keep their previous centroid
     }
     cb
-  }
-
-  /** [[pqCodebook]] over an arbitrary vector column — n6 trains on the raw
-    * embeddings; identical arithmetic either way (the double cast is a
-    * no-op on double input).
-    */
-  private def pqCodebookOf(e: DataFrame,
-      vecCol: String): Map[(Int, Int), (Array[Double], Double)] =
-    // one corpus-keyed aggregation, trained once per (session, corpus)
-    SessionMemo.getOrCompute(SessionMemo.key(s"pqCodebook:$vecCol", e)) {
-      pqCodebookCompute(e, vecCol)
-    }
-
-  private def pqCodebookCompute(e: DataFrame,
-      vecCol: String): Map[(Int, Int), (Array[Double], Double)] = {
-    val cb = e.select((col("vec_id") % PqK).cast("int").as("j"),
-        posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .withColumn("s", expr(s"dim div $PqDims").cast("int"))
-      .withColumn("p", expr(s"dim % $PqDims").cast("int"))
-      .withColumn("vq", floor(col("v").cast("double") * 1e6 + 0.5).cast("long"))
-      .groupBy("j", "s", "p")
-      .agg(sum("vq").as("sm"), count(lit(1)).as("n"))
-      .withColumn("m", floor(col("sm").cast("double") / col("n") + 0.5) / 1e6)
-      .groupBy("j", "s")
-      .agg(array_sort(collect_list(struct(col("p"), col("m")))).as("pm"))
-      .select(col("s"), col("j"), transform(col("pm"), x => x.getField("m")).as("c"))
-    cb.collect().map { r =>
-      val c = r.getSeq[Double](2).toArray
-      ((r.getInt(0), r.getInt(1)), (c, c.foldLeft(0.0)((a, x) => a + x * x)))
-    }.toMap
   }
 
   /** Per-subspace scored codes: array<struct(dq, j)> of the 4-dp-quantized
@@ -1309,7 +1187,7 @@ object AnnOps {
   /** PQ ENCODE: per vector, per subspace, the nearest code by quantized
     * squared L2 (ties to the lower code id) — adds a `codes` byte-array
     * column (`PqM` ints). Map-only against the driver-held codebook: the
-    * [[assignCellsLit]] contract — no join, no shuffle, streaming-capable,
+    * [[assignCells]] contract — no join, no shuffle, streaming-capable,
     * and at 100 TB the corpus is encoded in one scan and stored as 8
     * ints/vector (the 64× compression that makes exhaustive ADC scans
     * feasible at all).
@@ -1367,52 +1245,40 @@ object AnnOps {
     * published recipe behind LAION/web-scale curation runs. The corpus is
     * k-means-clustered (here the fixture's `label` coarse assignment, the
     * same convention as n2/d6 — a trained quantizer plugs in via
-    * [[kmeansTrain]] + [[assignCellsLit]]); within each cluster, any pair
+    * [[kmeansTrain]] + [[assignCells]]); within each cluster, any pair
     * with cosine ≥ `threshold` is a semantic-duplicate edge, and the member
     * KEPT is the one with the LOWEST cosine to its cluster centroid — the
     * paper's "keep cluster outliers" rule (§4.3: low-centroid-similarity
     * examples preserved diversity best in their CLIP/LM ablations).
     *
-    * Determinism contract (oracle-hash-exact): the centroid is an
-    * integer-arithmetic mean — each float scaled to a 6-dp BIGINT
-    * (`floor(v·1e6 + 0.5)`), summed exactly, divided by the cluster count
-    * with one deterministic double division, re-floored — so no
-    * engine-specific decimal rounding mode or float summation order can
-    * touch it; cosines are 4-dp floor-quantized like every vector op here,
-    * and the drop rule tie-breaks (cent_sim, vec_id) lexicographically.
+    * Determinism contract (oracle-hash-exact): the centroid is the label
+    * cell's 6-dp integer-exact mean ([[cellMeans]]) — the memoized seeded
+    * quantizer n10/n11 share — so no engine-specific decimal rounding mode
+    * or float summation order can touch it; cosines are 4-dp
+    * floor-quantized like every vector op here, and the drop rule
+    * tie-breaks (cent_sim, vec_id) lexicographically.
     *
     * Scale notes (100 TB): centroid training is ONE (label, dim)-keyed
-    * aggregation of the corpus with map-side partials (k·64 output rows,
-    * broadcast back); the pair join is within-cluster only — candidate
+    * aggregation of the corpus with map-side partials, held driver-side as
+    * a k-entry literal; the pair join is within-cluster only — candidate
     * volume is bounded by cell population like d6/d3, never n² — and the
     * drop set reduces per vec_id with partial agg. Run exact dedup (d1)
     * first on duplication-heavy corpora for the same cell-inflation reason
     * documented on [[embeddingNearDups]].
     */
   def semDedup(e: DataFrame, threshold: Double = 0.95): DataFrame = {
-    // 6-dp integer-exact per-dim centroid mean (see determinism contract)
-    val cents = e
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .withColumn("vq", floor(col("v").cast("double") * 1e6 + 0.5).cast("long"))
-      .groupBy("label", "dim")
-      .agg(sum("vq").as("s"), count(lit(1)).as("n"))
-      .withColumn("m", floor(col("s").cast("double") / col("n") + 0.5) / 1e6)
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("label"), transform(col("dm"), x => x.getField("m")).as("centroid"))
-    // double-array dot/norm for the (float vector) · (double centroid) case:
-    // sequential left-to-right double fold, the exact shape DuckDB's
-    // list_dot_product computes for mixed float/double lists
-    def dotd(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y), lit(0.0), (acc, x) => acc + x)
-    def normd(a: Column): Column =
-      sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
-    val scored = e.join(broadcast(cents), Seq("label"))
-      .select(col("label"), col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nv"),
-        (floor(dotd(col("embedding"), col("centroid")) /
-          (norm(col("embedding")) * normd(col("centroid"))) * 10000.0 + 0.5) / 10000.0)
-          .as("cent_sim"))
+    // label → (centroid, ‖centroid‖): the float·double dot is the native
+    // DotProductFD, and the centroid norm folds driver-side in the same
+    // left-to-right double order
+    val cents = typedlit(seededCentroids(e).map { case (cell, c) =>
+      cell -> (c, math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
+    }.toMap)
+    val cent = element_at(cents, col("label").cast("int"))
+    val scored = e.select(col("label"), col("vec_id"), col("embedding"),
+        norm(col("embedding")).as("nv"), cent.as("cent"))
+      .withColumn("cent_sim", floor(graft.functions.VectorFunctions.dot_fd(
+          col("embedding"), col("cent._1")) / (col("nv") * col("cent._2"))
+        * 10000.0 + 0.5) / 10000.0)
     val a = scored.select(col("label"), col("vec_id"), col("embedding").as("ea"),
       col("nv").as("na"), col("cent_sim").as("ca"))
     val b = scored.select(col("label"), col("vec_id").as("other_id"),

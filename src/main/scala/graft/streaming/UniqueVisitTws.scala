@@ -58,17 +58,20 @@ object UniqueVisitTws {
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 
-  /** Stop `q` once it has committed `rows` input rows. The processing-time
-    * TTL makes every trigger plan another no-data batch, so the query never
-    * terminates by itself, not even under `Trigger.AvailableNow`. Throws if
-    * the input is not committed within 300 s.
+  /** Stop `q` once it has committed everything its sources held: under
+    * `Trigger.AvailableNow` that is the first batch that read no new
+    * offsets, every source's start offset equal to its end offset. The
+    * processing-time TTL makes every trigger plan another no-data batch, so
+    * the query never terminates by itself. Throws if no such batch completes
+    * within 300 s.
     */
-  def stopWhenCommitted(q: StreamingQuery, rows: Long): Unit = {
+  def stopWhenCommitted(q: StreamingQuery): Unit = {
     val deadline = System.nanoTime() + 300L * 1000000000L
-    def committed = q.recentProgress.map(_.numInputRows).sum
-    try while (q.isActive && committed < rows && System.nanoTime() < deadline) Thread.sleep(20)
+    def drained = Option(q.lastProgress)
+      .exists(_.sources.forall(s => s.startOffset == s.endOffset))
+    try while (q.isActive && !drained && System.nanoTime() < deadline) Thread.sleep(20)
     finally q.stop()
-    if (committed < rows)
-      throw new IllegalStateException(s"${q.name} committed $committed of $rows input rows")
+    if (!drained)
+      throw new IllegalStateException(s"${q.name} did not commit its input within 300 s")
   }
 }

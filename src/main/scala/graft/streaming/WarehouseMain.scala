@@ -145,7 +145,7 @@ object WarehouseMain {
         .option("checkpointLocation", s"$work/ckpt/uv_tws")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .outputMode("append").start()
-      UniqueVisitTws.stopWhenCommitted(qTws, bus.read(spark, "ods_base_log").count())
+      UniqueVisitTws.stopWhenCommitted(qTws)
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     // ---- DWM: order-wide interval join + dim enrichment (OrderWideApp) ----

@@ -16,8 +16,8 @@ class BatchQueriesSpec extends SparkSpec {
   }
 
   test("every query has an oracle (rows-only exceptions named explicitly)") {
-    // n2b is the ONE sanctioned rows-only query: Lloyd's k-means loop is
-    // iterative float averaging — not stateable as one DuckDB SQL query.
+    // n2b is the ONE sanctioned rows-only query: Lloyd's k-means loop runs
+    // until convergence — not stateable as one DuckDB SQL query.
     // Its behavioral gate is AnnOpsSpec's recall bound at sf0.1. Anything
     // else missing an oracle is a hole in the correctness gate.
     val rowsOnly = Set("n2b_ann_ivf_trained")

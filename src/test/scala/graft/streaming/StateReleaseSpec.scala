@@ -104,7 +104,7 @@ class StateReleaseSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val q = try start(UniqueVisitTws(spark, pages).toDF(), "uv_tws", Trigger.AvailableNow())
       finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    UniqueVisitTws.stopWhenCommitted(q, events.count())
+    UniqueVisitTws.stopWhenCommitted(q)
     assertReleased(q)
     assert(sink("uv_tws").count() > 0)
   }

@@ -10,12 +10,12 @@ class WindowVariantsSpec extends SparkSpec {
   test("streaming IVF assignment: vectors get their nearest centroid cell, map-side") {
     implicit val sqlCtx = spark.sqlContext
     val cents = Array(
-      (0, Array.tabulate(3)(i => if (i == 0) 1.0f else 0.0f)),
-      (1, Array.tabulate(3)(i => if (i == 1) 1.0f else 0.0f)))
+      (0, Seq.tabulate(3)(i => if (i == 0) 1.0 else 0.0)),
+      (1, Seq.tabulate(3)(i => if (i == 1) 1.0 else 0.0)))
     val input = MemoryStream[(Long, Array[Float])]
-    val q = graft.operators.AnnOps.assignCellsLit(
-        input.toDF().toDF("vec_id", "embedding"), cents)
-      .select("vec_id", "assigned_cell")
+    val q = graft.operators.AnnOps.assignCells(
+        input.toDF().toDF("vec_id", "embedding"), cents, 1)
+      .select("vec_id", "cell")
       .writeStream.format("memory").queryName("ivf_assign").outputMode("append").start()
     try {
       input.addData((1L, Array(0.9f, 0.1f, 0.0f)), (2L, Array(0.1f, 0.9f, 0.0f)))
