@@ -70,10 +70,10 @@ object SparkEntry {
     "dq8_profile_drift" -> on("documents")(RelationalOps.profileDrift),
     // dq9: embedding-space outliers — bottom 1/20 of each cell by kNN-graph
     // density (DECIMAL edge-sim sum); rides the memoized n14 graph
-    "dq9_embedding_outliers" -> on("embeddings")(AnnOps.knnDensityOutliers(_)),
+    "dq9_embedding_outliers" -> on("embeddings")(AnnOps.knnDensityOutliers),
     // dq4: k-anonymity audit over the (lang, source, len-bucket)
     // quasi-identifier — sub-k groups flagged, one bounded keyed agg
-    "dq4_k_anonymity" -> on("documents")(RelationalOps.kAnonymity(_)),
+    "dq4_k_anonymity" -> on("documents")(RelationalOps.kAnonymity),
     // l3: snapshot diff (added/removed/changed/unchanged counts) — one
     // id-keyed full outer join of the two manifest projections
     "l3_snapshot_diff" -> on("documents")(RelationalOps.snapshotDiff),
@@ -85,10 +85,10 @@ object SparkEntry {
     "a14_attribution" -> on("events")(StatsOps.attribution),
     // l4: data-skipping effectiveness — files touched under arrival vs
     // z-order layout for one box predicate; per-file stats in one keyed agg
-    "l4_skipping_stats" -> on("events")(Bucketing.skippingStats(_)),
+    "l4_skipping_stats" -> on("events")(Bucketing.skippingStats),
     // l5: the three-way layout bake-off — arrival vs Morton vs Hilbert
     // skipping under the same box predicate (native hilbert_key rounds)
-    "l5_layout_compare" -> on("events")(Bucketing.layoutCompare(_)),
+    "l5_layout_compare" -> on("events")(Bucketing.layoutCompare),
     // g10: cross-source shingle-overlap matrix — the subcorpus governance
     // view of decontamination; shingle df bounded by source count
     "g10_cross_source" -> on("documents")(CurationOps.crossSourceContamination),
@@ -98,7 +98,7 @@ object SparkEntry {
     "s14_cluster_balanced_sample" -> on("embeddings")(CurationOps.clusterBalancedSample),
     // dq6: per-stream daily volume z-score anomalies — one corpus
     // scan-agg; shift-invariant integer variance (no s² overflow)
-    "dq6_volume_anomaly" -> on("events")(RelationalOps.volumeAnomaly(_)),
+    "dq6_volume_anomaly" -> on("events")(RelationalOps.volumeAnomaly),
     // dq7: FK-graph referential integrity — orphan counts per relation
     "dq7_referential_integrity" -> (RelationalOps.referentialIntegrity _),
     // t16: char-entropy quality signal (the compression-proxy filter) —
@@ -109,7 +109,7 @@ object SparkEntry {
     "t17_gopher_repetition" -> on("documents")(TextOps.gopherRepetition),
     // g11: item-item cosine over binary user sets (collaborative
     // filtering) — user-keyed posting self-join, active-user bound
-    "g11_item_similarity" -> on("events")(StatsOps.itemSimilarity(_)),
+    "g11_item_similarity" -> on("events")(StatsOps.itemSimilarity),
     // g12: doc-level source-overlap matrix (g10's shingle-level complement)
     "g12_source_overlap" -> on("documents")(StatsOps.sourceOverlap),
     "a9_sessionize" -> (StatsOps.sessionize _),
@@ -117,7 +117,7 @@ object SparkEntry {
     "a11_rfm" -> on("events")(StatsOps.rfm),
     "a13_rolling_active" -> on("events")(StatsOps.rollingActive),
     "a12_event_transitions" -> on("events")(StatsOps.eventTransitions),
-    "g7_pagerank" -> on("events")(StatsOps.pageRank(_)),
+    "g7_pagerank" -> on("events")(StatsOps.pageRank),
     // g8: triangle counting via degree-ordered orientation — wedge volume
     // O(m^1.5), hub-skew-immune ("curse of the last reducer")
     "g8_triangles" -> on("events")(StatsOps.triangles),
@@ -126,12 +126,12 @@ object SparkEntry {
     "g13_label_prop" -> on("events")(StatsOps.labelPropagation(_)),
     // g9: PMI collocation mining — one quantized ln over exact counts,
     // min-support filter, bounded top-k
-    "g9_collocations" -> on("documents")(CurationOps.collocations(_)),
+    "g9_collocations" -> on("documents")(CurationOps.collocations),
     "l1_zorder_key" -> on("events")(Bucketing.zorderEvents),
     // l2: compaction planning (the small-files chore): first-fit-in-order
     // file assignment at ~16KB targets within (lang, doc_id%16) slices —
     // one bounded running-sum window per slice, never a global sort
-    "l2_compaction_plan" -> on("documents")(Bucketing.compactionPlan(_)),
+    "l2_compaction_plan" -> on("documents")(Bucketing.compactionPlan),
     "r3_retention" -> on("events")(StatsOps.retention),
     // a15: month-grained cohort LTV over orders — money-weighted r3 with
     // exact-decimal cumulative revenue per founding buyer
@@ -150,7 +150,7 @@ object SparkEntry {
     "d3_minhash_lsh_pairs" -> on("documents")(DedupOps.minhashLshPairs),
     "d4_simhash" -> on("documents")(DedupOps.simhash),
     "d5_ngram_jaccard" -> on("documents")(DedupOps.ngramJaccard),
-    "d6_embedding_neardup" -> on("embeddings")(AnnOps.embeddingNearDups(_)),
+    "d6_embedding_neardup" -> on("embeddings")(AnnOps.embeddingNearDups),
     // d16 runs τ = 0.35: the fixture's within-cell cosines stay below ~0.47,
     // so the production 0.95 would never exercise the drop rule
     "d16_semdedup" -> on("embeddings")(AnnOps.semDedup(_, threshold = 0.35)),
@@ -182,13 +182,13 @@ object SparkEntry {
     // d20: duplicate-cluster size spectrum over the session-shared closure
     "d20_cluster_spectrum" -> on("documents")(docs =>
       DedupOps.clusterSizeSpectrum(DedupOps.nearDupClusters(docs, 0.7))),
-    "g5_dup_rate_by_source" -> on("documents")(DedupOps.dupRateBySource(_)),
+    "g5_dup_rate_by_source" -> on("documents")(DedupOps.dupRateBySource),
     // LLM-data-pipeline: similarity search
     "n1_ann_cosine_topk" -> on("embeddings")(AnnOps.cosineTopK),
     // n8: metadata-FILTERED vector search — top-k among same-label vectors
     // only; the label equality turns n1's nested-loop into a keyed
     // broadcast hash join (filter-then-score)
-    "n8_ann_filtered_topk" -> on("embeddings")(AnnOps.filteredTopK(_)),
+    "n8_ann_filtered_topk" -> on("embeddings")(AnnOps.filteredTopK),
     "n2_ann_ivf_topk" -> on("embeddings")(AnnOps.ivfTopK),
     // n2b: the TRAINED quantizer end-to-end (kmeansTrain → assignCells →
     // ivfSearchAssigned). Lloyd's loop stops at convergence, so no single
@@ -196,16 +196,16 @@ object SparkEntry {
     // the recall bound vs n1's brute-force truth is spec-pinned at sf0.1
     // (AnnOpsSpec)
     "n2b_ann_ivf_trained" -> on("embeddings")(AnnOps.ivfTrainedTopK),
-    "n3_ann_lsh_topk" -> on("embeddings")(AnnOps.lshTopK(_)),
-    "n6_pq_adc" -> on("embeddings")(AnnOps.pqAdcTopK(_)),
+    "n3_ann_lsh_topk" -> on("embeddings")(AnnOps.lshTopK),
+    "n6_pq_adc" -> on("embeddings")(AnnOps.pqAdcTopK),
     // n7: k-NN weak labeling — majority label of the top-5 cosine
     // neighbors, deterministic (sim DESC, id) / (votes DESC, label) ties
-    "n7_knn_label" -> on("embeddings")(AnnOps.knnLabel(_)),
+    "n7_knn_label" -> on("embeddings")(AnnOps.knnLabel),
     "n4_embed_quantize" -> on("embeddings")(AnnOps.quantizeStats),
     // n9: SQ8 search — int8-code candidate scan (cosine of the quantized
     // vectors: scales cancel, all-integer-derived) + exact float rerank of
     // the top-20 survivors per query
-    "n9_quantized_topk" -> on("embeddings")(AnnOps.quantizedTopK(_)),
+    "n9_quantized_topk" -> on("embeddings")(AnnOps.quantizedTopK),
     // n10: IVF probe-bounded SQ8 — the int8 scan touches only the 3 probed
     // cells per query (n2 x n9 composition); deterministic 6-dp centroid
     // means + 4-dp-quantized probe scores keep every stage oracle-stateable
@@ -228,21 +228,21 @@ object SparkEntry {
     "t5_decontaminate" -> on("documents")(docs =>
       CurationOps.decontaminate(docs, docs.filter(col("doc_id") % 97 === 0))),
     "b1_bloom_decontaminate" -> on("documents")(CurationOps.bloomDecontaminate),
-    "b2_semantic_decontam" -> on("embeddings")(AnnOps.semanticDecontaminate(_)),
+    "b2_semantic_decontam" -> on("embeddings")(AnnOps.semanticDecontaminate),
     "s1_hash_sample" -> on("documents")(CurationOps.hashSample),
-    "s2_train_shuffle" -> on("documents")(CurationOps.trainShuffle(_)),
-    "s3_seq_pack" -> on("documents")(CurationOps.packSequences(_)),
+    "s2_train_shuffle" -> on("documents")(CurationOps.trainShuffle),
+    "s3_seq_pack" -> on("documents")(CurationOps.packSequences),
     "s4_mixture_sample" -> on("documents")(CurationOps.mixtureSample),
-    "s5_doc_chunk" -> on("documents")(CurationOps.chunkDocuments(_)),
+    "s5_doc_chunk" -> on("documents")(CurationOps.chunkDocuments),
     "s6_domain_cap" -> on("documents")(CurationOps.domainCap(_)),
-    "s7_length_buckets" -> on("documents")(CurationOps.lengthBuckets(_)),
+    "s7_length_buckets" -> on("documents")(CurationOps.lengthBuckets),
     // s8: sequence packing driven by REAL BPE subword counts (t10's merge
     // table) instead of the chars/4 estimate — counting and packing compose
     "s8_bpe_pack" -> on("documents")(docs =>
       CurationOps.packSequencesFrom(CurationOps.bpeTokenCounts(
         docs.filter(col("doc_id") < 100), CurationOps.DemoBpeMerges))),
-    "g1_ngram_topk" -> on("documents")(CurationOps.ngramTopK(_)),
-    "g3_tfidf_topterms" -> on("documents")(CurationOps.tfidfTopTerms(_)),
+    "g1_ngram_topk" -> on("documents")(CurationOps.ngramTopK),
+    "g3_tfidf_topterms" -> on("documents")(CurationOps.tfidfTopTerms),
     "g4_vocab_stats" -> on("documents")(CurationOps.vocabStats),
     "g6_zipf_slope" -> on("documents")(CurationOps.zipfSlope),
     "s9_temperature_mix" -> on("documents")(CurationOps.temperatureMix),
@@ -251,13 +251,12 @@ object SparkEntry {
       CurationOps.leakageSafeSplit(docs, DedupOps.nearDupClusters(docs, 0.7))),
     // s12: Efraimidis-Spirakis weighted sampling without replacement —
     // global top-n on the 4dp-quantized ln(u)/w key, WindowGroupLimit plan
-    "s12_weighted_sample" -> on("documents")(CurationOps.weightedSample(_)),
-    // exact=true opts into the reducer-buffered exact percentile the DuckDB
-    // oracle states; the operator's 100 TB default is the t-digest path
-    "g2_token_quantiles" -> on("documents")(CurationOps.tokenQuantiles(_, exact = true)),
+    "s12_weighted_sample" -> on("documents")(CurationOps.weightedSample),
+    // g2: exact percentile, the value the DuckDB oracle states
+    "g2_token_quantiles" -> on("documents")(CurationOps.tokenQuantiles),
     // LLM-data-pipeline: text analysis
     "c1_corpus_curation" -> on("documents")(TextOps.curateCorpus),
-    "c2_training_pipeline" -> on("documents")(CurationOps.trainingPipeline(_)),
+    "c2_training_pipeline" -> on("documents")(CurationOps.trainingPipeline),
     "c3_curated_train_export" -> on("documents")(CurationOps.curatedTrainExport),
     "t1_lang_id" -> on("documents")(TextOps.langId),
     "t2_text_quality" -> on("documents")(TextOps.textQuality),
@@ -274,7 +273,7 @@ object SparkEntry {
     // e2: canonical entity assignment — e1's pairs transitively closed with
     // the d10 connectedComponents machinery over the name vocabulary, every
     // record rewritten to its component's canonical name
-    "e2_entity_resolve" -> on("part")(TextOps.entityResolve(_)),
+    "e2_entity_resolve" -> on("part")(TextOps.entityResolve),
     "t12_gopher_rules" -> on("documents")(TextOps.gopherRules),
     "t13_lm_score" -> on("documents")(TextOps.lmScore),
     "t14_ppl_buckets" -> on("documents")(TextOps.pplBuckets),
@@ -286,9 +285,9 @@ object SparkEntry {
       docs.filter(col("doc_id") < 100), CurationOps.DemoBpeMerges)),
     // t11: per-language token distribution from REAL BPE subword counts —
     // the production accounting default once a merge table exists (t3/g2/s3
-    // keep the chars/4 bootstrap face); exact percentile opted in like g2
+    // keep the chars/4 bootstrap face)
     "t11_bpe_token_stats" -> on("documents")(
-      CurationOps.bpeTokenStats(_, CurationOps.DemoBpeMerges, exact = true)),
+      CurationOps.bpeTokenStats(_, CurationOps.DemoBpeMerges)),
     // LLM-data-pipeline: multimodal (m1 = deterministic fake decoder with a
     // full arithmetic oracle; m2 = REAL javax.imageio PNG encode→decode)
     "m1_multimodal_decode" -> (MultimodalOps.decodeFeatures _),
@@ -319,7 +318,7 @@ object SparkEntry {
     // c5: RAG retrieval serving capstone — n10's probe-bounded IVF×SQ8
     // scan, exact rerank to the pool=20 list, n13's MMR greedy tail; the
     // oracle composes the two gated stages' CTE chains verbatim
-    "c5_retrieval_serve" -> on("embeddings")(AnnOps.retrievalServe(_)),
+    "c5_retrieval_serve" -> on("embeddings")(AnnOps.retrievalServe),
     // m5: REAL WAV round trip — encode RIFF/WAVE bytes per doc, decode with
     // the in-JDK javax.sound parser, aggregate frames at the codec seam;
     // same arithmetic oracle as m4, so a codec fault breaks the hash

@@ -74,9 +74,10 @@ object HilbertIndex {
     d
   }
 
-  def hilbert_key(x: Column, y: Column, bits: Int = 16): Column = {
+  /** The order-16 key: a 32-bit distance over the 65536² grid. */
+  def hilbert_key(x: Column, y: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(HilbertIndexExpr(
-      ColumnBridge.expression(x), ColumnBridge.expression(y), bits))
+      ColumnBridge.expression(x), ColumnBridge.expression(y), 16))
   }
 }

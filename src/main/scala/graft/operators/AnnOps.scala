@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * left-to-right summation.
   */
 object AnnOps {
-  /** The n10/n13/c5 serving defaults, shared BY NAME with the DuckDB oracle
+  /** The n10/n13/c5 serving constants, shared BY NAME with the DuckDB oracle
     * SQL (SparkEntry's `ivfSq8Rer`/`mmrGreedyTail`/`c5Sql` interpolate these
-    * same constants) — a default change here reaches operator and oracle
+    * same constants) — a change here reaches operator and oracle
     * together instead of silently diverging until the next correctness run.
     * λ and μ are INDEPENDENT (μ ≠ 1−λ: binary 1−0.7 is 0.30000000000000004
     * and engines would quantize differently near ties).
@@ -106,7 +106,7 @@ object AnnOps {
     searchTopK(e, e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe")), 5)
 
-  /** N8 — FILTERED vector search: each query's top-k cosine neighbors
+  /** N8 — FILTERED vector search: each query's top-5 cosine neighbors
     * restricted to corpus vectors sharing the query's label — the
     * metadata-filtered ANN shape every production vector store exposes
     * (tenant / language / source scoping). Same exact ordering contract as
@@ -120,7 +120,7 @@ object AnnOps {
     * 10×). Top-k is the same two-phase partial merge as n1; an IVF variant
     * composes by filtering within probed cells.
     */
-  def filteredTopK(e: DataFrame, k: Int = 5): DataFrame = {
+  def filteredTopK(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         norm(col("embedding")).as("nq"), col("label").as("qlabel"))
@@ -130,14 +130,14 @@ object AnnOps {
         corpus("label") === q("qlabel") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
-    topKPerQuery(sims, k, Seq("query_id"))
+    topKPerQuery(sims, 5, Seq("query_id"))
       .select("query_id", "neighbor_id", "rnk", "sim")
   }
 
   /** N7 — k-NN weak labeling (auto-labeling / label propagation, the
     * nearest-neighbor classifier the data-curation literature uses to
     * extend a small labeled seed over an unlabeled corpus): each query
-    * vector takes the majority label of its top-k cosine neighbors.
+    * vector takes the majority label of its top-5 cosine neighbors.
     * Deterministic everywhere: neighbors tie-break (sim DESC, neighbor_id)
     * on the 4-dp-quantized similarity — n1's exact ordering — and the vote
     * tie-breaks (votes DESC, label). `agrees` compares the vote against
@@ -150,7 +150,7 @@ object AnnOps {
     * the brute-force candidate stage for IVF/PQ (n2/n6) with the same
     * vote.
     */
-  def knnLabel(e: DataFrame, k: Int = 5): DataFrame = {
+  def knnLabel(e: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -162,7 +162,7 @@ object AnnOps {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosinePre(col("qe"), col("embedding"), col("nq"), col("nv")).as("sim"))
     val labels = e.select(col("vec_id"), col("label"))
-    val votes = topKPerQuery(sims, k, Seq("query_id"))
+    val votes = topKPerQuery(sims, 5, Seq("query_id"))
       .join(broadcast(labels.withColumnRenamed("vec_id", "neighbor_id")),
         Seq("neighbor_id"))
       .groupBy(col("query_id"), col("label"))
@@ -198,8 +198,8 @@ object AnnOps {
   /** D6 — embedding-cosine near-dup detection, the vector-space member of the
     * dedup family (exact/MinHash/SimHash/n-gram live in [[DedupOps]]): every
     * vector gets its nearest neighbor WITHIN ITS IVF CELL (`label` = coarse
-    * quantizer output, as in [[ivfTopK]]) and an `is_dup` flag at
-    * `threshold`. Bucketing-by-cell is the standard scale path for embedding
+    * quantizer output, as in [[ivfTopK]]) and an `is_dup` flag at cosine
+    * ≥ 0.95. Bucketing-by-cell is the standard scale path for embedding
     * dedup — candidate pairs are bounded by cell population, never the n²
     * corpus, exactly like d3's LSH band buckets; the top-1 reduction uses the
     * two-phase partial top-k, so no per-vector single-reducer window. Drop
@@ -213,7 +213,7 @@ object AnnOps {
     * k-means balance and the join stays linear-ish, which is how c2 orders
     * its stages.
     */
-  def embeddingNearDups(e: DataFrame, threshold: Double = 0.95): DataFrame = {
+  def embeddingNearDups(e: DataFrame): DataFrame = {
     val left = e.select(col("label"), col("vec_id"), col("embedding").as("ea"),
       norm(col("embedding")).as("na"))
     val right = e.select(col("label"), col("vec_id").as("neighbor_id"),
@@ -224,7 +224,7 @@ object AnnOps {
         cosinePre(col("ea"), col("eb"), col("na"), col("nb")).as("sim"))
     topKPerQuery(sims, 1, Seq("vec_id"))
       .select(col("vec_id"), col("neighbor_id").as("nn_id"), col("sim"),
-        (col("sim") >= threshold).as("is_dup"))
+        (col("sim") >= 0.95).as("is_dup"))
   }
 
   // ---- Random-hyperplane (SRP) LSH -----------------------------------------
@@ -276,8 +276,8 @@ object AnnOps {
     * a missed true neighbor is the accepted ANN trade, and the oracle mirrors
     * the same algorithm so the contract is exact.
     */
-  def lshTopK(e: DataFrame, k: Int = 5): DataFrame =
-    lshSearch(e, e.filter(col("vec_id") < 20), k)
+  def lshTopK(e: DataFrame): DataFrame =
+    lshSearch(e, e.filter(col("vec_id") < 20), 5)
 
   /** Full SRP-LSH search over arbitrary corpus/query frames — the general
     * API behind [[lshTopK]], parallel to [[ivfSearchAssigned]]. Self-pairs (shared
@@ -335,18 +335,18 @@ object AnnOps {
     * vectors — the per-vector scales cancel in cosine, so the score derives
     * ENTIRELY from integer dot products (exact below 2^53; one sqrt + one
     * divide, 4-dp-quantized → bit-identical in both engines, no float
-    * vector math on the wide scan) — and only the top-`cand` survivors per
-    * query touch float embeddings for the exact n1-contract rerank.
+    * vector math on the wide scan) — and only the top-20 survivors per
+    * query touch float embeddings for the exact n1-contract rerank (k = 5).
     * Output carries both scores, so quantization error is visible inline.
     *
     * Scale notes (100 TB): the candidate pass is the n1 broadcast shape
-    * over int8 codes (map-only, two-phase top-cand — never a per-query
+    * over int8 codes (map-only, two-phase top-20 — never a per-query
     * single-reducer window); the rerank joins the CANDIDATE list
-    * (queries × cand rows, broadcast) back to the float column, so full-
-    * precision vectors are read for ~cand·|Q| rows only. A production
+    * (queries × 20 rows, broadcast) back to the float column, so full-
+    * precision vectors are read for ~20·|Q| rows only. A production
     * variant composes with IVF cells (n2) the same way.
     */
-  def quantizedTopK(e: DataFrame, k: Int = 5, cand: Int = 20): DataFrame = {
+  def quantizedTopK(e: DataFrame): DataFrame = {
     val qz = sq8Encode(e.select(col("vec_id"), col("embedding")))
     val queries = qz.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("qv").as("qq"),
@@ -357,12 +357,12 @@ object AnnOps {
       .crossJoin(broadcast(queries.select(col("query_id"), col("qq"), col("qqn"))))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), sq8Cosine.as("sim"))
-    // |Q|*cand rows, but the lineage is the whole candidate scan and `top`
+    // |Q|*20 rows, but the lineage is the whole candidate scan and `top`
     // feeds TWO broadcast branches (rerank probe + final score-join), which
     // share no subtree: materialized, the candidate pass runs once
-    val top = Materialize(topKPerQuery(cands, cand, Seq("query_id"))
+    val top = Materialize(topKPerQuery(cands, 20, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim")))
-    exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, k)
+    exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, 5)
   }
 
   /** SQ8 codes for n9/n10: over a frame with `embedding`, adds the
@@ -494,7 +494,7 @@ object AnnOps {
   def seededCellAssign(e: DataFrame): DataFrame =
     assignCells(e, seededCentroids(e), 1).select("vec_id", "cell")
 
-  /** N14 — kNN-GRAPH construction: every corpus vector's top-`k` cosine
+  /** N14 — kNN-GRAPH construction: every corpus vector's top-[[ServeK]] cosine
     * neighbors, probe-bounded by the trained coarse quantizer. n1–n13
     * answer QUERY-side search (a handful of standing queries against the
     * corpus); the kNN JOIN is the INDEX-side primitive the LLM curation
@@ -524,12 +524,12 @@ object AnnOps {
     * two-phase partial merge (≤ k·partitions rows per vector through the
     * final exchange — never the full candidate list).
     */
-  def knnJoin(e: DataFrame, k: Int = ServeK, nProbe: Int = ServeNProbe): DataFrame =
+  def knnJoin(e: DataFrame, nProbe: Int = ServeNProbe): DataFrame =
     // the GRAPH is an index artifact: built once per (session, corpus,
-    // params) and served to every consumer — the n14 gate, dq9's density
+    // nProbe) and served to every consumer — the n14 gate, dq9's density
     // outliers; a 100 TB deployment persists it next to the index
-    SessionMemo.getOrCompute(SessionMemo.key(s"n14:knn:k=$k,p=$nProbe", e)) {
-      Materialize(knnJoinStage(e, k, nProbe))
+    SessionMemo.getOrCompute(SessionMemo.key(s"n14:knn:p=$nProbe", e)) {
+      Materialize(knnJoinStage(e, ServeK, nProbe))
     }
 
   /** The n14 construction PLAN itself (uncheckpointed) — what
@@ -572,14 +572,14 @@ object AnnOps {
   }
 
   /** DQ9 — kNN-DENSITY outliers: the embedding-space data-quality signal
-    * (dataset cartography / mislabel-and-junk pruning). A vector whose k
+    * (dataset cartography / mislabel-and-junk pruning). A vector whose 5
     * nearest neighbors are all far away sits in a sparse region — OCR
     * garbage, wrong-language shards, adversarial spam — exactly what an
     * embedding-quality gate drops before training. Density = the DECIMAL
     * sum of the vector's [[knnJoin]] edge similarities (5 exact 4-dp
     * values, decimal-summed so no engine sees float accumulation order);
-    * the outlier flag is the bottom 1/`frac` of each CELL by (density,
-    * vec_id) — s13's exact integer quota (`rnk·frac ≤ n_c + frac−1`), per
+    * the outlier flag is the bottom 1/20 of each CELL by (density,
+    * vec_id) — s13's exact integer quota (`rnk·20 ≤ n_c + 19`), per
     * cell rather than corpus-wide so a naturally diffuse topic is judged
     * against its own neighborhood, not a dense one's.
     *
@@ -590,18 +590,17 @@ object AnnOps {
     * exchange shared by the rank and count windows (the s14 contract
     * shape).
     */
-  def knnDensityOutliers(e: DataFrame, k: Int = ServeK,
-      nProbe: Int = ServeNProbe, frac: Int = 20): DataFrame = {
+  def knnDensityOutliers(e: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("cell").orderBy(col("density"), col("vec_id"))
     val cw = Window.partitionBy("cell")
-    knnJoin(e, k, nProbe)
+    knnJoin(e)
       .groupBy("vec_id")
       .agg(graft.Tables.dsum(col("sim")).as("density"))
       .join(seededCellAssign(e), Seq("vec_id"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .withColumn("n_c", count(lit(1)).over(cw))
-      .withColumn("outlier", col("rnk") * frac <= col("n_c") + (frac - 1))
+      .withColumn("outlier", col("rnk") * 20 <= col("n_c") + 19)
       .select(col("vec_id"), col("cell"), col("density"), col("outlier"))
   }
 
@@ -700,7 +699,7 @@ object AnnOps {
     * n10 probe-bounds an SQ8 scan but keeps whole-vector int8 codes
     * (64 bytes/vector). Here each vector's RESIDUAL from its coarse
     * centroid is PQ-encoded to `PqM` 4-bit codes (8 ints/vector — the 64×
-    * compression), and per query only the `nProbe` nearest cells' postings
+    * compression), and per query only the 4 nearest cells' postings
     * are ADC-scored with a per-(query, cell) residual distance table —
     * the composition that makes billion-scale search tractable: I/O follows
     * the probed fraction AND each candidate costs 8 table lookups, no
@@ -720,14 +719,13 @@ object AnnOps {
     * amortized across queries (a deployment persists cells + codes).
     * Assignment, residuals, and encoding are map-only against driver-held
     * literals (no join, no corpus shuffle, streaming-safe). The search:
-    * probes and distance tables are literal per-query work (≤ |Q|·nProbe
+    * probes and distance tables are literal per-query work (≤ |Q|·4
     * rows, broadcast); the candidate scan is an equi-join on `cell` against
     * the broadcast probe side reading the 8-int codes column only; the
-    * rerank touches float vectors for ≤ cand·|Q| rows. PlanContractSpec
-    * pins the broadcast + no-cartesian shape.
+    * rerank touches float vectors for ≤ cand·|Q| rows and keeps the top 5.
+    * PlanContractSpec pins the broadcast + no-cartesian shape.
     */
-  def ivfPqTopK(e: DataFrame, k: Int = 5, cand: Int = 150,
-      nProbe: Int = 4): DataFrame = {
+  def ivfPqTopK(e: DataFrame, cand: Int = 150): DataFrame = {
     val cents = seededCentroids(e)
     val centMap = typedlit(cents.toMap)
     val ee = transform(col("embedding"), x => x.cast("double"))
@@ -760,7 +758,7 @@ object AnnOps {
     val enc = asg.select(col("cell"), col("vec_id").as("neighbor_id"),
       graft.functions.PqFunctions.pq_encode(col("res"), cb, PqM, PqDims, PqK)
         .as("codes"))
-    // probes: nProbe best cells per query by the same literal 4-dp scores;
+    // probes: the 4 best cells per query by the same literal 4-dp scores;
     // the residual distance TABLE is per (query, probed cell) — the IVFADC
     // detail that distinguishes residual PQ from n6's global tables
     val dt = (0 until PqM).map { s =>
@@ -769,7 +767,7 @@ object AnnOps {
     }
     val qside = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), ee.as("qee"),
-        nearestCells(cents, nProbe).as("cell"))
+        nearestCells(cents, 4).as("cell"))
       .withColumn("qres",
         zip_with(col("qee"), element_at(centMap, col("cell")), (x, c) => x - c))
       .select(col("query_id"), col("cell"), array(dt: _*).as("dt"))
@@ -785,7 +783,7 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"), (-col("sim")).as("adist"))
     exactRerank(e, e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        norm(col("embedding")).as("nq")), top, k)
+        norm(col("embedding")).as("nq")), top, 5)
   }
 
   /** N13 — MMR: maximal-marginal-relevance DIVERSIFIED top-k (Carbonell &
@@ -796,10 +794,8 @@ object AnnOps {
     * (4-dp cosine, ties by neighbor id) at `pool` per query; `k` greedy
     * rounds UNROLLED with the argmax on the 4-dp-quantized MMR score
     * (ties → smaller neighbor id), the fixed-round convention that lets
-    * the oracle state the identical greedy prefix as chained CTEs. λ and
-    * μ are INDEPENDENT literals (μ is not computed as 1−λ: binary 1−0.7
-    * is 0.30000000000000004 and engines would quantize differently near
-    * ties).
+    * the oracle state the identical greedy prefix as chained CTEs, with
+    * λ = [[MmrLambda]] and μ = [[MmrMu]].
     *
     * Scale notes (100 TB): the only corpus-scale work is the candidate
     * search itself (n1's broadcast-queries/no-corpus-shuffle shape, or any
@@ -808,12 +804,11 @@ object AnnOps {
     * joins frames of ≤ |Q|·pool rows, and the greedy rounds run in-task
     * per query ([[mmrOver]]), so the plan never compounds across rounds.
     */
-  def mmrTopK(e: DataFrame, k: Int = ServeK, pool: Int = ServePool,
-      lambda: Double = MmrLambda, mu: Double = MmrMu): DataFrame = {
+  def mmrTopK(e: DataFrame, k: Int = ServeK, pool: Int = ServePool): DataFrame = {
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     mmrOver(e, searchTopK(e, queries, pool)
-      .select(col("query_id"), col("neighbor_id"), col("sim")), k, lambda, mu)
+      .select(col("query_id"), col("neighbor_id"), col("sim")), k)
   }
 
   /** The MMR greedy core over an ARBITRARY candidate pool `(query_id,
@@ -842,8 +837,7 @@ object AnnOps {
     * those rows once, keyed by query; per-group state is pool² doubles.
     * Nothing is driver-side and nothing is corpus-scale.
     */
-  def mmrOver(e: DataFrame, candIn: DataFrame, k: Int,
-      lambda: Double, mu: Double): DataFrame = {
+  def mmrOver(e: DataFrame, candIn: DataFrame, k: Int): DataFrame = {
     val cand = Materialize(candIn)
     // pairwise 4-dp cosine within each query's pool: the candidate list
     // broadcasts into the corpus scan to pull vectors, then the pool
@@ -872,7 +866,7 @@ object AnnOps {
     rows.as[(Long, Long, Option[Long], Option[Double], Option[Double])]
       .groupByKey(_._1)
       .flatMapGroups { (qid, it) =>
-        mmrGreedy(qid, it, k, lambda, mu)
+        mmrGreedy(qid, it, k)
       }
       .toDF("query_id", "neighbor_id", "pick", "sim", "mmr")
   }
@@ -889,7 +883,7 @@ object AnnOps {
     */
   private def mmrGreedy(qid: Long,
       rows: Iterator[(Long, Long, Option[Long], Option[Double], Option[Double])],
-      k: Int, lambda: Double, mu: Double): Iterator[(Long, Long, Long, Double, Double)] = {
+      k: Int): Iterator[(Long, Long, Long, Double, Double)] = {
     val q4 = (x: Double) => math.floor(x * 10000.0 + 0.5) / 10000.0
     val cands = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val psim = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
@@ -903,7 +897,7 @@ object AnnOps {
     val picked = scala.collection.mutable.ArrayBuffer.empty[Long]
     // pick 1: rank-1 of the pool — max sim, ties to the smaller id
     val (id1, sim1) = cands.minBy { case (id, sim) => (-sim, id) }
-    out += ((qid, id1, 1L, sim1, q4(lambda * sim1)))
+    out += ((qid, id1, 1L, sim1, q4(MmrLambda * sim1)))
     picked += id1
     for (r <- 2 to k) {
       val best = cands.iterator
@@ -912,7 +906,7 @@ object AnnOps {
           val reds = picked.flatMap(p => psim.get((id, p)))
           // eligibility mirrors the unrolled form's inner join on `red`
           if (reds.isEmpty) None
-          else Some((id, sim, q4(lambda * sim - mu * reds.max)))
+          else Some((id, sim, q4(MmrLambda * sim - MmrMu * reds.max)))
         }
         .reduceOption[(Long, Double, Double)] { case (x, y) =>
           // max by (mmr, then min id)
@@ -928,23 +922,21 @@ object AnnOps {
 
   /** C5 — RAG retrieval serving, the capstone a search user hits first:
     * n10's probe-bounded IVF×SQ8 candidate scan, exact float rerank to a
-    * `pool`-sized list, then n13's MMR greedy diversification — the
+    * [[ServePool]]-sized list, then n13's MMR greedy diversification — the
     * query-time half of the retrieval stack the offline capstones (c1-c4)
-    * curate corpora for. Output is exactly `k` rows per query, (query_id,
-    * neighbor_id, pick, sim, mmr), each stage keeping its own gate's
+    * curate corpora for. Output is exactly [[ServeK]] rows per query,
+    * (query_id, neighbor_id, pick, sim, mmr), each stage keeping its own gate's
     * semantics (n10's 4-dp quantized probe selection and integer-dot scan,
     * n1's exact rerank, n13's fixed-round greedy with independent λ/μ).
     *
     * Scale notes (100 TB): candidate I/O follows the probed fraction
-    * (nProbe/cells of the corpus — n10's contract), the rerank touches only
+    * ([[ServeNProbe]]/cells of the corpus — n10's contract), the rerank touches only
     * |Q|·pool rows, and everything after is pool-bounded (|Q|·pool² pair
     * matrix, k tiny greedy rounds) — no stage re-scans the corpus.
     */
-  def retrievalServe(e: DataFrame, k: Int = ServeK, pool: Int = ServePool,
-      nProbe: Int = ServeNProbe, lambda: Double = MmrLambda,
-      mu: Double = MmrMu): DataFrame =
-    mmrOver(e, ivfQuantizedTopK(e, k = pool, cand = pool, nProbe = nProbe)
-      .select(col("query_id"), col("neighbor_id"), col("sim")), k, lambda, mu)
+  def retrievalServe(e: DataFrame): DataFrame =
+    mmrOver(e, ivfQuantizedTopK(e, k = ServePool, cand = ServePool)
+      .select(col("query_id"), col("neighbor_id"), col("sim")), ServeK)
 
   /** Lloyd's k-means training for the IVF coarse quantizer: iterate
     * assign → average until the largest centroid movement drops under `tol`
@@ -1219,7 +1211,7 @@ object AnnOps {
     * float vector math at all (the ADC win) — and the top-k reduction is
     * the two-phase partial [[topKPerQuery]], never a single reducer.
     */
-  def pqAdcTopK(e: DataFrame, k: Int = 5): DataFrame = {
+  def pqAdcTopK(e: DataFrame): DataFrame = {
     val cb = pqCodebook(e)
     val enc = pqEncode(e, cb).select(col("vec_id").as("neighbor_id"), col("codes"))
     val dt = (0 until PqM).map { s =>
@@ -1235,7 +1227,7 @@ object AnnOps {
             .cast("decimal(18,4)"))
         .reduce(_ + _).cast("double"))
       .select(col("query_id"), col("neighbor_id"), (-col("adist")).as("sim"))
-    topKPerQuery(sims, k, Seq("query_id"))
+    topKPerQuery(sims, 5, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("rnk"),
         (-col("sim")).as("adist"))
   }
@@ -1266,7 +1258,7 @@ object AnnOps {
     * first on duplication-heavy corpora for the same cell-inflation reason
     * documented on [[embeddingNearDups]].
     */
-  def semDedup(e: DataFrame, threshold: Double = 0.95): DataFrame = {
+  def semDedup(e: DataFrame, threshold: Double): DataFrame = {
     // label → (centroid, ‖centroid‖): the float·double dot is the native
     // DotProductFD, and the centroid norm folds driver-side in the same
     // left-to-right double order
@@ -1300,7 +1292,7 @@ object AnnOps {
     * of t5's n-gram recipe. Every 97th vector stands in for the held-out
     * benchmark embedding set (mirroring t5's convention); a corpus vector is
     * contaminated when its best cosine against ANY benchmark vector reaches
-    * `threshold`. Reports the max similarity so thresholds can be re-swept
+    * 0.95. Reports the max similarity so the threshold can be re-swept
     * without recomputing.
     *
     * Scale notes (100 TB): the benchmark set is small by construction (eval
@@ -1310,7 +1302,7 @@ object AnnOps {
     * doc-keyed max with map-side partial agg. No corpus shuffle of
     * embeddings, nothing quadratic in the corpus.
     */
-  def semanticDecontaminate(e: DataFrame, threshold: Double = 0.95): DataFrame = {
+  def semanticDecontaminate(e: DataFrame): DataFrame = {
     val bench = e.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("bench_id"), col("embedding").as("be"),
         norm(col("embedding")).as("nb"))
@@ -1321,6 +1313,6 @@ object AnnOps {
         cosinePre(col("embedding"), col("be"), col("nv"), col("nb")).as("sim"))
       .groupBy("vec_id")
       .agg(max(col("sim")).as("max_sim"))
-      .withColumn("is_contaminated", col("max_sim") >= threshold)
+      .withColumn("is_contaminated", col("max_sim") >= 0.95)
   }
 }

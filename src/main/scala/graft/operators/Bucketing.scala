@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object Bucketing {
 
   /** Z-ORDER key: bit-interleave two non-negative integer columns
-    * (clamped to `bits` bits each) into one Morton code — the
+    * (clamped to 16 bits each) into one 32-bit Morton code — the
     * multi-dimensional clustering key behind data-skipping layouts
     * (Morton 1966; the technique Delta's OPTIMIZE ZORDER and Iceberg's
     * sort orders apply). Rows range-sorted by the z-key keep BOTH columns
@@ -29,10 +29,10 @@ object Bucketing {
     * out-of-domain values order-preserving at the boundary instead of
     * wrapping them into the middle of the curve.
     */
-  def zorderKey(x: Column, y: Column, bits: Int = 16): Column = {
-    val xc = least(greatest(x, lit(0L)), lit((1L << bits) - 1))
-    val yc = least(greatest(y, lit(0L)), lit((1L << bits) - 1))
-    (0 until bits).map { i =>
+  def zorderKey(x: Column, y: Column): Column = {
+    val xc = least(greatest(x, lit(0L)), lit(65535L))
+    val yc = least(greatest(y, lit(0L)), lit(65535L))
+    (0 until 16).map { i =>
       shiftleft(shiftright(xc, i).bitwiseAND(lit(1L)), 2 * i + 1) +
         shiftleft(shiftright(yc, i).bitwiseAND(lit(1L)), 2 * i)
     }.reduce(_ + _)
@@ -58,7 +58,7 @@ object Bucketing {
       .withColumn("zbucket", shiftright(col("zkey"), 22))
 
   /** L4 — data-SKIPPING effectiveness audit, the number that justifies l1:
-    * for the same box predicate (`user_id ≤ uHi AND k ≤ kHi`), how many
+    * for the same box predicate (`user_id ≤ 31 AND k ≤ 31`), how many
     * files must a scan touch under the ARRIVAL layout (event_id-contiguous
     * 1024-row files — what a stream sink writes) versus the Z-ORDER layout
     * (fixed zkey ranges — what a z-ordered write produces)? Emits one row per
@@ -75,9 +75,8 @@ object Bucketing {
     * arrival files come from dense ids, z-files from fixed key ranges —
     * both pure projections.
     */
-  def skippingStats(events: DataFrame, uHi: Long = 31L,
-      kHi: Long = 31L): DataFrame =
-    layoutAudit(events, uHi, kHi, arrivalAndZorder)
+  def skippingStats(events: DataFrame): DataFrame =
+    layoutAudit(events, arrivalAndZorder)
 
   /** L5 — THREE-way layout bake-off: l4's skipping audit extended with the
     * HILBERT layout ([[graft.functions.HilbertIndex]]), the locality-better
@@ -95,9 +94,8 @@ object Bucketing {
     * chained CTEs over the same integers, so the layouts are bit-identical
     * across engines.
     */
-  def layoutCompare(events: DataFrame, uHi: Long = 31L,
-      kHi: Long = 31L): DataFrame =
-    layoutAudit(events, uHi, kHi, arrivalAndZorder :+ ("hilbert" -> shiftright(
+  def layoutCompare(events: DataFrame): DataFrame =
+    layoutAudit(events, arrivalAndZorder :+ ("hilbert" -> shiftright(
       graft.functions.HilbertIndex.hilbert_key(col("user_id"), col("k")), 12)))
 
   /** l4's two layouts: 1024-row arrival files and 4096-key z-order segments. */
@@ -108,16 +106,15 @@ object Bucketing {
   /** The l4/l5 rollup over any set of layouts: `layouts` maps a layout name
     * to its file-id column over [[zorderEvents]]' output; one row per
     * layout with files_total, files_touched, rows_read and rows_matched for
-    * the box predicate `user_id ≤ uHi AND k ≤ kHi`.
+    * the box predicate `user_id ≤ 31 AND k ≤ 31`.
     */
-  private def layoutAudit(events: DataFrame, uHi: Long, kHi: Long,
-      layouts: Seq[(String, Column)]): DataFrame = {
+  private def layoutAudit(events: DataFrame, layouts: Seq[(String, Column)]): DataFrame = {
     // spread first: the JSON parse + curve keys + layout explode + partial
     // agg otherwise all run inside the scan stage, which a single-row-group
     // input serializes onto one task; on well-split inputs spread is a
     // pass-through
     val base = zorderEvents(graft.Tables.spread(events))
-    val matched = col("user_id") <= uHi && col("k") <= kHi
+    val matched = col("user_id") <= 31L && col("k") <= 31L
     val perFile = base
       .select(col("user_id"), col("k"),
         explode(map(layouts.flatMap { case (name, file) => Seq(lit(name), file) }: _*))
@@ -128,7 +125,7 @@ object Bucketing {
         sum(when(matched, 1L).otherwise(0L)).as("m"))
     // box overlap: predicate floor is 0 and file minima are >= 0, so a file
     // is touched iff BOTH minima sit at or below the predicate ceiling
-    val touched = col("u_min") <= uHi && col("k_min") <= kHi
+    val touched = col("u_min") <= 31L && col("k_min") <= 31L
     perFile.groupBy("layout").agg(
       count(lit(1)).as("files_total"),
       sum(when(touched, 1L).otherwise(0L)).as("files_touched"),
@@ -138,11 +135,11 @@ object Bucketing {
 
   /** L2 — compaction planning, l1's sibling for the OTHER lakehouse layout
     * chore (the small-files problem): assign each document to an output
-    * file of ≈ `targetBytes`, bin-packed in id order WITHIN a
+    * file of ≈ 16 KiB, bin-packed in id order WITHIN a
     * (lang, shard) slice — `file_idx = floor(bytes_before_me / target)`,
     * the first-fit-in-order plan every compaction job (Delta OPTIMIZE,
     * Iceberg rewriteDataFiles) computes before it moves a byte. Shard =
-    * `doc_id % numShards` keeps the running sum DETERMINISTIC and
+    * `doc_id % 16` keeps the running sum DETERMINISTIC and
     * engine-portable (no hash seams) while bounding every window
     * partition.
     *
@@ -153,15 +150,14 @@ object Bucketing {
     * spec. Skew-bounded by construction: a shard's byte volume is ~1/N of
     * its language.
     */
-  def compactionPlan(docs: DataFrame, targetBytes: Long = 16384L,
-      numShards: Int = 16): DataFrame = {
+  def compactionPlan(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
     docs.select(col("doc_id"), col("lang"), col("n_chars"))
-      .withColumn("shard", col("doc_id") % numShards)
+      .withColumn("shard", col("doc_id") % 16)
       .withColumn("cum_bytes", sum(col("n_chars")).over(w))
       .withColumn("file_idx",
-        floor((col("cum_bytes") - col("n_chars")) / targetBytes.toDouble).cast("long"))
+        floor((col("cum_bytes") - col("n_chars")) / 16384.0).cast("long"))
       .select("doc_id", "lang", "shard", "file_idx", "cum_bytes")
   }
 }

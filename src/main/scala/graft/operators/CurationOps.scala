@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps {
 
-  /** 16-bit integer from the first 4 hex chars of a salted md5 of the doc id —
-    * the engine-portable deterministic "random" used for sampling and shard
-    * assignment. Reproducible across runs/engines by construction (no RNG
-    * state, no partition order dependence), the property that matters for
-    * auditable 100 TB samples.
+  /** 16-bit integer from the first 4 hex chars of a salted md5 of `key` —
+    * the engine-portable deterministic "random" used for sampling, shard
+    * assignment and hashed features. Reproducible across runs/engines by
+    * construction (no RNG state, no partition order dependence), the
+    * property that matters for auditable 100 TB samples.
     */
-  private def hashBucket(salt: String): Column =
-    conv(substring(md5(concat(lit(salt), col("doc_id").cast("string"))), 1, 4), 16, 10)
+  private def hashBucket(salt: String, key: Column): Column =
+    conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 4), 16, 10)
       .cast("long")
 
   /** T5 — benchmark decontamination (the published GPT-3/Dolma recipe shape):
@@ -65,7 +65,7 @@ object CurationOps {
     val rates = Seq(("en", 50), ("de", 30), ("es", 20), ("fr", 20), ("zh", 10))
       .toDF("lang", "rate")
     docs.select(col("doc_id"), col("source"), col("lang"))
-      .withColumn("bucket", hashBucket("smpl:") % 100)
+      .withColumn("bucket", hashBucket("smpl:", col("doc_id")) % 100)
       .join(broadcast(rates), Seq("lang"))
       .filter(col("bucket") < col("rate"))
   }
@@ -94,16 +94,15 @@ object CurationOps {
     * already ran it reuse it — the d11 cluster-reuse pattern.
     */
   def leakageSafeSplit(docs: DataFrame, clusters: DataFrame): DataFrame = {
-    def u(key: Column, salt: String): Column =
-      conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 4), 16, 10)
-        .cast("long")
-    def splitOf(uu: Column): Column =
-      when(uu * 10 < 65536L * 8, "train")
-        .when(uu * 10 < 65536L * 9, "val")
+    def splitOf(key: Column): Column = {
+      val u = hashBucket("split:", key)
+      when(u * 10 < 65536L * 8, "train")
+        .when(u * 10 < 65536L * 9, "val")
         .otherwise("test")
+    }
     clusters.select(col("doc_id"), col("cluster_id"),
-        splitOf(u(col("doc_id"), "split:")).as("naive_split"),
-        splitOf(u(col("cluster_id"), "split:")).as("split"))
+        splitOf(col("doc_id")).as("naive_split"),
+        splitOf(col("cluster_id")).as("split"))
       .withColumn("moved", col("naive_split") =!= col("split"))
   }
 
@@ -151,12 +150,13 @@ object CurationOps {
     * within each shard by a second hash — the standard "global shuffle" for
     * training export, done WITHOUT a global sort. Each shard's row_number runs
     * on its own reducer, so parallelism = shard count (thousands at 100 TB),
-    * and the assignment is bit-reproducible across runs and engines.
+    * and the assignment is bit-reproducible across runs and engines. Eight
+    * shards.
     */
-  def trainShuffle(docs: DataFrame, numShards: Int = 8): DataFrame = {
+  def trainShuffle(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("shard").orderBy(col("shufkey"), col("doc_id"))
     docs.select(col("doc_id"))
-      .withColumn("shard", hashBucket("shard:") % numShards)
+      .withColumn("shard", hashBucket("shard:", col("doc_id")) % 8)
       .withColumn("shufkey", md5(concat(lit("shuf:"), col("doc_id").cast("string"))))
       .withColumn("pos", (row_number().over(w) - 1).cast("long"))
       .select("doc_id", "shard", "pos")
@@ -165,44 +165,44 @@ object CurationOps {
   /** S12 — WEIGHTED sampling without replacement (Efraimidis & Spirakis
     * 2006, A-Res): each doc draws a deterministic uniform u from its salted
     * md5 and competes on the key `ln(u)/w` (the log form of u^(1/w) —
-    * monotone-equivalent, no overflow); the global top-n by key win, giving
+    * monotone-equivalent, no overflow); the global top-100 by key win, giving
     * inclusion probability ∝ weight in ONE distributed pass — here weight =
     * `n_chars`, the length-proportional draw a token-budgeted curation pass
     * wants. The single float op (one ln) is 4-dp floor-quantized before
     * ranking — t13's cross-engine determinism recipe — and ties break by
     * doc_id, so both engines rank identically.
     *
-    * Scale notes (100 TB): no global sort — `rank ≤ n` over the keyed
-    * window compiles to the two-phase `WindowGroupLimit` (map-side top-n
-    * per split, then top-n of ≤ n·splits survivors), the r1 plan. The draw
+    * Scale notes (100 TB): no global sort — `rank ≤ 100` over the keyed
+    * window compiles to the two-phase `WindowGroupLimit` (map-side top-100
+    * per split, then top-100 of ≤ 100·splits survivors), the r1 plan. The draw
     * itself is a scan-projection; weights never leave their rows.
     */
-  def weightedSample(docs: DataFrame, n: Int = 100): DataFrame = {
-    val u = (hashBucket("ws:").cast("double") + 0.5) / 65536.0
+  def weightedSample(docs: DataFrame): DataFrame = {
+    val u = (hashBucket("ws:", col("doc_id")).cast("double") + 0.5) / 65536.0
     val skey = floor(log(u) / col("n_chars") * 10000.0 + 0.5) / 10000.0
     // filter the RAW rank (cast only afterwards): InferWindowGroupLimit
-    // matches `Filter(rank <= n, Window)` — a cast in between regresses the
+    // matches `Filter(rank <= 100, Window)` — a cast in between regresses the
     // plan to a full single-partition window over the whole corpus
     docs.select(col("doc_id"), col("n_chars"))
       .withColumn("skey", skey)
       .withColumn("rnk", row_number()
         .over(Window.orderBy(col("skey").desc, col("doc_id"))))
-      .filter(col("rnk") <= n)
+      .filter(col("rnk") <= 100)
       .select(col("rnk").cast("long").as("rnk"),
         col("doc_id"), col("skey"), col("n_chars"))
   }
 
-  /** G1 — corpus top-K n-grams per language (frequency/contamination
+  /** G1 — corpus top-5 n-grams per language (frequency/contamination
     * analysis). The rank-then-filter compiles to Catalyst's two-phase
-    * `WindowGroupLimit`: a MAP-SIDE partial group limit keeps only K rows per
+    * `WindowGroupLimit`: a MAP-SIDE partial group limit keeps only 5 rows per
     * (input partition, language) before the exchange, so the per-language
-    * reducer sees at most K·partitions rows — never the full gram
+    * reducer sees at most 5·partitions rows — never the full gram
     * distribution. (Verified in the physical plan: Sort+WindowGroupLimit
     * precede the Exchange; a hand-rolled two-phase sub-window would add a
     * redundant shuffle.) The count agg before it is keyed on the
     * high-cardinality (lang, gram) with map-side partial aggregation.
     */
-  def ngramTopK(docs: DataFrame, k: Int = 5): DataFrame = {
+  def ngramTopK(docs: DataFrame): DataFrame = {
     // spread FIRST: a compacted corpus arriving as one parquet split would
     // otherwise run the explode + map-side partial count on a single core
     // (same hazard d9 fixes at DedupOps.winnowFingerprints — the shuffle
@@ -214,15 +214,16 @@ object CurationOps {
       .select(col("lang"), explode(DedupOps.shingleExpr(col("words"))).as("gram"))
     val fin = Window.partitionBy("lang").orderBy(col("ct").desc, col("gram"))
     grams.groupBy("lang", "gram").agg(count(lit(1)).as("ct"))
-      .withColumn("rnk", row_number().over(fin).cast("long")).filter(col("rnk") <= k)
+      .withColumn("rnk", row_number().over(fin).cast("long")).filter(col("rnk") <= 5)
       .select("lang", "gram", "ct", "rnk")
   }
 
-  /** G9 — collocation mining: the corpus's top-k adjacent word pairs by
+  /** G9 — collocation mining: the corpus's top-20 adjacent word pairs by
     * pointwise mutual information (Church & Hanks 1990), the classic
     * corpus-linguistics signal for multiword expressions — high PMI means
     * the pair co-occurs far beyond what its words' base rates predict,
-    * min-support-filtered so rare flukes can't top the list.
+    * min-support-filtered (≥ 5 occurrences) so rare flukes can't top the
+    * list.
     * `PMI = ln( P(a,b) / (P(a)·P(b)) )` with P from exact corpus counts;
     * the ONE float op (a single ln over a pinned-association ratio of
     * exact integers) is 4-dp floor-quantized before ranking — the t13
@@ -230,10 +231,10 @@ object CurationOps {
     *
     * Scale notes (100 TB): unigram and bigram tables are two map-side
     * exploded partial-agg shuffles over (word) / (w1, w2); the corpus
-    * totals are one-row broadcasts; the top-k rides the s12 bounded top-n
+    * totals are one-row broadcasts; the top-20 rides the s12 bounded top-n
     * (filter the RAW rank). Nothing is ever corpus × corpus.
     */
-  def collocations(docs: DataFrame, minCount: Int = 5, k: Int = 20): DataFrame = {
+  def collocations(docs: DataFrame): DataFrame = {
     val words = graft.Tables.spread(docs
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 2).select(col("w")))
@@ -254,7 +255,7 @@ object CurationOps {
     val pmi = floor(log(
       col("pair_ct").cast("double") * col("nw") / col("cta") / col("ctb")
         * col("nw") / col("nb")) * 10000.0 + 0.5) / 10000.0
-    val scored = bi.filter(col("pair_ct") >= minCount)
+    val scored = bi.filter(col("pair_ct") >= 5)
       .join(broadcast(uni.select(col("t").as("w1"), col("ct").as("cta"))), Seq("w1"))
       .join(broadcast(uni.select(col("t").as("w2"), col("ct").as("ctb"))), Seq("w2"))
       .crossJoin(broadcast(nw)).crossJoin(broadcast(nb))
@@ -262,7 +263,7 @@ object CurationOps {
     scored
       .withColumn("rnk", row_number()
         .over(Window.orderBy(col("pmi").desc, col("w1"), col("w2"))))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= 20)
       .select(col("rnk").cast("long").as("rnk"),
         col("w1"), col("w2"), col("pair_ct"), col("pmi"))
   }
@@ -376,6 +377,7 @@ object CurationOps {
     * stream in deterministic doc order and slice it into fixed-length training
     * sequences; each doc gets its byte-reproducible (sequence index, offset)
     * placement. This is the standard pretraining "pack to ctx_len" layout
+    * (512-token sequences over 8 shards)
     * computed WITHOUT materializing the token stream — pure token-count
     * arithmetic over a running-sum window.
     *
@@ -391,50 +393,47 @@ object CurationOps {
     * subword counts at the same plan shape (the s8 gate query runs exactly
     * that composition).
     */
-  def packSequences(docs: DataFrame, ctxLen: Int = 512, numShards: Int = 8): DataFrame =
+  def packSequences(docs: DataFrame): DataFrame =
     packSequencesFrom(
-      docs.select(col("doc_id"), ceil(col("n_chars") / 4.0).cast("long").as("tokens")),
-      ctxLen, numShards)
+      docs.select(col("doc_id"), ceil(col("n_chars") / 4.0).cast("long").as("tokens")))
 
   /** Token-count-parameterized packing: the same placement arithmetic over a
     * caller-supplied `(doc_id, tokens)` frame — e.g. REAL subword counts
     * from [[bpeTokenCounts]] (s8) instead of the chars/4 estimate. Counting
     * and packing compose without materializing any token stream.
     */
-  def packSequencesFrom(tokenCounts: DataFrame, ctxLen: Int = 512,
-      numShards: Int = 8): DataFrame = {
+  def packSequencesFrom(tokenCounts: DataFrame): DataFrame = {
     val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tokenCounts.select(col("doc_id"), col("tokens"))
-      .withColumn("shard", hashBucket("shard:") % numShards)
+      .withColumn("shard", hashBucket("shard:", col("doc_id")) % 8)
       .withColumn("tok_offset", sum("tokens").over(w) - col("tokens"))
-      .withColumn("seq_idx", expr(s"tok_offset DIV $ctxLen"))
-      .withColumn("seq_offset", col("tok_offset") % ctxLen)
+      .withColumn("seq_idx", expr("tok_offset DIV 512"))
+      .withColumn("seq_offset", col("tok_offset") % 512)
       .select("doc_id", "shard", "tokens", "tok_offset", "seq_idx", "seq_offset")
   }
 
-  /** S5 — document chunking: split each doc's token span into fixed-length
-    * overlapping windows (the RAG-embedding / long-document training layout,
-    * complementing s3 which packs WHOLE docs into sequences). Chunk count and
-    * bounds are all-integer arithmetic — ceil((tokens-chunk)/stride)+1 via
-    * integer division — so placement is engine-exact.
+  /** S5 — document chunking: split each doc's token span into 128-token
+    * windows overlapping by 32 (stride 96; the RAG-embedding / long-document
+    * training layout, complementing s3 which packs WHOLE docs into
+    * sequences). Chunk count and bounds are all-integer arithmetic —
+    * ceil((tokens-128)/96)+1 via integer division — so placement is
+    * engine-exact.
     *
     * Scale notes: one map-side explode with per-doc fan-out
-    * ceil(tokens/stride) — no shuffle at all; at 100 TB the output is
-    * bounded by total-tokens/stride rows, each carrying only (doc_id,
+    * ceil(tokens/96) — no shuffle at all; at 100 TB the output is
+    * bounded by total-tokens/96 rows, each carrying only (doc_id,
     * chunk_idx, bounds).
     */
-  def chunkDocuments(docs: DataFrame, chunkTokens: Int = 128, overlap: Int = 32): DataFrame = {
-    val stride = chunkTokens - overlap
+  def chunkDocuments(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), ceil(col("n_chars") / 4.0).cast("long").as("tokens"))
       .withColumn("n_chunks",
-        when(col("tokens") <= chunkTokens, 1L)
-          .otherwise(expr(s"(tokens - $chunkTokens + $stride - 1) DIV $stride") + 1))
+        when(col("tokens") <= 128, 1L)
+          .otherwise(expr("(tokens - 128 + 96 - 1) DIV 96") + 1))
       .select(col("doc_id"), col("tokens"),
         explode(sequence(lit(0L), col("n_chunks") - 1)).as("chunk_idx"))
-      .withColumn("tok_start", col("chunk_idx") * stride)
-      .withColumn("tok_end", least(col("tok_start") + chunkTokens, col("tokens")))
-  }
+      .withColumn("tok_start", col("chunk_idx") * 96)
+      .withColumn("tok_end", least(col("tok_start") + 128, col("tokens")))
 
   /** B1 — bloom-prefiltered decontamination: semantically identical to
     * [[decontaminate]] (the exact join still decides), but the corpus shingle
@@ -492,14 +491,12 @@ object CurationOps {
     * shuffled: scan → broadcast join → predicate, same as s1.
     */
   def mixtureSample(docs: DataFrame): DataFrame = {
-    def hex16of(c: Column): Column =
-      conv(substring(md5(c), 1, 4), 16, 10).cast("long")
     val stats = docs.groupBy("source").agg(count(lit(1)).as("n_src"))
-      .withColumn("weight", hex16of(concat(lit("w:"), col("source"))) % 9 + 1)
+      .withColumn("weight", hashBucket("w:", col("source")) % 9 + 1)
     val totals = stats.agg(sum("n_src").as("n_total"), sum("weight").as("w_total"))
     val dec = (c: Column) => c.cast("decimal(20,0)")
     docs.select(col("doc_id"), col("source"))
-      .withColumn("bucket", hashBucket("mix:"))
+      .withColumn("bucket", hashBucket("mix:", col("doc_id")))
       .join(broadcast(stats), "source")
       .crossJoin(broadcast(totals))
       .filter(dec(col("bucket")) * dec(col("n_src")) * dec(col("w_total")) <
@@ -509,7 +506,7 @@ object CurationOps {
 
   /** C2 — the end-to-end TRAINING-DATA EXPORT pipeline, the capstone
     * composition a 100 TB curation run actually executes: exact-dedup keeper
-    * selection (d1) ∧ NEAR-dup removal (d3's LSH pairs at `ndThreshold`
+    * selection (d1) ∧ NEAR-dup removal (d3's LSH pairs at 0.7
     * Jaccard, greedy keep-lowest-id — real exports dedup first, that is the
     * point of d1-d9) ∧ benchmark decontamination (t5) ∧ quality filter (t2,
     * score ≥ 2), then context-window sequence packing (s3) over the
@@ -525,14 +522,14 @@ object CurationOps {
     * shard); the corpus text is scanned once per signal, never re-shuffled
     * wholesale.
     */
-  def trainingPipeline(docs: DataFrame, ndThreshold: Double = 0.7): DataFrame = {
+  def trainingPipeline(docs: DataFrame): DataFrame = {
     val keepers = docs.groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    // near-dup losers: every doc ≥ ndThreshold Jaccard-similar to a LOWER-id
+    // near-dup losers: every doc ≥ 0.7 Jaccard-similar to a LOWER-id
     // doc (greedy keep-first: of each pair, the higher id goes); the
     // quantized jaccard compares bit-identically across engines
     val ndLosers = DedupOps.minhashLshPairs(docs)
-      .filter(col("jaccard") >= ndThreshold)
+      .filter(col("jaccard") >= 0.7)
       .select(col("doc_b").as("doc_id")).distinct()
     val clean = decontaminate(docs, docs.filter(col("doc_id") % 97 === 0))
       .filter(col("is_clean")).select("doc_id")
@@ -555,33 +552,31 @@ object CurationOps {
     * pass every curation run starts with): doc count, total tokens, min/max,
     * and p50/p90 token quantiles per stratum.
     *
-    * Scale notes: the DEFAULT is `exact = false` — `approx_percentile`
-    * (t-digest) is mergeable map-side partial state with bounded error and
-    * constant memory, the only shape that survives unbounded strata at
-    * 100 TB. `exact = true` uses Spark's exact `percentile`, which buffers
-    * each group's values on its reducer — opt into it for bounded strata
-    * (it is what the bit-exact DuckDB oracle states, so the g2 oracle entry
-    * passes it explicitly). Same agg plan shape either way: one
-    * partial+final hash agg keyed on lang, no extra shuffle.
+    * Scale notes: the quantiles are Spark's EXACT `percentile`, the value
+    * the bit-exact DuckDB oracle states. Its aggregation buffer is a
+    * value → count map (Spark 4.1.2's `PercentileBase` folds an
+    * `OpenHashMap` whose `update` counts a value and whose `merge` adds the
+    * counts), so it grows with the DISTINCT token counts of a language, not
+    * with its documents: a token count is a small integer, so a stratum's
+    * buffer is bounded by its longest document's token count however many
+    * documents it holds. The buffer is mergeable map-side partial state:
+    * one partial+final agg keyed on lang, no extra shuffle.
     *
     * Token accounting: chars/4 is the bootstrap estimate; with a trained
     * merge table, [[bpeTokenStats]] (t11) computes the same distribution
     * from real subword counts and is the production default.
     */
-  def tokenQuantiles(docs: DataFrame, exact: Boolean = false): DataFrame =
+  def tokenQuantiles(docs: DataFrame): DataFrame =
     langTokenStats(
-      docs.select(col("lang"), ceil(col("n_chars") / 4.0).cast("long").as("tokens")),
-      exact)
+      docs.select(col("lang"), ceil(col("n_chars") / 4.0).cast("long").as("tokens")))
 
   /** The shared per-language distribution aggregation behind [[tokenQuantiles]]
     * (chars/4 estimate) and [[bpeTokenStats]] (real subword counts): one
     * partial+final hash agg keyed on lang over a `(lang, tokens)` frame.
     */
-  private def langTokenStats(t: DataFrame, exact: Boolean): DataFrame = {
-    def q(p: Double, name: String): Column = {
-      val fn = if (exact) "percentile" else "approx_percentile"
-      floor(expr(s"$fn(tokens, $p)") * 10000.0 + 0.5) / 10000.0
-    }.as(name)
+  private def langTokenStats(t: DataFrame): DataFrame = {
+    def q(p: Double, name: String): Column =
+      (floor(expr(s"percentile(tokens, $p)") * 10000.0 + 0.5) / 10000.0).as(name)
     t.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("tokens").as("total_tokens"),
         min("tokens").as("min_tokens"), max("tokens").as("max_tokens"),
@@ -611,12 +606,12 @@ object CurationOps {
   }
 
   /** S7 — length-bucketed micro-batching (the padding-minimization layout for
-    * variable-length training): shard deterministically, bucket each doc by
-    * token-length band, order within (shard, bucket) by doc_id and cut into
-    * fixed-size batches; report each batch's size, max length, token sum, and
-    * padding waste (`n·max − sum` — the tokens a dense [batch × max_len]
-    * tensor would pad). Sharding first keeps the windows narrow the same way
-    * s3's packer does.
+    * variable-length training): shard deterministically (4 shards), bucket
+    * each doc by 32-token length band, order within (shard, bucket) by
+    * doc_id and cut into 16-doc batches; report each batch's size, max
+    * length, token sum, and padding waste (`n·max − sum` — the tokens a
+    * dense [batch × max_len] tensor would pad). Sharding first keeps the
+    * windows narrow the same way s3's packer does.
     *
     * Scale notes: one shuffle keyed on (shard, bucket) — parallelism is
     * shard-count × bucket-count, thousands at 100 TB, and the running
@@ -624,14 +619,13 @@ object CurationOps {
     * reuses the same partitioning, so it collapses into the window stage
     * without a second exchange.
     */
-  def lengthBuckets(docs: DataFrame, bucketWidth: Int = 32, batchSize: Int = 16,
-      numShards: Int = 4): DataFrame = {
+  def lengthBuckets(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("shard", "bucket").orderBy("doc_id")
     docs.select(col("doc_id"), ceil(col("n_chars") / 4.0).cast("long").as("tokens"))
-      .withColumn("shard", hashBucket("lb:") % numShards)
-      .withColumn("bucket", expr(s"tokens DIV $bucketWidth"))
+      .withColumn("shard", hashBucket("lb:", col("doc_id")) % 4)
+      .withColumn("bucket", expr("tokens DIV 32"))
       .withColumn("rn", row_number().over(w))
-      .withColumn("batch_idx", expr(s"(rn - 1) DIV $batchSize"))
+      .withColumn("batch_idx", expr("(rn - 1) DIV 16"))
       .groupBy("shard", "bucket", "batch_idx")
       .agg(count(lit(1)).as("n_docs"), max("tokens").as("max_tokens"),
         sum("tokens").as("sum_tokens"))
@@ -642,17 +636,17 @@ object CurationOps {
   /** G3 — per-document TF-IDF top terms (the classic corpus-relative term
     * salience score, still the workhorse for keyword extraction and quality
     * signals in curation stacks): tf = in-doc term count, idf = ln(N/df) with
-    * df counted over distinct docs, top `k` terms per doc by the 4-dp-
+    * df counted over distinct docs, top 3 terms per doc by the 4-dp-
     * quantized score (word asc on ties — fully deterministic cross-engine).
     *
     * Scale notes: term counting shuffles once on high-cardinality (doc_id,
     * word) with map-side partial agg; document frequency reuses those
     * already-distinct pairs (groupBy word — vocabulary-cardinality, not
     * corpus-cardinality); N rides in as a broadcast one-row aggregate, not a
-    * driver-side collect. The final per-doc top-k is a doc_id-keyed window —
+    * driver-side collect. The final per-doc top-3 is a doc_id-keyed window —
     * WindowGroupLimit bounds it map-side like s6.
     */
-  def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame): DataFrame = {
     val words = graft.Tables.spread(
         docs.select(col("doc_id"), split(col("text"), " ").as("words")))
       .select(col("doc_id"), explode(col("words")).as("word"))
@@ -668,7 +662,7 @@ object CurationOps {
       .withColumn("tfidf",
         floor(col("tf") * log(col("n_docs").cast("double") / col("df")) * 10000.0 + 0.5) / 10000.0)
       .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= 3)
       .select("doc_id", "word", "tf", "df", "tfidf", "rnk")
   }
 
@@ -892,11 +886,9 @@ object CurationOps {
     * of a join-back, which at 100 TB would be a second corpus scan and a
     * doc_id shuffle), then the same lang-keyed partial+final hash agg as g2.
     */
-  def bpeTokenStats(docs: DataFrame, merges: Seq[(String, String)],
-      exact: Boolean = false): DataFrame =
+  def bpeTokenStats(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
     langTokenStats(
-      bpeTokenCountsWith(docs, merges, Seq("lang")).select("lang", "tokens"),
-      exact)
+      bpeTokenCountsWith(docs, merges, Seq("lang")).select("lang", "tokens"))
 
   /** S10 — DSIR data selection (Xie et al. 2023, arXiv:2302.03169):
     * importance weights from hashed-n-gram bag-of-words models. Each doc's
@@ -948,11 +940,10 @@ object CurationOps {
         docs.select(col("doc_id"), col("text"), col("n_chars")))
       .select(col("doc_id"), isTarget.as("is_target"), w.as("w"))
       .filter(size(col("w")) >= 2)
-    val bi = toks.select(col("doc_id"), col("is_target"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("b"))
+    val bi = toks.select(col("doc_id"), col("is_target"),
+        explode(TextOps.bigrams("w")).as("b"))
       .select(col("doc_id"), col("is_target"),
-        (conv(substring(md5(concat(lit("dsir:"), col("b.w1"), lit(" "), col("b.w2"))), 1, 4), 16, 10)
-          .cast("long") % 1024).as("bucket"))
+        (hashBucket("dsir:", concat(col("b.w1"), lit(" "), col("b.w2"))) % 1024).as("bucket"))
       // never null (a 4-hex-digit conv), but stated: the blocks then carry a
       // non-nullable bucket, so no join infers a filter that would make the
       // model's two consumers differ and lose their shared exchange
@@ -995,8 +986,7 @@ object CurationOps {
       .groupBy("doc_id")
       .agg(sum("tf").as("n_feats"),
         (sum(col("term_t")) - sum(col("term_r"))).cast("double").as("weight"))
-    val u = (conv(substring(md5(concat(lit("gum:"), col("doc_id").cast("string"))), 1, 4), 16, 10)
-      .cast("double") + 0.5) / 65536.0
+    val u = (hashBucket("gum:", col("doc_id")).cast("double") + 0.5) / 65536.0
     weights
       .withColumn("gumbel", floor(-log(-log(u)) * 10000.0 + 0.5) / 10000.0)
       .withColumn("gscore", col("weight") + col("gumbel"))

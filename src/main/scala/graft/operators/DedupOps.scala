@@ -21,11 +21,16 @@ object DedupOps {
 
   /** 3-word shingles of a pre-split word array (docs with < n words excluded
     * by the caller) — element i = `words[i] words[i+1] words[i+2]`.
+    * The k-gram tables of d13/d14 call the same native
+    * [[graft.functions.KGrams]] with their own k.
     */
   private[operators] def shingleExpr(words: Column): Column =
     // ONE native codegen'd call (graft.functions.KGrams): a zip_with fold
     // runs interpreted lambdas per element and re-allocates every
-    // intermediate prefix (bit-parity with the fold pinned in KGramsSpec)
+    // intermediate prefix (bit-parity with the fold pinned in KGramsSpec);
+    // never `transform(sequence, i -> slice(words, i, k))`, whose
+    // captured-array indexing re-evaluates the array per element (the
+    // O(n²) interpreted-lambda trap measured in d9)
     graft.functions.KGrams(words, ShingleN)
 
   /** (doc_id, shingle) distinct pairs for docs with >= 3 words. Distinctness
@@ -193,12 +198,12 @@ object DedupOps {
     * has containment 1.0 but Jaccard ≈ |A|/|B| ≈ 0, so it never collides in
     * d3's MinHash bands (which estimate Jaccard BY DESIGN). Candidates come
     * from a shared-rare-shingle posting join instead (the d15 recipe):
-    * shingles with document frequency in [2, maxDf] vote pairs, which
-    * bounds the self-join at Σdf² ≤ maxDf·Σdf — linear in corpus shingles,
+    * shingles with document frequency in [2, 50] vote pairs, which
+    * bounds the self-join at Σdf² ≤ 50·Σdf — linear in corpus shingles,
     * never pairwise. A df-1 shingle can vote nothing; a stopword-like
     * shingle above the cap votes noise quadratically and is dropped, the
-    * MOSS/winnow common-hash discipline. Candidates must share ≥
-    * `minShared` rare shingles (the d15 rule) before the verify runs: a
+    * MOSS/winnow common-hash discipline. Candidates must share ≥ 2
+    * rare shingles (the d15 rule) before the verify runs: a
     * true pair's shared run of text votes many shingles, an accidental
     * collision votes one, so the rule prunes the one-incidental-shingle
     * pairs without losing ≥0.8-containment pairs.
@@ -215,8 +220,7 @@ object DedupOps {
     * self-join bounded by the df cap + map-side verify — the d15 shuffle
     * budget plus the set join-back; nothing quadratic in the corpus.
     */
-  def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
-      maxDf: Long = 50, minShared: Long = 2): DataFrame = {
+  def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     // materialized: sets feeds the posting explode AND both join-back
     // sides, whose jobs launch in parallel
     val sets = Materialize(graft.Tables.spread(
@@ -228,7 +232,7 @@ object DedupOps {
     // shingles.
     val post = sets.select(col("doc_id"), explode(col("shset")).as("sh"))
     val rare = post.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf)).select("sh")
+      .filter(col("df").between(2, 50L)).select("sh")
     val kept = Materialize(post.join(rare, Seq("sh")))
     // spread the probe side: the materialized posting list keeps AQE's
     // coalesced layout, and the self-join expands per posting row
@@ -236,7 +240,7 @@ object DedupOps {
       .join(kept.select(col("sh"), col("doc_id").as("b")), Seq("sh"))
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("shared_rare"))
-      .filter(col("shared_rare") >= minShared)
+      .filter(col("shared_rare") >= 2L)
       .select("a", "b")
     val contain =
       floor(col("inter_ct") * 10000.0 / least(col("na"), col("nb")) + 0.5) / 10000.0
@@ -251,16 +255,16 @@ object DedupOps {
     * graph (a~b, b~c ⇒ {a,b,c} one cluster even if a,c never pair).
     * Returns (doc_id, cluster_id); cluster_id = min doc_id in the component.
     */
-  def nearDupClusters(docs: DataFrame, threshold: Double, maxIter: Int = 10): DataFrame = {
+  def nearDupClusters(docs: DataFrame, threshold: Double): DataFrame = {
     // keyed on the raw docs, and the LSH pairs are built inside the compute:
     // a hit (d11/s11/c2/c3/d20 after d10) runs no signature pass at all
     val vertices = docs.select(col("doc_id"))
     val labels = SessionMemo.getOrCompute(
-        SessionMemo.key(s"neardup:$threshold:$maxIter", docs)) {
+        SessionMemo.key(s"neardup:$threshold", docs)) {
       val pairs = minhashLshPairs(docs)
         .filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b"))
-      ccConverge(vertices, pairs, maxIter)
+      ccConverge(vertices, pairs)
     }
     withSingletons(vertices, labels)
   }
@@ -270,7 +274,7 @@ object DedupOps {
     * Each round does (1) neighbor-min propagation (one shuffle) and (2) a
     * label shortcut `label(x) := label(label(x))` (path halving), so a
     * component of diameter D converges in O(log D) rounds, not O(D) — a
-    * 60-deep chain closes in ~7 rounds, safely inside the default cap.
+    * 60-deep chain closes in ~7 rounds, safely inside the [[CcMaxIter]] cap.
     *
     * Iteration hygiene at scale: every round ends in a [[Materialize]], so
     * the plan each round starts from is a flat scan of materialized blocks — lineage (and job planning time) stays CONSTANT
@@ -282,7 +286,7 @@ object DedupOps {
     *
     * Block lifecycle: each round's snapshot is released as soon as the
     * next one materializes, and `edges` after convergence. The converged
-    * labels are memoized per (vertices, pairs, maxIter) in [[SessionMemo]],
+    * labels are memoized per (vertices, pairs) in [[SessionMemo]],
     * which owns their blocks: d10/d11/s11/c2/c3 and e2's name graph pay the
     * closure once per session.
     *
@@ -298,11 +302,9 @@ object DedupOps {
     * can never surface in the output — it is simply inert (it propagates no
     * label and cannot bridge two real vertices).
     */
-  def connectedComponents(vertices: DataFrame, pairs: DataFrame,
-      maxIter: Int = 10): DataFrame = {
-    val labels = SessionMemo.getOrCompute(
-        SessionMemo.key(s"cc:$maxIter", vertices, pairs)) {
-      ccConverge(vertices, pairs, maxIter)
+  def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame = {
+    val labels = SessionMemo.getOrCompute(SessionMemo.key("cc", vertices, pairs)) {
+      ccConverge(vertices, pairs)
     }
     withSingletons(vertices, labels)
   }
@@ -325,12 +327,16 @@ object DedupOps {
     */
   @volatile private[graft] var lastClosureRounds: Int = -1
 
+  /** The closure's round cap: a component of diameter D converges in
+    * O(log D) rounds (a 60-deep chain in ≤ 7, spec-pinned).
+    */
+  private val CcMaxIter = 10
+
   /** The min-label + pointer-jumping loop itself (memoized by the public
     * faces above): returns the converged (doc_id, cluster_id) frame over
     * pair-touched vertices only, materialized.
     */
-  private def ccConverge(vertices: DataFrame, pairs: DataFrame,
-      maxIter: Int): DataFrame = {
+  private def ccConverge(vertices: DataFrame, pairs: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     // undirected: propagate labels both ways
     val edges = Materialize(
@@ -346,7 +352,7 @@ object DedupOps {
       .select(col("doc_id"), col("doc_id").as("cluster_id")))
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    while (changed > 0 && iter < CcMaxIter) {
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
         .groupBy(col("dst").as("doc_id"))
@@ -574,7 +580,7 @@ object DedupOps {
 
   /** D15 — MOSS-style near-dup PAIR MINING over [[winnowFingerprints]] (d9
     * produced the fingerprints; this is the report MOSS actually shows):
-    * document pairs sharing ≥ `minShared` selected fingerprints, with the
+    * document pairs sharing ≥ 2 selected fingerprints, with the
     * shared count as the similarity evidence. Fingerprints appearing in more
     * than `maxDf` documents are dropped first — MOSS's common-hash ignore:
     * boilerplate shared by everyone identifies nobody, and the cap is what
@@ -588,7 +594,7 @@ object DedupOps {
     * the same `kept` subtree (one exchange, reused), and the final pair
     * count keys on (doc_a, doc_b) with map-side partials.
     */
-  def winnowPairs(docs: DataFrame, minShared: Long = 2, maxDf: Long = 50): DataFrame = {
+  def winnowPairs(docs: DataFrame, maxDf: Long = 50): DataFrame = {
     // materialized: the df aggregation and the kept join both read fps,
     // and exchange reuse would share only the pre-hash rows (the hash pass
     // runs after spread's exchange)
@@ -603,7 +609,7 @@ object DedupOps {
       .join(kept.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
+      .filter(col("shared_fps") >= 2L)
   }
 
   private val SegmentWords = 10
@@ -661,16 +667,6 @@ object DedupOps {
       .select(col("doc_id"), col("n_segs"), col("kept_segs"),
         array_join(transform(col("lst"), s => s.getField("seg")), " ").as("clean_text"))
 
-  /** k-gram array (element i = the space-joined k words from position i) —
-    * never `transform(sequence, i -> slice(words, i, k))`, whose
-    * captured-array indexing re-evaluates the array per element (the O(n²)
-    * interpreted-lambda trap measured in d9).
-    */
-  private def kgramExpr(words: Column, k: Int): Column =
-    // native KGrams call, same rationale (and bit-parity spec) as
-    // [[shingleExpr]]
-    graft.functions.KGrams(words, k)
-
   /** Positional k-gram rows `(doc_id, pos, gram)` of every ≥ k-word doc —
     * the one gram table the seed count and the span cover both read.
     */
@@ -679,7 +675,7 @@ object DedupOps {
       .withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= k)
       .select(col("doc_id"),
-        posexplode(kgramExpr(col("words"), k)).as(Seq("pos", "gram")))
+        posexplode(graft.functions.KGrams(col("words"), k)).as(Seq("pos", "gram")))
 
   /** Every gram of `grams` occurring ≥ 2 times: one gram-keyed count with
     * map-side partials.
@@ -785,7 +781,8 @@ object DedupOps {
 
   /** G5 — duplication accounting BY SOURCE: the corpus-health dashboard a
     * curation run reads before deciding which feeds to throttle. Per
-    * source: docs, total tokens, tokens inside duplicated (d13) spans, and
+    * source: docs, total tokens, tokens inside duplicated (d13, 8-gram)
+    * spans, and
     * the 4-dp duplication rate. Spans are disjoint per doc by construction,
     * so their `span_tokens` SUM is exact coverage — no overlap correction.
     *
@@ -794,8 +791,8 @@ object DedupOps {
     * source-keyed agg with map-side partials — source cardinality is small
     * by nature, so the last exchange is trivially balanced.
     */
-  def dupRateBySource(docs: DataFrame, k: Int = 8): DataFrame = {
-    val perDoc = exactSubstringSpans(docs, k).groupBy("doc_id")
+  def dupRateBySource(docs: DataFrame): DataFrame = {
+    val perDoc = exactSubstringSpans(docs, 8).groupBy("doc_id")
       .agg(sum("span_tokens").as("dup_tokens"))
     docs.select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_words"))
@@ -809,17 +806,17 @@ object DedupOps {
         floor(col("dup_tokens") * 10000.0 / col("total_tokens") + 0.5) / 10000.0)
   }
 
-  /** Default d17 document-frequency threshold: a segment present in three or
+  /** The d17 document-frequency threshold: a segment present in three or
     * more DISTINCT documents is boilerplate. Published line-dedup rules put
     * the cut in single digits (RefinedWeb removes lines duplicated across
     * its shard at small absolute counts); 3 keeps legitimate two-doc
     * near-dup overlap (d3's territory) out of the boilerplate set.
     */
-  val BoilerplateMinDf = 3
+  private val BoilerplateMinDf = 3
 
   /** D17 — corpus-frequency boilerplate removal, the RefinedWeb/Dolma
     * line-dedup rule: every segment in the `boiler` set — the roster passes
-    * [[boilerplateSegments]], the segments occurring in ≥ `minDf` DISTINCT
+    * [[boilerplateSegments]], the segments occurring in ≥ [[BoilerplateMinDf]] DISTINCT
     * documents (nav bars, cookie banners, license headers) — is excised
     * from EVERY document; a live stream runs it per micro-batch against a
     * set built once. The complement of d12, which keeps the first
@@ -830,7 +827,7 @@ object DedupOps {
     *
     * Scale notes (100 TB): the df count is ONE segment-keyed corpus-scale
     * shuffle (count_distinct(doc_id) partial-aggregates map-side);
-    * `boiler` — its ≥ minDf survivors — is small BY CONSTRUCTION (only text
+    * `boiler` — its ≥ 3-doc survivors — is small BY CONSTRUCTION (only text
     * repeated across ≥ 3 documents) and broadcasts back as an anti-join
     * probe set, so the corpus is never shuffled for the join. Reassembly is
     * one doc_id-keyed groupBy whose state is bounded by the doc's own
@@ -861,11 +858,10 @@ object DedupOps {
     * [[duplicatedGrams]] for d14. One segment-keyed count-distinct shuffle;
     * output small by construction.
     */
-  def boilerplateSegments(docs: DataFrame,
-      minDf: Int = BoilerplateMinDf): DataFrame =
+  def boilerplateSegments(docs: DataFrame): DataFrame =
     segmentRows(docs)
       .groupBy(col("seg")).agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") >= minDf).select("seg")
+      .filter(col("df") >= BoilerplateMinDf).select("seg")
 
   /** D19 — INCREMENTAL corpus dedup: triage an incoming batch against the
     * accumulated history corpus, the production shape of every crawl

@@ -192,29 +192,7 @@ object MultimodalOps {
     import org.apache.spark.sql.expressions.Window
     imageRecords(spark, dir)
       .mapPartitions(_.map { rec =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(rec.content))
-        require(img != null, s"undecodable image for doc ${rec.doc_id}")
-        val w = img.getWidth; val h = img.getHeight
-        val gs = new Array[Long](16)
-        var j = 0
-        while (j < 4) {
-          var i = 0
-          while (i < 4) {
-            val rgb = img.getRGB(i * w / 4, j * h / 4)
-            gs(j * 4 + i) =
-              ((rgb >> 16) & 255) + ((rgb >> 8) & 255) + (rgb & 255)
-            i += 1
-          }
-          j += 1
-        }
-        val total = gs.sum
-        var hash = 0L
-        var k = 0
-        while (k < 16) {
-          if (gs(k) * 16 > total) hash |= (1L << k)
-          k += 1
-        }
+        val (w, h, hash) = averageHash(rec.doc_id, rec.content, 4)
         (rec.doc_id, w.toLong, h.toLong, hash)
       })
       .toDF("doc_id", "width", "height", "phash")
@@ -222,43 +200,36 @@ object MultimodalOps {
         count(lit(1)).over(Window.partitionBy(col("phash"))).cast("long"))
   }
 
-  /** 64-bit average-hash per image over the REAL codec path: decode the PNG,
-    * nearest-neighbor-sample an 8×8 grid, bit `j*8+i` = 1 iff that sample is
-    * strictly brighter than the grid mean (`gray·64 > Σgray` — an integer
-    * compare, so no division rounding can diverge between engines). This is
-    * m6's production-width sibling (2⁶⁴ hash domain vs 2¹⁶), the fingerprint
-    * the published image-dedup pipelines band on.
+  /** 64-bit average-hash per image over the REAL codec path: m6's hash on
+    * an 8×8 grid, its production-width sibling (2⁶⁴ hash domain vs 2¹⁶),
+    * the fingerprint the published image-dedup pipelines band on.
     */
   def imagePhash64(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     imageRecords(spark, dir)
-      .mapPartitions(_.map { rec =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(rec.content))
-        require(img != null, s"undecodable image for doc ${rec.doc_id}")
-        val w = img.getWidth; val h = img.getHeight
-        val gs = new Array[Long](64)
-        var j = 0
-        while (j < 8) {
-          var i = 0
-          while (i < 8) {
-            val rgb = img.getRGB(i * w / 8, j * h / 8)
-            gs(j * 8 + i) =
-              ((rgb >> 16) & 255) + ((rgb >> 8) & 255) + (rgb & 255)
-            i += 1
-          }
-          j += 1
-        }
-        val total = gs.sum
-        var hash = 0L
-        var k = 0
-        while (k < 64) {
-          if (gs(k) * 64 > total) hash |= (1L << k)
-          k += 1
-        }
-        (rec.doc_id, hash)
-      })
+      .mapPartitions(_.map(rec => (rec.doc_id, averageHash(rec.doc_id, rec.content, 8)._3)))
       .toDF("doc_id", "phash64")
+  }
+
+  /** The average hash of an encoded image over a `g`×`g` grid (g ≤ 8):
+    * decode with ImageIO, nearest-neighbor-sample the grid, bit `j·g+i` = 1
+    * iff sample (i, j)'s gray r+g+b is strictly brighter than the grid mean
+    * (`gray·g² > Σgray` — an integer compare, so no division rounding can
+    * diverge between engines). Returns (width, height, hash).
+    */
+  private def averageHash(docId: Long, content: Array[Byte], g: Int): (Int, Int, Long) = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
+    require(img != null, s"undecodable image for doc $docId")
+    val w = img.getWidth; val h = img.getHeight
+    val gs = Array.tabulate(g * g) { k =>
+      val rgb = img.getRGB((k % g) * w / g, (k / g) * h / g)
+      (((rgb >> 16) & 255) + ((rgb >> 8) & 255) + (rgb & 255)).toLong
+    }
+    val total = gs.sum
+    val hash = gs.indices.foldLeft(0L) { (acc, k) =>
+      if (gs(k) * g * g > total) acc | (1L << k) else acc
+    }
+    (w, h, hash)
   }
 
   /** M7 — image NEAR-duplicate pairs, the multimodal face of d8: 64-bit
@@ -266,8 +237,8 @@ object MultimodalOps {
     * the exact banded-hamming machinery the text near-dup family uses
     * (`DedupOps.bandedHammingPairs`: 4 bands × 16 bits, pigeonhole-complete
     * for hamming ≤ 3, bit-packed xor/bit_count verify map-side on the bucket
-    * join output). Emits every image pair whose hashes differ in ≤
-    * `maxHamming` bits — re-encodes, small crops, and brightness-preserving
+    * join output). Emits every image pair whose hashes differ in ≤ 3
+    * bits — re-encodes, small crops, and brightness-preserving
     * edits land here; exact byte dups are the hamming-0 slice.
     *
     * Scale notes (100 TB): decode cost is one pass at the codec seam (ids
@@ -278,11 +249,10 @@ object MultimodalOps {
     * unchanged; a billion-image corpus pays the same per-bucket quadratic
     * bound the text side does.
     */
-  def imagePhashPairs(spark: SparkSession, dir: String,
-      maxHamming: Int = 3): DataFrame = {
+  def imagePhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val sh0 = imagePhash64(spark, dir)
       .select(col("doc_id"), lpad(bin(col("phash64")), 64, "0").as("simhash"))
-    DedupOps.bandedHammingPairs(sh0, bits = 64, nBands = 4, maxHamming)
+    DedupOps.bandedHammingPairs(sh0, bits = 64, nBands = 4, maxHamming = 3)
   }
 
   /** Deterministic MJPEG stream: `nFrames` real JPEG frames (ImageIO-encoded

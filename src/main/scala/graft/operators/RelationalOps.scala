@@ -263,8 +263,8 @@ object RelationalOps {
     * as an Expand that multiplies every corpus row by the number of
     * distinct aggregates before the shuffle). Each scan is a count/min/max
     * partial-agg plus one exact countDistinct (two-level agg); at 100 TB
-    * swap exact distincts for HLL (`functions.HllDistinct`) the same way
-    * g2's t-digest flag works. The report is a handful of one-row frames
+    * swap exact distincts for HLL (`functions.HllDistinct`). The report is
+    * a handful of one-row frames
     * unioned at the end — nothing row-scale ever materializes.
     */
   def columnProfile(docs: DataFrame): DataFrame = {
@@ -295,11 +295,11 @@ object RelationalOps {
     * (langs × sources × buckets), not corpus size; the risk flag is a
     * projection over that bounded frame. All-integer, no joins.
     */
-  def kAnonymity(docs: DataFrame, k: Int = 10): DataFrame =
+  def kAnonymity(docs: DataFrame): DataFrame =
     docs.groupBy(col("lang"), col("source"),
         expr("n_chars div 256").as("len_bucket"))
       .agg(count(lit(1)).as("group_ct"))
-      .withColumn("at_risk", col("group_ct") < k)
+      .withColumn("at_risk", col("group_ct") < 10)
 
   /** DQ5 — data FRESHNESS monitor, the pipeline-lag face of the dq family:
     * per event stream (event_type), the last-seen timestamp, its lag
@@ -333,7 +333,7 @@ object RelationalOps {
   /** DQ6 — per-stream VOLUME-ANOMALY detection, the alerting face dq5's
     * lag monitor pairs with: daily event counts per stream (event_type),
     * each day z-scored against that stream's own 30-day distribution, and
-    * days with |z| > `zGate` flagged — a collapsed day is a stuck upstream,
+    * days with |z| > 2 flagged — a collapsed day is a stuck upstream,
     * a spiked day is a replay or a bot flood, both caught from counts alone.
     * Day = epoch-µs floor-division (integer day index — no calendar, no
     * timezone, no wall clock).
@@ -352,7 +352,7 @@ object RelationalOps {
     * streams × days rows, and every window below shares its single
     * stream-keyed exchange of that tiny frame. No joins, no second scan.
     */
-  def volumeAnomaly(events: DataFrame, zGate: Double = 2.0): DataFrame = {
+  def volumeAnomaly(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("event_type")
     val num = col("days") * col("sd2") - col("sd1") * col("sd1")
     events.groupBy(col("event_type"),
@@ -368,7 +368,7 @@ object RelationalOps {
           .otherwise(round((col("ct") - col("s") / col("days")) /
             sqrt(num / (col("days") * (col("days") - 1))), 4)))
       .select(col("event_type"), col("day_idx"), col("ct"), col("z"),
-        (abs(col("z")) > zGate).as("anomaly"))
+        (abs(col("z")) > 2.0).as("anomaly"))
   }
 
   /** DQ7 — REFERENTIAL-INTEGRITY audit over the warehouse's FK graph, the

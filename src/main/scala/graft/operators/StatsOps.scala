@@ -493,7 +493,7 @@ object StatsOps {
     * the n2b convergence-scalar convention). Each round reads the
     * checkpointed edge/node/outw blocks, never the corpus.
     */
-  def pageRank(events: DataFrame, iters: Int = 5): DataFrame = {
+  def pageRank(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val seq0 = nodeSeq(events)
     // the ONE corpus-scale pass materializes here: every unrolled round
@@ -519,7 +519,7 @@ object StatsOps {
     // plan bottoms out at the edges checkpoint, and a leaf-walking release
     // there would destroy the edge blocks every later round still reads
     var prevOwned: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 5) {
       val contribs = ranks
         .join(outw.withColumnRenamed("src", "node"), Seq("node"))
         .join(edges, col("node") === col("src"))
@@ -547,7 +547,7 @@ object StatsOps {
       ranks = next
     }
     // the returned frame reads only outw and the last ranks
-    if (iters > 0) Seq(edges, nodes).foreach(Materialize.release)
+    Seq(edges, nodes).foreach(Materialize.release)
     ranks.join(outw.withColumnRenamed("src", "node"), Seq("node"), "left")
       .select(col("node"), coalesce(col("outw"), lit(0L)).as("out_weight"),
         (col("r").cast("double") / 1e8).as("pr"))
@@ -688,26 +688,6 @@ object StatsOps {
         max(col("us")).as("session_end_us"))
   }
 
-  /** G11 — item-item COSINE similarity over binary user-interaction sets,
-    * the collaborative-filtering staple ("users who viewed X also viewed
-    * Y"): item = the view/purchase event's campaign bucket (`props.k`),
-    * user-item pairs deduplicated to presence, and for every item pair
-    * sharing ≥ `minCo` users, `cosine = |U_a ∩ U_b| / √(|U_a|·|U_b|)` —
-    * the item-similarity table a recommender or a mixture-weighting stage
-    * reads. Exactly deterministic: the score is one integer-fed division
-    * of correctly-rounded IEEE ops, so both engines produce the same bits
-    * with no quantization needed.
-    *
-    * Scale notes (100 TB): the pair generation is a USER-KEYED self-join —
-    * the d18 posting-join shape with user as the posting key — so candidate
-    * volume is Σ_u |items_u|², never |items|². The `maxUserItems` cap drops
-    * the hyperactive tail (a user with 10⁵ items contributes 10¹⁰ pairs
-    * and no signal — the standard active-user bound in published CF
-    * pipelines), enforced on ONE user-keyed exchange that the self-join
-    * then reuses. Per-item counts are item-cardinality-sized and broadcast
-    * to the candidate frame; the final agg groups pair keys with map-side
-    * partials.
-    */
   /** G12 — pairwise SOURCE-OVERLAP matrix by exact content fingerprint:
     * for every source pair, the count of distinct document fingerprints
     * present in both, with per-source totals and the 4-dp Jaccard — the
@@ -748,15 +728,34 @@ object StatsOps {
           .as("jaccard"))
   }
 
-  def itemSimilarity(events: DataFrame, maxUserItems: Int = 1000,
-      minCo: Long = 2L): DataFrame = {
+  /** G11 — item-item COSINE similarity over binary user-interaction sets,
+    * the collaborative-filtering staple ("users who viewed X also viewed
+    * Y"): item = the view/purchase event's campaign bucket (`props.k`),
+    * user-item pairs deduplicated to presence, and for every item pair
+    * sharing ≥ 2 users, `cosine = |U_a ∩ U_b| / √(|U_a|·|U_b|)` —
+    * the item-similarity table a recommender or a mixture-weighting stage
+    * reads. Exactly deterministic: the score is one integer-fed division
+    * of correctly-rounded IEEE ops, so both engines produce the same bits
+    * with no quantization needed.
+    *
+    * Scale notes (100 TB): the pair generation is a USER-KEYED self-join —
+    * the d18 posting-join shape with user as the posting key — so candidate
+    * volume is Σ_u |items_u|², never |items|². The 1000-item per-user cap drops
+    * the hyperactive tail (a user with 10⁵ items contributes 10¹⁰ pairs
+    * and no signal — the standard active-user bound in published CF
+    * pipelines), enforced on ONE user-keyed exchange that the self-join
+    * then reuses. Per-item counts are item-cardinality-sized and broadcast
+    * to the candidate frame; the final agg groups pair keys with map-side
+    * partials.
+    */
+  def itemSimilarity(events: DataFrame): DataFrame = {
     val ui = events.filter(col("event_type").isin("view", "purchase"))
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .filter(col("item").isNotNull)
       .distinct()
       .withColumn("u_ct", count(lit(1)).over(Window.partitionBy("user_id")))
-      .filter(col("u_ct") <= maxUserItems)
+      .filter(col("u_ct") <= 1000)
       .select(col("user_id"), col("item"))
     // `ui` is not materialized: a materialized frame hides its size from
     // AQE, so the downstream joins would lose their runtime broadcast
@@ -769,7 +768,7 @@ object StatsOps {
       .filter(col("item_a") < col("item_b"))
       .groupBy("item_a", "item_b")
       .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= minCo)
+      .filter(col("co") >= 2L)
     co.join(broadcast(itemCt.select(col("item").as("item_a"), col("n").as("n_a"))),
         Seq("item_a"))
       .join(broadcast(itemCt.select(col("item").as("item_b"), col("n").as("n_b"))),

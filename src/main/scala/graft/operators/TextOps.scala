@@ -313,6 +313,12 @@ object TextOps {
     lmScoreBy(db, lmModel(db, d))
   }
 
+  /** The adjacent-word pairs of the array column named `w`, as an array of
+    * `(w1, w2)` structs in word order: the bigram stream t13 and s10 explode.
+    */
+  private[graft] def bigrams(w: String): Column =
+    expr(s"transform(sequence(1, size($w) - 1), i -> struct($w[i-1] AS w1, $w[i] AS w2))")
+
   /** T13's per-doc bigram counts `(doc_id, w1, w2, tf)`, materialized: the
     * model aggregates and the scoring probe all read these blocks, so the
     * corpus-scale bigram explode runs once (unmaterialized, the optimizer
@@ -325,8 +331,7 @@ object TextOps {
     val toks = graft.Tables.spread(d.select(col("doc_id"), col("text")))
       .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
-    val bi = toks.select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("b"))
+    val bi = toks.select(col("doc_id"), explode(bigrams("w")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
       // a uniform not-null on BOTH keys: the model and probe joins would
       // otherwise infer different null filters (w1+w2 vs w1-only) and
@@ -509,7 +514,9 @@ object TextOps {
 
   /** T15's score of per-doc word `counts` against `model`. A word the model
     * never saw backs off to the add-one zero-count estimate for BOTH
-    * classes (a left join, counts coalesced to 0).
+    * classes (a left join, counts coalesced to 0). A model whose reference
+    * held only one class fails the query with an error naming the empty
+    * class and both class counts.
     */
   private[graft] def nbScoreBy(counts: DataFrame,
       model: (DataFrame, DataFrame)): DataFrame = {
@@ -522,7 +529,14 @@ object TextOps {
         log((coalesce(col("cp"), lit(0L)) + 1.0) / (col("tp") + col("v")))))
       .withColumn("term_n", q4(col("tf") *
         log((coalesce(col("cn"), lit(0L)) + 1.0) / (col("tn") + col("v")))))
-      .withColumn("prior", q4(log(col("np") / col("nn").cast("double"))))
+      // a one-class reference has no prior (np/nn divides by zero, ln(0) is
+      // NULL): fail in-plan, naming the empty class and both counts
+      .withColumn("prior", when(col("np") === 0 || col("nn") === 0,
+          raise_error(concat(lit("t15: the reference corpus has no "),
+            when(col("np") === 0, lit("positive")).otherwise(lit("negative")),
+            lit(" documents (np = "), col("np").cast("string"), lit(", nn = "),
+            col("nn").cast("string"), lit("), so the prior ln(np/nn) is undefined"))))
+        .otherwise(q4(log(col("np") / col("nn").cast("double")))))
       .groupBy("doc_id")
       .agg(sum("tf").as("n_tokens"),
         (max(col("prior")) + sum(col("term_p")) - sum(col("term_n")))
@@ -617,10 +631,10 @@ object TextOps {
     * name-keyed join of the corpus against a vocabulary-sized map — AQE
     * broadcasts it at any realistic vocabulary/corpus ratio.
     */
-  def entityResolve(parts: DataFrame, maxDist: Int = 2): DataFrame = {
+  def entityResolve(parts: DataFrame): DataFrame = {
     val names = parts.groupBy(col("p_name").as("name"))
       .agg(min(col("p_partkey")).as("id"))
-    val pairs = fuzzyNameMatch(parts, maxDist)
+    val pairs = fuzzyNameMatch(parts)
       .join(names.select(col("name").as("name_a"), col("id").as("doc_a")), Seq("name_a"))
       .join(names.select(col("name").as("name_b"), col("id").as("doc_b")), Seq("name_b"))
       .select("doc_a", "doc_b")

@@ -70,7 +70,7 @@ class AnnOpsSpec extends SparkSpec {
       (5L, Array(0.0f, 0.9f, 0.1f), 1),
       (6L, Array(0.0f, 0.9f, 0.1f), 1))  // dup of 5 in cell 1
       .toDF("vec_id", "embedding", "label")
-    val out = AnnOps.embeddingNearDups(e, threshold = 0.95)
+    val out = AnnOps.embeddingNearDups(e)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Long]("nn_id"), r.getAs[Double]("sim"), r.getAs[Boolean]("is_dup"))).toMap
     assert(out(1L) === ((2L, 1.0, true)))
@@ -83,7 +83,7 @@ class AnnOpsSpec extends SparkSpec {
 
     // greedy keep-first removal keeps the lower id of each dup pair and
     // all non-dups
-    val dropped = AnnOps.embeddingNearDups(e, threshold = 0.95)
+    val dropped = AnnOps.embeddingNearDups(e)
       .filter(col("is_dup") && col("vec_id") > col("nn_id"))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(Set(1L, 2L, 3L, 4L, 5L, 6L) -- dropped === Set(1L, 3L, 4L, 5L))
@@ -525,7 +525,7 @@ class AnnOpsSpec extends SparkSpec {
 
   test("semDedup at the production threshold is drop-free on the fixture corpus") {
     val e = Tables.table(spark, sf, "embeddings")
-    val out = AnnOps.semDedup(e) // τ = 0.95; within-cell sims top out ≈ 0.47
+    val out = AnnOps.semDedup(e, threshold = 0.95) // within-cell sims top out ≈ 0.47
     assert(out.count() === e.count())
     assert(out.filter(!col("keep")).count() === 0)
     // the gated face (τ = 0.35) must actually exercise the drop rule

@@ -42,7 +42,7 @@ class ClusterSpec extends SparkSpec {
     // 60 rounds); pointer jumping must close it in O(log D) <= 10 rounds
     val vertices = (0L to 60L).toDF("doc_id")
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val out = DedupOps.connectedComponents(vertices, chain) // default maxIter = 10
+    val out = DedupOps.connectedComponents(vertices, chain) // the cap is 10 rounds
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.toSet === Set(0L), s"chain did not converge: $labels")
 

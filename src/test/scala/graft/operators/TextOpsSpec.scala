@@ -173,6 +173,24 @@ class TextOpsSpec extends SparkSpec {
     assert(out(1L)._1 === 24L && out(4L)._1 === 4L)
   }
 
+  /** The messages of `t` and of every cause below it. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("t15 on a one-class reference fails naming the empty class") {
+    import spark.implicits._
+    def failure(text: String, nChars: Long): String = messages(intercept[Exception](
+      TextOps.nbQualityScore((1L to 3L).map(i => (i, text, nChars))
+        .toDF("doc_id", "text", "n_chars")).collect()))
+    // every doc passes t2's gate (≥ 20 words, a stopword, ≥ 100 chars): the
+    // negative class is empty and the prior ln(np/nn) divides by zero
+    val allPass = failure(("the good clean fluent prose reads well and " * 3).trim, 120L)
+    assert(allPass.contains("no negative documents (np = 3, nn = 0)"), allPass)
+    // no doc passes: the positive class is empty and ln(0/nn) is NULL
+    val nonePass = failure("junk noise qq zz", 10L)
+    assert(nonePass.contains("no positive documents (np = 0, nn = 3)"), nonePass)
+  }
+
   test("t14 ppl buckets: head is the most fluent third; equal scores never straddle a boundary") {
     import spark.implicits._
     // three fluency tiers: 4 docs saturated in the corpus-dominant bigram,

@@ -36,12 +36,17 @@
 # object that defines `main` is a JVM entry point, and is reached. src/test
 # does not count: a name that only tests call is unreached.
 #
-# Usage: tools/code_size.sh [--list-unreached] [repo-root]
+# Usage: tools/code_size.sh [--list-unreached | --list-defaulted] [repo-root]
 #   The root defaults to the current directory. --list-unreached prints the
 #   unreached names instead, one `Owner.name` or `Type` per line, sorted.
+#   --list-defaulted prints the defaulted parameters, one `Owner.def.param`
+#   per line, sorted.
 set -euo pipefail
 mode=counters
-if [ "${1:-}" = "--list-unreached" ]; then mode=list; shift; fi
+case "${1:-}" in
+  --list-unreached) mode=unreached; shift ;;
+  --list-defaulted) mode=defaulted; shift ;;
+esac
 cd "${1:-.}"
 
 unreached() {
@@ -116,41 +121,21 @@ print('\n'.join(sorted(unreached)))
 PY
 }
 
-if [ "$mode" = list ]; then
-  unreached
-  exit 0
-fi
-
-code_lines() {
-  find "$@" -name '*.scala' -print0 | xargs -0 cat |
-    grep -v '^\s*$' | grep -Ev '^\s*(//|\*|/\*)' | wc -l
-}
-
-public_defs() {
-  cat src/main/scala/graft/"$1"/*.scala |
-    grep -E '^  def ' | grep -Ev '(private|protected)' | wc -l
-}
-
-echo "main_lines $(code_lines src/main)"
-echo "main_test_lines $(code_lines src/main src/test)"
-echo "public_defs_operators $(public_defs operators)"
-echo "public_defs_streaming $(public_defs streaming)"
-echo "materialize_calls $(find src/main -name '*.scala' -print0 | xargs -0 cat |
-  grep -Ev '^\s*(//|\*|/\*)' | grep -o 'Materialize(' | wc -l)"
-echo "spark_bridges $(find src/main/scala/org/apache/spark -name '*.scala' | wc -l)"
-echo "unreached_public_defs $(unreached | grep -c . || true)"
-
-python3 - <<'PY'
-import glob, re
+defaulted() {
+  MODE="$1" python3 - <<'PY'
+import glob, os, re
 
 # Literals collapse to "" and comments to a blank, so a default such as
 # "(" or "hdfs://x" cannot unbalance the parser. A parameter is defaulted
 # when it holds a top-level `=` that is not part of `=>`, `==`, `<=`, `>=`
-# or `!=`.
+# or `!=`. It is named `Owner.def.param` (`Owner.param` for the parameters
+# of a top-level class), where Owner is the enclosing top-level type.
 TOKENS = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\''
                     r'|/\*[\s\S]*?\*/|//[^\n]*')
-SIG = re.compile(r'\b(?:def\s+[^\s(\[:=]+|class\s+\w+)')
+SIG = re.compile(r'\b(?:def\s+([^\s(\[:=]+)|class\s+(\w+))')
+TYPE = re.compile(r'^(?:[\w\[\]]+\s+)*?(?:object|class|trait)\s+(\w+)', re.M)
 DEFAULT = re.compile(r'(?<![=<>!])=(?![=>])')
+NAME = re.compile(r'^\s*(?:(?:private|protected|override|implicit|final|val|var)\s+)*(\w+)')
 
 def param_lists(src, i):
     """The parameter lists (type-parameter lists skipped) that follow src[i:]."""
@@ -179,12 +164,46 @@ def top_level_params(text):
         cur[-1] += c if depth == 0 else ' '
     return cur
 
-total = 0
+names = []
 for f in sorted(glob.glob('src/main/**/*.scala', recursive=True)):
     src = TOKENS.sub(lambda m: '""' if m.group(0)[0] in '"\'' else ' ',
                      open(f, encoding='utf-8').read())
+    tops = [(t.start(), t.group(1)) for t in TYPE.finditer(src)]
     for m in SIG.finditer(src):
+        owner = max((t for t in tops if t[0] <= m.start()), default=(0, ''))[1]
+        name = m.group(1) or m.group(2)
+        prefix = owner if name == owner else f'{owner}.{name}'
         for lst in param_lists(src, m.end()):
-            total += sum(1 for p in top_level_params(lst) if DEFAULT.search(p))
-print(f"defaulted_params {total}")
+            names += [f'{prefix}.{NAME.match(p).group(1)}'
+                      for p in top_level_params(lst) if DEFAULT.search(p)]
+if os.environ['MODE'] == 'list':
+    print('\n'.join(sorted(names)))
+else:
+    print(f"defaulted_params {len(names)}")
 PY
+}
+
+case "$mode" in
+  unreached) unreached; exit 0 ;;
+  defaulted) defaulted list; exit 0 ;;
+esac
+
+code_lines() {
+  find "$@" -name '*.scala' -print0 | xargs -0 cat |
+    grep -v '^\s*$' | grep -Ev '^\s*(//|\*|/\*)' | wc -l
+}
+
+public_defs() {
+  cat src/main/scala/graft/"$1"/*.scala |
+    grep -E '^  def ' | grep -Ev '(private|protected)' | wc -l
+}
+
+echo "main_lines $(code_lines src/main)"
+echo "main_test_lines $(code_lines src/main src/test)"
+echo "public_defs_operators $(public_defs operators)"
+echo "public_defs_streaming $(public_defs streaming)"
+echo "materialize_calls $(find src/main -name '*.scala' -print0 | xargs -0 cat |
+  grep -Ev '^\s*(//|\*|/\*)' | grep -o 'Materialize(' | wc -l)"
+echo "spark_bridges $(find src/main/scala/org/apache/spark -name '*.scala' | wc -l)"
+echo "unreached_public_defs $(unreached | grep -c . || true)"
+defaulted counters
