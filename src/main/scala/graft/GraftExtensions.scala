@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.{CosineSimF, DotProductF, DotProductFD, DotProductL, DupSpansExpr, IntersectCountExpr, MinHashSigExpr, SimHashBitsExpr, SrpSigExpr, WinnowMinsExpr}
 
 /** Session extension wiring: registers the engine's native expressions for
@@ -34,7 +35,8 @@ object GraftExtensions {
     * call with a non-foldable or non-integral argument gets a TARGETED
     * analysis error here — falling through to WRONG_NUM_ARGS would report
     * "actual=2, expected=2", and a bare asInstanceOf would surface as a
-    * ClassCastException with no SQL context.
+    * ClassCastException with no SQL context. Only integral literals that fit
+    * in INT pass: a wider BIGINT would wrap and a fractional one truncate.
     */
   private def intLiteralArg(fn: String, param: String, e: Expression): Int = {
     if (!e.foldable)
@@ -43,8 +45,9 @@ object GraftExtensions {
         messageParameters = Map(
           "funcName" -> s"`$fn`", "paramName" -> s"`$param`",
           "paramType" -> "\"INT\""))
-    e.eval() match {
-      case n: Number => n.intValue()
+    (e.dataType, e.eval()) match {
+      case (ByteType | ShortType | IntegerType | LongType, n: Number)
+          if n.longValue().isValidInt => n.intValue()
       case _ =>
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
@@ -99,14 +102,13 @@ object GraftExtensions {
 
   /** Register the engine's SQL functions on an already-running session
     * (withExtensions only takes effect at session construction). The typed
-    * aggregators (exact_count_distinct, hll sketches) register as UDAFs.
+    * aggregator exact_count_distinct registers as a UDAF; bounded-state
+    * distinct counts are Spark's own `hll_sketch_agg` / `hll_union_agg` /
+    * `hll_sketch_estimate`, present in every session.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     functions.foreach { case (name, _, builder) => ColumnBridge.registerFunction(spark, name, builder) }
     spark.udf.register("exact_count_distinct", graft.functions.ExactDistinct.asUdaf)
-    spark.udf.register("hll_count_distinct", graft.functions.HllDistinct.asUdaf)
-    spark.udf.register("hll_sketch", graft.functions.HllSketch.asUdaf)
-    spark.udf.register("hll_merge_count", graft.functions.HllMergeCount.asUdaf)
   }
 }

@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,7 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * array; anything wider falls back to a hash map, so the hot path never
   * allocates per character.
   */
-case class CharEntropyExpr(child: Expression) extends UnaryExpression {
+case class CharEntropyExpr(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -45,16 +46,11 @@ case class CharEntropyExpr(child: Expression) extends UnaryExpression {
     StructField("n_cp", LongType, nullable = false),
     StructField("distinct_cp", LongType, nullable = false),
     StructField("entropy", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "char_entropy"
 
-  override def nullSafeEval(input: Any): Any =
-    CharEntropy.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.CharEntropy.compute($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  // the kernel returns null for the empty string
+  override lazy val replacement: Expression = StaticInvoke(CharEntropy.getClass,
+    dataType, "compute", Seq(child), returnNullable = true)
 
   override protected def withNewChildInternal(newChild: Expression): CharEntropyExpr =
     copy(child = newChild)
@@ -70,8 +66,9 @@ object CharEntropy {
     ColumnBridge.column(CharEntropyExpr(ColumnBridge.expression(text)))
   }
 
-  /** Static entry point shared by eval and generated code; null for the
-    * empty string (no distribution to take an entropy of).
+  /** The kernel: [[CharEntropyExpr]]'s interpreted and generated path both
+    * call it. Null for the empty string (no distribution to take an
+    * entropy of).
     */
   def compute(s: UTF8String): InternalRow = {
     val str = s.toString

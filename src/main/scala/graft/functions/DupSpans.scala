@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[IntersectCount]]/[[WinnowMins]].
   */
 case class DupSpansExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
@@ -44,12 +45,8 @@ case class DupSpansExpr(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dup_spans"
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    DupSpans.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.DupSpans.compute($a, $b, $k);")
+  override lazy val replacement: Expression = StaticInvoke(DupSpans.getClass,
+    dataType, "compute", Seq(left, right, Literal(k)), returnNullable = false)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DupSpansExpr =
@@ -58,8 +55,9 @@ case class DupSpansExpr(left: Expression, right: Expression, k: Int)
 
 object DupSpans {
 
-  /** Static entry point shared by eval and the generated code. Null grams
-    * never match; a null-only or empty ref yields no spans.
+  /** The kernel: [[DupSpansExpr]]'s interpreted and generated path both
+    * call it. Null grams never match; a null-only or empty ref yields no
+    * spans.
     */
   def compute(grams: ArrayData, ref: ArrayData, k: Int): GenericArrayData = {
     val m = ref.numElements()

@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions.udaf
   *
   * Cost model, stated plainly: the state per (group, window) is the distinct
   * id set itself — identical to what the reference's Flink state held. Where
-  * per-window distinct cardinality is unbounded at 100 TB, use an HLL
-  * sketch buffer instead (`hll_sketch` / `hll_merge_count`, [[HllSketch]]).
+  * per-window distinct cardinality is unbounded at 100 TB, use Spark's own
+  * HLL sketches instead: `hll_sketch_agg(id, 12)` keeps a constant-size
+  * sketch per (group, window), also in a watermarked streaming aggregation;
+  * `hll_union_agg` rolls stored sketches up and `hll_sketch_estimate` reads
+  * the count.
   */
 object ExactDistinct extends Aggregator[Long, Set[Long], Long] {
   override def zero: Set[Long] = Set.empty

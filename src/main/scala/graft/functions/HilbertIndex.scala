@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native 2-D Hilbert-curve index: (x, y) → distance along the order-`bits`
@@ -27,7 +28,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * this keeps the scan-side key a single codegen'd call.
   */
 case class HilbertIndexExpr(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
   require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -40,12 +41,8 @@ case class HilbertIndexExpr(left: Expression, right: Expression, bits: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "hilbert_key"
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    HilbertIndex.xy2d(bits, l.asInstanceOf[Long], r.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.HilbertIndex.xy2d($bits, $x, $y);")
+  override lazy val replacement: Expression = StaticInvoke(HilbertIndex.getClass,
+    dataType, "xy2d", Seq(Literal(bits), left, right), returnNullable = false)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertIndexExpr =
@@ -53,7 +50,9 @@ case class HilbertIndexExpr(left: Expression, right: Expression, bits: Int)
 }
 
 object HilbertIndex {
-  /** Static entry point shared by eval and the generated code. */
+  /** The kernel: [[HilbertIndexExpr]]'s interpreted and generated path both
+    * call it.
+    */
   def xy2d(bits: Int, x0: Long, y0: Long): Long = {
     val max = (1L << bits) - 1
     var x = if (x0 < 0) 0L else if (x0 > max) max else x0

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * window/LSH-bounded), so per-pair cost is the whole bill.
   */
 case class IntersectCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
@@ -46,12 +47,8 @@ case class IntersectCountExpr(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count"
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    IntersectCount.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.IntersectCount.compute($a, $b);")
+  override lazy val replacement: Expression = StaticInvoke(IntersectCount.getClass,
+    dataType, "compute", Seq(left, right), returnNullable = false)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntersectCountExpr =
@@ -60,9 +57,10 @@ case class IntersectCountExpr(left: Expression, right: Expression)
 
 object IntersectCount {
 
-  /** Static entry point shared by eval and the generated code. Matches
-    * `size(array_intersect(a, b))` exactly: distinct common elements, with a
-    * null element counted iff both arrays contain one.
+  /** The kernel: [[IntersectCountExpr]]'s interpreted and generated path
+    * both call it. Matches `size(array_intersect(a, b))` exactly: distinct
+    * common elements, with a null element counted iff both arrays contain
+    * one.
     */
   def compute(a: ArrayData, b: ArrayData): Long = {
     // hash the smaller side: probe-set size (the only per-row allocation

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat` null-propagation), so the output arrays match element-for-
   * element — KGramsSpec pins this against the interpreted form.
   */
-case class KGramsExpr(child: Expression, k: Int) extends UnaryExpression {
+case class KGramsExpr(child: Expression, k: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
@@ -35,12 +37,8 @@ case class KGramsExpr(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "k_grams"
 
-  override def nullSafeEval(input: Any): Any =
-    KGrams.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.KGrams.compute($c, $k);")
+  override lazy val replacement: Expression = StaticInvoke(KGrams.getClass,
+    dataType, "compute", Seq(child, Literal(k)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): KGramsExpr =
     copy(child = newChild)
@@ -49,9 +47,10 @@ case class KGramsExpr(child: Expression, k: Int) extends UnaryExpression {
 object KGrams {
   private val Space = UTF8String.fromString(" ")
 
-  /** Static entry point shared by eval and the generated code. Returns the
-    * n-k+1 positional k-grams; empty for n < k; a k-gram touching a null
-    * word is null (concat propagation, matching the zip_with fold).
+  /** The kernel: [[KGramsExpr]]'s interpreted and generated path both call
+    * it. Returns the n-k+1 positional k-grams; empty for n < k; a k-gram
+    * touching a null word is null (concat propagation, matching the
+    * zip_with fold).
     */
   def compute(words: ArrayData, k: Int): GenericArrayData = {
     val n = words.numElements()

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * WholeStageCodegen span, and per-row cost is still exactly 2 md5 digests
   * per shingle (the algorithmic floor the composed form reached).
   */
-case class MinHashSigExpr(child: Expression) extends UnaryExpression {
+case class MinHashSigExpr(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -36,12 +38,8 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "minhash_sig"
 
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSig.compute($c);")
+  override lazy val replacement: Expression = StaticInvoke(MinHashSig.getClass,
+    dataType, "compute", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
@@ -54,7 +52,7 @@ object MinHashSig {
     java.security.MessageDigest.getInstance("MD5"))
   private val HexChars = "0123456789abcdef".toCharArray
 
-  /** Static entry point shared by eval and the generated code. */
+  /** The kernel: [[MinHashSigExpr]]'s interpreted and generated path both call it. */
   def compute(shingles: ArrayData): GenericArrayData = {
     val n = shingles.numElements()
     val mins = Array.fill(NumHashes)(0xffffffffL + 1) // > any u32

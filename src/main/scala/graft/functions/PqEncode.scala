@@ -2,14 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Driver-held product-quantization codebook: `m` subspaces × `k` codes ×
   * `dims` dims, centroids flattened [s][j][p] with per-(s,j) squared norms.
-  * Serializable so the codegen reference object ships with the task binary.
+  * Serializable so the codebook literal ships with the task binary.
   */
 final class PqCodebook(val m: Int, val dims: Int, val k: Int,
     val cents: Array[Double], val norms: Array[Double]) extends Serializable {
@@ -17,8 +18,8 @@ final class PqCodebook(val m: Int, val dims: Int, val k: Int,
     s"codebook shape mismatch: ${cents.length} cents / ${norms.length} norms " +
       s"for m=$m k=$k dims=$dims")
 
-  // value equality over the full codebook content — without it,
-  // PqEncodeExpr's case-class equality (and so Catalyst canonicalization /
+  // value equality over the full codebook content — without it, the
+  // codebook literal's equality (and so Catalyst canonicalization /
   // common-subexpression elimination) falls back to reference identity and
   // two pq_encode columns built from equal maps never compare equal
   override def equals(other: Any): Boolean = other match {
@@ -109,7 +110,9 @@ final class PqCodebook(val m: Int, val dims: Int, val k: Int,
 }
 
 /** Native PQ ENCODE: residual ARRAY<DOUBLE> → the `m` nearest-code ids as
-  * ARRAY<INT>, against a driver-held [[PqCodebook]], in one codegen'd call.
+  * ARRAY<INT>, against a driver-held [[PqCodebook]], in one codegen'd call
+  * of [[PqCodebook.encode]] (ARRAY<DOUBLE>) or [[PqCodebook.encodeF]]
+  * (ARRAY<FLOAT>) on the codebook literal.
   *
   * Why an Expression (SURVEY §7.3 preference (b)): the composed form — per
   * subspace an `array_min` over `transform(typedlit(entries),
@@ -124,12 +127,7 @@ final class PqCodebook(val m: Int, val dims: Int, val k: Int,
   * be encoded.
   */
 case class PqEncodeExpr(child: Expression, codebook: PqCodebook)
-    extends UnaryExpression {
-
-  private def floatInput: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) | ArrayType(FloatType, _) =>
@@ -140,15 +138,13 @@ case class PqEncodeExpr(child: Expression, codebook: PqCodebook)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  override def nullSafeEval(input: Any): Any =
-    if (floatInput) codebook.encodeF(input.asInstanceOf[ArrayData])
-    else codebook.encode(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCodebook", codebook,
-      classOf[PqCodebook].getName)
-    val call = if (floatInput) "encodeF" else "encode"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cb.$call($c);")
+  override lazy val replacement: Expression = {
+    val kernel = child.dataType match {
+      case ArrayType(FloatType, _) => "encodeF"
+      case _ => "encode"
+    }
+    Invoke(Literal.fromObject(codebook), kernel, dataType, Seq(child),
+      returnNullable = false)
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =

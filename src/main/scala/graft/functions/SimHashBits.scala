@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * composed form's groupBy simply had no row — callers filter nulls to keep
   * the same output set).
   */
-case class SimHashBitsExpr(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHashBitsExpr(child: Expression, bits: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) if bits >= 1 && bits <= 64 =>
@@ -40,18 +42,11 @@ case class SimHashBitsExpr(child: Expression, bits: Int) extends UnaryExpression
       s"$prettyName requires ARRAY<STRING>, got ${other.sql}")
   }
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "simhash_bits"
 
-  override def nullSafeEval(input: Any): Any =
-    SimHashBits.compute(input.asInstanceOf[ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.SimHashBits.compute($c, $bits);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-    code
-  }
+  // the kernel returns null for a document with no non-empty word
+  override lazy val replacement: Expression = StaticInvoke(SimHashBits.getClass,
+    dataType, "compute", Seq(child, Literal(bits)), returnNullable = true)
 
   override protected def withNewChildInternal(newChild: Expression): SimHashBitsExpr =
     copy(child = newChild)
@@ -62,8 +57,8 @@ object SimHashBits {
   private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
 
-  /** Static entry point shared by eval and the generated code; null when the
-    * array holds no non-empty word.
+  /** The kernel: [[SimHashBitsExpr]]'s interpreted and generated path both
+    * call it. Null when the array holds no non-empty word.
     */
   def compute(words: ArrayData, bits: Int): UTF8String = {
     val n = words.numElements()

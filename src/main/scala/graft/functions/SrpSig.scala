@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole signature is one pass over the embedding with `nPlanes`
   * accumulators, +/− per element, no multiplications.
   */
-case class SrpSigExpr(child: Expression, nPlanes: Int) extends UnaryExpression {
+case class SrpSigExpr(child: Expression, nPlanes: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) if nPlanes >= 1 && nPlanes <= 64 =>
@@ -39,12 +41,8 @@ case class SrpSigExpr(child: Expression, nPlanes: Int) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "srp_sig"
 
-  override def nullSafeEval(input: Any): Any =
-    SrpSig.compute(input.asInstanceOf[ArrayData], nPlanes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SrpSig.compute($c, $nPlanes);")
+  override lazy val replacement: Expression = StaticInvoke(SrpSig.getClass,
+    dataType, "compute", Seq(child, Literal(nPlanes)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): SrpSigExpr =
     copy(child = newChild)
@@ -52,18 +50,18 @@ case class SrpSigExpr(child: Expression, nPlanes: Int) extends UnaryExpression {
 
 object SrpSig {
   private val MaxPlanes = 64
-  private val Dims = 64
 
   /** ±1.0 plane entries, derived once from the shared md5-parity constants. */
   private lazy val Planes: Array[Array[Double]] =
-    graft.operators.AnnOps.hyperplanes(MaxPlanes, Dims).map(_.map(_.toDouble))
+    graft.operators.AnnOps.hyperplanes(MaxPlanes).map(_.map(_.toDouble))
 
-  /** Static entry point shared by eval and the generated code. Null array
-    * elements contribute nothing (dot_product_f zip semantics); dims beyond
-    * the plane width (64) are ignored, shorter embeddings use their length.
+  /** The kernel: [[SrpSigExpr]]'s interpreted and generated path both call
+    * it. Null array elements contribute nothing (dot_product_f zip
+    * semantics); dims beyond the 64-lane plane width (`AnnOps.LshDims`) are
+    * ignored, shorter embeddings use their length.
     */
   def compute(emb: ArrayData, nPlanes: Int): UTF8String = {
-    val n = math.min(emb.numElements(), Dims)
+    val n = math.min(emb.numElements(), graft.operators.AnnOps.LshDims)
     val sums = new Array[Double](nPlanes)
     var d = 0
     while (d < n) {

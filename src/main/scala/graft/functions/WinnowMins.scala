@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -22,7 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * of md5(shingle); docs with fewer hashes than one window degrade to
   * their global min.
   */
-case class WinnowMinsExpr(child: Expression, w: Int) extends UnaryExpression {
+case class WinnowMinsExpr(child: Expression, w: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
@@ -32,12 +34,8 @@ case class WinnowMinsExpr(child: Expression, w: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_mins"
 
-  override def nullSafeEval(input: Any): Any =
-    WinnowMins.compute(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowMins.compute($c, $w);")
+  override lazy val replacement: Expression = StaticInvoke(WinnowMins.getClass,
+    dataType, "compute", Seq(child, Literal(w)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): WinnowMinsExpr =
     copy(child = newChild)
@@ -48,8 +46,9 @@ object WinnowMins {
   private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
 
-  /** Static entry point shared by eval and the generated code. Returns the
-    * window minima (max(1, nShingles-w+1) values); empty for < 3 words.
+  /** The kernel: [[WinnowMinsExpr]]'s interpreted and generated path both
+    * call it. Returns the window minima (max(1, nShingles-w+1) values);
+    * empty for < 3 words.
     */
   def compute(words: ArrayData, w: Int): GenericArrayData = {
     val n = words.numElements()

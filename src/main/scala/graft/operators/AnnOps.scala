@@ -231,7 +231,10 @@ object AnnOps {
 
   private val LshPlanes = 32
   private val LshBands = 4 // 8 bits per band → 256 buckets per band
-  private val LshDims = 64
+  /** The plane width: every hyperplane has 64 lanes, and SRP signatures
+    * ([[graft.functions.SrpSig]]) read at most that many embedding dims.
+    */
+  private[graft] val LshDims = 64
 
   /** Deterministic Rademacher hyperplanes for sign-random-projection LSH:
     * entry (p, d) = +1 if the first hex nibble of md5("p_d") < 8, else −1.
@@ -241,10 +244,10 @@ object AnnOps {
     * the DuckDB oracle embeds the same values as literals), with no
     * driver-side RNG state to ship.
     */
-  def hyperplanes(nPlanes: Int = LshPlanes, dims: Int = LshDims): Array[Array[Float]] = {
+  def hyperplanes(nPlanes: Int = LshPlanes): Array[Array[Float]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(nPlanes) { p =>
-      Array.tabulate(dims) { d =>
+      Array.tabulate(LshDims) { d =>
         md.reset()
         val h = md.digest(s"${p}_${d}".getBytes("UTF-8"))
         if (((h(0) >> 4) & 0xF) < 8) 1.0f else -1.0f
@@ -440,10 +443,10 @@ object AnnOps {
     * a literal per-query argsort; the candidate scan is an equi-join on
     * `cell` against broadcast probes — reading int8 codes only (4× less
     * I/O than float), never a corpus shuffle and never a full scan; the
-    * rerank touches float vectors for ≤ cand·|Q| rows. The plan contract
-    * (PlanContractSpec) pins the broadcast + no-cartesian shape.
+    * rerank touches float vectors for ≤ [[ServePool]]·|Q| rows. The plan
+    * contract (PlanContractSpec) pins the broadcast + no-cartesian shape.
     */
-  def ivfQuantizedTopK(e: DataFrame, k: Int = ServeK, cand: Int = ServePool,
+  def ivfQuantizedTopK(e: DataFrame, k: Int = ServeK,
       nProbe: Int = ServeNProbe): DataFrame = {
     val cents = seededCentroids(e)
     // GEOMETRIC cell membership: every vector reassigned to its nearest
@@ -478,7 +481,7 @@ object AnnOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         sq8Cosine.as("sim"))
-    val top = topKPerQuery(cands, cand, Seq("query_id"))
+    val top = topKPerQuery(cands, ServePool, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("sim").as("approx_sim"))
     exactRerank(e, queries.select(col("query_id"), col("qe"), col("nq")), top, k)
   }
@@ -935,7 +938,7 @@ object AnnOps {
     * matrix, k tiny greedy rounds) — no stage re-scans the corpus.
     */
   def retrievalServe(e: DataFrame): DataFrame =
-    mmrOver(e, ivfQuantizedTopK(e, k = ServePool, cand = ServePool)
+    mmrOver(e, ivfQuantizedTopK(e, k = ServePool)
       .select(col("query_id"), col("neighbor_id"), col("sim")), ServeK)
 
   /** Lloyd's k-means training for the IVF coarse quantizer: iterate

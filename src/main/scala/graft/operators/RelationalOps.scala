@@ -263,9 +263,10 @@ object RelationalOps {
     * as an Expand that multiplies every corpus row by the number of
     * distinct aggregates before the shuffle). Each scan is a count/min/max
     * partial-agg plus one exact countDistinct (two-level agg); at 100 TB
-    * swap exact distincts for HLL (`functions.HllDistinct`). The report is
-    * a handful of one-row frames
-    * unioned at the end — nothing row-scale ever materializes.
+    * swap exact distincts for Spark's HLL sketches
+    * (`hll_sketch_estimate(hll_sketch_agg(c, 12))`). The report is a
+    * handful of one-row frames unioned at the end — nothing row-scale ever
+    * materializes.
     */
   def columnProfile(docs: DataFrame): DataFrame = {
     def profile(name: String, c: org.apache.spark.sql.Column): DataFrame =

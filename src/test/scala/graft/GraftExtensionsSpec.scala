@@ -34,10 +34,13 @@ class GraftExtensionsSpec extends SparkSpec {
       .createOrReplaceTempView("ids")
     val exact = spark.sql("SELECT exact_count_distinct(v) FROM ids").head.getLong(0)
     assert(exact === 500L)
-    val approx = spark.sql("SELECT hll_count_distinct(v) FROM ids").head.getLong(0)
+    // bounded-state distinct counts are Spark's own HLL sketches
+    val approx = spark.sql("SELECT hll_sketch_estimate(hll_sketch_agg(v, 12)) FROM ids")
+      .head.getLong(0)
     assert(math.abs(approx - 500L) <= 25L)
     val rolled = spark.sql(
-      "SELECT hll_merge_count(s) FROM (SELECT v % 4 AS g, hll_sketch(v) AS s FROM ids GROUP BY 1)")
+      "SELECT hll_sketch_estimate(hll_union_agg(s)) FROM " +
+        "(SELECT v % 4 AS g, hll_sketch_agg(v, 12) AS s FROM ids GROUP BY 1)")
       .head.getLong(0)
     assert(math.abs(rolled - 500L) <= 25L)
   }
@@ -96,6 +99,13 @@ class GraftExtensionsSpec extends SparkSpec {
     val ni = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT srp_sig(emb, 'sixteen') FROM ge_bad_args"))
     assert(ni.getErrorClass === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", ni.getMessage)
+    // integral literals that do not fit INT, and fractional ones, are
+    // rejected too: neither wraps nor truncates to a silent 16
+    Seq("SELECT srp_sig(emb, 4294967312L) FROM ge_bad_args",
+      "SELECT simhash_bits(words, 16.9D) FROM ge_bad_args").foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q))
+      assert(e.getErrorClass === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", q + ": " + e.getMessage)
+    }
     spark.catalog.dropTempView("ge_bad_args")
   }
 

@@ -131,7 +131,7 @@ class PlanContractSpec extends SparkSpec {
     // no cartesian, corpus never vec_id-partitioned), asserted on the
     // stage plan because the greedy tail checkpoints it away
     val e = graft.Tables.table(spark, sf, "embeddings")
-    val cand = graft.operators.AnnOps.ivfQuantizedTopK(e, k = 20, cand = 20, nProbe = 3)
+    val cand = graft.operators.AnnOps.ivfQuantizedTopK(e, k = 20, nProbe = 3)
     cand.count()
     val p1 = cand.queryExecution.executedPlan.toString
     assert(count(p1, "BroadcastHashJoin") >= 3, p1)

@@ -52,6 +52,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.toSeq
   }
 
+  /** `q` built and collected twice: first interpreted (no whole-stage
+    * codegen, `NO_CODEGEN` expression factory), then with codegen. Returns
+    * both row sets and the codegen run's executed plan. Build `q` over a
+    * shuffle (e.g. `repartition(1)`): a projection straight over a local
+    * relation is folded interpreted at planning time in both runs.
+    */
+  def interpretedAndCodegen(q: => DataFrame): (Seq[Row], Seq[Row], String) = {
+    val interpreted = try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      q.collect().toSeq
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    val codegen = q
+    (interpreted, codegen.collect().toSeq, codegen.queryExecution.executedPlan.toString)
+  }
+
   override protected def afterAll(): Unit =
     try ownedDirs.synchronized {
       ownedDirs.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))

@@ -1,40 +1,54 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** Bounded-state distinct counts on Spark's own HLL sketches
+  * (`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate`): accuracy,
+  * mergeability, distribution, stored-sketch rollup and the streaming
+  * windowed form (A3's bounded-state alternative to [[ExactDistinct]]).
+  */
 class HllDistinctSpec extends SparkSpec {
   import spark.implicits._
 
   private def relErr(est: Long, actual: Long): Double =
     math.abs(est - actual).toDouble / actual
 
+  /** The distinct-count estimate of `ids`'s `id` column. */
+  private def estimate(ids: org.apache.spark.sql.Dataset[_]): Long =
+    ids.select(hll_sketch_estimate(hll_sketch_agg(col("id"), 12))).head.getLong(0)
+
   test("estimates are within HLL error bounds across cardinality regimes") {
-    // p=12 → stddev ~1.6%; assert 5% (3 sigma). Deterministic hash ⇒ stable.
+    // lgConfigK = 12 → stddev ~1.6%; assert 5% (3 sigma). Deterministic hash ⇒ stable.
     for (n <- Seq(100L, 5000L, 200000L)) {
-      val est = Hll.estimate((1L to n).foldLeft(Hll.empty)(Hll.add))
+      val est = estimate(spark.range(1, n + 1))
       assert(relErr(est, n) < 0.05, s"n=$n est=$est")
     }
-    // tiny cardinalities are exact under linear counting
-    assert(Hll.estimate((1L to 10L).foldLeft(Hll.empty)(Hll.add)) === 10L)
-    assert(Hll.estimate(Hll.empty) === 0L)
+    // tiny cardinalities are exact (the sketch still lists its coupons)
+    assert(estimate(spark.range(1, 11)) === 10L)
+    assert(estimate(spark.range(0)) === 0L)
   }
 
   test("sketch union is the sketch of the union (mergeable, idempotent)") {
-    def sketchOf(r: Range) = r.foldLeft(Hll.empty)((b, v) => Hll.add(b, v.toLong))
-    val a = sketchOf(1 to 60000)
-    val b = sketchOf(30001 to 90000) // overlaps a
-    val merged = Hll.merge(sketchOf(1 to 60000), b)
-    assert(merged.toSeq === sketchOf(1 to 90000).toSeq) // register-exact
+    def sketchOf(lo: Long, hi: Long): DataFrame =
+      spark.range(lo, hi + 1).select(hll_sketch_agg(col("id"), 12).as("s"))
+    def union(parts: DataFrame*): Array[Byte] =
+      parts.reduce(_ union _).select(hll_union_agg(col("s"))).head.getAs[Array[Byte]](0)
+    val a = sketchOf(1, 60000)
+    val b = sketchOf(30001, 90000) // overlaps a
+    val merged = union(a, b)
+    assert(merged.toSeq === union(sketchOf(1, 90000)).toSeq) // register-exact
     // re-merging the same sketch changes nothing (max is idempotent)
-    assert(Hll.merge(merged.clone(), a).toSeq === merged.toSeq)
+    assert(union(Seq(merged).toDF("s"), a).toSeq === merged.toSeq)
   }
 
   test("aggregator distributes: groupBy estimate matches single-node sketch") {
     val n = 50000L
     val df = spark.range(n).select((col("id") % 10).as("k"), col("id"))
       .repartition(8)
-    val perKey = df.groupBy("k").agg(HllDistinct.asUdaf(col("id")).as("dc"))
+    val perKey = df.groupBy("k")
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("id"), 12)).as("dc"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // each key sees n/10 = 5000 distinct ids
     perKey.values.foreach(est => assert(relErr(est, n / 10) < 0.05, perKey))
@@ -46,18 +60,19 @@ class HllDistinctSpec extends SparkSpec {
       (col("id") % 3).as("day"), (col("id") % 2).as("province"),
       (col("id") % 9000).as("user_id")) // users recur across days/provinces
     val daily = events.groupBy("day", "province")
-      .agg(HllSketch.asUdaf(col("user_id")).as("sketch"))
+      .agg(hll_sketch_agg(col("user_id"), 12).as("sketch"))
     // ...then a month/country rollup merges sketches only
     val total = daily.groupBy()
-      .agg(HllMergeCount.asUdaf(col("sketch")).as("dc")).head.getLong(0)
+      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("dc")).head.getLong(0)
     val exact = events.select("user_id").distinct().count()
     assert(relErr(total, exact) < 0.05, s"rollup=$total exact=$exact")
     // and one stored sketch estimates directly
-    val one = Hll.estimate(daily.head.getAs[Array[Byte]]("sketch"))
+    val one = daily.select(hll_sketch_estimate(col("sketch"))).head.getLong(0)
     assert(one > 0)
   }
 
   test("streaming windowed distinct keeps constant state and estimates correctly (A3)") {
+    import org.apache.datasketches.hll.{HllSketch, TgtHllType}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Long, Double, Long)]
@@ -67,7 +82,7 @@ class HllDistinctSpec extends SparkSpec {
       .withColumn("rt", timestamp_millis(col("create_ts")))
       .withWatermark("rt", "1 second")
       .groupBy(window(col("rt"), "10 seconds"), col("province_id"))
-      .agg(HllSketch.asUdaf(col("order_id")).as("order_count_sketch"),
+      .agg(hll_sketch_agg(col("order_id"), 12).as("order_count_sketch"),
         sum(col("split_total_amount")).as("order_amount"))
     val q = out.writeStream.format("memory").queryName("province_hll")
       .outputMode("append").start()
@@ -80,11 +95,17 @@ class HllDistinctSpec extends SparkSpec {
       q.processAllAvailable()
       val rows = spark.table("province_hll")
         .filter(col("province_id") === 1L && col("order_amount") > 1.0)
+        .select(hll_sketch_estimate(col("order_count_sketch")).as("dc"),
+          col("order_count_sketch"), col("order_amount"))
         .collect()
       assert(rows.nonEmpty)
       val r = rows.head
-      assert(relErr(Hll.estimate(r.getAs[Array[Byte]]("order_count_sketch")), 200L) < 0.05)
-      assert(r.getAs[Array[Byte]]("order_count_sketch").length === Hll.M) // 4 KiB state
+      assert(relErr(r.getAs[Long]("dc"), 200L) < 0.05)
+      // constant-bounded state per window. Spark's sketch targets HLL_8
+      // (4136 bytes once dense); 200 ids still fit its coupon set (2060
+      // bytes), under even the HLL_4 ceiling
+      assert(r.getAs[Array[Byte]]("order_count_sketch").length <=
+        HllSketch.getMaxUpdatableSerializationBytes(12, TgtHllType.HLL_4))
       assert(r.getAs[Double]("order_amount") === 400.0)
     } finally q.stop()
   }

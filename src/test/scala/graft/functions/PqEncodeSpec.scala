@@ -88,6 +88,24 @@ class PqEncodeSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])
   }
 
+  test("interpreted and codegen encode agree on DOUBLE and FLOAT input, NULL row included") {
+    val rows = vectors.zipWithIndex.map { case (v, i) =>
+      (i, Option(v), Option(v.map(_.toFloat)))
+    } :+ ((vectors.size, None, None))
+    val (interp, codegen, plan) = interpretedAndCodegen(
+      rows.toDF("id", "res", "resf").repartition(1).select(col("id"),
+        PqFunctions.pq_encode(col("res"), cbMap, M, Dims, K),
+        PqFunctions.pq_encode(col("resf"), cbMap, M, Dims, K)))
+    assert(interp.sortBy(_.getInt(0)) === codegen.sortBy(_.getInt(0)))
+    val byId = codegen.map(r => r.getInt(0) -> r).toMap
+    assert(byId(vectors.size).isNullAt(1) && byId(vectors.size).isNullAt(2))
+    vectors.indices.foreach { i =>
+      assert(byId(i).getSeq[Int](1).length === M)
+      assert(byId(i).getSeq[Int](1) === byId(i).getSeq[Int](2))
+    }
+    assert("\\*\\(\\d+\\) Project \\[id#\\d+, invoke".r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("float input matches encoding the double-cast array (the n6 face)") {
     val df = vectors.map(_.map(_.toFloat)).toDF("resf")
       .withColumn("res", transform(col("resf"), x => x.cast("double")))

@@ -10,7 +10,7 @@ class SrpSigSpec extends SparkSpec {
     * literal-plane dot product per bit, 4-dp-quantized sign test.
     */
   private def composedSig(emb: org.apache.spark.sql.Column, nPlanes: Int) = {
-    val planes = graft.operators.AnnOps.hyperplanes(nPlanes, 64)
+    val planes = graft.operators.AnnOps.hyperplanes(nPlanes)
     concat(planes.map { p =>
       when(floor(VectorFunctions.dot_f(emb, typedlit(p)) * 10000.0 + 0.5) > 0, "1")
         .otherwise("0")

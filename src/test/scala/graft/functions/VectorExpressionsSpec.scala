@@ -74,10 +74,11 @@ class VectorExpressionsSpec extends SparkSpec {
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
     }
-    // codegen participation pinned structurally: the expression implements
-    // doGenCode (not CodegenFallback) — a same-stage higher-order lambda
-    // (the transform building the double side) can demote the WHOLE stage,
-    // which is the lambda's cost, not this expression's
+    // codegen participation pinned structurally: the expression is not a
+    // CodegenFallback (its kernel call generates code) — a same-stage
+    // higher-order lambda (the transform building the double side) can
+    // demote the WHOLE stage, which is the lambda's cost, not this
+    // expression's
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val expr = ColumnBridge.expression(
       VectorFunctions.dot_fd(col("a"), col("b")))
@@ -125,6 +126,33 @@ class VectorExpressionsSpec extends SparkSpec {
       assert(java.lang.Double.doubleToLongBits(c.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(i.getDouble(0)))
     }
+  }
+
+  test("interpreted and codegen paths agree for all four, NULL rows included") {
+    val rows = Seq[(Int, Option[Array[Float]], Option[Array[Float]], Option[Array[Double]],
+        Option[Array[Long]], Option[Array[Long]])](
+      (0, Some(Array(1.0f, 2.0f, 3.0f)), Some(Array(4.0f, 5.0f, 6.0f)),
+        Some(Array(0.123456, 2.0, -7.5)), Some(Array(1L, -2L, 3L)), Some(Array(4L, 5L, 127L))),
+      (1, Some(Array(0.1f, -0.2f)), Some(Array(0.3f, 0.7f)), Some(Array(1.0 / 3.0)),
+        Some(Array(127L, -127L)), Some(Array(127L, 127L))),
+      (2, Some(Array(0.0f, 0.0f)), Some(Array(1.0f, 2.0f)), Some(Array.empty[Double]),
+        Some(Array.empty[Long]), Some(Array(1L))),
+      (3, None, Some(Array(1.0f)), Some(Array(1.0)), None, Some(Array(1L))),
+      (4, Some(Array(1.0f)), None, None, Some(Array(2L)), None))
+    val (interp, codegen, plan) = interpretedAndCodegen(
+      rows.toDF("id", "a", "b", "d", "l", "m").repartition(1).select(col("id"),
+        VectorFunctions.dot_f(col("a"), col("b")),
+        VectorFunctions.cosine_sim(col("a"), col("b")),
+        VectorFunctions.dot_fd(col("a"), col("d")),
+        VectorFunctions.dot_l(col("l"), col("m"))))
+    // Row equality compares boxed doubles bit for bit
+    assert(interp.sortBy(_.getInt(0)) === codegen.sortBy(_.getInt(0)))
+    val byId = codegen.map(r => r.getInt(0) -> r).toMap
+    assert(byId(2).getDouble(2) === 0.0) // zero norm
+    assert((1 to 4).forall(byId(3).isNullAt))
+    assert((1 to 4).forall(byId(4).isNullAt))
+    assert((1 to 4).forall(i => !byId(0).isNullAt(i)))
+    assert("\\*\\(\\d+\\) Project \\[id#\\d+, static_invoke".r.findFirstIn(plan).isDefined, plan)
   }
 
   test("cosine_sim registered on the SQL surface") {

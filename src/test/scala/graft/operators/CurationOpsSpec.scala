@@ -525,7 +525,7 @@ class CurationOpsSpec extends SparkSpec {
       .filter(size(col("p")) =!= 5).count() === 0)
     // containment: every pick comes from the gated n10-shaped pool
     // (IVF×SQ8 probe-bounded scan, exact rerank, pool = cand = 20)
-    val pool = AnnOps.ivfQuantizedTopK(e, k = 20, cand = 20, nProbe = 3)
+    val pool = AnnOps.ivfQuantizedTopK(e, k = 20, nProbe = 3)
       .select("query_id", "neighbor_id", "sim").cache()
     assert(out.select("query_id", "neighbor_id")
       .exceptAll(pool.select("query_id", "neighbor_id")).count() === 0,

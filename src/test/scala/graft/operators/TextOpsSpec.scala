@@ -311,6 +311,23 @@ class TextOpsSpec extends SparkSpec {
     assert(out.filter(_._2 == "red bolt").map(_._3).distinct.length === 1)
   }
 
+  test("char_entropy: interpreted and codegen paths agree; NULL and empty text give NULL") {
+    import spark.implicits._
+    val texts = Seq[(Int, Option[String])](
+      (0, Some("abca")), (1, Some("")), (2, None), (3, Some("na\u00efve \ud83d\ude00 text \ud83d\ude00")))
+    val (interp, codegen, plan) = interpretedAndCodegen(
+      texts.toDF("id", "text").repartition(1)
+        .select(col("id"), graft.functions.CharEntropy(col("text")).as("cs")))
+    assert(interp.sortBy(_.getInt(0)) === codegen.sortBy(_.getInt(0)))
+    val byId = codegen.map(r => r.getInt(0) -> r).toMap
+    assert(byId(1).isNullAt(1)) // "": no distribution, the kernel returns NULL
+    assert(byId(2).isNullAt(1))
+    assert(byId(0).getStruct(1).getLong(0) === 4L && byId(0).getStruct(1).getLong(1) === 3L)
+    // surrogate pairs fold: the emoji is one code point
+    assert(byId(3).getStruct(1).getLong(0) === 14L)
+    assert("\\*\\(\\d+\\) Project \\[id#\\d+, static_invoke".r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("t17 gopher repetition battery matches hand-computed gram counts") {
     import spark.implicits._
     val fixtures = Seq(

@@ -11,6 +11,10 @@
 #   spark_bridges         source files under src/main/scala/org/apache/spark:
 #                         each one reaches into Spark internals
 #   unreached_public_defs public names of src/main that no product file calls
+#   hand_codegen          `doGenCode` overrides under src/main/scala/graft: a
+#                         native function is a RuntimeReplaceable whose
+#                         replacement calls its one Scala kernel, so none
+#                         writes Java code by hand
 #
 # A comment line is one whose first non-blank characters are `//`, `/*` or
 # `*` (scaladoc bodies). A top-level def is one indented by exactly two
@@ -206,4 +210,6 @@ echo "materialize_calls $(find src/main -name '*.scala' -print0 | xargs -0 cat |
   grep -Ev '^\s*(//|\*|/\*)' | grep -o 'Materialize(' | wc -l)"
 echo "spark_bridges $(find src/main/scala/org/apache/spark -name '*.scala' | wc -l)"
 echo "unreached_public_defs $(unreached | grep -c . || true)"
+echo "hand_codegen $(find src/main/scala/graft -name '*.scala' -print0 | xargs -0 cat |
+  grep -Ev '^\s*(//|\*|/\*)' | grep -c '\bdef doGenCode\b' || true)"
 defaulted counters
